@@ -15,9 +15,6 @@ concurrent Spark workers race safely: first one in wins, the rest see
 the finished .so.  Any failure (no compiler, bad flags) degrades to
 None and the pure-Python path runs — behavior is identical either way,
 only speed differs.
-
-Env:
-  HP_FASTSCAN=0   disable entirely (pure Python tokenizer)
 """
 
 from __future__ import annotations
@@ -28,7 +25,6 @@ import subprocess
 import sys
 import sysconfig
 
-_DISABLED = os.environ.get("HP_FASTSCAN", "1") == "0"
 _mod = None
 _tried = False
 
@@ -100,8 +96,6 @@ def _load():
     if _tried:
         return _mod
     _tried = True
-    if _DISABLED:
-        return None
     so = _build(_source_path())
     if so is None:
         return None

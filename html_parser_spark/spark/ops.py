@@ -210,7 +210,12 @@ def minhash_signatures(documents: DataFrame, num_hashes: int = 32,
     signatures are now computed where the shingles are, and the first
     shuffle in the whole LSH pipeline is the band-bucket groupBy.
     SQL-string exprs: one parse each instead of ~4 py4j round trips
-    per column (driver-side build time, not executor time)."""
+    per column (driver-side build time, not executor time).
+
+    Precondition: doc_id is unique. The signature is computed per
+    input row, so a duplicated doc_id yields one signature row per
+    duplicate; deduplicate upstream (e.g. dropDuplicates("doc_id"))
+    when the input does not guarantee it."""
     sh = shingle_hashes(documents, shingle_n)
     mins = ", ".join(
         f"array_min(transform(sh_hashes, h -> xxhash64(h, {k})))"
@@ -2815,8 +2820,8 @@ def winnowing_fingerprints(documents: DataFrame, k: int = 8,
     window's minimum, count the distinct kept fingerprints. The hash is
     md5 of the k-gram (string-ordered minima) so Spark and DuckDB agree
     exactly; at scale everything is a per-row JVM array expression —
-    no shuffle, no UDF. Docs shorter than k get one whole-text
-    fingerprint.
+    no shuffle, no UDF. Docs shorter than k + w - 1 characters (fewer
+    than w grams, so no full window) get one whole-text fingerprint.
 
     r8: each stage is PROJECTED as a real column (g -> wins -> fps)
     instead of one nested expression. The r7 inline form re-evaluated
@@ -2834,11 +2839,14 @@ def winnowing_fingerprints(documents: DataFrame, k: int = 8,
         lambda i: F.md5(F.col("text").substr(i + 1, F.lit(k))),
     )
     g = F.col("g")
-    windows = F.transform(
+    # guarded: with fewer than w grams the window sequence runs
+    # backwards and element_at would read out of bounds; such docs
+    # take the whole-text fingerprint below
+    windows = F.when(F.size(g) >= w, F.transform(
         F.sequence(F.lit(0), F.size(g) - w),
         lambda j: F.least(
             *[F.element_at(g, j + (x + 1)) for x in range(w)]),
-    )
+    ))
     base = (
         _spread(documents)
         .select("doc_id", "text", grams.alias("g"))

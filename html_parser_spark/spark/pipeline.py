@@ -1,18 +1,13 @@
 """The extraction job: transcripts DataFrame -> extracted text + spans.
 
 Scale design (north rule / SURVEY.md §2.7, §4):
-  - Tier 0 (pure JVM, no Python): turns whose text contains none of
-    '<' '&' '\\r' '\\x00' need no parsing at all — extracted = text
-    (or '' if whitespace-only), one span, zero errors. On real
-    transcript corpora this is the majority of turns; it never leaves
-    whole-stage codegen.
-  - Tier 1 (Arrow batch kernel): everything else goes through the
-    fused tokenizer+tree-builder kernel via mapInArrow (one JVM<->Python
-    crossing per record batch).
-  - The split is a cheap JVM-side predicate; the union preserves the
-    EXTRACT schema, and output ordering is re-established with a window
-    over (conv_id, turn_idx) — stable per-turn ordering per the north
-    rule.
+  - One scan, one Arrow kernel: every row crosses into the fused
+    tokenizer+tree-builder kernel via mapInArrow (one JVM<->Python
+    crossing per record batch), whose internal '<'-free fast path
+    answers markup-free turns without parsing. At 100 TB the text
+    bytes are read exactly once.
+  - Output ordering is re-established with a window over
+    (conv_id, turn_idx) — stable per-turn ordering per the north rule.
   - Per-conversation aggregations use SALTED two-stage aggregation so a
     mega-conversation cannot pin a single reducer; AQE skew-join is the
     backstop.
@@ -23,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .udfs import EXTRACT_SPARK_SCHEMA, _calibrate, make_extract_map_in_arrow
+from .udfs import EXTRACT_SPARK_SCHEMA, make_extract_map_in_arrow
 
 TRANSCRIPT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 PASSTHROUGH = ["conv_id", "turn_idx", "role", "tool", "ts"]
@@ -32,103 +27,25 @@ _OUT_SCHEMA = (
     "ts timestamp, " + EXTRACT_SPARK_SCHEMA
 )
 
-# characters that force the Python kernel: markup, charrefs, CR (the
-# reference's CR fast-path quirk), NUL
-_NEEDS_KERNEL = "(text LIKE '%<%' OR text LIKE '%&%' OR text LIKE '%\r%' OR instr(text, chr(0)) > 0)"
-_WS_ONLY_RE = r"^[ \n\t\f]*$"
-
 
 def extract_turns(df: DataFrame, mode: str = "fragment",
                   context: str = "div", ordered: bool = True,
-                  boilerplate: bool = False,
-                  single_scan: bool = True) -> DataFrame:
+                  boilerplate: bool = False) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) ->
-    + extracted_text, spans, parse_errors, node_count, doc_encoding.
+    + extracted_text, spans, parse_errors, node_count, doc_encoding,
+    parse_error_texts.
 
     Equality contract (boilerplate=False, the default): per-turn byte
-    equality with the reference parser (kernel is golden-tested; both
-    execution strategies are output-identical, property-tested).
+    equality with the reference parser (kernel is golden-tested).
 
-    Two execution strategies, same results:
-      single_scan=True (default) — ONE scan of the input; every row
-        crosses into the Arrow kernel, whose internal '<'-free fast
-        path handles markup-free turns cheaply. At 100 TB this reads
-        the text bytes once.
-      single_scan=False — the JVM tier split: markup-free turns are
-        answered entirely by codegen'd expressions and never cross
-        into Python, at the cost of a SECOND scan of the input (the
-        union of two filters reads the source twice). Right when the
-        markup fraction is tiny and scans are cheap relative to the
-        Arrow crossing. Measured at sf0.1 (200k turns, 39% markup):
-        single-scan 0.71s vs tiered 0.94s best-of-3.
-
-    boilerplate=True applies the DOM block-scoring strip; every row
-    takes the kernel path (scoring needs the block structure), with the
-    Python-level '<'-free fast path still active inside the kernel."""
-    if boilerplate or single_scan:
-        # one scan, one Arrow crossing: the kernel handles every row
-        # (boilerplate additionally applies the DOM block scoring)
-        kernel_fn = make_extract_map_in_arrow(
-            PASSTHROUGH, mode, context, boilerplate=boilerplate)
-        out = df.select(*PASSTHROUGH, "text").mapInArrow(
-            kernel_fn, _OUT_SCHEMA)
-        if ordered:
-            w = Window.partitionBy("conv_id").orderBy("turn_idx")
-            out = out.withColumn("turn_rank", F.row_number().over(w))
-        return out
-
-    # calibration constants for the trivial JVM tier (context-dependent)
-    (k_empty, n_empty, enc, t_empty), (k_ws, n_ws, t_ws), \
-        (k_x, n_x, path, t_x) = _calibrate(mode, context)
-
-    def _texts_lit(ts):
-        if not ts:
-            return F.expr("array()").cast("array<string>")
-        return F.array(*[F.lit(t) for t in ts])
-
-    needs_kernel = F.expr(_NEEDS_KERNEL) & F.col("text").isNotNull()
-    trivial = df.where(~needs_kernel | F.col("text").isNull())
-    hard = df.where(needs_kernel)
-
-    is_null = F.col("text").isNull()
-    is_empty = F.col("text") == ""
-    is_ws = F.col("text").rlike(_WS_ONLY_RE)
-
-    trivial_out = trivial.select(
-        *PASSTHROUGH,
-        F.when(is_null | is_ws, F.lit("")).otherwise(F.col("text"))
-         .alias("extracted_text"),
-        F.when(is_null | is_ws,
-               F.expr("array()").cast(
-                   "array<struct<start:int,end:int,path:string>>"))
-         .otherwise(F.array(F.struct(
-             F.lit(0).alias("start"),
-             F.length("text").cast("int").alias("end"),
-             F.lit(path).alias("path"))))
-         .alias("spans"),
-        F.when(is_null, F.lit(0))
-         .when(is_empty, F.lit(k_empty))
-         .when(is_ws, F.lit(k_ws))
-         .otherwise(F.lit(k_x)).cast("int").alias("parse_errors"),
-        F.when(is_null, F.lit(0))
-         .when(is_empty, F.lit(n_empty))
-         .when(is_ws, F.lit(n_ws))
-         .otherwise(F.lit(n_x)).cast("int").alias("node_count"),
-        F.lit(enc).alias("doc_encoding"),
-        # '<'/'&'/CR/NUL-free turns can only carry the context-constant
-        # tree-builder errors (position-free; asserted in _calibrate)
-        F.when(is_null, _texts_lit(()))
-         .when(is_empty, _texts_lit(t_empty))
-         .when(is_ws, _texts_lit(t_ws))
-         .otherwise(_texts_lit(t_x)).alias("parse_error_texts"),
-    )
-
-    kernel_fn = make_extract_map_in_arrow(PASSTHROUGH, mode, context)
-    hard_out = hard.select(*PASSTHROUGH, "text").mapInArrow(
-        kernel_fn, _OUT_SCHEMA
-    )
-
-    out = trivial_out.unionByName(hard_out)
+    One scan, one Arrow kernel: every row crosses into the kernel once,
+    and its internal '<'-free fast path (property-tested equal to the
+    full parse) handles markup-free turns cheaply. boilerplate=True
+    applies the DOM block-scoring strip; the '<'-free fast path stays
+    active for it too."""
+    kernel_fn = make_extract_map_in_arrow(
+        PASSTHROUGH, mode, context, boilerplate=boilerplate)
+    out = df.select(*PASSTHROUGH, "text").mapInArrow(kernel_fn, _OUT_SCHEMA)
     if ordered:
         w = Window.partitionBy("conv_id").orderBy("turn_idx")
         out = out.withColumn("turn_rank", F.row_number().over(w))

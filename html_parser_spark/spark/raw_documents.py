@@ -12,16 +12,10 @@ Schema out: + extracted_text, spans, parse_errors, node_count,
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pyarrow as pa
-
 from ..kernel.api import parse_document
-from .udfs import (EXTRACT_FIELDS, EXTRACT_SPARK_SCHEMA, SPAN_TYPE,  # noqa: F401
-                   _spans_array, _str_list_array)
+from .udfs import EXTRACT_FIELDS, EXTRACT_SPARK_SCHEMA, _map_batches
 
 RAW_INPUT_SCHEMA = "doc_id string, content binary, charset_hint string"
-RAW_OUTPUT_SCHEMA = "doc_id string, " + EXTRACT_SPARK_SCHEMA
 
 
 def _sane(s: str) -> str:
@@ -40,66 +34,32 @@ def _sane(s: str) -> str:
                                                            "replace")
 
 
-def _kernel_factory(passthrough: tuple = ()):
-    """Build the Arrow parse stage.  `passthrough` columns are copied
-    verbatim from the input batch into the output (row-aligned by
-    construction: the computed arrays are built in batch row order) —
-    so upstream envelope columns (e.g. a WARC target URI) ride through
-    the Python stage instead of forcing a join back against a second
-    evaluation of the heavy source read."""
-
-    def _kernel(batches: Iterator[pa.RecordBatch]) \
-            -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("doc_id")
-            contents = batch.column("content").to_pylist()
-            hints = batch.column("charset_hint").to_pylist()
-            ext_l, spans_l, errs_l, nodes_l, enc_l, etexts_l = (
-                [], [], [], [], [], [])
-            for content, hint in zip(contents, hints):
-                if content is None:
-                    ext_l.append("")
-                    spans_l.append([])
-                    errs_l.append(0)
-                    nodes_l.append(0)
-                    enc_l.append("UTF-8")
-                    etexts_l.append([])
-                    continue
-                res = parse_document(bytes(content), hint)
-                text, spans = res.extract_text()
-                ext_l.append(_sane(text))
-                spans_l.append(spans)
-                errs_l.append(res.error_count)
-                nodes_l.append(res.node_count)
-                enc_l.append(res.encoding or "UTF-8")
-                etexts_l.append([_sane(t) for t in res.errors])
-            arrays = [ids,
-                      pa.array(ext_l, pa.string()),
-                      _spans_array(spans_l),
-                      pa.array(errs_l, pa.int32()),
-                      pa.array(nodes_l, pa.int32()),
-                      pa.array(enc_l, pa.string()),
-                      _str_list_array(etexts_l)]
-            fields = [batch.schema.field("doc_id")] + EXTRACT_FIELDS
-            for name in passthrough:
-                arrays.append(batch.column(name))
-                fields.append(batch.schema.field(name))
-            yield pa.RecordBatch.from_arrays(
-                arrays, schema=pa.schema(fields))
-
-    return _kernel
+def _parse_raw(content, hint):
+    if content is None:
+        return [("", [], 0, 0, "UTF-8", [])]
+    res = parse_document(bytes(content), hint)
+    text, spans = res.extract_text()
+    return [(_sane(text), spans, res.error_count, res.node_count,
+             res.encoding or "UTF-8", [_sane(t) for t in res.errors])]
 
 
 def extract_raw_documents(df, passthrough: tuple = ()):
     """binary documents + charset hints -> extraction columns.
     `passthrough` names extra input columns to carry through the
     parse stage unchanged (appended after the extraction columns,
-    keeping their input types)."""
+    keeping their input types) — so upstream envelope columns (e.g. a
+    WARC target URI) ride through the Python stage instead of forcing
+    a join back against a second evaluation of the heavy source read."""
     base = df.select("doc_id", "content", "charset_hint", *passthrough)
-    schema = RAW_OUTPUT_SCHEMA + "".join(
-        f", {f.name} {f.dataType.simpleString()}"
+    carried = "".join(
+        f"{f.name} {f.dataType.simpleString()}, "
         for f in base.schema.fields if f.name in passthrough)
-    return base.mapInArrow(_kernel_factory(tuple(passthrough)), schema)
+    fn = _map_batches(["content", "charset_hint"], ["doc_id", *passthrough],
+                      EXTRACT_FIELDS, _parse_raw)
+    out = base.mapInArrow(
+        fn, f"doc_id string, {carried}{EXTRACT_SPARK_SCHEMA}")
+    return out.select("doc_id", *(f.name for f in EXTRACT_FIELDS),
+                      *passthrough)
 
 
 def synth_raw_documents_df(spark):

@@ -3,10 +3,10 @@ has no streaming; this is engine-completeness scaffolding for the
 transcripts pipeline: the same extract kernel over readStream).
 
 The parse is stateless per-row, so the streaming plan is just
-readStream -> (same tiered extraction) -> writeStream. Ordering windows
-are not valid in append-mode streams; ordering is a batch/reader
-concern. A watermarked per-conversation rolling aggregate is provided
-as the stateful example.
+readStream -> (the same one-scan Arrow kernel, with its internal
+'<'-free fast path) -> writeStream. Ordering windows are not valid in
+append-mode streams; ordering is a batch/reader concern. A watermarked
+per-conversation rolling aggregate is provided as the stateful example.
 """
 
 from __future__ import annotations
@@ -31,8 +31,9 @@ def read_transcripts_stream(spark, input_path: str,
 
 def extract_stream(df: DataFrame, mode: str = "fragment",
                    context: str = "div") -> DataFrame:
-    """Streaming variant of extract_turns: identical tier split +
-    kernel; no ordering window (append mode)."""
+    """Streaming variant of extract_turns: the same one scan and one
+    Arrow kernel with its internal '<'-free fast path; no ordering
+    window (append mode)."""
     from .pipeline import extract_turns
 
     return extract_turns(df, mode=mode, context=context, ordered=False)

@@ -28,7 +28,6 @@ from ..kernel.boilerplate import strip_boilerplate, _Block, _score
 from ..kernel.charref import decode_character_references
 from ..kernel.tokenizer import replace_nulls
 
-_WS_ONLY = frozenset(" \n\t\r\f")
 _WS_STR = " \n\t\r\f"
 
 # Arrow output schema of the parse kernel (append-only contract)
@@ -70,6 +69,12 @@ _RAW_CONTEXTS = frozenset(
 _CALIBRATION: dict = {}
 
 
+def _parse(text: str, mode: str, context: str):
+    if mode == "document":
+        return parse_document(text)
+    return parse_fragment(text, context)
+
+
 def _calibrate(mode: str, context: str):
     """Constants of a '<'-free parse for this (mode, context): the text
     itself only contributes null/charref errors; everything else — EOF
@@ -83,13 +88,9 @@ def _calibrate(mode: str, context: str):
     cached = _CALIBRATION.get(key)
     if cached is not None:
         return cached
-    if mode == "document":
-        probe = lambda s: parse_document(s)  # noqa: E731
-    else:
-        probe = lambda s: parse_fragment(s, context)  # noqa: E731
-    r_empty = probe("")
-    r_ws = probe(" ")
-    r_x = probe("x")
+    r_empty = _parse("", mode, context)
+    r_ws = _parse(" ", mode, context)
+    r_x = _parse("x", mode, context)
     for r in (r_empty, r_ws, r_x):
         assert not any(t.startswith("line=") for t in r.errors), (
             mode, context, r.errors)
@@ -145,10 +146,7 @@ def parse_turn(text: str, mode: str = "fragment", context: str = "div",
         if not boilerplate:
             return fast_extract(text, mode, context)
         return _fast_extract_boilerplate(text, mode, context)
-    if mode == "document":
-        res = parse_document(text)
-    else:
-        res = parse_fragment(text, context)
+    res = _parse(text, mode, context)
     if boilerplate:
         ext, spans, _, _ = strip_boilerplate(res.doc)
     else:
@@ -239,40 +237,65 @@ def _str_list_array(lists_l) -> pa.ListArray:
         pa.array(offsets, pa.int32()), pa.array(vals, pa.string()))
 
 
+_STR_LIST_TYPE = pa.list_(pa.string())
+
+
+def _column(values, typ: pa.DataType) -> pa.Array:
+    if typ == SPAN_TYPE:
+        return _spans_array(values)
+    if typ == _STR_LIST_TYPE:
+        return _str_list_array(values)
+    return pa.array(values, typ)
+
+
+def _map_batches(inputs, passthrough, out_fields, row_fn):
+    """The one mapInArrow batch loop behind every parse kernel.
+
+    `row_fn(*input_values)` returns a list of output tuples (one per
+    row for 1:1 kernels, zero or more for fan-out kernels such as
+    links) matching `out_fields`. Output = passthrough columns (copied
+    from the batch, or taken by source row when the batch fans out)
+    followed by `out_fields`. Column builders are module globals looked
+    up per batch, so wrappers installed on this module after the
+    function is built take effect."""
+
+    def _fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows: list = []
+            src: list = []
+            values = [batch.column(c).to_pylist() for c in inputs]
+            for i, args in enumerate(zip(*values)):
+                res = row_fn(*args)
+                rows += res
+                src += [i] * len(res)
+            arrays = [batch.column(c) for c in passthrough]
+            if src != list(range(batch.num_rows)):
+                idx = pa.array(src, pa.int32())
+                arrays = [a.take(idx) for a in arrays]
+            cols = list(zip(*rows)) or [()] * len(out_fields)
+            arrays += [_column(v, f.type) for v, f in zip(cols, out_fields)]
+            fields = [batch.schema.field(c) for c in passthrough] + out_fields
+            yield pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
+
+    return _fn
+
+
 def make_extract_map_in_arrow(passthrough: list[str], mode: str = "fragment",
                               context: str = "div",
                               boilerplate: bool = False):
     """Build a mapInArrow function: passthrough columns + text ->
     passthrough columns + EXTRACT_FIELDS."""
+    return _map_batches(
+        ["text"], passthrough, EXTRACT_FIELDS,
+        lambda text: [_parse_turn_cached(text, mode, context, boilerplate)])
 
-    def _fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            texts = batch.column("text").to_pylist()
-            ext_l, spans_l, errs_l, nodes_l, enc_l, etexts_l = (
-                [], [], [], [], [], [])
-            for text in texts:
-                ext, spans, errs, nodes, enc, etexts = _parse_turn_cached(
-                    text, mode, context, boilerplate)
-                ext_l.append(ext)
-                spans_l.append(spans)
-                errs_l.append(errs)
-                nodes_l.append(nodes)
-                enc_l.append(enc)
-                etexts_l.append(etexts)
-            arrays = [batch.column(c) for c in passthrough]
-            fields = [batch.schema.field(c) for c in passthrough]
-            arrays += [
-                pa.array(ext_l, pa.string()),
-                _spans_array(spans_l),
-                pa.array(errs_l, pa.int32()),
-                pa.array(nodes_l, pa.int32()),
-                pa.array(enc_l, pa.string()),
-                _str_list_array(etexts_l),
-            ]
-            fields += EXTRACT_FIELDS
-            yield pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
 
-    return _fn
+DUMP_FIELDS = [
+    pa.field("dump", pa.string()),
+    pa.field("serialized_html", pa.string()),
+    pa.field("extracted_text", pa.string()),
+    pa.field("parse_errors", pa.int32()),
+]
 
 
 def make_dump_map_in_arrow(passthrough: list[str], mode: str = "fragment",
@@ -280,37 +303,19 @@ def make_dump_map_in_arrow(passthrough: list[str], mode: str = "fragment",
     """Debug/equality variant: adds dump + serialized columns (used by
     the golden-equality tests; too heavy for the production path)."""
 
-    def _fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            texts = batch.column("text").to_pylist()
-            dumps, sers, exts, errs = [], [], [], []
-            for text in texts:
-                text = text or ""
-                if mode == "document":
-                    res = parse_document(text)
-                else:
-                    res = parse_fragment(text, context)
-                dumps.append(res.dump())
-                sers.append(res.serialize())
-                exts.append(res.extract_text()[0])
-                errs.append(res.error_count)
-            arrays = [batch.column(c) for c in passthrough]
-            fields = [batch.schema.field(c) for c in passthrough]
-            arrays += [
-                pa.array(dumps, pa.string()),
-                pa.array(sers, pa.string()),
-                pa.array(exts, pa.string()),
-                pa.array(errs, pa.int32()),
-            ]
-            fields += [
-                pa.field("dump", pa.string()),
-                pa.field("serialized_html", pa.string()),
-                pa.field("extracted_text", pa.string()),
-                pa.field("parse_errors", pa.int32()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
+    def _row(text):
+        res = _parse(text or "", mode, context)
+        return [(res.dump(), res.serialize(), res.extract_text()[0],
+                 res.error_count)]
 
-    return _fn
+    return _map_batches(["text"], passthrough, DUMP_FIELDS, _row)
+
+
+LINK_FIELDS = [
+    pa.field("link_idx", pa.int32()),
+    pa.field("href", pa.string()),
+    pa.field("anchor_text", pa.string()),
+]
 
 
 def make_links_map_in_arrow(passthrough: list[str], mode: str = "fragment",
@@ -322,39 +327,9 @@ def make_links_map_in_arrow(passthrough: list[str], mode: str = "fragment",
     extraction kernel."""
     from html_parser_spark.kernel.extract import collect_links
 
-    def _fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            texts = batch.column("text").to_pylist()
-            pt_cols = [batch.column(c).to_pylist() for c in passthrough]
-            out_pt = [[] for _ in passthrough]
-            idxs, hrefs, anchors = [], [], []
-            for row, text in enumerate(texts):
-                text = text or ""
-                if mode == "document":
-                    res = parse_document(text)
-                else:
-                    res = parse_fragment(text, context)
-                for k, (href, anchor) in enumerate(
-                        collect_links(res.doc)):
-                    for c, col in enumerate(pt_cols):
-                        out_pt[c].append(col[row])
-                    idxs.append(k)
-                    hrefs.append(href)
-                    anchors.append(anchor)
-            fields = [batch.schema.field(c) for c in passthrough]
-            arrays = [pa.array(vals, f.type)
-                      for vals, f in zip(out_pt, fields)]
-            arrays += [
-                pa.array(idxs, pa.int32()),
-                pa.array(hrefs, pa.string()),
-                pa.array(anchors, pa.string()),
-            ]
-            fields += [
-                pa.field("link_idx", pa.int32()),
-                pa.field("href", pa.string()),
-                pa.field("anchor_text", pa.string()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays,
-                                             schema=pa.schema(fields))
+    def _row(text):
+        doc = _parse(text or "", mode, context).doc
+        return [(k, href, anchor)
+                for k, (href, anchor) in enumerate(collect_links(doc))]
 
-    return _fn
+    return _map_batches(["text"], passthrough, LINK_FIELDS, _row)

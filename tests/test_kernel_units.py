@@ -214,6 +214,129 @@ def test_parse_turn_raw_context_uses_full_parser():
     assert ext == "a &amp; b"
 
 
+def _turn_batches():
+    """Arrow batches of transcript turns: hand-written rows (NULL text,
+    a turn with several links, markup-free turns), an empty batch, a
+    batch without any link, then generated turns in small batches."""
+    import datetime
+
+    import pyarrow as pa
+
+    from html_parser_spark.spark.transcripts import generate_rows
+
+    schema = pa.schema([
+        ("conv_id", pa.string()), ("turn_idx", pa.int32()),
+        ("role", pa.string()), ("text", pa.string()),
+        ("tool", pa.string()), ("ts", pa.timestamp("us")),
+    ])
+    t0 = datetime.datetime(2020, 1, 1)
+    hand = [
+        ("h0", 0, "user", None, None, t0),
+        ("h0", 1, "assistant",
+         '<p>see <a href="https://a.example/x">one</a>, '
+         '<a href=/rel>two <b>bold</b></a> and <a>no href</a>'
+         '<a href="">empty</a></p>', "search", t0),
+        ("h0", 2, "user", "plain &amp; simple\r\n", None, t0),
+        ("h1", 0, "user", "", "calc", t0),
+        ("h1", 1, "assistant", "  \n\t", None, t0),
+    ]
+    no_links = [("h2", j, "user", text, None, t0) for j, text in
+                enumerate(["<b>bold</b> only", "no markup", None])]
+    generated = generate_rows(240, seed=5, include_fixtures=False)
+
+    def batch(rows):
+        cols = list(zip(*rows)) or [[] for _ in schema]
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, schema)],
+            schema=schema)
+
+    batches = [batch(hand), batch([]), batch(no_links)]
+    batches += [batch(generated[i:i + 64])
+                for i in range(0, len(generated), 64)]
+    return batches
+
+
+def _run_kernel(fn, batches, cols):
+    outs = list(fn(iter(b.select(cols) for b in batches)))
+    assert len(outs) == len(batches)
+    return outs
+
+
+@pytest.mark.parametrize("mode,boilerplate", [
+    ("fragment", False), ("document", False), ("document", True),
+])
+def test_extract_batch_matches_parse_turn(mode, boilerplate):
+    from html_parser_spark.spark.pipeline import PASSTHROUGH
+    from html_parser_spark.spark.udfs import (
+        EXTRACT_FIELDS, make_extract_map_in_arrow,
+    )
+
+    batches = _turn_batches()
+    fn = make_extract_map_in_arrow(PASSTHROUGH, mode, "div", boilerplate)
+    outs = _run_kernel(fn, batches, PASSTHROUGH + ["text"])
+    names = [f.name for f in EXTRACT_FIELDS]
+    for inp, out in zip(batches, outs):
+        assert out.schema.names == PASSTHROUGH + names
+        assert out.num_rows == inp.num_rows
+        for c in PASSTHROUGH:
+            assert out.column(c).equals(inp.column(c))
+        got = list(zip(*(out.column(n).to_pylist() for n in names)))
+        for text, row in zip(inp.column("text").to_pylist(), got):
+            want = parse_turn(text, mode, "div", boilerplate)
+            assert row[:5] == tuple(want[:5]), text
+            assert row[5] == list(want[5]), text
+
+
+def test_dump_batch_matches_parse():
+    from html_parser_spark.spark.udfs import make_dump_map_in_arrow
+
+    batches = _turn_batches()
+    keys = ["conv_id", "turn_idx"]
+    fn = make_dump_map_in_arrow(keys, "fragment", "div")
+    outs = _run_kernel(fn, batches, keys + ["text"])
+    for inp, out in zip(batches, outs):
+        assert out.num_rows == inp.num_rows
+        for c in keys:
+            assert out.column(c).equals(inp.column(c))
+        got = list(zip(*(out.column(n).to_pylist() for n in (
+            "dump", "serialized_html", "extracted_text", "parse_errors"))))
+        for text, row in zip(inp.column("text").to_pylist(), got):
+            res = parse_fragment(text or "", "div")
+            assert row == (res.dump(), res.serialize(),
+                           res.extract_text()[0], res.error_count), text
+
+
+def test_links_batch_matches_collect_links():
+    from html_parser_spark.kernel.extract import collect_links
+    from html_parser_spark.spark.udfs import make_links_map_in_arrow
+
+    batches = _turn_batches()
+    keys = ["conv_id", "turn_idx"]
+    fn = make_links_map_in_arrow(keys, "fragment", "div")
+    outs = _run_kernel(fn, batches, keys + ["text"])
+    for inp, out in zip(batches, outs):
+        assert out.schema.names == keys + ["link_idx", "href",
+                                           "anchor_text"]
+        assert out.schema.field("turn_idx").type == \
+            inp.schema.field("turn_idx").type
+        want = [
+            (conv, turn, k, href, anchor)
+            for conv, turn, text in zip(*(inp.column(c).to_pylist()
+                                          for c in keys + ["text"]))
+            for k, (href, anchor) in enumerate(
+                collect_links(parse_fragment(text or "", "div").doc))
+        ]
+        got = list(zip(*(out.column(n).to_pylist() for n in
+                         out.schema.names)))
+        assert got == want
+    # the multi-link turn repeats its keys once per link; the empty and
+    # link-free batches yield no rows
+    assert [r[:3] for r in zip(*(outs[0].column(n).to_pylist()
+                                 for n in keys + ["link_idx"]))] == [
+        ("h0", 1, 0), ("h0", 1, 1), ("h0", 1, 2)]
+    assert outs[1].num_rows == 0 and outs[2].num_rows == 0
+
+
 class TestDeepNesting:
     """Stack-cap (256) silent-drop and dump prefix-truncation parity,
     compared live against the reference binary."""

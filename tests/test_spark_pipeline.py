@@ -65,9 +65,10 @@ def test_pipeline_matches_goldens(spark, refbuild, golden_cases):
 
 
 def test_pipeline_error_texts_match_goldens(spark, refbuild, golden_cases):
-    """Parse-error TEXTS through the real tiered extract_turns job must
-    equal the reference binaries' stderr (goldens), per turn — mixing
-    golden HTML (kernel tier) with plain turns (trivial JVM tier)."""
+    """Parse-error TEXTS through the real extract_turns job must equal
+    the reference binaries' stderr (goldens), per turn — mixing golden
+    HTML (full parse) with plain turns (the kernel's '<'-free fast
+    path)."""
     import datetime
 
     from html_parser_spark.spark.pipeline import extract_turns
@@ -81,7 +82,7 @@ def test_pipeline_error_texts_match_goldens(spark, refbuild, golden_cases):
         ("conv0", i, "user", text, None, datetime.datetime(2020, 1, 1))
         for i, (name, text, dump, errc) in enumerate(rows)
     ]
-    # trivial-tier rows interleaved: expected texts are the full
+    # markup-free rows interleaved: expected texts are the full
     # parser's own output for each (the calibrated constants)
     from html_parser_spark.kernel.api import parse_fragment
 
@@ -102,7 +103,7 @@ def test_pipeline_error_texts_match_goldens(spark, refbuild, golden_cases):
     ).repartition(4)
     got = {
         (r.conv_id, r.turn_idx): list(r.parse_error_texts)
-        for r in extract_turns(df, ordered=False, single_scan=False)
+        for r in extract_turns(df, ordered=False)
         .select("conv_id", "turn_idx", "parse_error_texts").collect()
     }
     bad = []
@@ -111,7 +112,7 @@ def test_pipeline_error_texts_match_goldens(spark, refbuild, golden_cases):
             bad.append((name, texts_by_case[name], got[("conv0", i)]))
     for j, want in enumerate(trivial_want):
         if got[("conv1", j)] != want:
-            bad.append(("trivial", j, want, got[("conv1", j)]))
+            bad.append(("markup-free", j, want, got[("conv1", j)]))
     assert not bad, f"pipeline error-text mismatches: {bad[:3]}"
 
 
@@ -300,45 +301,17 @@ def test_simhash_similar_docs_close(spark):
     assert hamming(rows[1], rows[2]) < hamming(rows[1], rows[3])
 
 
-def test_strategies_output_identical(spark):
-    """single_scan=True (1 FileScan) and the JVM tier split (2 scans)
-    must produce byte-identical results — the property that makes the
-    single-scan default safe."""
-    from html_parser_spark.spark.pipeline import extract_turns
-    from html_parser_spark.spark.transcripts import transcripts_df
-
-    df = transcripts_df(spark, 400, seed=11, partitions=4)
-
-    def canon(q):
-        return sorted(
-            (r.conv_id, r.turn_idx, r.extracted_text,
-             tuple((s.start, s.end, s.path) for s in r.spans),
-             r.parse_errors, r.node_count, r.doc_encoding,
-             tuple(r.parse_error_texts))
-            for r in q.collect())
-
-    a = canon(extract_turns(df, ordered=False, single_scan=True))
-    b = canon(extract_turns(df, ordered=False, single_scan=False))
-    assert a == b
-    # and the plans genuinely differ in scan count
-    p1 = extract_turns(df, ordered=False, single_scan=True)
-    p2 = extract_turns(df, ordered=False, single_scan=False)
-    s1 = p1._jdf.queryExecution().executedPlan().toString()
-    s2 = p2._jdf.queryExecution().executedPlan().toString()
-    assert "Union" not in s1 and "Union" in s2
-
-
-def test_fastpath_plan_stays_jvm(spark):
-    """The trivial tier must not contain a Python/Arrow eval node and
-    the parquet scan must prune columns."""
+def test_extract_plan_reads_input_once(spark):
+    """The default extract_turns plan reads the input once and crosses
+    into Python once: exactly one MapInArrow and no Union."""
     from html_parser_spark.spark.pipeline import extract_turns
     from html_parser_spark.spark.transcripts import transcripts_df
 
     df = transcripts_df(spark, 100, seed=3, partitions=2)
-    out = extract_turns(df, ordered=False, single_scan=False)
+    out = extract_turns(df, ordered=False)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # exactly one Arrow eval (the hard tier), none in the trivial tier
-    assert plan.count("ArrowEvalPython") <= 1 or "MapInArrow" in plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Union" not in plan and "EvalPython" not in plan, plan
 
 
 def test_ann_lsh_build_runs_no_job(spark):
@@ -3700,3 +3673,32 @@ def test_r8_components_fused_probe_counts_iterations(spark):
     ref = {(r.node, r.root)
            for r in _components_min_label(edges).collect()}
     assert got == ref == {(i, 0) for i in range(7)}
+
+
+def test_winnowing_short_documents(spark):
+    """Docs shorter than k + w - 1 characters have fewer than w grams:
+    they must take the whole-text fingerprint instead of failing on an
+    out-of-bounds window read; longer docs keep the winnowed result."""
+    import hashlib
+
+    from html_parser_spark.spark.ops import winnowing_fingerprints
+
+    k, w = 8, 4
+    base = "the quick brown fox jumps over the lazy dog"
+    lengths = (3, 6, 8, 10, 11, 40)
+    df = spark.createDataFrame(
+        [(n, base[:n]) for n in lengths], "doc_id long, text string")
+    got = {r.doc_id: (r.n_fingerprints, r.min_fingerprint)
+           for r in winnowing_fingerprints(df, k, w).collect()}
+
+    def md5(s):
+        return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+    def expected(text):
+        if len(text) < k + w - 1:
+            return 1, md5(text)
+        grams = [md5(text[i:i + k]) for i in range(len(text) - k + 1)]
+        wins = [min(grams[j:j + w]) for j in range(len(grams) - w + 1)]
+        return len(set(wins)), min(wins)
+
+    assert got == {n: expected(base[:n]) for n in lengths}

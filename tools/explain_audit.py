@@ -5,8 +5,8 @@ queries and assert the plan properties that matter at 100 TB:
   - filters are pushed down (PushedFilters)
   - small dimension joins broadcast (BroadcastHashJoin)
   - aggregations are partial (two HashAggregate phases)
-  - the extraction tier-0 contains NO Python node; exactly one
-    PythonMapInArrow exists (the hard tier)
+  - extraction is one scan and one Arrow kernel (with its internal
+    '<'-free fast path): exactly one MapInArrow, no Union
 Writes PLANS.md with the annotated plans.
 """
 
@@ -64,19 +64,6 @@ def main():
         ("reads the input ONCE (no union-of-filters double scan)",
          # formatted plans name each scan twice (tree + detail header)
          lambda p: p.count("+- Scan parquet") == 1 and "Union" not in p),
-        ("window for stable ordering present",
-         lambda p: "Window" in p),
-        ("scan prunes to transcript columns",
-         lambda p: "ReadSchema" in p),
-    ])
-
-    ext_tiered = extract_turns(tp, ordered=True, single_scan=False)
-    audit("extract_turns (JVM tier split)", ext_tiered, [
-        ("exactly one Python stage (the hard tier)",
-         lambda p: p.count("+- MapInArrow") + p.count("+- PythonMapInArrow")
-         == 1 and "EvalPython" not in p and "MapInPandas" not in p),
-        ("trivial tier stays JVM-side (union of two subplans)",
-         lambda p: "Union" in p),
         ("window for stable ordering present",
          lambda p: "Window" in p),
         ("scan prunes to transcript columns",
