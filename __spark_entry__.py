@@ -38,8 +38,10 @@ _ANN_QUERY_IDS = [0, 1, 2, 3, 4, 5, 6, 7, 8, 9]
 # value is the unexecuted scan PLAN (spark.read.parquet re-resolves
 # the datasource + reads footers on every call, 30-60ms of driver
 # time per table per query build); every action on it still computes
-# from the parquet files. Keyed on applicationId so a restarted
-# session never serves a stale plan.
+# from the parquet files. The key is (applicationId, sf_dir, name), so
+# a restarted session never serves a stale plan; within one
+# application the memo goes stale if a table is rewritten in place
+# (the cached plan keeps the old file listing).
 _TABLE_CACHE: dict = {}
 
 

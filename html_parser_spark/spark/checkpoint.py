@@ -8,8 +8,14 @@ Local realization (no Iceberg catalog in this sandbox, same mechanics):
   - work is keyed by a PARTITION KEY column (e.g. bucket of conv_id);
   - each completed partition writes a manifest row
     (part_key, turns, parse_errors, extracted_chars, status=done);
-  - resume = left_anti join of input partitions against done manifest
-    rows, so a restarted job only processes missing partitions;
+  - resume = a driver-side done-key filter: the manifest holds at most
+    `buckets` keys, so they are read into a Python list and pending
+    rows are kept with `NOT part_key IN (done)` ahead of the kernel —
+    no join, no shuffle of the raw input;
+  - the job's ONE exchange is aligned with the partition key: rows are
+    hash-partitioned by part_key, and the turn_rank window runs over
+    (part_key, conv_id) on that partitioning, so its sort also serves
+    the partitioned writer (one file per part_key);
   - output written partitioned by part_key -> a re-run overwrites a
     partition atomically (dynamic partition overwrite), making resume
     idempotent rather than duplicating.
@@ -20,10 +26,15 @@ Mapping onto a real Iceberg catalog (what each piece becomes):
     dynamic` -> `INSERT OVERWRITE` / `replaceWhere` on that partition
     spec, which Iceberg commits atomically per snapshot, so a re-run
     of a partition is a metadata-level swap, never a partial state;
+  - the part_key repartition ahead of the window ->
+    `write.distribution-mode=hash` on that spec: Iceberg asks Spark to
+    cluster rows by the partition transform before the write, so each
+    write task owns whole partitions and writes one file per
+    partition it owns;
   - the manifest parquet -> either Iceberg's own snapshot/manifest
     metadata (partition-level stats come free) or a small side table
     written in the SAME transaction via multi-table commit; the
-    resume anti-join then reads committed snapshots only, so a crash
+    done-key read then sees committed snapshots only, so a crash
     between data write and manifest append cannot mark an incomplete
     partition done (Iceberg's commit is the atomicity boundary; in
     the parquet realization the manifest append IS the commit point,
@@ -38,36 +49,40 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _part_key(buckets: int) -> Column:
+    return (F.abs(F.xxhash64("conv_id")) % buckets).cast("int")
 
 
 def with_part_key(df: DataFrame, buckets: int = 64) -> DataFrame:
     """Stable partition key: hash-bucket of conv_id. All turns of one
     conversation land in one bucket (lineage unit)."""
-    return df.withColumn(
-        "part_key", (F.abs(F.xxhash64("conv_id")) % buckets).cast("int")
-    )
+    return df.withColumn("part_key", _part_key(buckets))
 
 
 def manifest_path(checkpoint_dir: str) -> str:
     return os.path.join(checkpoint_dir, "manifest")
 
 
-def read_done_keys(spark, checkpoint_dir: str) -> DataFrame:
-    path = manifest_path(checkpoint_dir)
+def done_keys(spark, checkpoint_dir: str) -> list[int]:
+    """The part_keys the manifest marks done, sorted. A missing
+    manifest means nothing is done yet; any other read failure (a
+    corrupt or unreadable manifest) raises rather than silently
+    re-running and re-marking every partition."""
     try:
-        m = spark.read.parquet(path)
-        return m.where(F.col("status") == "done").select("part_key").distinct()
-    except Exception:
-        return spark.createDataFrame([], "part_key int")
-
-
-def pending_partitions(df_with_key: DataFrame, spark,
-                       checkpoint_dir: str) -> DataFrame:
-    """Idempotent resume: drop partitions already marked done."""
-    done = read_done_keys(spark, checkpoint_dir)
-    return df_with_key.join(done, on="part_key", how="left_anti")
+        m = spark.read.schema("part_key int, status string").parquet(
+            manifest_path(checkpoint_dir))
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return []
+        raise
+    rows = (m.where(F.col("status") == "done")
+            .select("part_key").distinct().collect())
+    return sorted(r.part_key for r in rows)
 
 
 def write_manifest(extracted_with_key: DataFrame, spark,
@@ -97,37 +112,46 @@ def run_with_checkpoint(spark, transcripts: DataFrame, out_dir: str,
                         checkpoint_dir: str, buckets: int = 64,
                         mode: str = "fragment", context: str = "div",
                         boilerplate: bool = False):
-    """End-to-end resumable extraction: key -> resume-filter -> extract
-    -> write partitioned by part_key -> manifest append."""
-    from .pipeline import extract_turns
+    """End-to-end resumable extraction: done-key filter -> extract ->
+    rank and write partitioned by part_key -> manifest append.
+
+    Resume contract: every run gets the same input. The done keys are
+    read on the driver and filter the input before the kernel, so a
+    re-run only parses the partitions no earlier run committed; when
+    every key is done the run does nothing. The rows are shuffled once,
+    hash-partitioned by part_key (Iceberg's hash distribution for a
+    `bucket(conv_id, N)` spec): the turn_rank window over (part_key,
+    conv_id) sorts by (part_key, conv_id, turn_idx), which already
+    gives the writer its part_key order, so there is no second sort
+    and each write task writes one file per part_key it owns."""
+    from .pipeline import extract_turns, with_turn_rank
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    keyed = with_part_key(transcripts, buckets)
-    todo = pending_partitions(keyed, spark, checkpoint_dir)
-    extracted = extract_turns(todo.drop("part_key"), mode, context,
-                              boilerplate=boilerplate)
-    extracted = with_part_key(extracted, buckets).withColumn(
-        "n_chars", F.length("extracted_text").cast("bigint")
-    )
     out_path = os.path.join(out_dir, "extracted")
-    # Collect the pending part keys BEFORE the write: they're
-    # metadata-scale (<= `buckets` values, column-pruned to part_key,
-    # no kernel run), and collecting first means the write is the LAST
-    # evaluation of the todo lineage — nothing re-executes after it.
-    new_keys = [
-        r.part_key for r in todo.select("part_key").distinct().collect()
-    ]
-    (extracted.write.mode("overwrite")
-     .partitionBy("part_key")
-     .parquet(out_path))
-    # Manifest metrics come from THIS run's committed files only: the
-    # read-back is partition-pruned to exactly the new keys plus
-    # column-pruned to the small metric columns (n_chars precomputed at
-    # write time so extracted_text is never re-read). Never a full scan
-    # of the cumulative output, and no second run of the parse kernel.
-    if new_keys:
-        done = spark.read.parquet(out_path).where(
-            F.col("part_key").isin(new_keys)
-        ).select("part_key", "conv_id", "parse_errors", "n_chars")
-        write_manifest(done, spark, checkpoint_dir)
+    done = done_keys(spark, checkpoint_dir)
+    if set(range(buckets)) <= set(done):
+        return out_path
+    todo = transcripts
+    if done:
+        todo = todo.where(~_part_key(buckets).isin(done))
+    extracted = with_part_key(
+        extract_turns(todo, mode, context, ordered=False,
+                      boilerplate=boilerplate), buckets)
+    ranked = with_turn_rank(extracted.repartition("part_key"), "part_key")
+    ranked = ranked.withColumn(
+        "n_chars", F.length("extracted_text").cast("bigint"))
+    ranked.write.mode("overwrite").partitionBy("part_key").parquet(out_path)
+    # Manifest metrics come from THIS run's committed files only: under
+    # the resume contract the partitions not yet done are exactly the
+    # ones this run wrote, so the read-back is partition-pruned to them
+    # and column-pruned to the small metric columns (n_chars precomputed
+    # at write time so extracted_text is never re-read). Never a full
+    # scan of the cumulative output, and no second run of the kernel.
+    # The schema is given, so a run that wrote nothing reads no rows.
+    written = spark.read.schema(
+        "conv_id string, parse_errors int, n_chars bigint, part_key int"
+    ).parquet(out_path)
+    if done:
+        written = written.where(~F.col("part_key").isin(done))
+    write_manifest(written, spark, checkpoint_dir)
     return out_path

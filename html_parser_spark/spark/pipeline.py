@@ -46,10 +46,18 @@ def extract_turns(df: DataFrame, mode: str = "fragment",
     kernel_fn = make_extract_map_in_arrow(
         PASSTHROUGH, mode, context, boilerplate=boilerplate)
     out = df.select(*PASSTHROUGH, "text").mapInArrow(kernel_fn, _OUT_SCHEMA)
-    if ordered:
-        w = Window.partitionBy("conv_id").orderBy("turn_idx")
-        out = out.withColumn("turn_rank", F.row_number().over(w))
-    return out
+    return with_turn_rank(out) if ordered else out
+
+
+def with_turn_rank(df: DataFrame, *within: str) -> DataFrame:
+    """+ turn_rank: the 1-based position of each turn in its
+    conversation, in turn_idx order. `within` names extra window
+    partition columns that are functions of conv_id (the checkpoint's
+    part_key): they leave every rank unchanged and let the window
+    reuse a partitioning already in place instead of shuffling by
+    conv_id."""
+    w = Window.partitionBy(*within, "conv_id").orderBy("turn_idx")
+    return df.withColumn("turn_rank", F.row_number().over(w))
 
 
 def conversation_stats(extracted: DataFrame, salt_buckets: int = 16) -> DataFrame:

@@ -14,8 +14,15 @@ Settings rationale (SURVEY.md §4.2, pyspark_guide):
 from __future__ import annotations
 
 import os
+from collections import namedtuple
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+# one SQL execution: its description (the action's call site, e.g.
+# "collect at ..."), the operator names of its final physical plan
+# (adaptive re-planning applied) and that plan as formatted text
+Execution = namedtuple("Execution", "description nodes plan")
 
 
 def get_spark(app_name: str = "html_parser_spark",
@@ -43,3 +50,29 @@ def get_spark(app_name: str = "html_parser_spark",
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+@contextmanager
+def recorded_executions(spark: SparkSession):
+    """Record the SQL executions run inside the block: yields a list
+    that, on exit, holds one `Execution` per execution, in order. Read
+    from Spark's SQL status store, which works with the UI disabled."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            yield it.next()
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    out = []
+    yield out
+    for e in sorted((e for e in executions() if e.executionId() > before),
+                    key=lambda e: e.executionId()):
+        nodes = store.planGraph(e.executionId()).allNodes().iterator()
+        names = []
+        while nodes.hasNext():
+            names.append(nodes.next().name().strip())
+        out.append(Execution(e.description(), names,
+                             e.physicalPlanDescription()))

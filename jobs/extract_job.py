@@ -8,8 +8,9 @@ Usage:
       --checkpoint /path/to/ckpt \
       [--mode fragment] [--context div] [--boilerplate] [--buckets 64]
 
-The job is resumable: re-running after a failure anti-joins against the
-checkpoint manifest and only processes missing partitions
+The job is resumable: re-running after a failure reads the done partition
+keys from the checkpoint manifest and filters them out before the parse,
+so only missing partitions are processed
 (html_parser_spark/spark/checkpoint.py). Per-partition metrics land in
 <checkpoint>/manifest.
 """

@@ -132,23 +132,171 @@ def test_extract_ordering_window(spark):
             assert rank == rank0 + 1, (conv, pairs)
 
 
+def _checkpoint_input(spark, tmp_path):
+    """200 transcript turns as a parquet table, so that the job's plans
+    start at a file scan (an in-memory frame brings its own shuffle)."""
+    from html_parser_spark.spark.transcripts import write_transcripts_parquet
+
+    path = write_transcripts_parquet(spark, str(tmp_path / "in"), 200,
+                                     seed=9, partitions=4)
+    return spark.read.parquet(path)
+
+
+def _part_files(path):
+    """{part_key dir: {parquet file name: (size, mtime_ns)}}."""
+    out = {}
+    for d in sorted(os.listdir(path)):
+        if d.startswith("part_key="):
+            stats = {f: os.stat(os.path.join(path, d, f))
+                     for f in os.listdir(os.path.join(path, d))
+                     if f.endswith(".parquet")}
+            out[d] = {f: (st.st_size, st.st_mtime_ns)
+                      for f, st in stats.items()}
+    return out
+
+
+def _manifest(spark, ckpt):
+    from html_parser_spark.spark.checkpoint import manifest_path
+
+    return sorted(tuple(r) for r in spark.read.parquet(manifest_path(ckpt))
+                  .select("part_key", "turns", "parse_errors",
+                          "extracted_chars", "conversations", "status")
+                  .collect())
+
+
+def _metrics_of(out):
+    """The manifest rows computed directly from the written output."""
+    return sorted(tuple(r) for r in out.groupBy("part_key").agg(
+        F.count("*"), F.sum("parse_errors"),
+        F.sum(F.length("extracted_text")), F.countDistinct("conv_id"),
+        F.lit("done")).collect())
+
+
 def test_checkpoint_resume_idempotent(spark, tmp_path):
     from html_parser_spark.spark.checkpoint import (
-        read_done_keys, run_with_checkpoint,
+        done_keys, run_with_checkpoint,
     )
-    from html_parser_spark.spark.transcripts import transcripts_df
 
-    df = transcripts_df(spark, 200, seed=9, partitions=4)
+    df = _checkpoint_input(spark, tmp_path)
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    path = run_with_checkpoint(spark, df, out_dir, ckpt, buckets=8)
-    n1 = spark.read.parquet(path).count()
-    done1 = read_done_keys(spark, ckpt).count()
-    assert n1 == 200 and done1 >= 1
-    # resume: everything already done -> nothing reprocessed, output stable
+    # without coalescing, all 32 shuffle partitions reach the writer: a
+    # shuffle not aligned with part_key would write several files into
+    # each part_key directory
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    coalesce = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        path = run_with_checkpoint(spark, df, out_dir, ckpt, buckets=8)
+    finally:
+        spark.conf.set(key, coalesce)
+    out = spark.read.parquet(path)
+    assert out.count() == 200
+    assert out.columns[-3:] == ["turn_rank", "n_chars", "part_key"]
+    manifest = _manifest(spark, ckpt)
+    assert manifest == _metrics_of(out)
+    keys = [r[0] for r in manifest]
+    assert done_keys(spark, ckpt) == keys and len(keys) >= 2
+    # turn_rank is each turn's rank within its conversation
+    by_conv = {}
+    for r in out.select("conv_id", "turn_idx", "turn_rank").collect():
+        by_conv.setdefault(r.conv_id, []).append((r.turn_idx, r.turn_rank))
+    for conv, pairs in by_conv.items():
+        pairs.sort()
+        assert [rank for _, rank in pairs] == list(
+            range(1, len(pairs) + 1)), (conv, pairs)
+    # the window's part_key partitioning feeds the writer: one file per
+    # part_key directory
+    files = _part_files(path)
+    assert sorted(files) == [f"part_key={k}" for k in keys]
+    assert all(len(f) == 1 for f in files.values()), files
+    # resume with everything done: nothing written, no manifest row
     run_with_checkpoint(spark, df, out_dir, ckpt, buckets=8)
-    n2 = spark.read.parquet(path).count()
-    assert n2 == 200
+    assert _part_files(path) == files
+    assert _manifest(spark, ckpt) == manifest
+    assert spark.read.parquet(path).count() == 200
+
+
+def test_checkpoint_partial_resume(spark, tmp_path):
+    """A manifest that marks half the keys done (their partitions
+    already committed): the run writes only the other half, leaves the
+    done partitions' files alone, and ends with every key in the
+    manifest exactly once and the same table a single run writes."""
+    import shutil
+
+    from html_parser_spark.spark.checkpoint import (
+        manifest_path, run_with_checkpoint,
+    )
+
+    df = _checkpoint_input(spark, tmp_path)
+    ref = run_with_checkpoint(spark, df, str(tmp_path / "ref"),
+                              str(tmp_path / "ref_ckpt"), buckets=8)
+    ref_manifest = _manifest(spark, str(tmp_path / "ref_ckpt"))
+    done = [r[0] for r in ref_manifest][::2]
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    path = os.path.join(out_dir, "extracted")
+    for k in done:
+        shutil.copytree(os.path.join(ref, f"part_key={k}"),
+                        os.path.join(path, f"part_key={k}"))
+    (spark.read.parquet(manifest_path(str(tmp_path / "ref_ckpt")))
+     .where(F.col("part_key").isin(done))
+     .write.parquet(manifest_path(ckpt)))
+    before = _part_files(path)
+
+    run_with_checkpoint(spark, df, out_dir, ckpt, buckets=8)
+    after = _part_files(path)
+    for d, files in before.items():
+        assert after[d] == files
+    assert sorted(after) == sorted(_part_files(ref))
+    assert all(len(f) == 1 for f in after.values()), after
+    manifest = _manifest(spark, ckpt)
+    assert [r[0] for r in manifest] == sorted({r[0] for r in manifest})
+    assert manifest == ref_manifest
+    cols = ["conv_id", "turn_idx", "turn_rank", "extracted_text",
+            "parse_errors", "n_chars", "part_key"]
+    assert sorted(spark.read.parquet(path).select(cols).collect()) == \
+        sorted(spark.read.parquet(ref).select(cols).collect())
+
+
+def test_checkpoint_unreadable_manifest_raises(spark, tmp_path):
+    """Only a missing manifest means "nothing done"; one that cannot
+    be read must stop the run, not silently re-run every partition."""
+    from html_parser_spark.spark.checkpoint import (
+        manifest_path, run_with_checkpoint,
+    )
+
+    df = _checkpoint_input(spark, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(manifest_path(ckpt))
+    with open(os.path.join(manifest_path(ckpt), "part-0.parquet"), "w") as f:
+        f.write("not a parquet file")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        run_with_checkpoint(spark, df, str(tmp_path / "out"), ckpt,
+                            buckets=8)
+    assert not os.path.exists(tmp_path / "out")
+
+
+def test_checkpoint_write_plan_one_shuffle(spark, tmp_path):
+    """The checkpointed write shuffles once (by part_key), joins
+    nothing, and sorts once — below the window, whose order also
+    serves the partitioned writer; a fresh run collects nothing to the
+    driver."""
+    from html_parser_spark.spark.checkpoint import run_with_checkpoint
+    from html_parser_spark.spark.session import recorded_executions
+
+    df = _checkpoint_input(spark, tmp_path)
+    with recorded_executions(spark) as execs:
+        run_with_checkpoint(spark, df, str(tmp_path / "out"),
+                            str(tmp_path / "ckpt"), buckets=8)
+    assert not [e.description for e in execs
+                if e.description.startswith("collect")]
+    writes = [e for e in execs if "Window" in e.nodes]
+    assert len(writes) == 1, [e.nodes for e in execs]
+    nodes = writes[0].nodes
+    assert nodes.count("Exchange") == 1, nodes
+    assert nodes.count("Sort") == 1 and nodes.count("Window") == 1, nodes
+    assert not [n for n in nodes if "Join" in n], nodes
+    assert "hashpartitioning(part_key" in writes[0].plan
 
 
 def test_exact_dedup_groups(spark):

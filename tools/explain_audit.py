@@ -7,6 +7,9 @@ queries and assert the plan properties that matter at 100 TB:
   - aggregations are partial (two HashAggregate phases)
   - extraction is one scan and one Arrow kernel (with its internal
     '<'-free fast path): exactly one MapInArrow, no Union
+  - the checkpointed write shuffles once, by part_key, with no join
+    and no sort above its window, and collects nothing to the driver
+    (checked on the executed plan of a real run)
 Writes PLANS.md with the annotated plans.
 """
 
@@ -14,7 +17,9 @@ from __future__ import annotations
 
 import io
 import os
+import shutil
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
@@ -32,8 +37,9 @@ def plan_of(df) -> str:
 
 def main():
     import __spark_entry__ as se
+    from html_parser_spark.spark.checkpoint import run_with_checkpoint
     from html_parser_spark.spark.pipeline import extract_turns
-    from html_parser_spark.spark.session import get_spark
+    from html_parser_spark.spark.session import get_spark, recorded_executions
     from html_parser_spark.spark.transcripts import transcripts_df
 
     spark = get_spark("explain-audit")
@@ -42,7 +48,7 @@ def main():
     sections = []
 
     def audit(name, df, asserts, note=None):
-        plan = plan_of(df)
+        plan = df if isinstance(df, str) else plan_of(df)
         results = []
         for label, pred in asserts:
             ok = pred(plan)
@@ -68,6 +74,32 @@ def main():
          lambda p: "Window" in p),
         ("scan prunes to transcript columns",
          lambda p: "ReadSchema" in p),
+    ])
+
+    # executed, not explained: the writer's sort requirement and the
+    # adaptive re-planning only show in the plan of a real run
+    ckpt_dir = tempfile.mkdtemp(prefix="explain_audit_ckpt")
+    try:
+        with recorded_executions(spark) as execs:
+            run_with_checkpoint(spark, tp, os.path.join(ckpt_dir, "out"),
+                                os.path.join(ckpt_dir, "ckpt"), buckets=8)
+    finally:
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
+    writes = [e for e in execs if "Window" in e.nodes]
+    nodes = writes[0].nodes if len(writes) == 1 else []
+    audit("run_with_checkpoint (part_key-aligned write)",
+          writes[0].plan if writes else "", [
+        ("one write execution runs the window",
+         lambda p: len(writes) == 1),
+        ("exactly one shuffle Exchange, hash-partitioned by part_key",
+         lambda p: nodes.count("Exchange") == 1
+         and "hashpartitioning(part_key" in p),
+        ("no Join; one Sort, below the Window (the writer reuses it)",
+         lambda p: not any("Join" in n for n in nodes)
+         and nodes.count("Sort") == 1 and nodes.count("Window") == 1),
+        ("no collect job in the run",
+         lambda p: not any(e.description.startswith("collect")
+                           for e in execs)),
     ])
 
     qs = se.queries()
