@@ -599,9 +599,10 @@ def _q_ann_ivf(spark, sf_dir):
     # ivf_fit is the quantizer-training ACTION: real spherical k-means
     # (Lloyd's), one distributed pass per iteration with decimal-exact
     # (partitioning-independent) centroid means; the search itself is
-    # pure plan — assignment is a per-row argmax over the centroid
-    # literals, probing a cell-keyed equi-join. n_probe == n_cells
-    # reproduces ann_bruteforce exactly (property-tested), and
+    # pure plan — assignment is a per-row argmax by the numpy fold
+    # kernel (bit-equal to the JVM cosine fold), probing a cell-keyed
+    # equi-join. n_probe == n_cells reproduces ann_bruteforce exactly
+    # (property-tested), and
     # test_ivf_kmeans_recall_single_probe gates the below-full-probe
     # recall the trained quantizer buys.
     from html_parser_spark.spark.ops import ann_ivf, ivf_fit

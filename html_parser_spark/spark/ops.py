@@ -1,10 +1,12 @@
 """Training-data pipeline operators over the documents/embeddings tables.
 
 Design rule: everything here is JVM-side built-ins (whole-stage
-codegen) — zero Python UDFs. Every operator that ANSI SQL can express
-has a DuckDB oracle in __spark_entry__.py; the seeded-hash operators
-(minhash/simhash/ann-lsh) are gated by property tests plus pinned
-deterministic-snapshot oracles.
+codegen). The one Python UDF is the ANN family's fold kernel (a numpy
+pandas_udf whose doubles are bit-equal to the JVM folds). Every
+operator that ANSI SQL can express has a DuckDB oracle in
+__spark_entry__.py; the seeded-hash operators (minhash/simhash/ann-lsh)
+are gated by property tests plus pinned deterministic-snapshot
+oracles.
 
 Operators:
   exact dedup        — md5-groupBy, keep min doc_id            [SQL oracle]
@@ -16,7 +18,7 @@ Operators:
   quality score      — length/punct/stopword ratios            [SQL oracle]
   lang id            — stopword-hit heuristic                  [SQL oracle]
   fingerprint        — md5 of ws-normalized lowercased text    [SQL oracle]
-  ANN brute force    — cosine top-k via aggregate/zip_with     [SQL oracle]
+  ANN brute force    — cosine top-k via the fold kernel        [SQL oracle]
   ANN LSH            — in-plan seeded hyperplanes, multi-table [snapshot]
   embedding near-dup — LSH-bucketed cosine pairs >= threshold  [SQL oracle]
 """
@@ -1751,6 +1753,9 @@ def _dot(a, b):
 
 
 def _norm(a):
+    """L2 norm fold. Callers project it as its own column below any
+    join, so each vector's norm is computed once rather than once per
+    pair; the cosine doubles are the same either way."""
     return F.sqrt(
         F.aggregate(
             F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
@@ -1758,29 +1763,154 @@ def _norm(a):
     )
 
 
-# -- r8 literal-norm mirror -------------------------------------------------
-# A fully UNROLLED element_at chain for the dots/distances was
-# measured and REJECTED: the 1024-literal expression tree builds/
-# compiles slower than the interpreted fold executes at quantizer
-# scale (assignment 1.6s -> 4.5s at sf1.0). What does win: hoisting
-# every re-evaluated subexpression — the row norm as a projected
-# column, the CENTROID norms as host-computed literals (below), and
-# PQ subvector slices as projected columns.
+def _cosine(a: str, b: str, na: str, nb: str):
+    """_dot(a, b) / greatest(na * nb, 1e-300) over vector columns `a`,
+    `b` and their projected _norm columns: a zero vector scores 0
+    instead of raising DIVIDE_BY_ZERO (ANSI mode)."""
+    return _dot(F.col(a), F.col(b)) / F.greatest(
+        F.col(na) * F.col(nb), F.lit(1e-300))
 
 
-def _norm_lit(values) -> float:
-    """Host-side mirror of _norm over a LITERAL vector: Python floats
-    are IEEE doubles and the loop performs the identical
-    0.0 + v0*v0 + v1*v1 ... fold (then sqrt), so the result equals
-    the r7 per-row _norm(array(lits)) expression value bit-for-bit —
-    lambda-bearing expressions never constant-fold, so the r7 form
-    re-evaluated that constant per row per centroid."""
-    import math
+def _top_k(scored: DataFrame, k: int, score) -> DataFrame:
+    """The k best rows per query_id by `score`, ties to the smaller
+    corpus_id, numbered 1..k in `rank`."""
+    from pyspark.sql import Window
 
-    acc = 0.0
-    for v in values:
-        acc += v * v
-    return math.sqrt(acc)
+    w = Window.partitionBy("query_id").orderBy(score, F.asc("corpus_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+    )
+
+
+# -- fold kernel --------------------------------------------------------------
+# ann_bruteforce, the IVF quantizer and PQ score every row against a
+# small host-side matrix (the queries, the centroids, a codebook) in
+# one numpy kernel per Arrow batch. Each sum is a left fold from 0.0
+# over the dimensions in index order, the order of _dot and _norm, so
+# the kernel's doubles equal the JVM folds bit for bit; a matmul
+# reorders the sum and does not. Rounding stays on the JVM: F.round is
+# decimal HALF_UP and numpy's is not.
+
+
+def _fold_norms(V):
+    """L2 norm of each row of V, the _norm fold."""
+    import numpy as np
+
+    acc = np.zeros(len(V))
+    for j in range(V.shape[1]):
+        acc += V[:, j] * V[:, j]
+    return np.sqrt(acc)
+
+
+def _fold_scores(V, M, sqdist: bool = False):
+    """(n, d) rows x (k, d) matrix -> (n, k) dot products, or squared
+    L2 distances with `sqdist`, each a left fold over d like _dot.
+    Memory is O(n*k): the (n, k, d) product is never built."""
+    import numpy as np
+
+    # contiguous columns and one scratch buffer: ~1.5x at 768 dims
+    Vt, Mt = np.ascontiguousarray(V.T), np.ascontiguousarray(M.T)
+    acc = np.zeros((len(V), len(M)))
+    t = np.empty_like(acc)
+    for j in range(len(Vt)):
+        if sqdist:
+            np.subtract(Vt[j][:, None], Mt[j], out=t)
+            t *= t
+        else:
+            np.multiply(Vt[j][:, None], Mt[j], out=t)
+        acc += t
+    return acc
+
+
+def _fold_cosines(V, M):
+    """(n, k) cosines, _dot / greatest(_norm * _norm, 1e-300): a zero
+    vector scores 0 against everything."""
+    import numpy as np
+
+    return _fold_scores(V, M) / np.maximum(
+        _fold_norms(V)[:, None] * _fold_norms(M)[None, :], 1e-300)
+
+
+def _vector_udf(return_type: str, dim: int, kernel):
+    """pandas_udf over an array column of `dim`-vectors. `kernel` maps
+    the (n, dim) float64 matrix of a batch's vectors (float elements
+    widen exactly, as their JVM cast to double does) to a list of n
+    outputs. A NULL embedding, or one of another length, gives NULL
+    and never reaches the kernel."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    def _batch(vecs):
+        ok = [v is not None and len(v) == dim for v in vecs]
+        rows = [v for v, o in zip(vecs, ok) if o]
+        out = iter(kernel(np.array(rows, dtype=np.float64)) if rows
+                   else ())
+        return pd.Series([next(out) if o else None for o in ok],
+                         dtype=object)
+
+    # a real annotation OBJECT: this module runs under `from __future__
+    # import annotations`, which would stringify an inline hint and
+    # break pandas_udf's signature inference
+    _batch.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
+    # marked nondeterministic only so the optimizer keeps one call per
+    # row: a join on the kernel's output infers isnotnull(cell), and
+    # pushing that filter below the projection would copy the call
+    return pandas_udf(return_type)(_batch).asNondeterministic()
+
+
+def _cell_udfs(centroids: list, n_probe: int | None = None):
+    """(cell_of, probes_of) against the IVF `centroids`: a vector's
+    argmax-cosine cell (exact ties go to the larger cell id) and its
+    `n_probe` best cells, by cosine desc then cell desc. probes_of is
+    None without n_probe."""
+    import numpy as np
+
+    C = np.asarray(centroids, dtype=np.float64)
+    k, dim = C.shape
+    cells = np.arange(k)
+
+    def _cells(V):
+        cos = _fold_cosines(V, C)
+        # the last maximum is the larger cell id
+        return [int(c) for c in (k - 1) - np.argmax(cos[:, ::-1], axis=1)]
+
+    def _probes(V):
+        return [[int(c) for c in np.lexsort((-cells, -row))[:n_probe]]
+                for row in _fold_cosines(V, C)]
+
+    probes_of = (_vector_udf("array<int>", dim, _probes)
+                 if n_probe is not None else None)
+    return _vector_udf("int", dim, _cells), probes_of
+
+
+def _pq_udfs(codebooks: list):
+    """(codes_of, tables_of) against the PQ `codebooks`. Both work on
+    the unit vector x / greatest(|x|, 1e-300), as pq_fit's means do:
+    codes_of gives the code word, per subspace the code at least
+    squared L2 (exact ties go to the smaller code); tables_of gives the
+    ADC table, the n_subspaces x n_codes squared distances."""
+    import numpy as np
+
+    CB = np.asarray(codebooks, dtype=np.float64)  # (m, k, sub)
+    n_sub, _, sub = CB.shape
+
+    def _dists(V):  # (n, m, k)
+        U = V / np.maximum(_fold_norms(V), 1e-300)[:, None]
+        return np.stack([
+            _fold_scores(U[:, m * sub:(m + 1) * sub], CB[m], sqdist=True)
+            for m in range(n_sub)], axis=1)
+
+    def _codes(V):
+        return _dists(V).argmin(axis=2).tolist()
+
+    def _tables(V):
+        return _dists(V).tolist()
+
+    dim = n_sub * sub
+    return (_vector_udf("array<int>", dim, _codes),
+            _vector_udf("array<array<double>>", dim, _tables))
 
 
 def embedding_norms(embeddings: DataFrame) -> DataFrame:
@@ -1792,161 +1922,44 @@ def embedding_norms(embeddings: DataFrame) -> DataFrame:
 
 
 def ann_bruteforce(embeddings: DataFrame, query_ids: list[int],
-                   k: int = 5, method: str = "auto",
-                   dim: int | None = None) -> DataFrame:
-    """Exact cosine top-k: broadcast the (small) query side against the
-    corpus — the baseline the LSH variant is judged against. The corpus
-    side streams; only the query side is broadcast.
+                   k: int = 5) -> DataFrame:
+    """Exact cosine top-k, the baseline the LSH and IVF variants are
+    judged against. The (tiny) query matrix is collected at build time
+    into the fold kernel, which scores each corpus Arrow batch against
+    every query; the corpus streams and nothing is joined. Raises
+    ValueError when query_ids match no row with an embedding.
 
-    method='expr' (the oracle-gated form) computes cosines with JVM
-    aggregate/zip_with expressions; those are INTERPRETED higher-order
-    functions, fine at test dims but the wrong shape at 768-dim real
-    embeddings. method='arrow' collects the (tiny) query matrix into a
-    Pandas-UDF closure and scores each Arrow batch with one numpy
-    matmul — same candidates, same ranking on separated data; last-ulp
-    cosine differences between summation orders mean the two methods
-    are rank-compared, not hash-compared, in tests. method='auto'
-    (default) picks by per-row interpreted work (dim * n_queries),
-    the same switch shape as _ivf_method: 'expr' at test scale (stays
-    the oracle form), 'arrow' at realistic dimensionality.
+    Cosines are round(_dot(q, c) / greatest(|q| * |c|, 1e-300), 6) to
+    the bit: a zero vector scores 0 everywhere, never NaN, and a NULL
+    embedding is scored against nothing."""
+    import numpy as np
 
-    Laziness/guard contract: 'auto' runs ONE cheap one-row probe
-    (first()) to read the dimensionality off the data — the array dim
-    is not in the schema — then the resolved path builds as if named
-    explicitly. Hot callers that already know the dimensionality (or
-    construct the plan without ever executing it) pass dim= to skip
-    the probe job entirely; dim is ignored unless method='auto'. The 'arrow' path collects the (tiny) query matrix at
-    build time and raises ValueError when query_ids match nothing
-    (previously a numpy shape crash). The 'expr' path stays a pure
-    lazy plan (zero full-scan driver jobs at build, the form the plan
-    audits exercise) and so returns an empty result for unmatched ids
-    instead of raising. Zero-norm vectors score cosine 0 on every
-    path (epsilon-clamped denominators), never NULL/NaN."""
-    from pyspark.sql import Window
-
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    corpus = _spread(embeddings).select(
-        F.col("vec_id").alias("corpus_id"), vec_d.alias("cvec")
+    qrows = embeddings.where(
+        F.col("vec_id").isin(query_ids) & F.col("embedding").isNotNull()
+    ).select("vec_id", "embedding").collect()
+    if not qrows:
+        raise ValueError(
+            f"ann_bruteforce: query_ids {query_ids!r} matched no "
+            "rows with an embedding"
+        )
+    Q = np.asarray([r.embedding for r in qrows], dtype=np.float64)
+    cos_of = _vector_udf("array<double>", Q.shape[1],
+                         lambda V: list(_fold_cosines(V, Q)))
+    qid_at = F.array(*[F.lit(r.vec_id) for r in qrows])
+    # no _spread: the kernel is vectorized, and on a scan of few
+    # partitions one more Python task costs more than it parallelizes
+    scored = (
+        embeddings.select(
+            F.col("vec_id").alias("corpus_id"),
+            F.posexplode(cos_of("embedding")).alias("qpos", "cosine"),
+        )
+        .select(
+            F.element_at(qid_at, F.col("qpos") + 1).alias("query_id"),
+            "corpus_id", F.round("cosine", 6).alias("cosine"),
+        )
+        .where(F.col("corpus_id") != F.col("query_id"))
     )
-    if method == "auto":
-        if dim is None:
-            # memoized like _SPREAD_CACHE: the dimensionality of a
-            # given file set is METADATA (array length of row one),
-            # not a result — re-probing it launched a driver job on
-            # every query BUILD (~0.15s of ann_bruteforce's timed
-            # lambda in the bench)
-            sc = embeddings.sparkSession.sparkContext
-            try:
-                files = tuple(sorted(embeddings.inputFiles()))
-            except Exception:  # pragma: no cover — exotic sources
-                files = ()
-            # file-backed frames only: an in-memory relation has no
-            # files, and a () key would alias EVERY such frame to one
-            # cache slot (stale dim across different test frames)
-            key = (sc.applicationId, files) if files else None
-            dim = _BF_DIM_CACHE.get(key) if key is not None else None
-        if dim is None:
-            probe = embeddings.select(
-                F.size("embedding").alias("d")).first()
-            if probe is None or probe.d is None or probe.d < 0:
-                # first() row with embedding=NULL gives d NULL (or -1
-                # under legacy sizeOfNull) — an opaque TypeError
-                # downstream without this guard
-                raise ValueError(
-                    "ann_bruteforce: embeddings table is empty or its "
-                    "first row has a NULL embedding — cannot infer "
-                    "dimensionality for method='auto'; pass method "
-                    "or dim explicitly")
-            dim = probe.d
-            if key is not None:
-                if len(_BF_DIM_CACHE) > 256:
-                    _BF_DIM_CACHE.clear()
-                _BF_DIM_CACHE[key] = dim
-        # arrow when either the per-row interpreted work
-        # (dim * n_queries HOF values, the _ivf_method switch) or the
-        # dimensionality alone is past test scale — a 768-dim corpus
-        # is the arrow path's case even for one query
-        nq = max(len(query_ids), 1)
-        method = ("expr" if dim * nq <= _IVF_EXPR_MAX_VALUES
-                  and dim < _BF_ARROW_MIN_DIM else "arrow")
-    if method == "arrow":
-        qrows = (
-            embeddings.where(F.col("vec_id").isin(query_ids))
-            .select("vec_id", vec_d.alias("v")).collect()
-        )
-        if not qrows:
-            raise ValueError(
-                f"ann_bruteforce: query_ids {query_ids!r} matched no "
-                "rows in the embeddings table"
-            )
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        qids = [r.vec_id for r in qrows]
-        Q = np.asarray([r.v for r in qrows], dtype=np.float64)
-        # same zero-norm guard as the corpus side: a zero query vector
-        # scores 0 everywhere instead of NaN (which would sort above
-        # every real cosine)
-        Qn = (Q / np.maximum(
-            np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)).T
-
-        def _cos_fn(vecs):
-            V = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in vecs])
-            V = V / np.maximum(
-                np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-            return pd.Series(list(np.round(V @ Qn, 6)))
-
-        _cos_fn.__annotations__ = {"vecs": pd.Series,
-                                   "return": pd.Series}
-        cos_of = pandas_udf("array<double>")(_cos_fn)
-        scored = (
-            corpus.select(
-                "corpus_id",
-                F.posexplode(cos_of("cvec")).alias("qpos", "cosine"),
-            )
-            .withColumn(
-                "query_id",
-                F.element_at(
-                    F.array(*[F.lit(q) for q in qids]),
-                    F.col("qpos") + 1),
-            )
-            .where(F.col("corpus_id") != F.col("query_id"))
-            .select("query_id", "corpus_id", "cosine")
-        )
-    else:
-        # r8: norms are HOISTED below the join — each side carries its
-        # L2 norm as a projected column, so a corpus row's norm is
-        # computed once instead of once per query (and the query
-        # norms once instead of once per corpus row). The interpreted
-        # HOF work per joined pair drops from 3 array reductions to 1
-        # (0.65s -> 0.36s at sf1.0 dim=64); the cosine DOUBLES are
-        # bit-identical (same expression evaluated on the same row,
-        # just not re-evaluated), verified value-equal incl. cosine.
-        queries = embeddings.where(
-            F.col("vec_id").isin(query_ids)).select(
-            F.col("vec_id").alias("query_id"), vec_d.alias("qvec")
-        ).withColumn("qnorm", _norm(F.col("qvec")))
-        corpus = corpus.withColumn("cnorm", _norm(F.col("cvec")))
-        joined = corpus.join(F.broadcast(queries),
-                             F.col("corpus_id") != F.col("query_id"))
-        # epsilon-clamped like the arrow path: a zero-norm vector
-        # scores 0 everywhere instead of NaN (no zero vectors exist in
-        # the oracle data, so the DuckDB-gated values are unchanged)
-        cos = _dot(F.col("qvec"), F.col("cvec")) / F.greatest(
-            F.col("qnorm") * F.col("cnorm"), F.lit(1e-300)
-        )
-        scored = joined.select(
-            "query_id", "corpus_id", F.round(cos, 6).alias("cosine")
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("corpus_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, F.desc("cosine"))
 
 
 def lsh_bucketed(embeddings: DataFrame, n_planes: int = 8,
@@ -1994,7 +2007,10 @@ def lsh_bucketed(embeddings: DataFrame, n_planes: int = 8,
     # and plain explode would infer a size()>0 filter that re-runs all
     # plane projections below the spread exchange (same pathology as
     # minhash_signatures)
-    return _spread(embeddings).select(
+    # a NULL embedding has no sign pattern: it gets no bucket
+    return _spread(embeddings).where(
+        F.col("embedding").isNotNull()
+    ).select(
         "vec_id", vec_d.alias("vec")
     ).withColumn(
         "bucket",
@@ -2013,11 +2029,7 @@ def ann_lsh(embeddings: DataFrame, query_ids: list[int], k: int = 5,
     OR-amplified across tables, pair-deduped), exact cosine within
     bucket. The scale path — the candidate join is keyed by bucket,
     not a cross join."""
-    from pyspark.sql import Window
-
     base = lsh_bucketed(embeddings, n_planes, n_tables, seed)
-    # norms hoisted below the join (see ann_bruteforce r8 note):
-    # bit-identical cosines, one array reduction per pair instead of 3
     corpus = base.select(
         F.col("vec_id").alias("corpus_id"), F.col("vec").alias("cvec"),
         "bucket",
@@ -2031,19 +2043,11 @@ def ann_lsh(embeddings: DataFrame, query_ids: list[int], k: int = 5,
         (F.col("bucket") == F.col("qbucket"))
         & (F.col("corpus_id") != F.col("query_id")),
     ).dropDuplicates(["query_id", "corpus_id"])
-    cos = _dot(F.col("qvec"), F.col("cvec")) / (
-        F.col("qnorm") * F.col("cnorm")
-    )
+    cos = _cosine("qvec", "cvec", "qnorm", "cnorm")
     scored = joined.select(
         "query_id", "corpus_id", F.round(cos, 6).alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("corpus_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, F.desc("cosine"))
 
 
 def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.9,
@@ -2065,8 +2069,6 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.9,
     exact=True verifies ALL pairs (test/oracle scale only — same
     caveat as ngram_jaccard_pairs without candidates)."""
     vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    # per-side norms hoisted below the join (see ann_bruteforce r8
-    # note): bit-identical cosines, 3x less interpreted HOF work/pair
     if exact:
         a = embeddings.select(F.col("vec_id").alias("vec_a"),
                               vec_d.alias("va")
@@ -2087,9 +2089,7 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.9,
             right,
             (left.bucket == right.bucket) & (F.col("vec_a") < F.col("vec_b")),
         ).dropDuplicates(["vec_a", "vec_b"])
-    cos = _dot(F.col("va"), F.col("vb")) / (
-        F.col("na") * F.col("nb")
-    )
+    cos = _cosine("va", "vb", "na", "nb")
     return (
         cand.select("vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
         .where(F.col("cosine") >= threshold)
@@ -2117,10 +2117,8 @@ def semantic_dedup(embeddings: DataFrame, n_clusters: int = 4,
     test embeddings, whose max pairwise cosine is ~0.51; production
     values sit at 0.9+)."""
     vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    # norms hoisted below both joins (see ann_bruteforce r8 note):
-    # each vector's norm is computed once and carried as a column
-    # through assignment and the within-cluster pair join instead of
-    # re-evaluated per seed and per pair — bit-identical cosines
+    # each vector's norm rides as a column through assignment and
+    # the within-cluster pair join (see _norm)
     corpus = _spread(embeddings).select(
         "vec_id", vec_d.alias("vec")
     ).withColumn("nv", _norm(F.col("vec")))
@@ -2129,9 +2127,7 @@ def semantic_dedup(embeddings: DataFrame, n_clusters: int = 4,
         .select(F.col("vec_id").alias("seed_id"), vec_d.alias("svec"))
         .withColumn("ns", _norm(F.col("svec")))
     )
-    cos_seed = _dot(F.col("vec"), F.col("svec")) / F.greatest(
-        F.col("nv") * F.col("ns"), F.lit(1e-300)
-    )
+    cos_seed = _cosine("vec", "svec", "nv", "ns")
     assigned = (
         corpus.join(F.broadcast(seeds))
         .select("vec_id", "vec", "nv", "seed_id",
@@ -2153,9 +2149,7 @@ def semantic_dedup(embeddings: DataFrame, n_clusters: int = 4,
     right = assigned.select(F.col("vec_id").alias("vec_b"),
                             F.col("vec").alias("vb"),
                             F.col("nv").alias("nb"), "cluster_id")
-    pair_cos = _dot(F.col("va"), F.col("vb")) / F.greatest(
-        F.col("na") * F.col("nb"), F.lit(1e-300)
-    )
+    pair_cos = _cosine("va", "vb", "na", "nb")
     dropped = (
         left.join(right, "cluster_id")
         .where(F.col("vec_a") < F.col("vec_b"))
@@ -2197,151 +2191,30 @@ def _ivf_seed_anchors(embeddings: DataFrame, n_cells: int,
     return [by_cell[c] for c in sorted(by_cell)]
 
 
-def _dlit(v) -> str:
-    """SQL double literal for a host float: repr() is the shortest
-    round-trip decimal and Spark's parser maps it back to the
-    identical IEEE double (same contract as F.lit)."""
-    return repr(float(v)) + "D"
-
-
-def _arr_lit_sql(values) -> str:
-    return "array(" + ", ".join(_dlit(v) for v in values) + ")"
-
-
-def _cell_scores_sql(vec: str, centroids: list, norm: str) -> str:
-    """SQL text of the array<struct<cos,cell>> per-cell cosine scores
-    over centroid literals. r8 shape — same Catalyst tree the r7
-    Column-builder form produced (aggregate/zip_with fold, identical
-    doubles), minus three per-row re-evaluations and the build cost:
-      - the row norm is the PROJECTED `norm` column (r7 re-evaluated
-        the interpreted _norm(vec) reduction once per CELL per row);
-      - centroid norms are host-computed literals (_norm_lit — r7
-        re-evaluated the constant per cell per row: lambda-bearing
-        expressions never fold);
-      - the whole array is ONE F.expr parse instead of ~40 py4j
-        round trips per cell (the driver spent seconds per Lloyd
-        iteration just BUILDING these trees)."""
-    entries = []
-    for i, c in enumerate(centroids):
-        dot = (f"aggregate(zip_with({vec}, {_arr_lit_sql(c)}, "
-               f"(x, y) -> x * y), 0.0D, (acc, x) -> acc + x)")
-        entries.append(
-            f"struct({dot} / ({norm} * {_dlit(_norm_lit(c))}) AS cos, "
-            f"{i} AS cell)")
-    return "array(" + ", ".join(entries) + ")"
-
-
-def _cell_scores_expr(vec: str, centroids: list, norm: str):
-    return F.expr(_cell_scores_sql(vec, centroids, norm))
-
-
-def _nearest_cell_expr(vec: str, centroids: list, norm: str):
-    """Per-row argmax-cosine cell assignment over centroid literals —
-    no shuffle, no join; the same expression ann_ivf search uses.
-    `vec`/`norm` are COLUMN NAMES (the norm must be a projected
-    _norm(vec) column); see _cell_scores_sql. Expression size is
-    dim * n_cells literals: right for the small quantizers the
-    registered queries use, wrong past a few thousand values —
-    _ivf_method picks the Arrow path there."""
-    return F.expr(
-        f"array_max({_cell_scores_sql(vec, centroids, norm)}).cell")
-
-
-# literal-expression assignment is the fast zero-shuffle path for the
-# small coarse quantizers; past this many values (dim * n_cells) the
-# expression tree starts to dominate driver plan-build time and the
-# vectorized Arrow path wins
-_IVF_EXPR_MAX_VALUES = 4096
-
-# ann_bruteforce(method='auto'): at or above this dimensionality the
-# interpreted-HOF cosine is the wrong shape per corpus row regardless
-# of query count — switch to the Arrow matmul path
-_BF_ARROW_MIN_DIM = 256
-
-# (applicationId, input file set) -> embedding dimensionality; see the
-# method='auto' probe in ann_bruteforce
-_BF_DIM_CACHE: dict = {}
-
-
-def _ivf_method(method: str, centroids: list) -> str:
-    if method != "auto":
-        return method
-    values = len(centroids) * (len(centroids[0]) if centroids else 0)
-    return "expr" if values <= _IVF_EXPR_MAX_VALUES else "arrow"
-
-
-def _make_cell_udfs(centroids: list, n_probe: int | None = None):
-    """Arrow-vectorized cell assignment for realistic dimensionality
-    (e.g. 768-dim x 64 cells, where the literal-expression path would
-    inline ~50k literals into one plan): a Pandas UDF closure over the
-    L2-normalized centroid matrix, one numpy matmul per Arrow batch.
-    |v| scales every cell's cosine equally per row, so argmax/ordering
-    need no per-row normalization. Tie semantics mirror the expression
-    path exactly: equal cosines prefer the LARGER cell id (struct max
-    / reversed sort order there, reversed-argmax and lexsort here).
-    Returns (cell_of, probes_of); probes_of is None unless `n_probe`
-    is given (the fit loop only assigns — no point constructing and
-    shipping a probe UDF per Lloyd iteration)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)
-    Cn = (C / np.linalg.norm(C, axis=1, keepdims=True)).T  # (d, k)
-    k = C.shape[0]
-
-    def _cos_matrix(vecs):
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        return V @ Cn  # (batch, k)
-
-    def _cell_fn(vecs):
-        cos = _cos_matrix(vecs)
-        # last max index == larger cell id on exact ties
-        return pd.Series((k - 1) - np.argmax(cos[:, ::-1], axis=1))
-
-    def _probes_fn(vecs):
-        cos = _cos_matrix(vecs)
-        cells = np.arange(k)
-        out = []
-        for row in cos:
-            order = np.lexsort((-cells, -row))  # cos desc, cell desc
-            out.append([int(c) for c in order[:n_probe]])
-        return pd.Series(out)
-
-    # real annotation OBJECTS (not strings): this module runs under
-    # `from __future__ import annotations`, which would stringify
-    # inline hints and break pandas_udf's signature inference
-    for fn in (_cell_fn, _probes_fn):
-        fn.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    probes = (pandas_udf("array<int>")(_probes_fn)
-              if n_probe is not None else None)
-    return pandas_udf("int")(_cell_fn), probes
-
-
 def ivf_fit(embeddings: DataFrame, n_cells: int = 16, seed: int = 7,
-            n_iters: int = 5, train_fraction: float = 1.0,
-            method: str = "auto") -> list:
+            n_iters: int = 5, train_fraction: float = 1.0) -> list:
     """IVF coarse-quantizer TRAINING action: REAL spherical k-means
     (Lloyd's), the analogue of KMeans.fit — the deliberate driver-side
     jobs in the IVF path; search itself stays pure plan construction.
 
     Each iteration is one distributed pass: per-row argmax-cosine
-    assignment against the current centroid literals (no shuffle for
-    assignment), then ONE groupBy(cell) shuffle of 64-ish tiny decimal
-    averages. Per-dimension means aggregate in DECIMAL so the result
-    is exact and independent of partitioning/aggregation order — the
-    trained centroids (and hence every downstream search result) are
-    bit-deterministic. Centroids are L2-normalized (spherical k-means,
-    matching the cosine assignment); cells that lose all points keep
-    their previous centroid. `train_fraction` hash-samples the
-    training set (at 100 TB you fit the coarse quantizer on a sample;
-    assignment quality needs cluster SHAPE, not every row). Returns
-    the centroids as a plain list — a tiny model artifact that search
-    plans inline as broadcast literals, exactly how production IVF
-    ships its centroids."""
-    train = embeddings
+    assignment by the fold kernel against the current centroids (no
+    shuffle for assignment), then ONE groupBy(cell) shuffle of 64-ish
+    tiny decimal averages. Per-dimension means aggregate in DECIMAL so
+    the result is exact and independent of partitioning/aggregation
+    order — the trained centroids (and hence every downstream search
+    result) are bit-deterministic. Centroids are L2-normalized
+    (spherical k-means, matching the cosine assignment); cells that
+    lose all points keep their previous centroid. NULL embeddings are
+    not trained on. `train_fraction` hash-samples the training set (at
+    100 TB you fit the coarse quantizer on a sample; assignment
+    quality needs cluster SHAPE, not every row). Returns the centroids
+    as a plain list — a tiny model artifact that search ships to the
+    kernel in its closure, exactly how production IVF ships its
+    centroids."""
+    train = embeddings.where(F.col("embedding").isNotNull())
     if train_fraction < 1.0:
-        train = embeddings.where(
+        train = train.where(
             F.pmod(F.xxhash64("vec_id", F.lit(seed + 2)), F.lit(10_000))
             < int(train_fraction * 10_000)
         )
@@ -2353,23 +2226,16 @@ def ivf_fit(embeddings: DataFrame, n_cells: int = 16, seed: int = 7,
     # spread shuffle + cast re-execute n_iters times
     base = _spread(train).select(vec_d.alias("vec")).persist()
     try:
-        return _lloyd_iterate(base, centroids, dim, n_iters, method)
+        return _lloyd_iterate(base, centroids, dim, n_iters)
     finally:
         base.unpersist()
 
 
 def _lloyd_iterate(base: DataFrame, centroids: list, dim: int,
-                   n_iters: int, method: str = "auto") -> list:
+                   n_iters: int) -> list:
     for _ in range(n_iters):
-        if _ivf_method(method, centroids) == "arrow":
-            cell_of, _probes = _make_cell_udfs(centroids)
-            assigned = base.withColumn("cell", cell_of("vec"))
-        else:
-            assigned = base.withColumn(
-                "nv", _norm(F.col("vec"))
-            ).withColumn(
-                "cell", _nearest_cell_expr("vec", centroids, "nv"))
-        stats = assigned.groupBy("cell").agg(
+        cell_of, _ = _cell_udfs(centroids)
+        stats = base.withColumn("cell", cell_of("vec")).groupBy("cell").agg(
             F.count("*").alias("n"),
             *[
                 F.avg(F.element_at("vec", d + 1).cast("decimal(28,12)"))
@@ -2390,8 +2256,7 @@ def _lloyd_iterate(base: DataFrame, centroids: list, dim: int,
 
 
 def ann_ivf(embeddings: DataFrame, query_ids: list[int], anchors: list,
-            k: int = 5, n_probe: int = 4,
-            method: str = "auto") -> DataFrame:
+            k: int = 5, n_probe: int = 4) -> DataFrame:
     """IVF-flat ANN: assign every vector to its nearest anchor cell
     per-row (no shuffle, no join for assignment), probe the `n_probe`
     nearest cells per query, and run exact cosine + top-k inside the
@@ -2399,183 +2264,40 @@ def ann_ivf(embeddings: DataFrame, query_ids: list[int], anchors: list,
     all-pairs. With n_probe == len(anchors) the result equals
     ann_bruteforce exactly (property-tested).
 
-    Assignment method: 'expr' inlines the anchors as literals (zero
-    extra stages, whole-stage codegen — right for small quantizers;
-    what every registered query uses), 'arrow' runs the vectorized
-    numpy matmul UDF (right for realistic dimensionality, e.g.
-    768-dim x 64 cells where the expression tree would carry ~50k
-    literals); 'auto' switches on dim * n_cells. Both paths share the
-    exact JVM cosine for final scoring; assignment tie semantics are
-    mirrored (see _make_cell_udfs)."""
-    from pyspark.sql import Window
-
+    The fold kernel assigns cells and probes (see _cell_udfs); the
+    final scoring is the JVM _dot fold over the cell-keyed broadcast
+    join. A NULL embedding has no cell, so it is neither a candidate
+    nor a query."""
+    cell_of, probes_of = _cell_udfs(anchors, n_probe)
     vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     base = _spread(embeddings).select("vec_id", vec_d.alias("vec"))
-
-    if _ivf_method(method, anchors) == "arrow":
-        cell_of, probes_of = _make_cell_udfs(anchors, n_probe)
-        corpus = base.select(
-            F.col("vec_id").alias("corpus_id"),
-            F.col("vec").alias("cvec"),
-            cell_of("vec").alias("cell"),
-        )
-        queries = base.where(F.col("vec_id").isin(query_ids)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("vec").alias("qvec"),
-            _norm(F.col("vec")).alias("qnorm"),
-            F.explode_outer(probes_of("vec")).alias("cell"),
-        )
-        corpus = corpus.withColumn("cnorm", _norm(F.col("cvec")))
-    else:
-        # r8: row norm projected once (nv), centroid norms host
-        # literals, unrolled dots — see _cell_scores_expr; nv rides
-        # into the final scoring as qnorm/cnorm (the r7 form
-        # re-evaluated both norms per joined pair)
-        nbase = base.withColumn("nv", _norm(F.col("vec")))
-        scores = _cell_scores_expr("vec", anchors, "nv")
-        corpus = nbase.select(
-            F.col("vec_id").alias("corpus_id"),
-            F.col("vec").alias("cvec"),
-            F.col("nv").alias("cnorm"),
-            F.array_max(scores).getField("cell").alias("cell"),
-        )
-        probes = F.slice(F.reverse(F.array_sort(scores)), 1, n_probe)
-        queries = nbase.where(F.col("vec_id").isin(query_ids)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("vec").alias("qvec"),
-            F.col("nv").alias("qnorm"),
-            F.explode_outer(
-                F.transform(probes, lambda s: s.getField("cell"))
-            ).alias("cell"),
-        )
+    corpus = base.select(
+        F.col("vec_id").alias("corpus_id"),
+        F.col("vec").alias("cvec"),
+        _norm(F.col("vec")).alias("cnorm"),
+        cell_of("vec").alias("cell"),
+    )
+    queries = base.where(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("vec").alias("qvec"),
+        _norm(F.col("vec")).alias("qnorm"),
+        F.explode_outer(probes_of("vec")).alias("cell"),
+    )
     joined = corpus.join(
         F.broadcast(queries),
         (corpus.cell == queries.cell)
         & (F.col("corpus_id") != F.col("query_id")),
     )
-    cos = _dot(F.col("qvec"), F.col("cvec")) / (
-        F.col("qnorm") * F.col("cnorm")
-    )
+    cos = _cosine("qvec", "cvec", "qnorm", "cnorm")
     scored = joined.select(
         "query_id", "corpus_id", F.round(cos, 6).alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("corpus_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
-
-
-def _unit(vec, norm=None):
-    """L2-normalize a vector expression (zero-safe). On the unit
-    sphere ||a-b||^2 == 2 - 2cos(a,b), so PQ's L2 ADC ranking equals
-    the cosine ranking the other ANN operators use.
-
-    Pass `norm` as a PROJECTED greatest(_norm(vec), 1e-300) column
-    from hot callers: the interpreted transform evaluates its lambda
-    body per element, so an inline norm subtree costs O(dim^2) per
-    row (the r8 ann_ivfpq finding)."""
-    n = norm if norm is not None else F.greatest(_norm(vec),
-                                                F.lit(1e-300))
-    return F.transform(vec, lambda x: x / n)
-
-
-def _sqdist_sql(sv: str, cent) -> str:
-    """SQL text of the squared-L2 zip_with fold between the projected
-    subvector column `sv` and a literal centroid — the identical
-    Catalyst tree (and doubles) as the r7 Column-builder form."""
-    return (f"aggregate(zip_with({sv}, {_arr_lit_sql(cent)}, "
-            f"(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x)")
-
-
-def _nearest_code_sql(sv: str, codebook: list) -> str:
-    """argmin-L2 code assignment for ONE projected subvector column
-    against one subspace codebook: min of (dist, code) structs —
-    exact ties break to the smallest code. `sv` MUST be a projected
-    column: each of the n_codes distances references it, and an
-    inlined slice-of-normalize would re-evaluate the whole upstream
-    chain per CODE (the r8 ann_ivfpq finding)."""
-    entries = ", ".join(
-        f"struct({_sqdist_sql(sv, cent)} AS d, {c} AS code)"
-        for c, cent in enumerate(codebook))
-    return f"array_min(array({entries})).code"
-
-
-def _with_pq_sv(df, vec_col, n_sub: int, sub: int):
-    """Project the n_sub subvector slices of `vec_col` as _sv{m}
-    columns (each is then referenced n_codes times by the distance
-    expressions — CollapseProject keeps multi-use non-cheap aliases,
-    so every slice is computed exactly once per row)."""
-    return df.select(
-        "*", *[F.slice(vec_col, m * sub + 1, sub).alias(f"_sv{m}")
-               for m in range(n_sub)])
-
-
-def _pq_codes_from_sv(codebooks: list):
-    """array<int> PQ code word read from the projected _sv{m}
-    columns (see _with_pq_sv); one F.expr parse for the whole word."""
-    return F.expr("array(" + ", ".join(
-        _nearest_code_sql(f"_sv{m}", codebooks[m])
-        for m in range(len(codebooks))) + ")")
-
-
-def _pq_method(method: str, codebooks: list) -> str:
-    """'expr' inlines codebook literals (whole-stage codegen — right
-    for small quantizers); 'arrow' runs the vectorized numpy kernel
-    (right for realistic dimensionality, e.g. 768-dim x 16 subspaces
-    x 256 codes = ~200k literals the expression tree can't carry);
-    'auto' switches on total codebook values — the ann_ivf policy."""
-    if method != "auto":
-        return method
-    values = (len(codebooks) * len(codebooks[0])
-              * (len(codebooks[0][0]) if codebooks[0] else 0))
-    return "expr" if values <= _IVF_EXPR_MAX_VALUES else "arrow"
-
-
-def _make_pq_udfs(codebooks: list, with_tables: bool = False):
-    """Arrow-vectorized PQ kernels: code-word assignment and (for
-    query rows) the ADC lookup table, one numpy broadcast per batch.
-    Normalization happens row-wise in numpy (the _unit mirror). Tie
-    semantics match the expression path: np.argmin returns the FIRST
-    minimum — the smallest code — exactly like min over (dist, code)
-    structs. (Float sums may differ from the expression path in the
-    last ulp on degenerate exact-tie data; both paths are internally
-    deterministic, and the registered query pins the expr path.)"""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    CB = np.asarray(codebooks, dtype=np.float64)  # (m, k, sub)
-    n_sub, _, sub = CB.shape
-
-    def _dists(vecs):
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        n = np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-        V = (V / n).reshape(-1, n_sub, sub)           # (b, m, s)
-        return ((V[:, :, None, :] - CB[None]) ** 2).sum(-1)  # (b,m,k)
-
-    def _codes_fn(vecs):
-        codes = _dists(vecs).argmin(axis=2)
-        return pd.Series([[int(c) for c in row] for row in codes])
-
-    def _tables_fn(vecs):
-        d = _dists(vecs)
-        return pd.Series([[[float(x) for x in ks] for ks in row]
-                          for row in d])
-
-    # real annotation OBJECTS — see _make_cell_udfs
-    for fn in (_codes_fn, _tables_fn):
-        fn.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    tables = (pandas_udf("array<array<double>>")(_tables_fn)
-              if with_tables else None)
-    return pandas_udf("array<int>")(_codes_fn), tables
+    return _top_k(scored, k, F.desc("cosine"))
 
 
 def pq_fit(embeddings: DataFrame, n_subspaces: int = 8,
            n_codes: int = 16, seed: int = 7,
-           n_iters: int = 5, method: str = "auto") -> list:
+           n_iters: int = 5) -> list:
     """Product-quantization TRAINING action: per-subspace plain-L2
     k-means (Lloyd's), the fit step of IVF-PQ. Returns
     codebooks[m][c] = centroid (list of sub-dim floats) — at 8
@@ -2583,14 +2305,19 @@ def pq_fit(embeddings: DataFrame, n_subspaces: int = 8,
     8 codes (x64 smaller), which is what makes billion-vector search
     memory-feasible at 100 TB.
 
-    One distributed pass per iteration covers ALL subspaces: each row
-    explodes into (subspace, subvector, assigned-code) entries against
-    the current codebook literals, then ONE groupBy(m, code) shuffle
-    averages sub-dim components in DECIMAL — exact, order-independent,
-    bit-deterministic (the ivf_fit technique). Init is the
-    hash-stratified sample of _ivf_seed_anchors sliced per subspace;
-    codes that lose all members keep their previous centroid."""
-    anchors = _ivf_seed_anchors(embeddings, n_codes, seed)
+    One distributed pass per iteration covers ALL subspaces: the fold
+    kernel assigns each row's code word against the current codebooks,
+    each row explodes into (subspace, unit subvector, code) entries,
+    then ONE groupBy(m, code) shuffle averages sub-dim components in
+    DECIMAL — exact, order-independent, bit-deterministic (the ivf_fit
+    technique). Init is the hash-stratified sample of _ivf_seed_anchors
+    sliced per subspace; codes that lose all members keep their
+    previous centroid. NULL embeddings are not trained on. Vectors are
+    L2-normalized first: on the unit sphere ||a-b||^2 == 2 - 2cos(a,b),
+    so PQ's L2 ADC ranking equals the cosine ranking the other ANN
+    operators use."""
+    train = embeddings.where(F.col("embedding").isNotNull())
+    anchors = _ivf_seed_anchors(train, n_codes, seed)
     dim = len(anchors[0])
     assert dim % n_subspaces == 0, (
         f"dim {dim} not divisible by n_subspaces {n_subspaces}")
@@ -2600,42 +2327,33 @@ def pq_fit(embeddings: DataFrame, n_subspaces: int = 8,
         for m in range(n_subspaces)
     ]
     vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    # norm PROJECTED before the per-element division — see _unit
+    # the kernel codes the raw vector `rv` (normalizing it to the same
+    # doubles); the means average slices of the unit vector `vec`, whose
+    # norm is a projected column (inline, the transform would re-run
+    # the norm fold per element)
     base = (
-        _spread(embeddings)
+        _spread(train)
         .select(vec_d.alias("rv"))
         .select("rv", F.greatest(_norm(F.col("rv")),
                                  F.lit(1e-300)).alias("nv"))
-        .select(_unit(F.col("rv"), F.col("nv")).alias("vec"))
+        .select("rv", F.transform("rv", lambda x: x / F.col("nv"))
+                .alias("vec"))
         .persist()
     )
+    entries = F.array(*[
+        F.struct(
+            F.lit(m).alias("m"),
+            F.slice("vec", m * sub + 1, sub).alias("sv"),
+            F.element_at("_codes", m + 1).alias("code"),
+        )
+        for m in range(n_subspaces)
+    ])
     try:
         for _ in range(n_iters):
-            if _pq_method(method, codebooks) == "arrow":
-                codes_udf, _tbl = _make_pq_udfs(codebooks)
-                src = base.withColumn("_codes", codes_udf("vec"))
-                entries = F.array(*[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("vec", m * sub + 1, sub).alias("sv"),
-                        F.element_at("_codes", m + 1).alias("code"),
-                    )
-                    for m in range(n_subspaces)
-                ])
-            else:
-                # subvector slices projected once per row (_with_pq_sv)
-                src = _with_pq_sv(base, F.col("vec"), n_subspaces, sub)
-                entries = F.array(*[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.col(f"_sv{m}").alias("sv"),
-                        F.expr(_nearest_code_sql(
-                            f"_sv{m}", codebooks[m])).alias("code"),
-                    )
-                    for m in range(n_subspaces)
-                ])
+            codes_of, _ = _pq_udfs(codebooks)
             stats = (
-                src.select(F.explode(entries).alias("s"))
+                base.withColumn("_codes", codes_of("rv"))
+                .select(F.explode(entries).alias("s"))
                 .select("s.m", "s.sv", "s.code")
                 .groupBy("m", "code")
                 .agg(*[
@@ -2658,35 +2376,18 @@ def pq_fit(embeddings: DataFrame, n_subspaces: int = 8,
         base.unpersist()
 
 
-def pq_encode(embeddings: DataFrame, codebooks: list,
-              method: str = "auto") -> DataFrame:
-    """Corpus PQ encoding: vec_id -> array<int> code word. Pure
-    per-row expression (zero shuffles) — the 100 TB encode pass is
-    scan-bound."""
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    base = _spread(embeddings)
-    if _pq_method(method, codebooks) == "arrow":
-        codes_udf, _ = _make_pq_udfs(codebooks)
-        return base.select("vec_id", codes_udf(vec_d).alias("codes"))
-    # normalize + slice through projected columns (see _unit /
-    # _with_pq_sv r8 notes)
-    n_sub = len(codebooks)
-    sub = len(codebooks[0][0])
-    uv = (
-        base.select("vec_id", vec_d.alias("rv"))
-        .select("vec_id", "rv",
-                F.greatest(_norm(F.col("rv")), F.lit(1e-300)).alias("nv"))
-        .select("vec_id", _unit(F.col("rv"), F.col("nv")).alias("uv"))
-    )
-    return (
-        _with_pq_sv(uv, F.col("uv"), n_sub, sub)
-        .select("vec_id", _pq_codes_from_sv(codebooks).alias("codes"))
-    )
+def pq_encode(embeddings: DataFrame, codebooks: list) -> DataFrame:
+    """Corpus PQ encoding: vec_id -> array<int> code word (NULL for a
+    NULL embedding). One fold-kernel call per Arrow batch, zero
+    shuffles — the 100 TB encode pass is scan-bound."""
+    codes_of, _ = _pq_udfs(codebooks)
+    return _spread(embeddings).select(
+        "vec_id", codes_of("embedding").alias("codes"))
 
 
 def ann_ivfpq(embeddings: DataFrame, query_ids: list[int],
               anchors: list, codebooks: list, k: int = 5,
-              n_probe: int = 4, method: str = "auto") -> DataFrame:
+              n_probe: int = 4) -> DataFrame:
     """IVF-PQ approximate nearest neighbor: coarse IVF cell routing
     (same cosine quantizer as ann_ivf) + asymmetric-distance (ADC)
     scoring against PQ codes — the memory-scale path when even the
@@ -2696,76 +2397,27 @@ def ann_ivfpq(embeddings: DataFrame, query_ids: list[int],
     the cell residual) — the FAISS by_residual=False layout —
     documented deviation from Jégou et al. 2011.
 
-    Scale shape: corpus rows carry (cell, codes) from pure per-row
-    expressions; queries are a BROADCAST of |Q| x n_probe rows each
-    carrying its precomputed ADC table (n_subspaces x n_codes doubles
-    — built once per query, plan-side); the join is keyed by cell
-    (never all-pairs) and the score is a zip_with table lookup +
-    fold, all whole-stage codegen. Top-k is a bounded per-query
-    window over probed candidates only."""
-    from pyspark.sql import Window
-
-    n_sub = len(codebooks)
-    sub = len(codebooks[0][0])
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    base = _spread(embeddings).select("vec_id", vec_d.alias("vec"))
-
-    pq_arrow = _pq_method(method, codebooks) == "arrow"
-    ivf_arrow = _ivf_method(method, anchors) == "arrow"
-    codes_udf = tables_udf = cell_of = probes_of = None
-    if pq_arrow:
-        codes_udf, tables_udf = _make_pq_udfs(codebooks,
-                                              with_tables=True)
-    if ivf_arrow:
-        cell_of, probes_of = _make_cell_udfs(anchors, n_probe)
-    # r8: the row norm (nv) and the unit-normalized vector (uv) are
-    # PROJECTED once per row — the r7 form inlined _unit(vec) into
-    # _pq_codes_expr/adc_table, so every one of the n_codes distance
-    # expressions re-evaluated the whole normalize (itself O(dim^2)
-    # when inlined, see _unit), and _nearest_cell_expr re-evaluated
-    # _norm(vec) per cell: 75s -> ~2s for the registered query at
-    # sf1.0. Same doubles (projections only); unused columns are
-    # pruned on the arrow paths.
-    nbase = base.withColumn("nv", _norm(F.col("vec")))
-    ubase = nbase.withColumn(
-        "uv", _unit(F.col("vec"),
-                    F.greatest(F.col("nv"), F.lit(1e-300))))
-    sbase = (ubase if pq_arrow
-             else _with_pq_sv(ubase, F.col("uv"), n_sub, sub))
-    corpus = sbase.select(
+    Scale shape: the fold kernel gives corpus rows their (cell, codes)
+    and each query its probed cells and ADC table (n_subspaces x
+    n_codes doubles); queries are a BROADCAST of |Q| x n_probe rows;
+    the join is keyed by cell (never all-pairs) and the score is a
+    JVM zip_with table lookup + fold. Top-k is a bounded per-query
+    window over probed candidates only. A NULL embedding has no cell,
+    so it is neither a candidate nor a query."""
+    cell_of, probes_of = _cell_udfs(anchors, n_probe)
+    codes_of, tables_of = _pq_udfs(codebooks)
+    base = _spread(embeddings).select("vec_id", "embedding")
+    corpus = base.select(
         F.col("vec_id").alias("corpus_id"),
-        (cell_of("vec") if ivf_arrow
-         else _nearest_cell_expr("vec", anchors, "nv")).alias("cell"),
-        (codes_udf("vec") if pq_arrow
-         else _pq_codes_from_sv(codebooks))
-        .alias("codes"),
+        cell_of("embedding").alias("cell"),
+        codes_of("embedding").alias("codes"),
     )
-
-    def adc_table():
-        # ADC table rows read the PROJECTED _sv{m} columns (each
-        # subspace slice computed once per row, not once per code);
-        # one F.expr parse for the whole n_sub x n_codes table
-        rows = ", ".join(
-            "array(" + ", ".join(
-                _sqdist_sql(f"_sv{m}", cent)
-                for cent in codebooks[m]) + ")"
-            for m in range(n_sub))
-        return F.expr(f"array({rows})")
-
-    if ivf_arrow:
-        probe_cells = probes_of("vec")
-    else:
-        probes = F.slice(
-            F.reverse(F.array_sort(
-                _cell_scores_expr("vec", anchors, "nv"))),
-            1, n_probe)
-        probe_cells = F.transform(probes, lambda s: s.getField("cell"))
-    queries = sbase.where(F.col("vec_id").isin(query_ids)).select(
+    queries = base.where(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"),
-        (tables_udf("vec") if pq_arrow
-         else adc_table()).alias("tables"),
-        F.explode_outer(probe_cells).alias("cell"),
-    )
+        tables_of("embedding").alias("tables"),
+        probes_of("embedding").alias("probes"),
+    ).select("query_id", "tables",
+             F.explode_outer("probes").alias("cell"))
     joined = corpus.join(
         F.broadcast(queries),
         (corpus.cell == queries.cell)
@@ -2778,12 +2430,7 @@ def ann_ivfpq(embeddings: DataFrame, query_ids: list[int],
     )
     scored = joined.select(
         "query_id", "corpus_id", F.round(adc, 6).alias("adc_dist"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, F.asc("adc_dist"))
 
 
 # GPT-2-style pretokenizer, simplified to the lookahead-free subset so
@@ -2890,7 +2537,7 @@ def knn_label_purity(embeddings: DataFrame, query_ids: list[int],
     similarity-search APPLICATION layer — dedup/clustering quality in
     one number). Majority ties break to the smallest label; purity is
     an exact k-denominator fraction, so values are hash-stable.
-    Scale path: reuses ann_bruteforce's broadcast-query top-k; the
+    Scale path: reuses ann_bruteforce's exact top-k; the
     label join is a broadcast of (vec_id, label) onto k*|queries|
     rows."""
     from pyspark.sql import Window
@@ -3371,7 +3018,7 @@ def cluster_assign(embeddings: DataFrame, n_clusters: int = 4) -> DataFrame:
     from pyspark.sql import Window
 
     vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    # norms hoisted below the join (see ann_bruteforce r8 note)
+    # norms projected below the join (see _norm)
     corpus = _spread(embeddings).select(
         "vec_id", "label", vec_d.alias("vec")
     ).withColumn("nv", _norm(F.col("vec")))
@@ -3380,9 +3027,7 @@ def cluster_assign(embeddings: DataFrame, n_clusters: int = 4) -> DataFrame:
         .select(F.col("vec_id").alias("seed_id"), vec_d.alias("svec"))
         .withColumn("ns", _norm(F.col("svec")))
     )
-    cos = _dot(F.col("vec"), F.col("svec")) / F.greatest(
-        F.col("nv") * F.col("ns"), F.lit(1e-300)
-    )
+    cos = _cosine("vec", "svec", "nv", "ns")
     scored = corpus.join(F.broadcast(seeds)).select(
         "vec_id", "label", "seed_id", F.round(cos, 6).alias("cos")
     )

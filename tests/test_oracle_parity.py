@@ -9,6 +9,10 @@ pandas-typed comparison the driver uses — at sf0.001, so any new
 sum/avg/count-bearing oracle that forgets the bigint/decimal cast
 rule (__spark_entry__.py `oracle_sql` docstring) fails HERE before it
 reaches the driver.
+
+The ANN rows (embedding_norms, ann_bruteforce and the snapshot-pinned
+ann_lsh/ann_ivf/ann_ivfpq) carry no aggregate, so they run separately
+at sf0.01, the scale their snapshots were minted at.
 """
 
 import os
@@ -57,3 +61,28 @@ def test_aggregate_oracle_driver_typing(spark, duck, name):
     )
     assert ok, f"{name}: {msg}"
     assert nrows >= 0
+
+
+ANN_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+
+
+@pytest.mark.parametrize("name", [
+    "embedding_norms", "ann_bruteforce", "ann_lsh", "ann_ivf", "ann_ivfpq",
+])
+def test_ann_oracle_rows(spark, name):
+    import __spark_entry__ as se
+    from check_oracles import compare_one, duck_connect
+
+    # a missing input is a failure, not a skip: a skipped oracle row
+    # does not count as a pass
+    assert os.path.isdir(ANN_SF_DIR), (
+        f"ANN oracle inputs missing: {ANN_SF_DIR}")
+    con = duck_connect(ANN_SF_DIR)
+    try:
+        ok, nrows, msg = compare_one(
+            spark, con, se.queries()[name], se.oracle_sql()[name],
+            ANN_SF_DIR)
+    finally:
+        con.close()
+    assert ok, f"{name}: {msg}"
+    assert nrows > 0

@@ -972,19 +972,14 @@ def test_components_min_label_chain_and_star(spark):
 
 
 def test_ivf_arrow_path_at_realistic_dims(spark):
-    """IVF at 384 dims x 16 cells (dim*cells > the literal-expression
-    envelope): the auto-selected Arrow assignment path must fit and
-    search without inlining ~6k literals into the plan, with
-    n_probe=1 recall >= 0.9 on planted clusters and full-probe
-    equality with bruteforce."""
-    from html_parser_spark.spark.ops import (
-        _ivf_method, ann_bruteforce, ann_ivf, ivf_fit,
-    )
+    """IVF at 384 dims x 16 cells: the fold-kernel assignment must fit
+    and search with n_probe=1 recall >= 0.9 on planted clusters and
+    full-probe equality with bruteforce."""
+    from html_parser_spark.spark.ops import ann_bruteforce, ann_ivf, ivf_fit
 
     emb = _clustered_embeddings(spark, n_clusters=16, per_cluster=10,
                                 dim=384, seed=3)
     centroids = ivf_fit(emb, n_cells=16, seed=7, n_iters=3)
-    assert _ivf_method("auto", centroids) == "arrow"
     qids = [0, 10, 40, 80, 120]
     bf = {}
     for r in ann_bruteforce(emb, qids, k=5).collect():
@@ -994,9 +989,9 @@ def test_ivf_arrow_path_at_realistic_dims(spark):
         ivf.setdefault(r.query_id, set()).add(r.corpus_id)
     hits = sum(len(bf[q] & ivf.get(q, set())) for q in qids)
     total = sum(len(bf[q]) for q in qids)
-    assert hits / total >= 0.9, f"arrow IVF n_probe=1: {hits}/{total}"
-    # full probe == bruteforce, exactly (final scoring shares the
-    # same JVM cosine expression in both assignment paths)
+    assert hits / total >= 0.9, f"IVF n_probe=1: {hits}/{total}"
+    # full probe == bruteforce, exactly (the kernel's cosines are
+    # bit-equal to ann_ivf's JVM scoring fold)
     full = sorted(
         (r.query_id, r.corpus_id, r.cosine, r.rank)
         for r in ann_ivf(emb, qids, centroids, k=5,
@@ -1005,22 +1000,6 @@ def test_ivf_arrow_path_at_realistic_dims(spark):
         (r.query_id, r.corpus_id, r.cosine, r.rank)
         for r in ann_bruteforce(emb, qids, k=5).collect())
     assert full == want
-
-
-def test_ivf_expr_and_arrow_assignments_agree(spark):
-    """On the low-dim planted clusters both assignment methods (and
-    their probe orderings) must produce identical search results —
-    tie semantics are mirrored by construction."""
-    from html_parser_spark.spark.ops import ann_ivf, ivf_fit
-
-    emb = _clustered_embeddings(spark)
-    centroids = ivf_fit(emb, n_cells=4, seed=7, n_iters=3)
-    qids = [0, 25, 50, 75]
-    a = sorted(tuple(r) for r in ann_ivf(
-        emb, qids, centroids, k=5, n_probe=2, method="expr").collect())
-    b = sorted(tuple(r) for r in ann_ivf(
-        emb, qids, centroids, k=5, n_probe=2, method="arrow").collect())
-    assert a == b and len(a) == 20
 
 
 def test_dup_components_star_cluster(spark):
@@ -1485,25 +1464,6 @@ def test_components_match_bfs_reference(spark):
     assert got == want
 
 
-def test_ann_bruteforce_arrow_matches_expr(spark):
-    """The Arrow matmul scale path returns the same neighbor SETS and
-    ranks as the expression path on separated clusters at 384 dims
-    (cosines compared by rank, not hash: summation order differs in
-    the last ulp)."""
-    from html_parser_spark.spark.ops import ann_bruteforce
-
-    emb = _clustered_embeddings(spark, n_clusters=6, per_cluster=10,
-                                dim=384, seed=9)
-    qids = [0, 10, 30]
-    a = {(r.query_id, r.rank): r.corpus_id
-         for r in ann_bruteforce(emb, qids, k=5, method="expr")
-         .collect()}
-    b = {(r.query_id, r.rank): r.corpus_id
-         for r in ann_bruteforce(emb, qids, k=5, method="arrow")
-         .collect()}
-    assert a == b and len(a) == 15
-
-
 def test_mega_conversation_skew(spark):
     """SURVEY §4.3's named skew shape: ONE conversation with 1e5 turns
     among normal ones. Evidence the salted two-stage aggregation
@@ -1648,41 +1608,11 @@ def test_approx_percentiles_rank_error_bound(spark):
         "snapshot or raise the accuracy")
 
 
-def test_ann_bruteforce_auto_method_selection(spark):
-    """method='auto' resolves by dimensionality: interpreted-HOF expr
-    at test dims, Arrow matmul past the switch (dim >= 256, or
-    dim * n_queries > 4096 — here 384-dim). Verified structurally —
-    the high-dim auto plan contains the Python/Arrow eval stage and no
-    interpreted `aggregate` HOF; the low-dim auto plan is the reverse."""
-    from html_parser_spark.spark.ops import ann_bruteforce
-
-    hi = _clustered_embeddings(spark, n_clusters=4, per_cluster=5,
-                               dim=384, seed=3)
-    plan_hi = ann_bruteforce(hi, [0, 5], k=3)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "ArrowEvalPython" in plan_hi or "EvalPython" in plan_hi
-    assert "aggregate(" not in plan_hi
-
-    lo = _clustered_embeddings(spark, n_clusters=4, per_cluster=5,
-                               dim=16, seed=3)
-    plan_lo = ann_bruteforce(lo, [0, 5], k=3)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "EvalPython" not in plan_lo
-    # and the two resolved paths agree on ranks at the auto boundary
-    a = {(r.query_id, r.rank): r.corpus_id
-         for r in ann_bruteforce(hi, [0, 5], k=3).collect()}
-    b = {(r.query_id, r.rank): r.corpus_id
-         for r in ann_bruteforce(hi, [0, 5], k=3, method="expr")
-         .collect()}
-    assert a == b and len(a) == 6
-
-
 def test_ann_bruteforce_query_guards(spark):
-    """The arrow path raises a clear error on an empty query match
-    instead of a numpy shape crash (the lazy expr path documents an
-    empty RESULT for the same input); an all-zero query vector scores
-    0 everywhere on BOTH paths (epsilon norm guards) instead of
-    NaN-sorting above every real cosine."""
+    """ann_bruteforce raises a clear error on an empty query match
+    instead of a numpy shape crash; an all-zero query vector scores 0
+    everywhere (epsilon norm guard) instead of NaN-sorting above every
+    real cosine."""
     import pytest as _pytest
 
     from html_parser_spark.spark.ops import ann_bruteforce
@@ -1690,20 +1620,97 @@ def test_ann_bruteforce_query_guards(spark):
     emb = _clustered_embeddings(spark, n_clusters=2, per_cluster=5,
                                 dim=8, seed=4)
     with _pytest.raises(ValueError, match="matched no rows"):
-        ann_bruteforce(emb, [99999], k=3, method="arrow")
-    # lazy expr contract: empty result, no driver job, no crash
-    assert ann_bruteforce(emb, [99999], k=3, method="expr") \
-        .collect() == []
+        ann_bruteforce(emb, [99999], k=3)
 
     zero = emb.union(
         emb.sparkSession.createDataFrame(
             [(100, [0.0] * 8)], "vec_id long, embedding array<double>")
     )
-    rows = ann_bruteforce(zero, [100], k=3, method="arrow").collect()
+    rows = ann_bruteforce(zero, [100], k=3).collect()
     assert rows and all(r.cosine == 0.0 for r in rows)
-    # same zero-norm semantics on the expr path (clamped denominator)
-    rows_e = ann_bruteforce(zero, [100], k=3, method="expr").collect()
-    assert rows_e and all(r.cosine == 0.0 for r in rows_e)
+
+
+def _with_extra_rows(spark, emb, rows):
+    return emb.union(spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"))
+
+
+def test_ann_zero_vectors_score_zero(spark):
+    """Zero vectors (ROADMAP degenerate input) must not fail any ANN
+    operator — ANSI mode turns an unclamped 0/0 cosine into
+    DIVIDE_BY_ZERO — and every cosine involving one is 0.0."""
+    from html_parser_spark.spark.ops import (
+        ann_bruteforce, ann_ivf, ann_ivfpq, ann_lsh, embedding_near_dup,
+        ivf_fit, pq_fit,
+    )
+
+    zeros = {1000, 1001}
+    emb = _with_extra_rows(spark, _clustered_embeddings(spark),
+                           [(z, [0.0] * 16) for z in sorted(zeros)])
+    qids = [0, 25, 1000]
+    anchors = ivf_fit(emb, n_cells=4, seed=7, n_iters=2)
+    cbs = pq_fit(emb, n_subspaces=4, n_codes=8, seed=7, n_iters=2)
+    ranked = {
+        "ann_bruteforce": ann_bruteforce(emb, qids, k=5),
+        "ann_lsh": ann_lsh(emb, qids, k=5),
+        "ann_ivf": ann_ivf(emb, qids, anchors, k=5, n_probe=4),
+    }
+    for name, df in ranked.items():
+        rows = df.collect()
+        assert {r.query_id for r in rows} == set(qids), name
+        for r in rows:
+            if r.query_id in zeros or r.corpus_id in zeros:
+                assert r.cosine == 0.0, (name, r)
+    for exact in (True, False):
+        pairs = embedding_near_dup(emb, threshold=0.0,
+                                   exact=exact).collect()
+        zero_pairs = [r for r in pairs if {r.vec_a, r.vec_b} & zeros]
+        assert (1000, 1001) in {(r.vec_a, r.vec_b) for r in pairs}
+        assert all(r.cosine == 0.0 for r in zero_pairs), exact
+    pq = ann_ivfpq(emb, qids, anchors, cbs, k=5, n_probe=4).collect()
+    assert {r.query_id for r in pq} == set(qids)
+
+
+def test_ann_null_embedding_never_a_candidate(spark):
+    """One NULL embedding must not fail any ANN operator, must not be
+    trained on, and must appear in no candidate set — not as a query,
+    not as a neighbor. pq_encode gives it a NULL code word (not a real
+    code that decodes to a vector) and embedding_norms a NULL norm."""
+    from html_parser_spark.spark.ops import (
+        ann_bruteforce, ann_ivf, ann_ivfpq, ann_lsh, embedding_near_dup,
+        embedding_norms, ivf_fit, pq_encode, pq_fit, semantic_dedup,
+    )
+
+    clean = _clustered_embeddings(spark)
+    emb = _with_extra_rows(spark, clean, [(1000, None)])
+    qids = [0, 25, 1000]
+    anchors = ivf_fit(emb, n_cells=4, seed=7, n_iters=2)
+    cbs = pq_fit(emb, n_subspaces=4, n_codes=8, seed=7, n_iters=2)
+    assert anchors == ivf_fit(clean, n_cells=4, seed=7, n_iters=2)
+    assert cbs == pq_fit(clean, n_subspaces=4, n_codes=8, seed=7,
+                         n_iters=2)
+    ranked = {
+        "ann_bruteforce": ann_bruteforce(emb, qids, k=5),
+        "ann_lsh": ann_lsh(emb, qids, k=5),
+        "ann_ivf": ann_ivf(emb, qids, anchors, k=5, n_probe=4),
+        "ann_ivfpq": ann_ivfpq(emb, qids, anchors, cbs, k=5, n_probe=4),
+    }
+    for name, df in ranked.items():
+        rows = df.collect()
+        assert {r.query_id for r in rows} == {0, 25}, name
+        assert all(r.corpus_id != 1000 for r in rows), name
+    for exact in (True, False):
+        pairs = embedding_near_dup(emb, threshold=-1.0,
+                                   exact=exact).collect()
+        assert pairs
+        assert all(1000 not in (r.vec_a, r.vec_b) for r in pairs), exact
+    codes = {r.vec_id: r.codes for r in pq_encode(emb, cbs).collect()}
+    assert codes[1000] is None and len(codes) == 101
+    norms = {r.vec_id: r.l2_norm for r in embedding_norms(emb).collect()}
+    assert norms[1000] is None
+    dedup = {r.vec_id: r for r in semantic_dedup(emb).collect()}
+    assert dedup[1000].kept
+    assert all(r.dup_of != 1000 for r in dedup.values())
 
 
 def test_versioned_format_snapshot_commits(spark, tmp_path):
@@ -3180,42 +3187,6 @@ def test_sft_prep_job_body_end_to_end(spark, tmp_path):
         k: part(v[0]) for k, v in b.items()}
 
 
-def test_pq_arrow_path_matches_expr_path(spark):
-    """The numpy Arrow kernels (the realistic-dimensionality path,
-    e.g. 768-dim x 256 codes) must produce the same codebooks, code
-    words, and search results as the literal-expression path on
-    non-degenerate data — the ann_ivf dual-strategy contract applied
-    to PQ."""
-    from html_parser_spark.spark.ops import (
-        ann_ivfpq, ivf_fit, pq_encode, pq_fit,
-    )
-
-    emb = _clustered_embeddings(spark)
-    cb_e = pq_fit(emb, n_subspaces=4, n_codes=8, seed=7, n_iters=3,
-                  method="expr")
-    cb_a = pq_fit(emb, n_subspaces=4, n_codes=8, seed=7, n_iters=3,
-                  method="arrow")
-    assert cb_e == cb_a
-
-    codes_e = {r.vec_id: list(r.codes)
-               for r in pq_encode(emb, cb_e, method="expr").collect()}
-    codes_a = {r.vec_id: list(r.codes)
-               for r in pq_encode(emb, cb_e, method="arrow").collect()}
-    assert codes_e == codes_a
-
-    anchors = ivf_fit(emb, n_cells=4, seed=7, n_iters=2)
-    qids = [0, 25, 50, 75]
-    res_e = sorted(
-        (r.query_id, r.corpus_id, r.rank, r.adc_dist)
-        for r in ann_ivfpq(emb, qids, anchors, cb_e, k=5, n_probe=2,
-                           method="expr").collect())
-    res_a = sorted(
-        (r.query_id, r.corpus_id, r.rank, r.adc_dist)
-        for r in ann_ivfpq(emb, qids, anchors, cb_e, k=5, n_probe=2,
-                           method="arrow").collect())
-    assert res_e == res_a
-
-
 def test_hll_registers_merge_associatively(spark):
     """The property that makes the sketch 100 TB-viable: merging two
     shards' register tables by per-bucket MAX yields the IDENTICAL
@@ -3785,24 +3756,82 @@ def test_r8_spread_by_noop_on_wide_scans(spark):
         sorted(tuple(r) for r in narrow.collect())
 
 
-def test_r8_norm_lit_matches_expression_norm_bitwise(spark):
-    """_norm_lit (the host-side literal-centroid norm fold) must equal
-    the r7 per-row _norm(array(lits)) expression BIT-FOR-BIT — the
-    IVF/PQ rewrite substitutes one for the other inside pinned-
-    snapshot queries."""
+def test_fold_norms_match_expression_norm_bitwise(spark):
+    """The fold kernel's host-side norm (_fold_norms) over LITERAL
+    vectors must equal the per-row _norm(array(lits)) expression
+    BIT-FOR-BIT — the kernel's cosines and PQ unit vectors divide by
+    it inside pinned-snapshot queries."""
     import random
     import struct
 
-    from html_parser_spark.spark.ops import _norm, _norm_lit
+    import numpy as np
+
+    from html_parser_spark.spark.ops import _fold_norms, _norm
 
     rng = random.Random(7)
     vecs = [[rng.uniform(-3, 3) for _ in range(13)] for _ in range(20)]
-    for v in vecs:
+    host = _fold_norms(np.array(vecs))
+    for v, host_val in zip(vecs, host):
         expr_val = spark.range(1).select(
             _norm(F.array(*[F.lit(x) for x in v])).alias("n")
         ).collect()[0].n
-        host_val = _norm_lit(v)
         assert struct.pack("<d", expr_val) == struct.pack("<d", host_val)
+
+
+def test_fold_kernel_bit_equal_to_jvm_folds(spark):
+    """The ANN fold kernel's doubles must equal the JVM folds BIT FOR
+    BIT (exact ==, no tolerance) through the real pandas_udf path:
+    cosines against _dot / greatest(_norm * _norm, 1e-300) and squared
+    distances against a (x-y)*(x-y) aggregate fold, at 16, 64 and 384
+    dims. A matmul reorders the sum, so V @ M must differ from the JVM
+    somewhere — otherwise this test could not catch a regression to
+    one."""
+    import numpy as np
+
+    from html_parser_spark.spark.ops import (
+        _dot, _fold_cosines, _fold_scores, _norm, _vector_udf,
+    )
+
+    matmul_differs = False
+    for dim in (16, 64, 384):
+        emb = _clustered_embeddings(spark, n_clusters=4, per_cluster=10,
+                                    dim=dim, seed=dim)
+        rng = np.random.default_rng(dim)
+        M = rng.normal(size=(6, dim))
+        mats = spark.createDataFrame(
+            [(i, [float(x) for x in m]) for i, m in enumerate(M)],
+            "m_id int, mvec array<double>")
+        sqd = F.aggregate(
+            F.zip_with("embedding", "mvec", lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0), lambda acc, x: acc + x)
+        jvm = {
+            (r.vec_id, r.m_id): (r.cos, r.sqd, r.dot)
+            for r in emb.crossJoin(mats).select(
+                "vec_id", "m_id",
+                (_dot(F.col("embedding"), F.col("mvec")) / F.greatest(
+                    _norm(F.col("embedding")) * _norm(F.col("mvec")),
+                    F.lit(1e-300))).alias("cos"),
+                sqd.alias("sqd"),
+                _dot(F.col("embedding"), F.col("mvec")).alias("dot"),
+            ).collect()
+        }
+        cos_of = _vector_udf("array<double>", dim,
+                             lambda V: list(_fold_cosines(V, M)))
+        sqd_of = _vector_udf(
+            "array<double>", dim,
+            lambda V: list(_fold_scores(V, M, sqdist=True)))
+        got = emb.select("vec_id", "embedding",
+                         cos_of("embedding").alias("cos"),
+                         sqd_of("embedding").alias("sqd")).collect()
+        assert len(got) * len(M) == len(jvm) == 40 * 6
+        for r in got:
+            mm = np.asarray(r.embedding) @ M.T
+            for i in range(len(M)):
+                want_cos, want_sqd, want_dot = jvm[(r.vec_id, i)]
+                assert r.cos[i] == want_cos, (dim, r.vec_id, i)
+                assert r.sqd[i] == want_sqd, (dim, r.vec_id, i)
+                matmul_differs |= bool(mm[i] != want_dot)
+    assert matmul_differs
 
 
 def test_r8_components_fused_probe_counts_iterations(spark):

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -26,6 +27,15 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
+# a zip_with fold whose second argument is a literal array, the shape
+# of the deleted SQL-literal centroid/codebook expressions
+_LITERAL_FOLD = re.compile(r"zip_with\([^\[\n]*\[-?\d")
+
+
+def _arrow_evals(plan: str) -> int:
+    """ArrowEvalPython nodes in the tree header of a formatted plan."""
+    return plan.count("+- ArrowEvalPython")
 
 
 def plan_of(df) -> str:
@@ -184,21 +194,30 @@ def main():
          lambda p: "Window" in p),
     ])
 
-    audit("ann_ivf (in-plan quantizer assignment)",
+    audit("ann_ivf (fold-kernel quantizer assignment)",
           qs["ann_ivf"](spark, SF_DIR), [
         ("no cartesian/broadcast-nested-loop join",
          lambda p: "CartesianProduct" not in p
          and "BroadcastNestedLoopJoin" not in p),
         ("cell-keyed join with query side broadcast",
          lambda p: "BroadcastHashJoin" in p),
+        ("one ArrowEvalPython per kernel call site (corpus cells, "
+         "query probes)",
+         lambda p: _arrow_evals(p) == 2),
+        ("no fold over literal centroid arrays",
+         lambda p: not _LITERAL_FOLD.search(p)),
         ("per-query top-k window",
          lambda p: "Window" in p),
-    ])
+    ], note="Cells and probes come from the numpy fold kernel, whose "
+            "cosines are bit-equal to the JVM fold; the final scoring "
+            "is the JVM _dot fold over the cell-keyed join.")
 
     audit("ann_bruteforce", qs["ann_bruteforce"](spark, SF_DIR), [
-        ("query side broadcast (corpus streams)",
-         lambda p: "BroadcastHashJoin" in p
-         or "BroadcastNestedLoopJoin" in p),
+        ("corpus streams through one fold-kernel call, no join (the "
+         "query matrix rides in the kernel's closure)",
+         lambda p: _arrow_evals(p) == 1 and "Join" not in p),
+        ("no fold over literal arrays",
+         lambda p: not _LITERAL_FOLD.search(p)),
         ("per-query top-k window",
          lambda p: "Window" in p),
     ])
@@ -780,13 +799,14 @@ def main():
          "split sizes)",
          lambda p: "hashpartitioning" not in p.lower()
          and "rangepartitioning" not in p.lower()),
-        ("no Python node (codes assigned in whole-stage codegen)",
-         lambda p: "Python" not in p),
+        ("one ArrowEvalPython (the fold kernel assigns the codes)",
+         lambda p: _arrow_evals(p) == 1),
+        ("no fold over literal codebook arrays",
+         lambda p: not _LITERAL_FOLD.search(p)),
         ("scan prunes to vec_id+embedding",
          lambda p: "ReadSchema" in p),
-    ], note="The 100 TB encode pass is scan-bound: argmin over "
-            "codebook literals per subspace, output co-partitioned "
-            "with input.")
+    ], note="The 100 TB encode pass is scan-bound: one fold-kernel "
+            "call per Arrow batch, output co-partitioned with input.")
 
     audit("ann_ivfpq (IVF-PQ ADC search)",
           ann_ivfpq(_emb, list(range(10)), _pq_anchors, _pq_cbs,
@@ -796,14 +816,19 @@ def main():
          or "BroadcastNestedLoopJoin" in p),
         ("candidate join is cell-keyed (no cartesian product)",
          lambda p: "CartesianProduct" not in p),
-        ("ADC lookup + fold stays JVM-side (no Python node)",
-         lambda p: "Python" not in p),
+        ("one ArrowEvalPython per kernel call site (corpus cell + "
+         "codes, query probes + ADC table)",
+         lambda p: _arrow_evals(p) == 2),
+        ("ADC lookup + fold stays JVM-side (aggregate over the codes "
+         "and tables columns, no fold over literal arrays)",
+         lambda p: "aggregate(zip_with(codes" in p
+         and not _LITERAL_FOLD.search(p)),
         ("top-k is a bounded per-query window, not a global sort",
          lambda p: "Window" in p),
     ], note="Candidates are scored from 8-byte code words and a "
-            "per-query (n_subspaces x n_codes)-double table built "
-            "plan-side — probed cells never materialize raw vectors. "
-            "The memory-scale ANN path at 10^9+ vectors.")
+            "per-query (n_subspaces x n_codes)-double table from the "
+            "fold kernel — probed cells never materialize raw "
+            "vectors. The memory-scale ANN path at 10^9+ vectors.")
 
     audit("zorder_events (Morton key assignment)",
           qs["zorder_events"](spark, SF_DIR), [
