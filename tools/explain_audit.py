@@ -10,6 +10,8 @@ queries and assert the plan properties that matter at 100 TB:
   - the checkpointed write shuffles once, by part_key, with no join
     and no sort above its window, and collects nothing to the driver
     (checked on the executed plan of a real run)
+  - the ANN searches run one ArrowEvalPython per fold-kernel call
+    site and fold over no literal centroid/codebook arrays
 Writes PLANS.md with the annotated plans.
 """
 
