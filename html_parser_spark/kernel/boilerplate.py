@@ -21,7 +21,10 @@ Shallow Text Features", WSDM 2010; Pomikálek, jusText, 2011):
      blocks (context smoothing, as in jusText's "near-good").
 
 Deterministic, pure-Python over the already-built tree — OFF by default
-so reference-equality tests are unaffected.
+so reference-equality tests are unaffected. The block walk is iterative
+(an explicit stack, no recursion): a recursive closure refers to itself
+through a cell, and that cycle would keep all of a document's blocks
+alive until the next cyclic collection.
 """
 
 from __future__ import annotations
@@ -59,14 +62,14 @@ NEAR_GOOD_MIN_CHARS = 8
 
 
 class _Block:
-    __slots__ = ("texts", "paths", "n_chars", "link_chars", "n_tags", "keep")
+    __slots__ = ("texts", "n_chars", "link_chars", "n_tags", "_text")
 
     def __init__(self):
         self.texts: list = []   # (data, path)
         self.n_chars = 0
         self.link_chars = 0
         self.n_tags = 0
-        self.keep = False
+        self._text = None
 
     def add(self, data: str, path: str, in_link: bool):
         self.texts.append((data, path))
@@ -76,7 +79,10 @@ class _Block:
 
     @property
     def text(self) -> str:
-        return "".join(d for d, _ in self.texts)
+        # joined once: a block is complete before anything reads it
+        if self._text is None:
+            self._text = "".join(d for d, _ in self.texts)
+        return self._text
 
 
 def _looks_navigational(node: Node) -> bool:
@@ -88,65 +94,65 @@ def _looks_navigational(node: Node) -> bool:
     return False
 
 
+# stack entry that closes a block element once its subtree is walked
+_CLOSE_BLOCK = (None, "", False)
+
+
 def _collect_blocks(root: Node):
+    """Pre-order walk with an explicit stack of (node, path, in_link).
+    A block element flushes the current block on entry, and pushes
+    _CLOSE_BLOCK beneath its children to flush again on exit."""
     blocks: list = []
     cur = _Block()
-
-    def flush():
-        nonlocal cur
-        if cur.texts:
-            blocks.append(cur)
-            cur = _Block()
-
-    def walk(node: Node, path: str, in_link: bool):
-        nonlocal cur
-        if node.type == TEXT:
-            data = node.data or ""
-            if data:
-                cur.add(data, path, in_link)
-            return
-        if node.type == COMMENT:
-            return
-        if node.type == ELEMENT:
+    stack = [(root, "", False)]
+    while stack:
+        node, path, in_link = stack.pop()
+        if node is None:
+            if cur.texts:
+                blocks.append(cur)
+                cur = _Block()
+            continue
+        t = node.type
+        if t == TEXT:
+            if node.data:
+                cur.add(node.data, path, in_link)
+            continue
+        if t == COMMENT:
+            continue
+        if t == ELEMENT:
             name = node.name or ""
             if name in _PRUNE_TAGS or _looks_navigational(node):
-                return
-            child_path = f"{path}/{name}" if path else name
-            is_block = name in _BLOCK_TAGS
-            if is_block:
-                flush()
+                continue
+            if name in _BLOCK_TAGS:
+                if cur.texts:
+                    blocks.append(cur)
+                    cur = _Block()
+                stack.append(_CLOSE_BLOCK)
             cur.n_tags += 1
-            link = in_link or name == "a"
-            for child in node.children:
-                walk(child, child_path, link)
-            if is_block:
-                flush()
-            return
-        # DOCUMENT / DOCTYPE
-        for child in node.children:
-            walk(child, path, in_link)
-
-    walk(root, "", False)
-    flush()
+            path = f"{path}/{name}" if path else name
+            in_link = in_link or name == "a"
+        # DOCUMENT / DOCTYPE children keep the parent's path
+        stack.extend([(c, path, in_link) for c in reversed(node.children)])
+    if cur.texts:
+        blocks.append(cur)
     return blocks
 
 
 def _score(block: _Block) -> bool:
-    text = block.text
-    stripped = text.strip()
+    stripped = block.text.strip()
     if not stripped:
         return False
-    n = len(stripped)
-    link_density = block.link_chars / max(block.n_chars, 1)
-    tokens = stripped.split()
-    stop = sum(1 for t in tokens if t.lower().strip(".,!?;:'\"()") in _STOPWORDS)
-    stop_ratio = stop / max(len(tokens), 1)
-    if link_density > MAX_LINK_DENSITY:
+    if block.link_chars / max(block.n_chars, 1) > MAX_LINK_DENSITY:
         return False
+    n = len(stripped)
     if n >= MIN_BLOCK_CHARS:
         return True
-    # short block: needs prose signal
-    return n >= NEAR_GOOD_MIN_CHARS and stop_ratio >= MIN_STOPWORD_RATIO
+    if n < NEAR_GOOD_MIN_CHARS:
+        return False
+    # short block: needs prose signal (the only place the ratio decides)
+    tokens = stripped.split()
+    stop = sum(1 for t in tokens if t.lower().strip(".,!?;:'\"()") in _STOPWORDS)
+    return stop / len(tokens) >= MIN_STOPWORD_RATIO
 
 
 def strip_boilerplate(root: Node):

@@ -106,6 +106,24 @@ class Node:
         return n
 
 
+def release(root: Node) -> None:
+    """Cut every back-reference under `root` (``parent``, ``form_owner``)
+    so the tree is acyclic and reference counting frees it as soon as
+    the caller drops it, instead of leaving it to a gen-2 cyclic
+    collection. The tree stays walkable through ``children``; only
+    parent lookups and the dump's form="..." field are lost. Iterative:
+    no recursion limit applies, however deep the tree."""
+    if root is None:
+        return
+    stack = [root]
+    pop, extend = stack.pop, stack.extend
+    while stack:
+        n = pop()
+        n.parent = None
+        n.form_owner = None
+        extend(n.children)
+
+
 def _escape_dump(s: str) -> str:
     # print_escaped, src/tree.c:154-161 — only \n and \r are escaped
     if "\n" in s or "\r" in s:

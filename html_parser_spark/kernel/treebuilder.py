@@ -68,6 +68,7 @@ from .tree import (
     NS_SVG,
     TEXT,
     Node,
+    release,
 )
 
 STACK_MAX = 256
@@ -2629,6 +2630,9 @@ def build_document(input_text, encoding=None, confidence=2, errors=None,
         input_text, errors=tb.errors, reuse_token=True)
     tb._run(tb._dispatch_document)
     if tb.change_encoding is not None:
+        # the abandoned first-pass tree is unreachable for the caller:
+        # cut its cycles so reference counting frees it
+        release(tb.doc)
         return None, tb.change_encoding, tb.tz.errors
     tb.st.clear()
     tb._flush_table_text_at_stop()
@@ -2671,5 +2675,7 @@ def build_fragment(input_text, context_tag, encoding=None, confidence=2,
             child.parent = doc
         doc.children = adopt.children
         adopt.children = []
+        # a template context keeps its <content> child: cut that cycle
+        release(context)
     tb._flush_table_text_at_stop()
     return doc, tb.tz.errors

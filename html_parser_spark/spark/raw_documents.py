@@ -13,6 +13,7 @@ Schema out: + extracted_text, spans, parse_errors, node_count,
 from __future__ import annotations
 
 from ..kernel.api import parse_document
+from ..kernel.tree import release
 from .udfs import EXTRACT_FIELDS, EXTRACT_SPARK_SCHEMA, _map_batches
 
 RAW_INPUT_SCHEMA = "doc_id string, content binary, charset_hint string"
@@ -39,8 +40,10 @@ def _parse_raw(content, hint):
         return [("", [], 0, 0, "UTF-8", [])]
     res = parse_document(bytes(content), hint)
     text, spans = res.extract_text()
-    return [(_sane(text), spans, res.error_count, res.node_count,
-             res.encoding or "UTF-8", [_sane(t) for t in res.errors])]
+    out = [(_sane(text), spans, res.error_count, res.node_count,
+            res.encoding or "UTF-8", [_sane(t) for t in res.errors])]
+    release(res.doc)
+    return out
 
 
 def extract_raw_documents(df, passthrough: tuple = ()):

@@ -13,10 +13,19 @@ charref-decoded value either becomes the single TEXT node (non-ws) or
 is dropped (ws-only). ``fast_extract`` reproduces that exactly;
 tests/test_kernel_units.py and tests/test_properties.py property-check
 it against the full parse.
+
+Memory: a parse tree is cyclic (every node points at its parent, form
+controls at their form), so left alone it waits for a gen-2 cyclic
+collection, and every collection during a later build walks all the
+trees still waiting. Each row function therefore ``release``s its
+tree once the row's outputs are built, and reference counting frees
+it at once; the batch loop pauses the cyclic collector while it
+computes a batch (never across its ``yield``).
 """
 
 from __future__ import annotations
 
+import gc
 import os
 
 from typing import Iterator
@@ -27,6 +36,7 @@ from ..kernel.api import parse_document, parse_fragment
 from ..kernel.boilerplate import strip_boilerplate, _Block, _score
 from ..kernel.charref import decode_character_references
 from ..kernel.tokenizer import replace_nulls
+from ..kernel.tree import release
 
 _WS_STR = " \n\t\r\f"
 
@@ -102,6 +112,8 @@ def _calibrate(mode: str, context: str):
         (r_ws.error_count, r_ws.node_count, tuple(r_ws.errors)),
         (r_x.error_count, r_x.node_count, path, tuple(r_x.errors)),
     )
+    for r in (r_empty, r_ws, r_x):
+        release(r.doc)
     _CALIBRATION[key] = cal
     return cal
 
@@ -151,8 +163,10 @@ def parse_turn(text: str, mode: str = "fragment", context: str = "div",
         ext, spans, _, _ = strip_boilerplate(res.doc)
     else:
         ext, spans = res.extract_text()
-    return (ext, spans, res.error_count, res.node_count,
-            res.encoding or "UTF-8", res.errors)
+    out = (ext, spans, res.error_count, res.node_count,
+           res.encoding or "UTF-8", res.errors)
+    release(res.doc)
+    return out
 
 
 def _fast_extract_boilerplate(text: str, mode: str, context: str):
@@ -257,23 +271,35 @@ def _map_batches(inputs, passthrough, out_fields, row_fn):
     from the batch, or taken by source row when the batch fans out)
     followed by `out_fields`. Column builders are module globals looked
     up per batch, so wrappers installed on this module after the
-    function is built take effect."""
+    function is built take effect.
+
+    The cyclic collector is paused while a batch is computed: the row
+    functions release their trees, so a collection mid-batch would walk
+    the live objects and free nothing. The caller's collector state is
+    restored before each `yield`, also when `row_fn` raises."""
 
     def _fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            rows: list = []
-            src: list = []
-            values = [batch.column(c).to_pylist() for c in inputs]
-            for i, args in enumerate(zip(*values)):
-                res = row_fn(*args)
-                rows += res
-                src += [i] * len(res)
-            arrays = [batch.column(c) for c in passthrough]
-            if src != list(range(batch.num_rows)):
-                idx = pa.array(src, pa.int32())
-                arrays = [a.take(idx) for a in arrays]
-            cols = list(zip(*rows)) or [()] * len(out_fields)
-            arrays += [_column(v, f.type) for v, f in zip(cols, out_fields)]
+            was_enabled = gc.isenabled()
+            gc.disable()
+            try:
+                rows: list = []
+                src: list = []
+                values = [batch.column(c).to_pylist() for c in inputs]
+                for i, args in enumerate(zip(*values)):
+                    res = row_fn(*args)
+                    rows += res
+                    src += [i] * len(res)
+                arrays = [batch.column(c) for c in passthrough]
+                if src != list(range(batch.num_rows)):
+                    idx = pa.array(src, pa.int32())
+                    arrays = [a.take(idx) for a in arrays]
+                cols = list(zip(*rows)) or [()] * len(out_fields)
+                arrays += [_column(v, f.type)
+                           for v, f in zip(cols, out_fields)]
+            finally:
+                if was_enabled:
+                    gc.enable()
             fields = [batch.schema.field(c) for c in passthrough] + out_fields
             yield pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
 
@@ -305,8 +331,10 @@ def make_dump_map_in_arrow(passthrough: list[str], mode: str = "fragment",
 
     def _row(text):
         res = _parse(text or "", mode, context)
-        return [(res.dump(), res.serialize(), res.extract_text()[0],
-                 res.error_count)]
+        out = [(res.dump(), res.serialize(), res.extract_text()[0],
+                res.error_count)]
+        release(res.doc)
+        return out
 
     return _map_batches(["text"], passthrough, DUMP_FIELDS, _row)
 
@@ -329,7 +357,8 @@ def make_links_map_in_arrow(passthrough: list[str], mode: str = "fragment",
 
     def _row(text):
         doc = _parse(text or "", mode, context).doc
-        return [(k, href, anchor)
-                for k, (href, anchor) in enumerate(collect_links(doc))]
+        links = collect_links(doc)
+        release(doc)
+        return [(k, href, anchor) for k, (href, anchor) in enumerate(links)]
 
     return _map_batches(["text"], passthrough, LINK_FIELDS, _row)

@@ -337,6 +337,250 @@ def test_links_batch_matches_collect_links():
     assert outs[1].num_rows == 0 and outs[2].num_rows == 0
 
 
+# Hand rows for the memory tests: each exercises a tree shape with an
+# extra back-reference or a builder rewrite.
+_CYCLE_TEXTS = [
+    None,
+    # form_owner: controls point at their form
+    "<form id=f><input name=a><select><option>1</select>"
+    "<textarea>t</textarea></form><input form=f><button>b</button>",
+    # foster parenting out of a table
+    "<table><b>fostered</b><tr>text<td>cell</td></tr></table>",
+    # adoption agency misnesting
+    "<b>1<i>2</b>3</i><a href=x><p>4</a>5</p><p><b><i><u>6</p>7",
+    "<template><p>in template</p><tr><td>t</td></tr></template>after",
+    # late <meta> past the prescan window: the builder restarts
+    "<html><head><title>" + "t" * 1100
+    + "</title><meta charset=windows-1251></head><body><p>x</p>",
+]
+
+
+def _cycle_batches():
+    """Batches of the hand rows, then generated turns."""
+    import datetime
+
+    import pyarrow as pa
+
+    from html_parser_spark.spark.transcripts import generate_rows
+
+    t0 = datetime.datetime(2020, 1, 1)
+    rows = [("m0", j, "user", text, None, t0)
+            for j, text in enumerate(_CYCLE_TEXTS)]
+    rows += generate_rows(240, seed=7, include_fixtures=False)
+    names = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    return [pa.RecordBatch.from_pylist(
+        [dict(zip(names, r)) for r in rows[i:i + 64]])
+        for i in range(0, len(rows), 64)]
+
+
+def _kernel_fn(kernel):
+    """(batch function, input columns) for one batch kernel."""
+    from html_parser_spark.spark import udfs
+    from html_parser_spark.spark.raw_documents import _parse_raw
+
+    keys = ["conv_id", "turn_idx"]
+    if kernel == "raw":
+        return (udfs._map_batches(["content", "charset_hint"], keys,
+                                  udfs.EXTRACT_FIELDS, _parse_raw),
+                keys + ["content", "charset_hint"])
+    if kernel == "dump":
+        return udfs.make_dump_map_in_arrow(keys), keys + ["text"]
+    if kernel == "links":
+        return udfs.make_links_map_in_arrow(keys), keys + ["text"]
+    mode, context, boilerplate = {
+        "extract_fragment": ("fragment", "div", False),
+        "extract_template": ("fragment", "template", False),
+        "extract_document": ("document", "div", False),
+        "extract_boilerplate": ("document", "div", True),
+    }[kernel]
+    return (udfs.make_extract_map_in_arrow(keys, mode, context, boilerplate),
+            keys + ["text"])
+
+
+def _kernel_inputs(batches, cols):
+    import pyarrow as pa
+
+    if "content" not in cols:
+        return [b.select(cols) for b in batches]
+    out = []
+    for b in batches:
+        content = pa.array(
+            [None if t is None else t.encode("utf-8", "surrogatepass")
+             for t in b.column("text").to_pylist()], pa.binary())
+        hint = pa.array([None] * b.num_rows, pa.string())
+        out.append(pa.RecordBatch.from_arrays(
+            [b.column("conv_id"), b.column("turn_idx"), content, hint],
+            names=cols))
+    return out
+
+
+@pytest.mark.parametrize("kernel", [
+    "extract_fragment", "extract_template", "extract_document",
+    "extract_boilerplate", "dump", "links", "raw",
+])
+def test_batch_kernel_leaves_no_cyclic_garbage(kernel):
+    """Every tree a kernel builds is freed by reference counting: a
+    pass with the cyclic collector off leaves nothing for it. Includes
+    a template fragment context and a late-<meta> restart, whose extra
+    trees the row functions never see."""
+    import gc
+
+    from html_parser_spark.spark import udfs
+
+    fn, cols = _kernel_fn(kernel)
+    batches = _kernel_inputs(_cycle_batches(), cols)
+    list(fn(iter(batches)))  # warm: calibration, fast-scan load, imports
+    udfs._PARSE_CACHE.clear()
+    was_enabled = gc.isenabled()
+    gc.collect()
+    gc.disable()
+    try:
+        outs = list(fn(iter(batches)))
+        garbage = gc.collect()
+    finally:
+        if was_enabled:
+            gc.enable()
+    assert sum(o.num_rows for o in outs) > 0
+    assert garbage == 0
+
+
+def test_map_batches_restores_collector_state():
+    import gc
+
+    import pyarrow as pa
+
+    from html_parser_spark.spark.udfs import _map_batches
+
+    seen: list = []
+
+    def row(x):
+        seen.append(gc.isenabled())
+        if x == "boom":
+            raise ValueError(x)
+        return [(x,)]
+
+    def batch(xs):
+        return pa.RecordBatch.from_arrays([pa.array(xs, pa.string())],
+                                          names=["x"])
+
+    fn = _map_batches(["x"], [], [pa.field("y", pa.string())], row)
+    was_enabled = gc.isenabled()
+    try:
+        gc.enable()
+        gen = fn(iter([batch(["a"]), batch(["b", "c"])]))
+        next(gen)
+        # suspended at its yield: the collector runs again
+        assert gc.isenabled()
+        assert next(gen).column(0).to_pylist() == ["b", "c"]
+        assert gc.isenabled()
+        assert seen == [False, False, False]
+        with pytest.raises(ValueError):
+            list(fn(iter([batch(["ok", "boom"])])))
+        assert gc.isenabled()
+
+        gc.disable()
+        list(fn(iter([batch(["a"])])))
+        assert not gc.isenabled()
+        with pytest.raises(ValueError):
+            list(fn(iter([batch(["boom"])])))
+        assert not gc.isenabled()
+    finally:
+        if was_enabled:
+            gc.enable()
+        else:
+            gc.disable()
+
+
+def _recursive_collect_blocks(root):
+    """The recursive block walk that the iterative one replaced: the
+    oracle for its block order, paths, n_tags and flush points."""
+    from html_parser_spark.kernel import boilerplate as bp
+    from html_parser_spark.kernel.tree import COMMENT, ELEMENT, TEXT
+
+    blocks: list = []
+    cur = bp._Block()
+
+    def flush():
+        nonlocal cur
+        if cur.texts:
+            blocks.append(cur)
+            cur = bp._Block()
+
+    def walk(node, path, in_link):
+        if node.type == TEXT:
+            data = node.data or ""
+            if data:
+                cur.add(data, path, in_link)
+            return
+        if node.type == COMMENT:
+            return
+        if node.type == ELEMENT:
+            name = node.name or ""
+            if name in bp._PRUNE_TAGS or bp._looks_navigational(node):
+                return
+            child_path = f"{path}/{name}" if path else name
+            is_block = name in bp._BLOCK_TAGS
+            if is_block:
+                flush()
+            cur.n_tags += 1
+            link = in_link or name == "a"
+            for child in node.children:
+                walk(child, child_path, link)
+            if is_block:
+                flush()
+            return
+        for child in node.children:
+            walk(child, path, in_link)
+
+    walk(root, "", False)
+    flush()
+    return blocks
+
+
+_BLOCK_PAGES = [
+    "<div class='nav'><a href='/'>Home</a> <a href='/a'>About</a></div>"
+    "<article><p>This is the actual article content, a long paragraph "
+    "of prose that any boilerplate scorer should retain.</p>"
+    "<p>And here is a second paragraph with enough stopwords.</p>"
+    "</article><footer>(c) <a href='#'>terms</a></footer>",
+    "<header><h1>Site</h1><ul><li><a href=/1>One</a><li><a href=/2>Two"
+    "</a></ul></header><main><h2>Title of it</h2><p>It is a short one."
+    "<p>Lead <a href=/x>linked words in the text</a> and the rest of "
+    "it.</p><!-- c --><div id=sidebar-menu>menu</div><div>tail text "
+    "<span>inline <b>bold</b></span> more<div>nested block</div>after"
+    "</div></main>",
+    "<ul>" + "".join(f"<li><a href=/p{i}>Link {i}</a> | <a href=/q{i}>"
+                     f"is it {i}</a></li>" for i in range(30)) + "</ul>"
+    "<table><tr><td>cell of the table<td><a href=/t>a link</a> to it"
+    "</table><pre>pre\ntext</pre><blockquote>to be or not to be"
+    "</blockquote>",
+]
+
+
+def test_block_walk_matches_recursive_walk(monkeypatch):
+    from html_parser_spark.kernel import boilerplate as bp
+    from html_parser_spark.spark.transcripts import generate_rows
+
+    texts = [r[3] for r in generate_rows(2000, seed=5,
+                                         include_fixtures=False)]
+    roots = [parse_document(t).doc for t in texts if t is not None]
+    roots += [parse_document(t).doc for t in _BLOCK_PAGES]
+    roots += [parse_fragment(t, "div").doc for t in _BLOCK_PAGES]
+
+    def shape(blocks):
+        return [(b.texts, b.n_chars, b.link_chars, b.n_tags)
+                for b in blocks]
+
+    new = [bp.strip_boilerplate(r) for r in roots]
+    for r in roots:
+        assert shape(bp._collect_blocks(r)) == \
+            shape(_recursive_collect_blocks(r))
+    monkeypatch.setattr(bp, "_collect_blocks", _recursive_collect_blocks)
+    assert new == [bp.strip_boilerplate(r) for r in roots]
+    assert any(kept for _, _, kept, _ in new)
+    assert any(kept < total for _, _, kept, total in new)
+
+
 class TestDeepNesting:
     """Stack-cap (256) silent-drop and dump prefix-truncation parity,
     compared live against the reference binary."""
