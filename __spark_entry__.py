@@ -1087,14 +1087,11 @@ def _q_dump_serialize(spark, sf_dir):
     """S3/S4 surfaces through Spark: ASCII dump + HTML serialization
     columns for every turn (golden-equal per tests)."""
     from html_parser_spark.spark.transcripts import transcripts_df
-    from html_parser_spark.spark.udfs import make_dump_map_in_arrow
+    from html_parser_spark.spark.udfs import DUMP_FIELDS, dump_row, map_rows
 
     df = transcripts_df(spark, 500, seed=42, partitions=4)
-    fn = make_dump_map_in_arrow(["conv_id", "turn_idx"], "fragment", "div")
-    schema = ("conv_id string, turn_idx int, dump string, "
-              "serialized_html string, extracted_text string, "
-              "parse_errors int")
-    return df.select("conv_id", "turn_idx", "text").mapInArrow(fn, schema)
+    return map_rows(df, ["text"], ["conv_id", "turn_idx"], DUMP_FIELDS,
+                    dump_row("fragment", "div"))
 
 
 def _q_media_features(spark, sf_dir):

@@ -33,8 +33,8 @@ class ParseResult:
     def serialize(self):
         return serialize_html(self.doc)
 
-    def extract_text(self, skip_elements=frozenset()):
-        return extract_text_with_spans(self.doc, skip_elements)
+    def extract_text(self):
+        return extract_text_with_spans(self.doc)
 
     @property
     def error_count(self):

@@ -62,13 +62,12 @@ NEAR_GOOD_MIN_CHARS = 8
 
 
 class _Block:
-    __slots__ = ("texts", "n_chars", "link_chars", "n_tags", "_text")
+    __slots__ = ("texts", "n_chars", "link_chars", "_text")
 
     def __init__(self):
         self.texts: list = []   # (data, path)
         self.n_chars = 0
         self.link_chars = 0
-        self.n_tags = 0
         self._text = None
 
     def add(self, data: str, path: str, in_link: bool):
@@ -128,7 +127,6 @@ def _collect_blocks(root: Node):
                     blocks.append(cur)
                     cur = _Block()
                 stack.append(_CLOSE_BLOCK)
-            cur.n_tags += 1
             path = f"{path}/{name}" if path else name
             in_link = in_link or name == "a"
         # DOCUMENT / DOCTYPE children keep the parent's path

@@ -588,7 +588,7 @@ def _jis0208_table():
 # glibc-iconv parity shims. The diff tables were generated by feeding
 # every structurally-plausible byte sequence through the reference
 # binary per charset and recording where Python's codec disagrees
-# (tools/probe_codec_tables.py -> _iconv_diffs.py; 600+ sequences:
+# (_iconv_diffs.py, generated from the reference build; 600+ sequences:
 # shift_jis yen/overline, Big5 ETen area, EUC C1 passthrough, ...).
 from ._iconv_diffs import ICONV_DIFFS  # noqa: E402
 

@@ -11,19 +11,13 @@ from __future__ import annotations
 
 from .tree import ELEMENT, TEXT, Node
 
-# Elements whose text content is not "content" for extraction purposes
-# when the boilerplate filter is enabled; extraction itself is verbatim.
-_SKIP_NONE = frozenset()
-
-
-def extract_text_with_spans(root: Node, skip_elements=_SKIP_NONE):
+def extract_text_with_spans(root: Node):
     """In-order traversal concatenating TEXT node data.
 
     Returns (text, spans) where spans is a list of dicts:
       {"start": int, "end": int, "path": "html/body/p"}
     offsets are Python-character (code point) offsets into the returned
-    text. skip_elements: element names whose subtrees are excluded
-    (used by the boilerplate stage; empty for reference equality).
+    text.
     """
     parts: list = []
     spans: list = []
@@ -42,8 +36,6 @@ def extract_text_with_spans(root: Node, skip_elements=_SKIP_NONE):
             continue
         if node.type == ELEMENT:
             name = node.name or ""
-            if name in skip_elements:
-                continue
             child_path = f"{path}/{name}" if path else name
         else:
             child_path = path

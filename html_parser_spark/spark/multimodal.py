@@ -2,7 +2,7 @@
 
 Design per the build brief: image/audio/video are `binary` columns with
 a typed metadata struct; decode / feature-extract / resize /
-frame-sample run as Arrow-batched kernels over mapInPandas.
+frame-sample run as Arrow-batched row kernels (`udfs.map_rows`).
 
 Codec status (this container has no PIL/ffmpeg and installs are
 forbidden, so everything here is PURE STDLIB):
@@ -50,10 +50,12 @@ import io
 import struct
 import wave
 import zlib
-from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .udfs import map_rows
 
 MEDIA_SCHEMA = (
     "media_id bigint, kind string, payload binary, "
@@ -61,18 +63,23 @@ MEDIA_SCHEMA = (
     "duration_ms:int, sample_rate:int>"
 )
 
-FEATURE_SCHEMA = (
-    "media_id bigint, kind string, n_bytes int, sha bigint, "
-    "decode_ok boolean, features array<float>"
-)
+# decode_media output after (media_id, kind)
+FEATURE_FIELDS = [
+    pa.field("n_bytes", pa.int32()),
+    pa.field("sha", pa.int64()),
+    pa.field("decode_ok", pa.bool_()),
+    pa.field("features", pa.list_(pa.float32())),
+]
 
-RESIZE_SCHEMA = (
-    "media_id bigint, width int, height int, payload binary"
-)
+# resize_images output after media_id
+RESIZE_FIELDS = [
+    pa.field("width", pa.int32()),
+    pa.field("height", pa.int32()),
+    pa.field("payload", pa.binary()),
+]
 
-FRAME_SCHEMA = (
-    "media_id bigint, frame_idx int, frame_ms int, payload binary"
-)
+# sample_frames output after (media_id, frame_idx, frame_ms)
+FRAME_FIELDS = [pa.field("payload", pa.binary())]
 
 N_FEATURES = 64
 
@@ -1076,8 +1083,43 @@ def _video_features(payload: bytes):
                 + [x / 255.0 for x in digest]), False
 
 
+def _media_features(b: bytes, kind: str, strict: bool):
+    """(decode_ok, features) of one payload. Per-row tolerance: ONE
+    corrupt payload in a 100 TB corpus must mark its row, not kill the
+    batch."""
+    try:
+        if kind == "image":
+            try:
+                return True, _image_features(b)
+            except NotImplementedError:
+                # recognized-but-undecodable variant (progressive/
+                # extended JPEG): same policy as compressed video —
+                # strict raises at the integration point, lenient
+                # degrades to a deterministic payload digest with
+                # decode_ok False
+                if strict:
+                    raise
+                digest = hashlib.blake2b(b, digest_size=62).digest()
+                return False, _pad([x / 255.0 for x in digest])
+        if kind == "audio":
+            return True, _audio_features(b)
+        vf, pixels_decoded = _video_features(b)
+        if strict and not pixels_decoded:
+            raise NotImplementedError(
+                "no pixel decoder for this video's codec (only 'raw ' "
+                "sample streams decode in this container); ship a real "
+                "codec (e.g. pyav) via --py-files and extend "
+                "_video_features at this integration point"
+            )
+        return True, vf
+    except NotImplementedError:
+        raise
+    except Exception:  # noqa: BLE001 — corrupt payload
+        return False, []
+
+
 def decode_media(df: DataFrame, strict: bool = False) -> DataFrame:
-    """Decode + feature-extract over Arrow batches (mapInPandas).
+    """Decode + feature-extract, one Arrow-batched row kernel.
 
     image/png, audio/wav, and RAW-codec video decode FOR REAL
     (pure-stdlib codecs above; mp4 'raw ' sample streams are demuxed
@@ -1090,73 +1132,14 @@ def decode_media(df: DataFrame, strict: bool = False) -> DataFrame:
     digest for the pixel part of the feature vector.
     """
 
-    def _kernel(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def _row(payload, kind):
+        b = bytes(payload)
+        sha = int.from_bytes(
+            hashlib.blake2b(b, digest_size=4).digest(), "little")
+        return [(len(b), sha, *_media_features(b, kind, strict))]
 
-        for pdf in batches:
-            feats, shas, nbytes, oks = [], [], [], []
-            for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                b = bytes(payload)
-                nbytes.append(len(b))
-                shas.append(
-                    int.from_bytes(
-                        hashlib.blake2b(b, digest_size=4).digest(), "little"
-                    )
-                )
-                # per-row tolerance: ONE corrupt payload in a 100 TB
-                # corpus must mark its row, not kill the batch
-                try:
-                    if kind == "image":
-                        try:
-                            feats.append(_image_features(b))
-                        except NotImplementedError:
-                            # recognized-but-undecodable variant
-                            # (progressive/extended JPEG): same policy
-                            # as compressed video — strict raises at
-                            # the integration point, lenient degrades
-                            # to a deterministic payload digest with
-                            # decode_ok False
-                            if strict:
-                                raise
-                            digest = hashlib.blake2b(
-                                b, digest_size=62).digest()
-                            feats.append(
-                                _pad([x / 255.0 for x in digest]))
-                            oks.append(False)
-                            continue
-                    elif kind == "audio":
-                        feats.append(_audio_features(b))
-                    else:
-                        vf, pixels_decoded = _video_features(b)
-                        if strict and not pixels_decoded:
-                            raise NotImplementedError(
-                                "no pixel decoder for this video's "
-                                "codec (only 'raw ' sample streams "
-                                "decode in this container); ship a "
-                                "real codec (e.g. pyav) via "
-                                "--py-files and extend "
-                                "_video_features at this "
-                                "integration point"
-                            )
-                        feats.append(vf)
-                    oks.append(True)
-                except NotImplementedError:
-                    raise
-                except Exception:  # noqa: BLE001 — corrupt payload
-                    feats.append([])
-                    oks.append(False)
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "n_bytes": nbytes,
-                "sha": shas,
-                "decode_ok": oks,
-                "features": feats,
-            })
-
-    return df.select("media_id", "kind", "payload").mapInPandas(
-        _kernel, FEATURE_SCHEMA
-    )
+    return map_rows(df, ["payload", "kind"], ["media_id", "kind"],
+                    FEATURE_FIELDS, _row)
 
 
 def resize_images(df: DataFrame, width: int = 32,
@@ -1165,38 +1148,24 @@ def resize_images(df: DataFrame, width: int = 32,
     (partition pruning friendly), then a batched kernel that decodes
     the PNG, resamples, and re-encodes. Output payload is a valid PNG
     of the requested dimensions."""
+    import numpy as np
 
-    def _kernel(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def _row(payload):
+        # per-row tolerance (same policy as decode_media): one corrupt
+        # image marks its row null, not the whole batch
+        try:
+            w, h, ch, px = _decode_image(bytes(payload))
+            img = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
+            sy = np.arange(height) * h // height
+            sx = np.arange(width) * w // width
+            resized = img[sy[:, None], sx[None, :], :]
+            out = png_encode(width, height, resized.tobytes(), ch)
+        except Exception:  # noqa: BLE001 — corrupt payload
+            out = None
+        return [(width, height, out)]
 
-        for pdf in batches:
-            out = []
-            for payload in pdf["payload"]:
-                # per-row tolerance (same policy as decode_media): one
-                # corrupt image marks its row null, not the whole batch
-                try:
-                    w, h, ch, px = _decode_image(bytes(payload))
-                    img = np.frombuffer(px, dtype=np.uint8).reshape(
-                        h, w, ch)
-                    sy = np.arange(height) * h // height
-                    sx = np.arange(width) * w // width
-                    resized = img[sy[:, None], sx[None, :], :]
-                    out.append(bytearray(png_encode(
-                        width, height, resized.tobytes(), ch)))
-                except Exception:  # noqa: BLE001 — corrupt payload
-                    out.append(None)
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "width": [width] * len(pdf),
-                "height": [height] * len(pdf),
-                "payload": out,
-            })
-
-    imgs = df.where(F.col("kind") == "image")
-    return imgs.select("media_id", "payload").mapInPandas(
-        _kernel, RESIZE_SCHEMA
-    )
+    return map_rows(df.where(F.col("kind") == "image"), ["payload"],
+                    ["media_id"], RESIZE_FIELDS, _row)
 
 
 def sample_frames(df: DataFrame, every_ms: int = 1000,
@@ -1222,44 +1191,33 @@ def sample_frames(df: DataFrame, every_ms: int = 1000,
         ).alias("frame_idx"),
     ).withColumn("frame_ms", F.col("frame_idx") * every_ms)
 
-    def _kernel(batches: Iterator) -> Iterator:
-        import pandas as pd
+    # the explode keeps one video's rows adjacent, so a one-entry memo
+    # parses each sample table once; keyed by a CONTENT digest, not
+    # media_id, so duplicated ids never share a table
+    memo = [None, []]
 
-        for pdf in batches:
-            payloads = []
-            # keyed by a CONTENT digest: media_id alone would apply the
-            # first row's sample table to a different payload if ids
-            # ever duplicate upstream; one blake2b pass per exploded
-            # row (<= max_frames per video) is the price of safety
-            table_cache: dict = {}
-            for payload, idx, fms in zip(
-                    pdf["payload"], pdf["frame_idx"], pdf["frame_ms"]):
-                b = bytes(payload)
-                key = hashlib.blake2b(b, digest_size=16).digest()
-                if key not in table_cache:
-                    try:
-                        table_cache[key] = mp4_samples(b)
-                    except ValueError:
-                        table_cache[key] = []
-                samples = table_cache[key]
-                if samples:
-                    # real demux: the sample whose timestamp is
-                    # nearest the grid point
-                    off, size, _t = min(
-                        samples, key=lambda sm: abs(sm[2] - int(fms)))
-                    payloads.append(bytearray(b[off:off + size]))
-                else:  # no sample table: proportional byte slice
-                    chunk = max(len(b) // max_frames, 1)
-                    start = int(idx) * chunk
-                    payloads.append(bytearray(b[start:start + chunk]))
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "frame_idx": pdf["frame_idx"],
-                "frame_ms": pdf["frame_ms"],
-                "payload": payloads,
-            })
+    def _row(payload, idx, fms):
+        b = bytes(payload)
+        key = hashlib.blake2b(b, digest_size=16).digest()
+        if memo[0] != key:
+            try:
+                memo[1] = mp4_samples(b)
+            except ValueError:
+                memo[1] = []
+            memo[0] = key
+        samples = memo[1]
+        if samples:
+            # real demux: the sample whose timestamp is nearest the
+            # grid point
+            off, size, _t = min(samples, key=lambda sm: abs(sm[2] - fms))
+            return [(b[off:off + size],)]
+        # no sample table: proportional byte slice
+        chunk = max(len(b) // max_frames, 1)
+        return [(b[idx * chunk:(idx + 1) * chunk],)]
 
-    return grid.mapInPandas(_kernel, FRAME_SCHEMA)
+    return map_rows(grid, ["payload", "frame_idx", "frame_ms"],
+                    ["media_id", "frame_idx", "frame_ms"], FRAME_FIELDS,
+                    _row)
 
 
 # ---------------------------------------------------------------------------

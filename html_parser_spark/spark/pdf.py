@@ -47,18 +47,24 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .udfs import map_rows
 
 PDF_SCHEMA = "doc_id bigint, payload binary"
 
-PDF_EXTRACT_SCHEMA = (
-    "doc_id bigint, n_pages int, n_runs int, decode_ok boolean, "
-    "extracted_text string, "
-    "runs array<struct<page:int, x:double, y:double, text:string>>"
-)
+# extract_pdfs output after doc_id
+PDF_FIELDS = [
+    pa.field("n_pages", pa.int32()),
+    pa.field("n_runs", pa.int32()),
+    pa.field("decode_ok", pa.bool_()),
+    pa.field("extracted_text", pa.string()),
+    pa.field("runs", pa.list_(pa.struct([
+        ("page", pa.int32()), ("x", pa.float64()), ("y", pa.float64()),
+        ("text", pa.string())]))),
+]
 
 
 # ---------------------------------------------------------------------------
@@ -707,45 +713,21 @@ def pdf_extract(data: bytes):
 # ---------------------------------------------------------------------------
 
 
+def _pdf_row(payload):
+    try:
+        n_pages, runs, text, ok = pdf_extract(bytes(payload))
+        return [(n_pages, len(runs), ok, text,
+                 [{"page": p, "x": float(x), "y": float(y), "text": t}
+                  for p, x, y, t in runs])]
+    except Exception:  # noqa: BLE001 — corrupt payload
+        return [(0, 0, False, "", [])]
+
+
 def extract_pdfs(df: DataFrame) -> DataFrame:
     """Arrow-batched PDF extraction over (doc_id, payload). Per-row
     corrupt-payload tolerance: a broken PDF yields decode_ok=false and
     empty text, never a failed batch."""
-
-    def _kernel(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf_batch in batches:
-            n_pages, n_runs, oks, texts, runs_col = [], [], [], [], []
-            for payload in pdf_batch["payload"]:
-                try:
-                    np_, runs, text, ok = pdf_extract(bytes(payload))
-                    n_pages.append(np_)
-                    n_runs.append(len(runs))
-                    oks.append(ok)
-                    texts.append(text)
-                    runs_col.append([
-                        {"page": p, "x": float(x), "y": float(y),
-                         "text": t}
-                        for p, x, y, t in runs
-                    ])
-                except Exception:  # noqa: BLE001 — corrupt payload
-                    n_pages.append(0)
-                    n_runs.append(0)
-                    oks.append(False)
-                    texts.append("")
-                    runs_col.append([])
-            yield pd.DataFrame({
-                "doc_id": pdf_batch["doc_id"],
-                "n_pages": n_pages,
-                "n_runs": n_runs,
-                "decode_ok": oks,
-                "extracted_text": texts,
-                "runs": runs_col,
-            })
-
-    return df.select("doc_id", "payload").mapInPandas(
-        _kernel, PDF_EXTRACT_SCHEMA)
+    return map_rows(df, ["payload"], ["doc_id"], PDF_FIELDS, _pdf_row)
 
 
 _WORDS = ("spark shuffle partition executor codegen arrow batch kernel "

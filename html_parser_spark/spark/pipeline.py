@@ -18,14 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .udfs import EXTRACT_SPARK_SCHEMA, make_extract_map_in_arrow
+from .udfs import EXTRACT_FIELDS, LINK_FIELDS, extract_row, links_row, map_rows
 
 TRANSCRIPT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 PASSTHROUGH = ["conv_id", "turn_idx", "role", "tool", "ts"]
-_OUT_SCHEMA = (
-    "conv_id string, turn_idx int, role string, tool string, "
-    "ts timestamp, " + EXTRACT_SPARK_SCHEMA
-)
 
 
 def extract_turns(df: DataFrame, mode: str = "fragment",
@@ -43,9 +39,8 @@ def extract_turns(df: DataFrame, mode: str = "fragment",
     full parse) handles markup-free turns cheaply. boilerplate=True
     applies the DOM block-scoring strip; the '<'-free fast path stays
     active for it too."""
-    kernel_fn = make_extract_map_in_arrow(
-        PASSTHROUGH, mode, context, boilerplate=boilerplate)
-    out = df.select(*PASSTHROUGH, "text").mapInArrow(kernel_fn, _OUT_SCHEMA)
+    out = map_rows(df, ["text"], PASSTHROUGH, EXTRACT_FIELDS,
+                   extract_row(mode, context, boilerplate))
     return with_turn_rank(out) if ordered else out
 
 
@@ -478,12 +473,8 @@ def extract_links(df: DataFrame, mode: str = "fragment",
     extraction kernel uses (variable fan-out inside the batch, no
     explode/join), keys ride through the kernel — nothing re-reads the
     source."""
-    from .udfs import make_links_map_in_arrow
-
-    fn = make_links_map_in_arrow(["conv_id", "turn_idx"], mode, context)
-    schema = ("conv_id string, turn_idx int, link_idx int, "
-              "href string, anchor_text string")
-    return df.select("conv_id", "turn_idx", "text").mapInArrow(fn, schema)
+    return map_rows(df, ["text"], ["conv_id", "turn_idx"], LINK_FIELDS,
+                    links_row(mode, context))
 
 
 def link_stats(links: DataFrame) -> DataFrame:

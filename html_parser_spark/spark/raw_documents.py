@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from ..kernel.api import parse_document
 from ..kernel.tree import release
-from .udfs import EXTRACT_FIELDS, EXTRACT_SPARK_SCHEMA, _map_batches
+from .udfs import EXTRACT_FIELDS, map_rows
 
 RAW_INPUT_SCHEMA = "doc_id string, content binary, charset_hint string"
 
@@ -53,14 +53,8 @@ def extract_raw_documents(df, passthrough: tuple = ()):
     keeping their input types) — so upstream envelope columns (e.g. a
     WARC target URI) ride through the Python stage instead of forcing
     a join back against a second evaluation of the heavy source read."""
-    base = df.select("doc_id", "content", "charset_hint", *passthrough)
-    carried = "".join(
-        f"{f.name} {f.dataType.simpleString()}, "
-        for f in base.schema.fields if f.name in passthrough)
-    fn = _map_batches(["content", "charset_hint"], ["doc_id", *passthrough],
-                      EXTRACT_FIELDS, _parse_raw)
-    out = base.mapInArrow(
-        fn, f"doc_id string, {carried}{EXTRACT_SPARK_SCHEMA}")
+    out = map_rows(df, ["content", "charset_hint"], ["doc_id", *passthrough],
+                   EXTRACT_FIELDS, _parse_raw)
     return out.select("doc_id", *(f.name for f in EXTRACT_FIELDS),
                       *passthrough)
 

@@ -1,4 +1,7 @@
-"""Vectorized Arrow parse kernels (no per-row Python UDFs).
+"""Vectorized Arrow parse kernels (no per-row Python UDFs), and
+``map_rows``, the one driver of every per-row Python stage in the
+package: a row function runs inside ``mapInArrow`` batches, and the
+Spark output schema is derived from the stage's Arrow fields.
 
 The fused tokenize+tree-build kernel is inherently per-row sequential
 (tokenizer<->builder feedback, SURVEY.md §3.4), so it runs inside
@@ -26,15 +29,18 @@ computes a batch (never across its ``yield``).
 from __future__ import annotations
 
 import gc
-import os
 
 from typing import Iterator
 
 import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import StructField, StructType
 
 from ..kernel.api import parse_document, parse_fragment
 from ..kernel.boilerplate import strip_boilerplate, _Block, _score
 from ..kernel.charref import decode_character_references
+from ..kernel.extract import collect_links
 from ..kernel.tokenizer import replace_nulls
 from ..kernel.tree import release
 
@@ -60,13 +66,6 @@ EXTRACT_FIELDS = [
     # tree-builder/charref lines bare) — S5/T15 text parity
     pa.field("parse_error_texts", pa.list_(pa.string())),
 ]
-
-EXTRACT_SPARK_SCHEMA = (
-    "extracted_text string, "
-    "spans array<struct<start:int,end:int,path:string>>, "
-    "parse_errors int, node_count int, doc_encoding string, "
-    "parse_error_texts array<string>"
-)
 
 
 # RAWTEXT/script/plaintext contexts must take the full parser even for
@@ -188,15 +187,13 @@ def _fast_extract_boilerplate(text: str, mode: str, context: str):
 # context) re-parses are pure waste. Results are only serialized to
 # Arrow (never mutated), so sharing them is safe. A plain module dict
 # (not functools.lru_cache) so the mapInArrow closure stays picklable.
-# HP_PARSE_CACHE=0 disables; size via HP_PARSE_CACHE_SIZE.
-_CACHE_SIZE = int(os.environ.get("HP_PARSE_CACHE_SIZE", "4096"))
-_CACHE_ON = os.environ.get("HP_PARSE_CACHE", "1") != "0" and _CACHE_SIZE > 0
+_CACHE_SIZE = 4096
+# always on; kept as a name because perfbench's replay reads it
+_CACHE_ON = True
 _PARSE_CACHE: dict = {}
 
 
 def _parse_turn_cached(text, mode, context, boilerplate):
-    if not _CACHE_ON:
-        return parse_turn(text, mode, context, boilerplate)
     key = (text, mode, context, boilerplate)
     hit = _PARSE_CACHE.get(key)
     if hit is not None:
@@ -259,11 +256,13 @@ def _column(values, typ: pa.DataType) -> pa.Array:
         return _spans_array(values)
     if typ == _STR_LIST_TYPE:
         return _str_list_array(values)
-    return pa.array(values, typ)
+    # from_pandas: a float NaN, also inside a list, is stored as NULL
+    # (a PDF run position can overflow to NaN)
+    return pa.array(values, typ, from_pandas=True)
 
 
 def _map_batches(inputs, passthrough, out_fields, row_fn):
-    """The one mapInArrow batch loop behind every parse kernel.
+    """The one mapInArrow batch loop behind every per-row Python stage.
 
     `row_fn(*input_values)` returns a list of output tuples (one per
     row for 1:1 kernels, zero or more for fan-out kernels such as
@@ -306,14 +305,35 @@ def _map_batches(inputs, passthrough, out_fields, row_fn):
     return _fn
 
 
+def map_rows(df: DataFrame, inputs, passthrough, out_fields,
+             row_fn) -> DataFrame:
+    """Run `row_fn` over every row of `df` in one mapInArrow stage
+    (`_map_batches`). The stage reads `passthrough` then `inputs`
+    (a column may be both); its output is the passthrough columns,
+    with the types they have in `df`, followed by `out_fields`. Every
+    output column is nullable."""
+    base = df.select(*dict.fromkeys([*passthrough, *inputs]))
+    schema = StructType(
+        [StructField(c, base.schema[c].dataType) for c in passthrough]
+        + [StructField(f.name, from_arrow_type(f.type)) for f in out_fields])
+    return base.mapInArrow(
+        _map_batches(inputs, passthrough, out_fields, row_fn), schema)
+
+
+def extract_row(mode: str = "fragment", context: str = "div",
+                boilerplate: bool = False):
+    """Row function of the extraction kernel: text -> EXTRACT_FIELDS."""
+    return lambda text: [
+        _parse_turn_cached(text, mode, context, boilerplate)]
+
+
 def make_extract_map_in_arrow(passthrough: list[str], mode: str = "fragment",
                               context: str = "div",
                               boilerplate: bool = False):
     """Build a mapInArrow function: passthrough columns + text ->
     passthrough columns + EXTRACT_FIELDS."""
-    return _map_batches(
-        ["text"], passthrough, EXTRACT_FIELDS,
-        lambda text: [_parse_turn_cached(text, mode, context, boilerplate)])
+    return _map_batches(["text"], passthrough, EXTRACT_FIELDS,
+                        extract_row(mode, context, boilerplate))
 
 
 DUMP_FIELDS = [
@@ -324,10 +344,10 @@ DUMP_FIELDS = [
 ]
 
 
-def make_dump_map_in_arrow(passthrough: list[str], mode: str = "fragment",
-                           context: str = "div"):
-    """Debug/equality variant: adds dump + serialized columns (used by
-    the golden-equality tests; too heavy for the production path)."""
+def dump_row(mode: str = "fragment", context: str = "div"):
+    """Row function of the debug/equality kernel: text -> DUMP_FIELDS
+    (used by the golden-equality tests; too heavy for the production
+    path)."""
 
     def _row(text):
         res = _parse(text or "", mode, context)
@@ -336,7 +356,15 @@ def make_dump_map_in_arrow(passthrough: list[str], mode: str = "fragment",
         release(res.doc)
         return out
 
-    return _map_batches(["text"], passthrough, DUMP_FIELDS, _row)
+    return _row
+
+
+def make_dump_map_in_arrow(passthrough: list[str], mode: str = "fragment",
+                           context: str = "div"):
+    """mapInArrow function: passthrough columns + text -> passthrough
+    columns + DUMP_FIELDS."""
+    return _map_batches(["text"], passthrough, DUMP_FIELDS,
+                        dump_row(mode, context))
 
 
 LINK_FIELDS = [
@@ -346,14 +374,10 @@ LINK_FIELDS = [
 ]
 
 
-def make_links_map_in_arrow(passthrough: list[str], mode: str = "fragment",
-                            context: str = "div"):
-    """Anchor/link extraction kernel: one OUTPUT row per <a href>
-    found in each turn (variable fan-out — a mapInArrow batch may grow
-    or shrink), passthrough keys repeated per link, link_idx = document
-    order within the turn.  Same single-Python-stage shape as the
-    extraction kernel."""
-    from html_parser_spark.kernel.extract import collect_links
+def links_row(mode: str = "fragment", context: str = "div"):
+    """Row function of the anchor/link kernel: one output tuple per
+    <a href> in the text (variable fan-out), link_idx = document order
+    within the turn."""
 
     def _row(text):
         doc = _parse(text or "", mode, context).doc
@@ -361,4 +385,12 @@ def make_links_map_in_arrow(passthrough: list[str], mode: str = "fragment",
         release(doc)
         return [(k, href, anchor) for k, (href, anchor) in enumerate(links)]
 
-    return _map_batches(["text"], passthrough, LINK_FIELDS, _row)
+    return _row
+
+
+def make_links_map_in_arrow(passthrough: list[str], mode: str = "fragment",
+                            context: str = "div"):
+    """mapInArrow function: passthrough columns + text -> one row per
+    link, passthrough keys repeated per link, + LINK_FIELDS."""
+    return _map_batches(["text"], passthrough, LINK_FIELDS,
+                        links_row(mode, context))

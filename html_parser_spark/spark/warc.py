@@ -13,10 +13,11 @@ Spark integration (100 TB shape):
   - `read_warc_records(spark, path)` loads files with the binaryFile
     source (one task per file — the natural Common Crawl layout:
     ~1 GB per WARC, tens of thousands of files, file-level
-    parallelism) and parses records inside `mapInPandas`.  The parser
-    is STREAMING per gzip member: members are inflated one at a time
-    into a carry buffer that is drained record-by-record, so peak
-    memory is O(largest record), never O(file).
+    parallelism) and parses records in one Arrow row kernel
+    (`udfs.map_rows`).  The parser is STREAMING per gzip member:
+    members are inflated one at a time into a carry buffer that is
+    drained record-by-record, so peak memory is O(largest record),
+    never O(file).
   - `warc_http_responses(df)` splits response records' HTTP payload
     into status / headers / body and surfaces the transport charset
     hint — the exact input the raw-documents kernel pipeline
@@ -26,9 +27,10 @@ Spark integration (100 TB shape):
     (mtime pinned to 0 -> byte-deterministic output for a
     deterministic row order).
 
-No external dependency: stdlib `zlib`/`gzip` only.  The reference has
-no archive-container surface at all (it parses single documents);
-this module exists because the engine's 100 TB input arrives as WARC.
+The record parser needs no external dependency: stdlib `zlib`/`gzip`
+only.  The reference has no archive-container surface at all (it
+parses single documents); this module exists because the engine's
+100 TB input arrives as WARC.
 """
 
 from __future__ import annotations
@@ -38,17 +40,29 @@ import io
 import zlib
 from typing import Iterator
 
-RECORD_SCHEMA = (
-    "path string, record_id string, warc_type string, "
-    "target_uri string, warc_date string, content_type string, "
-    "content_length long, payload binary"
-)
+import pyarrow as pa
 
-RESPONSE_SCHEMA = (
-    "path string, record_id string, target_uri string, "
-    "warc_date string, http_status int, http_content_type string, "
-    "charset_hint string, body binary"
-)
+from .udfs import map_rows
+
+# read_warc_records output after path
+RECORD_FIELDS = [
+    pa.field("record_id", pa.string()),
+    pa.field("warc_type", pa.string()),
+    pa.field("target_uri", pa.string()),
+    pa.field("warc_date", pa.string()),
+    pa.field("content_type", pa.string()),
+    pa.field("content_length", pa.int64()),
+    pa.field("payload", pa.binary()),
+]
+
+# warc_http_responses output after (path, record_id, target_uri,
+# warc_date)
+RESPONSE_FIELDS = [
+    pa.field("http_status", pa.int32()),
+    pa.field("http_content_type", pa.string()),
+    pa.field("charset_hint", pa.string()),
+    pa.field("body", pa.binary()),
+]
 
 
 # ---------------------------------------------------------------------
@@ -268,43 +282,28 @@ _BINARYFILE_SCHEMA = ("path string, modificationTime timestamp, "
                       "length long, content binary")
 
 
-def _parse_files_factory(errors: str):
-    """Build the (path, content) -> record-rows stage (shared by the
-    batch and streaming readers)."""
-    import pandas as pd
+def _records_row(errors: str):
+    """content -> one RECORD_FIELDS tuple per WARC record (shared by
+    the batch and streaming readers)."""
 
-    def _parse_files(batches):
-        for pdf in batches:
-            rows = {k: [] for k in ("path", "record_id", "warc_type",
-                                    "target_uri", "warc_date",
-                                    "content_type", "content_length",
-                                    "payload")}
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                for headers, payload in iter_warc_records(
-                        bytes(content), errors=errors):
-                    rows["path"].append(path_)
-                    rows["record_id"].append(
-                        headers.get("warc-record-id"))
-                    rows["warc_type"].append(headers.get("warc-type"))
-                    rows["target_uri"].append(
-                        headers.get("warc-target-uri"))
-                    rows["warc_date"].append(headers.get("warc-date"))
-                    rows["content_type"].append(
-                        headers.get("content-type"))
-                    rows["content_length"].append(len(payload))
-                    rows["payload"].append(payload)
-            yield pd.DataFrame(rows)
+    def _row(content):
+        return [(h.get("warc-record-id"), h.get("warc-type"),
+                 h.get("warc-target-uri"), h.get("warc-date"),
+                 h.get("content-type"), len(payload), payload)
+                for h, payload in iter_warc_records(bytes(content),
+                                                    errors=errors)]
 
-    return _parse_files
+    return _row
 
 
 def read_warc_records(spark, path, errors: str = "strict"):
     """WARC files -> one row per record.  binaryFile gives one task
     per file (Common Crawl parallelism is file-count, tens of
-    thousands); record parsing runs in executors via mapInPandas with
-    per-member streaming.  Selecting only envelope columns still reads
-    whole files (binary sources can't prune payload bytes) — at 100 TB
-    point envelope-only queries at the crawl's CDX index instead.
+    thousands); record parsing runs in executors in one Arrow row
+    kernel with per-member streaming.  Selecting only envelope columns
+    still reads whole files (binary sources can't prune payload
+    bytes) — at 100 TB point envelope-only queries at the crawl's CDX
+    index instead.
 
     errors="skip" keeps a damaged archive from failing the job: the
     file's records before the damage are kept, the rest abandoned
@@ -312,10 +311,9 @@ def read_warc_records(spark, path, errors: str = "strict"):
     quarantine)."""
     if errors not in ("strict", "skip"):
         raise ValueError("errors must be 'strict' or 'skip'")
-    files = spark.read.format("binaryFile").load(path) \
-        .select("path", "content")
-    return files.mapInPandas(_parse_files_factory(errors),
-                             RECORD_SCHEMA)
+    files = spark.read.format("binaryFile").load(path)
+    return map_rows(files, ["content"], ["path"], RECORD_FIELDS,
+                    _records_row(errors))
 
 
 def read_warc_records_stream(spark, path, errors: str = "strict"):
@@ -329,49 +327,29 @@ def read_warc_records_stream(spark, path, errors: str = "strict"):
     if errors not in ("strict", "skip"):
         raise ValueError("errors must be 'strict' or 'skip'")
     files = spark.readStream.format("binaryFile") \
-        .schema(_BINARYFILE_SCHEMA).load(path) \
-        .select("path", "content")
-    return files.mapInPandas(_parse_files_factory(errors),
-                             RECORD_SCHEMA)
+        .schema(_BINARYFILE_SCHEMA).load(path)
+    return map_rows(files, ["content"], ["path"], RECORD_FIELDS,
+                    _records_row(errors))
+
+
+def _http_row(payload):
+    status, headers, body = parse_http_response(bytes(payload))
+    ctype = headers.get("content-type")
+    return [(status,
+             ctype.split(";")[0].strip().lower() if ctype else None,
+             charset_from_content_type(ctype), body)]
 
 
 def warc_http_responses(records):
     """response-type records -> HTTP envelope + body.  The
     charset_hint column feeds raw_documents.extract_raw_documents as the
     transport hint (BOM < hint < meta precedence in the sniffer)."""
-    import pandas as pd
-
-    def _split(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("path", "record_id", "target_uri",
-                                   "warc_date", "http_status",
-                                   "http_content_type", "charset_hint",
-                                   "body")}
-            # column-zip, not iterrows: a Series per row would
-            # dominate the cheap per-record split (review finding)
-            for path_, rid, uri, date, payload in zip(
-                    pdf["path"], pdf["record_id"], pdf["target_uri"],
-                    pdf["warc_date"], pdf["payload"]):
-                status, headers, body = parse_http_response(
-                    bytes(payload))
-                ctype = headers.get("content-type")
-                out["path"].append(path_)
-                out["record_id"].append(rid)
-                out["target_uri"].append(uri)
-                out["warc_date"].append(date)
-                out["http_status"].append(status)
-                out["http_content_type"].append(
-                    ctype.split(";")[0].strip().lower()
-                    if ctype else None)
-                out["charset_hint"].append(
-                    charset_from_content_type(ctype))
-                out["body"].append(body)
-            yield pd.DataFrame(out)
-
     from pyspark.sql import functions as F
 
-    return records.where(F.col("warc_type") == "response") \
-        .mapInPandas(_split, RESPONSE_SCHEMA)
+    return map_rows(records.where(F.col("warc_type") == "response"),
+                    ["payload"],
+                    ["path", "record_id", "target_uri", "warc_date"],
+                    RESPONSE_FIELDS, _http_row)
 
 
 def write_warc_records(df, out_dir, *,

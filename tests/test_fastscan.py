@@ -628,8 +628,8 @@ def test_errors_list_is_shared_and_untouched():
 
 
 # ---------------------------------------------------------------------
-# 4. interleaved-instance cache-bleed smoke (full campaign:
-#    tools/fuzz_diff.py --interleave; this pins the property in-suite)
+# 4. interleaved-instance cache-bleed smoke (pins in-suite the property
+#    the differential fuzzer's interleave campaign checked)
 # ---------------------------------------------------------------------
 
 def test_interleaved_instances_no_cache_bleed():

@@ -493,7 +493,7 @@ def test_map_batches_restores_collector_state():
 
 def _recursive_collect_blocks(root):
     """The recursive block walk that the iterative one replaced: the
-    oracle for its block order, paths, n_tags and flush points."""
+    oracle for its block order, paths and flush points."""
     from html_parser_spark.kernel import boilerplate as bp
     from html_parser_spark.kernel.tree import COMMENT, ELEMENT, TEXT
 
@@ -522,7 +522,6 @@ def _recursive_collect_blocks(root):
             is_block = name in bp._BLOCK_TAGS
             if is_block:
                 flush()
-            cur.n_tags += 1
             link = in_link or name == "a"
             for child in node.children:
                 walk(child, child_path, link)
@@ -568,8 +567,7 @@ def test_block_walk_matches_recursive_walk(monkeypatch):
     roots += [parse_fragment(t, "div").doc for t in _BLOCK_PAGES]
 
     def shape(blocks):
-        return [(b.texts, b.n_chars, b.link_chars, b.n_tags)
-                for b in blocks]
+        return [(b.texts, b.n_chars, b.link_chars) for b in blocks]
 
     new = [bp.strip_boilerplate(r) for r in roots]
     for r in roots:

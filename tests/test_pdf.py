@@ -351,13 +351,33 @@ class TestSparkOperator:
                 assert r.runs[0].x == 72.0
 
     def test_plan_single_python_stage(self, spark):
-        """One mapInPandas crossing, nothing else Python-side."""
+        """One mapInArrow crossing, nothing else Python-side."""
         from html_parser_spark.spark.pdf import extract_pdfs, synth_pdf_df
 
         q = extract_pdfs(synth_pdf_df(spark, 4))
         plan = q._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("MapInPandas") == 1
+        assert plan.count("MapInArrow") == 1
         assert "BatchEvalPython" not in plan
+
+    def test_nan_position_is_null(self, spark):
+        """A run position that overflows to inf and back to NaN
+        (inf + -inf in Td) reaches Spark as NULL, not NaN."""
+        import math
+        import re
+
+        from html_parser_spark.spark.pdf import PDF_SCHEMA, extract_pdfs
+
+        big = "1" + "0" * 310 + ".0"
+        body = f"1 0 0 1 {big} 700 Tm -{big} 0 Td (nan) Tj".encode()
+        pdf = pdf_encode([[(72.0, 700.0, "x")]], compress=False)
+        pdf = pdf.replace(b"1 0 0 1 72 700 Tm\n(x) Tj", body)
+        pdf = re.sub(rb"/Length \d+", b"/Length %d" % len(
+            b"BT /F1 12 Tf\n" + body + b"\nET"), pdf)
+        assert math.isnan(pdf_extract(pdf)[1][0][1])
+        (row,) = extract_pdfs(spark.createDataFrame(
+            [(0, bytearray(pdf))], PDF_SCHEMA)).collect()
+        assert row.decode_ok and row.extracted_text == "nan"
+        assert row.runs[0].x is None and row.runs[0].y == 700.0
 
 
 def test_fuzz_mutated_payloads_terminate():

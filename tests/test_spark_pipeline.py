@@ -34,7 +34,7 @@ def test_pipeline_matches_goldens(spark, refbuild, golden_cases):
     reference dumps — the north-rule per-turn equality check."""
     import datetime
 
-    from html_parser_spark.spark.udfs import make_dump_map_in_arrow
+    from html_parser_spark.spark.udfs import DUMP_FIELDS, dump_row, map_rows
 
     rows = _fixture_rows(refbuild, golden_cases)
     assert len(rows) >= 30
@@ -47,14 +47,10 @@ def test_pipeline_matches_goldens(spark, refbuild, golden_cases):
         data, "conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp"
     ).repartition(4)
-    fn = make_dump_map_in_arrow(["conv_id", "turn_idx"], "fragment", "div")
-    out_schema = ("conv_id string, turn_idx int, dump string, "
-                  "serialized_html string, extracted_text string, "
-                  "parse_errors int")
     got = {
         r.turn_idx: (r.dump, r.parse_errors)
-        for r in df.select("conv_id", "turn_idx", "text")
-        .mapInArrow(fn, out_schema).collect()
+        for r in map_rows(df, ["text"], ["conv_id", "turn_idx"],
+                          DUMP_FIELDS, dump_row("fragment", "div")).collect()
     }
     bad = []
     for i, (name, text, dump, errc) in enumerate(rows):
@@ -3879,3 +3875,70 @@ def test_winnowing_short_documents(spark):
         return len(set(wins)), min(wins)
 
     assert got == {n: expected(base[:n]) for n in lengths}
+
+
+_EXTRACT_DDL = (
+    "extracted_text string, "
+    "spans array<struct<start:int,end:int,path:string>>, "
+    "parse_errors int, node_count int, doc_encoding string, "
+    "parse_error_texts array<string>")
+
+
+def test_map_rows_output_schemas(spark, tmp_path):
+    """Every per-row Python stage derives its Spark schema from its
+    passthrough columns and Arrow fields; each must equal the DDL the
+    stage used to spell out by hand (all fields nullable)."""
+    import __spark_entry__ as se
+    from html_parser_spark.spark import multimodal as mm
+    from html_parser_spark.spark import warc
+    from html_parser_spark.spark.pdf import extract_pdfs, synth_pdf_df
+    from html_parser_spark.spark.pipeline import extract_links, extract_turns
+    from html_parser_spark.spark.raw_documents import (
+        extract_raw_documents, synth_raw_documents_df,
+    )
+    from html_parser_spark.spark.transcripts import transcripts_df
+
+    with open(tmp_path / "a.warc.gz", "wb") as f:
+        f.write(warc.gzip_member(warc.build_warc_record(
+            "response", "<urn:a>", b"HTTP/1.1 200 OK\r\n\r\n<p>x</p>",
+            target_uri="http://x/")))
+    turns = transcripts_df(spark, 20, seed=1, partitions=1)
+    media = mm.synth_media_df(spark, 8)
+    records = warc.read_warc_records(spark, str(tmp_path))
+    raw = synth_raw_documents_df(spark).withColumn("uri", F.lit("u"))
+    cases = [
+        (extract_turns(turns, ordered=False),
+         "conv_id string, turn_idx int, role string, tool string, "
+         "ts timestamp, " + _EXTRACT_DDL),
+        (extract_links(turns),
+         "conv_id string, turn_idx int, link_idx int, href string, "
+         "anchor_text string"),
+        (extract_raw_documents(raw, passthrough=("uri",)),
+         f"doc_id string, {_EXTRACT_DDL}, uri string"),
+        (se.queries()["dump_serialize"](spark, None),
+         "conv_id string, turn_idx int, dump string, "
+         "serialized_html string, extracted_text string, parse_errors int"),
+        (extract_pdfs(synth_pdf_df(spark, 2)),
+         "doc_id bigint, n_pages int, n_runs int, decode_ok boolean, "
+         "extracted_text string, "
+         "runs array<struct<page:int, x:double, y:double, text:string>>"),
+        (records,
+         "path string, record_id string, warc_type string, "
+         "target_uri string, warc_date string, content_type string, "
+         "content_length long, payload binary"),
+        (warc.warc_http_responses(records),
+         "path string, record_id string, target_uri string, "
+         "warc_date string, http_status int, http_content_type string, "
+         "charset_hint string, body binary"),
+        (mm.decode_media(media),
+         "media_id bigint, kind string, n_bytes int, sha bigint, "
+         "decode_ok boolean, features array<float>"),
+        (mm.resize_images(media),
+         "media_id bigint, width int, height int, payload binary"),
+        (mm.sample_frames(media),
+         "media_id bigint, frame_idx int, frame_ms int, payload binary"),
+    ]
+    for df, ddl in cases:
+        want = spark.createDataFrame([], ddl).schema
+        assert df.schema.simpleString() == want.simpleString()
+        assert df.schema == want, (df.schema, want)

@@ -306,8 +306,8 @@ def main():
 
     audit("pdf_extract (Arrow-batched kernel)",
           qs["pdf_extract"](spark, SF_DIR), [
-        ("exactly one Python crossing (MapInPandas)",
-         lambda p: p.count("+- MapInPandas") == 1
+        ("exactly one Python crossing (MapInArrow)",
+         lambda p: p.count("+- MapInArrow") == 1
          and "BatchEvalPython" not in p),
         ("no join/aggregate around the kernel",
          lambda p: "Join" not in p and "HashAggregate" not in p),
@@ -624,7 +624,7 @@ def main():
          lambda p: "Exchange" not in p),
         ("exactly the two archive-format Python stages (record "
          "framing, HTTP split)",
-         lambda p: p.count("MapInPandas") in (2, 4)),  # tree + details
+         lambda p: p.count("MapInArrow") in (2, 4)),  # tree + details
         ("no join anywhere",
          lambda p: "Join" not in p),
     ], note="binaryFile gives one task per WARC file — Common Crawl "

@@ -1,8 +1,7 @@
 """Build helper for the from-tokens C harness (tools/ref_tokens_demo.c).
 
-Shared by tests/test_tokens_build.py and tools/fuzz_diff.py --tokens so
-both gates build (and staleness-check) the binary the same way instead
-of one depending on the other having run first.
+Used by tests/test_tokens_build.py to build (and staleness-check) the
+binary.
 """
 
 from __future__ import annotations
