@@ -88,19 +88,14 @@ def done_keys(spark, checkpoint_dir: str) -> list[int]:
 def write_manifest(extracted_with_key: DataFrame, spark,
                    checkpoint_dir: str) -> None:
     """Append per-partition metrics + done markers (lineage record).
-    Uses the precomputed `n_chars` column when present so the metric
-    scan never has to materialize the (wide) extracted_text column."""
-    chars = (
-        F.sum("n_chars")
-        if "n_chars" in extracted_with_key.columns
-        else F.sum(F.length("extracted_text"))
-    )
+    Reads the precomputed `n_chars` column so the metric scan never
+    has to materialize the (wide) extracted_text column."""
     metrics = (
         extracted_with_key.groupBy("part_key")
         .agg(
             F.count("*").alias("turns"),
             F.sum("parse_errors").alias("parse_errors"),
-            chars.alias("extracted_chars"),
+            F.sum("n_chars").alias("extracted_chars"),
             F.countDistinct("conv_id").alias("conversations"),
         )
         .withColumn("status", F.lit("done"))

@@ -21,8 +21,7 @@ forbidden, so everything here is PURE STDLIB):
     a baseline writer (Annex K tables, all-ones quant, 4:4:4/4:2:0)
     that the roundtrip tests pin the decoder against. Progressive /
     extended / arithmetic frames follow the compressed-video policy:
-    strict=True raises at the documented integration point,
-    strict=False degrades to a deterministic payload digest.
+    a deterministic payload digest with decode_ok false.
   - audio/wav : REAL decode + encode (stdlib `wave` + struct, 16-bit
     PCM).
   - video/mp4 : container demux is REAL — box parsing (`mp4_probe`:
@@ -32,10 +31,10 @@ forbidden, so everything here is PURE STDLIB):
     the ACTUAL sample bytes nearest each grid point. PIXEL decode is
     REAL for the 'raw ' codec (uncompressed RGB24/gray8 samples,
     declared by a real stsd VisualSampleEntry and read back by
-    `_decode_raw_frame`); COMPRESSED codecs (avc1, ...) stay an
-    honest NotImplementedError under strict=True (the documented
-    integration point for a real codec, e.g. pyav shipped via
-    --py-files) and a deterministic payload digest otherwise.
+    `_decode_raw_frame`); COMPRESSED codecs (avc1, ...) have no
+    decoder here and get a deterministic payload digest with
+    decode_ok false (`_video_features` is the integration point for a
+    real codec, e.g. pyav shipped via --py-files).
 
 Everything around the kernels is production-shaped: payloads never
 pass through Python row-at-a-time, metadata is JVM-prunable, and frame
@@ -451,9 +450,9 @@ def _pad(vals) -> list:
 #
 # Decoder: SOF0, 8-bit, 1 or 3 components, any integer chroma
 # subsampling, restart markers, 8/16-bit quant tables. Progressive /
-# extended / arithmetic frames raise NotImplementedError — that is the
-# media surface's documented strict-raise, mirroring the compressed-
-# video policy. Encoder: 4:4:4 or 4:2:0, spec Annex K Huffman tables,
+# extended / arithmetic frames raise NotImplementedError, which
+# decode_media turns into digest features with decode_ok false, as for
+# compressed video. Encoder: 4:4:4 or 4:2:0, spec Annex K Huffman tables,
 # all-ones quant (near-lossless; roundtrip-tested against the
 # decoder). The entropy loop is per-block Python (bounded by test
 # scale); dequantize + IDCT are batched numpy over all blocks.
@@ -651,7 +650,7 @@ def jpeg_decode(data: bytes):
     """Baseline-JPEG reader: returns (width, height, channels, pixels)
     with channels 1 (grayscale) or 3 (RGB, JFIF YCbCr conversion).
     NotImplementedError for progressive/extended/arithmetic/12-bit
-    frames (the documented strict-raise surface); ValueError for
+    frames (recognized, but no decoder here); ValueError for
     malformed data."""
     import numpy as np
 
@@ -1047,8 +1046,7 @@ def _video_features(payload: bytes):
     codec (uncompressed samples — decoded by _decode_raw_frame).
     Returns (features, pixels_decoded): compressed codecs (avc1, ...)
     have no decoder in this container, so their rows carry a
-    deterministic payload digest instead and pixels_decoded=False —
-    decode_media(strict=True) raises on those."""
+    deterministic payload digest instead and pixels_decoded=False."""
     try:
         dur, w, h, n_boxes = mp4_probe(payload)
         # entry and samples MUST come from the same trak: pairing
@@ -1083,8 +1081,9 @@ def _video_features(payload: bytes):
                 + [x / 255.0 for x in digest]), False
 
 
-def _media_features(b: bytes, kind: str, strict: bool):
-    """(decode_ok, features) of one payload. Per-row tolerance: ONE
+def _media_features(b: bytes, kind: str):
+    """(decode_ok, features) of one payload. decode_ok is true only
+    when the pixels or samples were decoded. Per-row tolerance: ONE
     corrupt payload in a 100 TB corpus must mark its row, not kill the
     batch."""
     try:
@@ -1093,50 +1092,38 @@ def _media_features(b: bytes, kind: str, strict: bool):
                 return True, _image_features(b)
             except NotImplementedError:
                 # recognized-but-undecodable variant (progressive/
-                # extended JPEG): same policy as compressed video —
-                # strict raises at the integration point, lenient
-                # degrades to a deterministic payload digest with
-                # decode_ok False
-                if strict:
-                    raise
+                # extended JPEG): same policy as compressed video, a
+                # deterministic payload digest with decode_ok False
                 digest = hashlib.blake2b(b, digest_size=62).digest()
                 return False, _pad([x / 255.0 for x in digest])
         if kind == "audio":
             return True, _audio_features(b)
         vf, pixels_decoded = _video_features(b)
-        if strict and not pixels_decoded:
-            raise NotImplementedError(
-                "no pixel decoder for this video's codec (only 'raw ' "
-                "sample streams decode in this container); ship a real "
-                "codec (e.g. pyav) via --py-files and extend "
-                "_video_features at this integration point"
-            )
-        return True, vf
-    except NotImplementedError:
-        raise
+        return pixels_decoded, vf
     except Exception:  # noqa: BLE001 — corrupt payload
         return False, []
 
 
-def decode_media(df: DataFrame, strict: bool = False) -> DataFrame:
+def decode_media(df: DataFrame) -> DataFrame:
     """Decode + feature-extract, one Arrow-batched row kernel.
 
     image/png, audio/wav, and RAW-codec video decode FOR REAL
     (pure-stdlib codecs above; mp4 'raw ' sample streams are demuxed
     via the real sample table and their pixels decoded by
     _decode_raw_frame). Compressed video codecs (avc1, hev1, ...)
-    have no decoder in this container: strict=True raises
-    NotImplementedError for those rows (the documented production
-    integration point for a real codec, e.g. pyav shipped via
-    --py-files); strict=False substitutes a deterministic payload
-    digest for the pixel part of the feature vector.
+    have no decoder in this container: their rows get decode_ok false
+    and a deterministic payload digest for the pixel part of the
+    feature vector. A NULL payload gives NULL n_bytes and sha,
+    decode_ok false and no features.
     """
 
     def _row(payload, kind):
+        if payload is None:
+            return [(None, None, False, [])]
         b = bytes(payload)
         sha = int.from_bytes(
             hashlib.blake2b(b, digest_size=4).digest(), "little")
-        return [(len(b), sha, *_media_features(b, kind, strict))]
+        return [(len(b), sha, *_media_features(b, kind))]
 
     return map_rows(df, ["payload", "kind"], ["media_id", "kind"],
                     FEATURE_FIELDS, _row)
@@ -1175,7 +1162,8 @@ def sample_frames(df: DataFrame, every_ms: int = 1000,
     kernel that demuxes the REAL ISO-BMFF sample table (mp4_samples:
     stts/stsc/stsz/stco) and emits the actual sample bytes nearest
     each grid timestamp; payloads without a sample table fall back to
-    proportional byte slicing. At scale the pre-explode keeps Python
+    proportional byte slicing, and a NULL payload gives NULL frames.
+    At scale the pre-explode keeps Python
     traffic proportional to sampled frames, not to video bytes."""
     vids = df.where(F.col("kind") == "video").select(
         "media_id", "payload",
@@ -1197,6 +1185,8 @@ def sample_frames(df: DataFrame, every_ms: int = 1000,
     memo = [None, []]
 
     def _row(payload, idx, fms):
+        if payload is None:
+            return [(None,)]
         b = bytes(payload)
         key = hashlib.blake2b(b, digest_size=16).digest()
         if memo[0] != key:
@@ -1226,6 +1216,29 @@ def sample_frames(df: DataFrame, every_ms: int = 1000,
 # ---------------------------------------------------------------------------
 
 
+def _boxes(buf: bytes):
+    """(box_type, body) of each ISO-BMFF box at one level of `buf`.
+    The header is a 32-bit size and the type; size 1 means a 64-bit
+    `largesize` follows the type, and size 0 means the box runs to the
+    end of `buf`. Stops at a truncated or undersized header."""
+    pos = 0
+    while pos + 8 <= len(buf):
+        (size,) = struct.unpack(">I", buf[pos:pos + 4])
+        btype = buf[pos + 4:pos + 8]
+        hdr = 8
+        if size == 1:
+            if pos + 16 > len(buf):
+                return
+            (size,) = struct.unpack(">Q", buf[pos + 8:pos + 16])
+            hdr = 16
+        elif size == 0:
+            size = len(buf) - pos
+        if size < hdr:
+            return
+        yield btype, buf[pos + hdr:pos + size]
+        pos += size
+
+
 def mp4_probe(data: bytes):
     """Parse ISO-BMFF boxes and return (duration_ms, width, height,
     n_boxes). Handles v0 AND v1 full-box layouts (v1 mvhd/tkhd carry
@@ -1239,26 +1252,12 @@ def mp4_probe(data: bytes):
     duration_ms = width = height = None
     n_boxes = 0
 
-    def walk(buf, depth=0):
+    def walk(buf):
         nonlocal duration_ms, width, height, n_boxes
-        pos = 0
-        while pos + 8 <= len(buf):
-            (size,) = struct.unpack(">I", buf[pos:pos + 4])
-            btype = buf[pos + 4:pos + 8]
-            hdr = 8
-            if size == 1:  # largesize: 64-bit size follows the type
-                if pos + 16 > len(buf):
-                    break
-                (size,) = struct.unpack(">Q", buf[pos + 8:pos + 16])
-                hdr = 16
-            elif size == 0:  # box runs to the end of this container
-                size = len(buf) - pos
-            if size < hdr:
-                break
-            body = buf[pos + hdr:pos + size]
+        for btype, body in _boxes(buf):
             n_boxes += 1
             if btype in (b"moov", b"trak"):
-                walk(body, depth + 1)
+                walk(body)
             elif btype == b"mvhd" and len(body) >= 20:
                 if body[0] == 1 and len(body) >= 32:
                     # v1: 8B creation + 8B modification, then
@@ -1279,7 +1278,6 @@ def mp4_probe(data: bytes):
                 elif body[:1] == b"\x00" and len(body) >= 84:
                     w16, h16 = struct.unpack(">II", body[76:84])
                     width, height = w16 >> 16, h16 >> 16
-            pos += size
 
     walk(data)
     return duration_ms, width, height, n_boxes
@@ -1373,21 +1371,7 @@ def _collect_traks(data: bytes) -> list:
     traks: list = []
 
     def walk(buf, boxes):
-        pos = 0
-        while pos + 8 <= len(buf):
-            (size,) = struct.unpack(">I", buf[pos:pos + 4])
-            btype = buf[pos + 4:pos + 8]
-            hdr = 8
-            if size == 1:
-                if pos + 16 > len(buf):
-                    break
-                (size,) = struct.unpack(">Q", buf[pos + 8:pos + 16])
-                hdr = 16
-            elif size == 0:
-                size = len(buf) - pos
-            if size < hdr:
-                break
-            body = buf[pos + hdr:pos + size]
+        for btype, body in _boxes(buf):
             if btype == b"trak":
                 tb: dict = {}
                 walk(body, tb)
@@ -1398,7 +1382,6 @@ def _collect_traks(data: bytes) -> list:
                            b"mdhd", b"stsd"):
                 # first box of each type WITHIN this trak wins
                 boxes.setdefault(btype, body)
-            pos += size
 
     walk(data, {})
     return traks
@@ -1463,20 +1446,6 @@ def _parse_visual_entry(sd):
     width, height = struct.unpack(">HH", ebody[24:28])
     (depth,) = struct.unpack(">H", ebody[74:76])
     return fourcc, width, height, depth
-
-
-def mp4_sample_entry(data: bytes):
-    """Codec declaration of the first trak that has one: parse stsd's
-    first VisualSampleEntry and return (fourcc, width, height, depth),
-    or None when no trak carries a well-formed visual entry. Raises
-    ValueError on non-BMFF input. NOTE: standalone convenience — when
-    pairing an entry WITH sample ranges use mp4_video_stream, which
-    guarantees both come from the same trak."""
-    for boxes in _collect_traks(data):
-        entry = _parse_visual_entry(boxes.get(b"stsd"))
-        if entry is not None:
-            return entry
-    return None
 
 
 def mp4_video_stream(data: bytes):

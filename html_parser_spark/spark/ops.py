@@ -33,27 +33,17 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 
-_SPREAD_CACHE: dict = {}  # (sc id, file set) -> scan partition count
+_SPREAD_CACHE: dict = {}  # (app id, file set or plan hash) -> splits
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread compute-heavy per-row work across all cores when the scan
-    produced fewer partitions than the cluster has slots (tiny-file /
-    single-row-group inputs read as ONE task, serializing everything
-    above them). Shingle/hash/vector construction here is CPU-bound per
-    row, not byte-bound, so one round-robin pass over the (small
-    relative to the compute) raw rows unlocks full parallelism. At
-    production scale with well-sized input splits the partition count
-    already exceeds defaultParallelism and this is a no-op — no extra
-    shuffle appears in the 100 TB plan."""
+def _scan_splits(df: DataFrame) -> int:
+    """Partition count of `df`'s scan. The TRUE count forces a
+    physical-planning pass (~0.4s of driver time), so it is memoized
+    per file set and repeated query builds over the same table pay it
+    once. File count alone is NOT a valid proxy: a few large
+    splittable files already scan as many partitions, and
+    repartitioning those would shuffle the whole input for nothing."""
     sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    # the TRUE scan partition count needs df.rdd.getNumPartitions(),
-    # which forces a physical-planning pass (~0.4s of driver time) —
-    # memoize it per file-set so repeated query builds over the same
-    # table pay it once. File count alone is NOT a valid proxy: a few
-    # large splittable files already scan as many partitions, and
-    # repartitioning those would shuffle the whole input for nothing.
     try:
         files = tuple(sorted(df.inputFiles()))
     except Exception:  # pragma: no cover — exotic sources
@@ -77,7 +67,21 @@ def _spread(df: DataFrame) -> DataFrame:
             if len(_SPREAD_CACHE) > 256:  # bound: tiny, rarely hit
                 _SPREAD_CACHE.clear()
             _SPREAD_CACHE[key] = n_splits
-    if n_splits < target:
+    return n_splits
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """Spread compute-heavy per-row work across all cores when the scan
+    produced fewer partitions than the cluster has slots (tiny-file /
+    single-row-group inputs read as ONE task, serializing everything
+    above them). Shingle/hash/vector construction here is CPU-bound per
+    row, not byte-bound, so one round-robin pass over the (small
+    relative to the compute) raw rows unlocks full parallelism. At
+    production scale with well-sized input splits the partition count
+    already exceeds defaultParallelism and this is a no-op — no extra
+    shuffle appears in the 100 TB plan."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if _scan_splits(df) < target:
         return df.repartition(target)
     return df
 
@@ -96,20 +100,7 @@ def _spread_by(df: DataFrame, *keys: str) -> DataFrame:
     bottleneck. Keyed repartition also skips the local
     sort-before-repartition a keyless round-robin pays (guide §2.5),
     which is why _spread itself measured WORSE on window consumers."""
-    sc = df.sparkSession.sparkContext
-    try:
-        files = tuple(sorted(df.inputFiles()))
-    except Exception:  # pragma: no cover — exotic sources
-        files = ()
-    key = (sc.applicationId, files) if files else None
-    n_splits = _SPREAD_CACHE.get(key) if key is not None else None
-    if n_splits is None:
-        n_splits = df.rdd.getNumPartitions()
-        if key is not None:
-            if len(_SPREAD_CACHE) > 256:
-                _SPREAD_CACHE.clear()
-            _SPREAD_CACHE[key] = n_splits
-    if n_splits < sc.defaultParallelism:
+    if _scan_splits(df) < df.sparkSession.sparkContext.defaultParallelism:
         return df.repartition(*[F.col(k) for k in keys])
     return df
 
@@ -2925,7 +2916,6 @@ def dedup_representatives(documents: DataFrame,
 
 def curate_corpus(documents: DataFrame, quality_min: float = 0.55,
                   jaccard_threshold: float = 0.8,
-                  materialize: bool = True,
                   return_clusters: bool = False,
                   max_bucket: int | None = 1024):
     """END-TO-END training-data curation — the composition a 100 TB
@@ -2949,21 +2939,12 @@ def curate_corpus(documents: DataFrame, quality_min: float = 0.55,
     driver actions are the component loop's convergence counts over
     PAIR-scale frames (see _components_min_label).
 
-    `materialize=True` (the production default) persists the gated +
-    exact-deduped corpus between stages so the minhash branch, both
-    jaccard sides, and the final anti-join read ONE evaluation of
-    that subtree instead of re-running it ~5x — at 100 TB the
-    repeated SOURCE SCANS are the job's cost and one cached
-    evaluation wins. Measured honestly at bench scale (sf0.1, 50k
-    docs, OS-cached parquet): the pure plan is ~15% FASTER there
-    (8.1s vs 9.5s) because writing the text-bearing corpus into the
-    block manager costs more than recomputing a cheap filter over a
-    memory-resident source — the switch exists precisely because the
-    economics flip with input size. `materialize=False` keeps the
-    fully pure plan (every consumer re-derives the subtree); both
-    modes are property-tested output-identical. The persisted block
-    is left cached for the returned (lazy) DataFrame; callers that
-    are done with it can spark.catalog.clearCache().
+    The gated + exact-deduped corpus is persisted because the minhash
+    branch, both jaccard sides and the final anti-join all read it,
+    and at 100 TB re-running its source scan ~5x is the job's cost.
+    The persisted block is left cached for the returned (lazy)
+    DataFrame; callers that are done with it can
+    spark.catalog.clearCache().
 
     Returns the surviving (doc_id, source, lang)."""
     q = quality_score(documents).where(
@@ -2972,9 +2953,7 @@ def curate_corpus(documents: DataFrame, quality_min: float = 0.55,
         "doc_id", "text", "source", "lang")
     canon = exact_dedup(base).select(
         F.col("canonical_doc_id").alias("doc_id"))
-    exact_kept = base.join(canon, "doc_id")
-    if materialize:
-        exact_kept = exact_kept.persist()
+    exact_kept = base.join(canon, "doc_id").persist()
     cand = minhash_lsh_candidates(exact_kept, num_hashes=32, bands=16,
                                   max_bucket=max_bucket)
     dup_pairs = ngram_jaccard_pairs(

@@ -29,16 +29,6 @@ def read_transcripts_stream(spark, input_path: str,
     )
 
 
-def extract_stream(df: DataFrame, mode: str = "fragment",
-                   context: str = "div") -> DataFrame:
-    """Streaming variant of extract_turns: the same one scan and one
-    Arrow kernel with its internal '<'-free fast path; no ordering
-    window (append mode)."""
-    from .pipeline import extract_turns
-
-    return extract_turns(df, mode=mode, context=context, ordered=False)
-
-
 def conversation_rolling_stats(extracted: DataFrame,
                                watermark: str = "10 minutes",
                                window: str = "5 minutes") -> DataFrame:
@@ -57,22 +47,22 @@ def conversation_rolling_stats(extracted: DataFrame,
 
 def run_stream_to_parquet(spark, input_path: str, output_path: str,
                           checkpoint_path: str, mode: str = "fragment",
-                          context: str = "div", available_now: bool = True):
-    """Drive the streaming extraction to a parquet sink. available_now
-    processes everything present then stops (test/batch-catchup mode)."""
+                          context: str = "div"):
+    """Drive the streaming extraction to a parquet sink: process
+    everything present, then stop."""
+    from .pipeline import extract_turns
+
     src = read_transcripts_stream(spark, input_path)
-    out = extract_stream(src, mode, context)
-    writer = (
-        out.writeStream.format("parquet")
+    q = (
+        extract_turns(src, mode, context, ordered=False)
+        .writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
+    q.awaitTermination()
     return q
 
 

@@ -359,14 +359,6 @@ def dump_row(mode: str = "fragment", context: str = "div"):
     return _row
 
 
-def make_dump_map_in_arrow(passthrough: list[str], mode: str = "fragment",
-                           context: str = "div"):
-    """mapInArrow function: passthrough columns + text -> passthrough
-    columns + DUMP_FIELDS."""
-    return _map_batches(["text"], passthrough, DUMP_FIELDS,
-                        dump_row(mode, context))
-
-
 LINK_FIELDS = [
     pa.field("link_idx", pa.int32()),
     pa.field("href", pa.string()),
@@ -386,11 +378,3 @@ def links_row(mode: str = "fragment", context: str = "div"):
         return [(k, href, anchor) for k, (href, anchor) in enumerate(links)]
 
     return _row
-
-
-def make_links_map_in_arrow(passthrough: list[str], mode: str = "fragment",
-                            context: str = "div"):
-    """mapInArrow function: passthrough columns + text -> one row per
-    link, passthrough keys repeated per link, + LINK_FIELDS."""
-    return _map_batches(["text"], passthrough, LINK_FIELDS,
-                        links_row(mode, context))

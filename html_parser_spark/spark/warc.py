@@ -168,8 +168,8 @@ def iter_warc_records(data: bytes, errors: str = "strict"):
     errors="skip" yields every record that parsed BEFORE the damage
     and silently abandons the rest of the file — real crawls contain
     the occasional truncated archive, and one bad file must not be
-    able to fail a 100 TB ingest (callers count skipped files via
-    the read path's quarantine column)."""
+    able to fail a 100 TB ingest (callers find damaged files by
+    comparing per-path record counts against the crawl manifest)."""
     if errors not in ("strict", "skip"):
         raise ValueError("errors must be 'strict' or 'skip'")
     return _iter_warc_records_gen(data, errors == "strict")

@@ -9,8 +9,7 @@ Usage:
 
 Runs the full curation composition (quality gate -> exact dedup ->
 LSH-verified near-dup strip with transitive cluster closure,
-html_parser_spark/spark/ops.curate_corpus in its materialized
-single-scan-per-stage mode), writes:
+html_parser_spark/spark/ops.curate_corpus), writes:
 
   <output>/kept/        surviving (doc_id, source, lang), compacted to
                         ~target-file-mb files
@@ -54,7 +53,6 @@ def main(argv=None) -> int:
     # saw (quality-failed / exact-dup members)
     kept, clusters = curate_corpus(docs, quality_min=args.quality_min,
                                    jaccard_threshold=args.jaccard,
-                                   materialize=True,
                                    return_clusters=True)
     kept_tmp = os.path.join(args.output, "_kept_raw")
     kept.write.mode("overwrite").parquet(kept_tmp)

@@ -99,16 +99,16 @@ class TestStreaming:
         assert stream_rows == batch_rows
 
     def test_watermarked_rolling_stats_plan(self, spark, tmp_path):
+        from html_parser_spark.spark.pipeline import extract_turns
         from html_parser_spark.spark.streaming import (
-            conversation_rolling_stats, extract_stream,
-            read_transcripts_stream,
+            conversation_rolling_stats, read_transcripts_stream,
         )
         from html_parser_spark.spark.transcripts import transcripts_df
 
         src_dir = str(tmp_path / "wm_in")
         transcripts_df(spark, 30, seed=5, partitions=1).write.parquet(src_dir)
         src = read_transcripts_stream(spark, src_dir)
-        agg = conversation_rolling_stats(extract_stream(src))
+        agg = conversation_rolling_stats(extract_turns(src, ordered=False))
         assert agg.isStreaming
         assert "window" in agg.columns
 
@@ -281,29 +281,28 @@ class TestStreaming:
 
 
 class TestMultimodal:
-    def test_decode_strict_raises_on_compressed_codec(self, spark):
-        """Raw-codec synth videos decode for real even under
-        strict=True; a COMPRESSED codec (avc1 — no decoder in this
-        container) must still raise at the kernel."""
+    def test_decode_ok_only_when_pixels_decode(self, spark):
+        """Raw-codec synth videos decode for real; a COMPRESSED codec
+        (avc1 — no decoder in this container) keeps its 64 digest
+        features but reports decode_ok false, and so does a video
+        payload that is not ISO-BMFF at all."""
         from html_parser_spark.spark.multimodal import (
-            decode_media, mp4_encode_stub, synth_media_df,
+            MEDIA_SCHEMA, decode_media, mp4_encode_stub, synth_media_df,
         )
 
-        ok = decode_media(synth_media_df(spark, 8), strict=True).collect()
+        ok = decode_media(synth_media_df(spark, 8)).collect()
         assert len(ok) == 8 and all(r.decode_ok for r in ok)
 
         avc = mp4_encode_stub(2000, 16, 12, b"", frames=[b"x" * 100],
                               codec=b"avc1")
+        meta = ("mp4", 16, 12, 2000, None)
         df = spark.createDataFrame(
-            [(0, "video", bytearray(avc),
-              ("mp4", 16, 12, 2000, None))],
-            "media_id bigint, kind string, payload binary, "
-            "meta struct<format:string, width:int, height:int, "
-            "duration_ms:int, sample_rate:int>")
-        with pytest.raises(Exception) as ei:
-            decode_media(df, strict=True).collect()
-        assert "NotImplementedError" in str(ei.value) or \
-            "codec" in str(ei.value)
+            [(0, "video", bytearray(avc), meta),
+             (1, "video", bytearray(b"not an mp4 at all"), meta)],
+            MEDIA_SCHEMA)
+        got = {r.media_id: r for r in decode_media(df).collect()}
+        assert not got[0].decode_ok and len(got[0].features) == 64
+        assert not got[1].decode_ok
 
     def test_decode_fake_deterministic(self, spark):
         from html_parser_spark.spark.multimodal import (
@@ -502,14 +501,11 @@ class TestMultimodal:
         base = np.frombuffer(jpeg_decode(data)[3], np.uint8)
         assert np.array_equal(np.frombuffer(px, np.uint8), base)
 
-    def test_jpeg_progressive_policy_strict_and_lenient(self, spark):
+    def test_jpeg_progressive_degrades_to_digest(self, spark):
         """Progressive JPEG mirrors the compressed-video policy:
-        strict=True raises NotImplementedError at the integration
-        point; strict=False yields deterministic digest features with
-        decode_ok False. Baseline JPEG rows decode for real either
-        way."""
+        deterministic digest features with decode_ok False. Baseline
+        JPEG rows decode for real."""
         import numpy as np
-        import pytest as _pytest
 
         from html_parser_spark.spark.multimodal import (
             MEDIA_SCHEMA, decode_media, jpeg_encode,
@@ -536,9 +532,6 @@ class TestMultimodal:
         again = {r.media_id: r
                  for r in decode_media(df).collect()}
         assert got[1].features == again[1].features
-
-        with _pytest.raises(Exception, match="baseline sequential"):
-            decode_media(df, strict=True).collect()
 
     def test_jpeg_features_and_resize_through_spark(self, spark):
         """A JPEG payload flows through the same Arrow kernels as PNG:
@@ -609,6 +602,34 @@ class TestMultimodal:
         tail = struct.pack(">I", 0) + b"mdat" + b"y" * 100
         data3 = _box(b"ftyp", b"isom\x00\x00\x02\x00") + moov + tail
         assert mp4_probe(data3)[:3] == (dur_ms, w, h)
+
+    def test_mp4_sample_table_largesize_and_size0(self):
+        """The sample-table reader shares mp4_probe's box framing: a
+        moov behind a 64-bit largesize header, and a moov moved to the
+        end of the file with size 0 (runs to the end), demux to the
+        same samples and codec entry as the plain file (the stco
+        offsets are not rewritten, so the tuples are equal)."""
+        import struct
+
+        from html_parser_spark.spark.multimodal import (
+            mp4_encode_stub, mp4_samples, mp4_video_stream,
+        )
+
+        frames = [bytes([40 + k]) * 48 for k in range(3)]
+        plain = mp4_encode_stub(3000, 4, 4, b"", frames=frames)
+        want = mp4_video_stream(plain)
+        assert want[0] == ("raw ", 4, 4, 24) and len(want[1]) == 3
+        moov_at = plain.index(b"moov") - 4
+        (moov_len,) = struct.unpack(">I", plain[moov_at:moov_at + 4])
+        moov_body = plain[moov_at + 8:moov_at + moov_len]
+        large = (plain[:moov_at] + struct.pack(">I", 1) + b"moov"
+                 + struct.pack(">Q", moov_len + 8) + moov_body
+                 + plain[moov_at + moov_len:])
+        size0 = (plain[:moov_at] + plain[moov_at + moov_len:]
+                 + struct.pack(">I", 0) + b"moov" + moov_body)
+        for data in (large, size0):
+            assert mp4_samples(data) == want[1]
+            assert mp4_video_stream(data) == want
 
     def test_mp4_sample_table_roundtrip(self):
         """Writer and demux are inverse: stts/stsc/stsz/stco written by
@@ -713,7 +734,7 @@ class TestMultimodal:
 
         from html_parser_spark.spark.multimodal import (
             _decode_raw_frame, _video_features, mp4_encode_stub,
-            mp4_sample_entry, mp4_samples,
+            mp4_samples, mp4_video_stream,
         )
 
         w, h = 8, 6
@@ -721,7 +742,7 @@ class TestMultimodal:
         frames = [rng.integers(0, 256, w * h * 3, dtype=np.uint8)
                   .tobytes() for _ in range(3)]
         data = mp4_encode_stub(3000, w, h, b"", frames=frames)
-        assert mp4_sample_entry(data) == ("raw ", w, h, 24)
+        assert mp4_video_stream(data)[0] == ("raw ", w, h, 24)
         for (off, size, _t), f in zip(mp4_samples(data), frames):
             arr = _decode_raw_frame(data[off:off + size], w, h, 24)
             assert arr.shape == (h, w, 3)
@@ -918,10 +939,10 @@ class TestStatefulSessions:
             .option("maxFilesPerTrigger", 1)
             .parquet(src + "/f=*")
         )
-        from html_parser_spark.spark.streaming import extract_stream
+        from html_parser_spark.spark.pipeline import extract_turns
 
         sessions = conversation_sessions(
-            extract_stream(stream), idle_ms=60_000
+            extract_turns(stream, ordered=False), idle_ms=60_000
         )
         q = (
             sessions.writeStream.format("memory")
@@ -949,9 +970,8 @@ class TestStatefulSessions:
         test_conversation_sessions_idle_close, under Asia/Tokyo."""
         import datetime
 
-        from html_parser_spark.spark.streaming import (
-            conversation_sessions, extract_stream,
-        )
+        from html_parser_spark.spark.pipeline import extract_turns
+        from html_parser_spark.spark.streaming import conversation_sessions
 
         old_tz = spark.conf.get("spark.sql.session.timeZone")
         spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
@@ -983,7 +1003,7 @@ class TestStatefulSessions:
                 .parquet(src + "/f=*")
             )
             sessions = conversation_sessions(
-                extract_stream(stream), idle_ms=60_000)
+                extract_turns(stream, ordered=False), idle_ms=60_000)
             q = (
                 sessions.writeStream.format("memory")
                 .queryName("sess_tz_out").outputMode("update")
@@ -1005,9 +1025,8 @@ class TestStatefulSessions:
         closed-session totals include batch-1 turns."""
         import datetime
 
-        from html_parser_spark.spark.streaming import (
-            conversation_sessions, extract_stream,
-        )
+        from html_parser_spark.spark.pipeline import extract_turns
+        from html_parser_spark.spark.streaming import conversation_sessions
 
         t0 = datetime.datetime(2021, 6, 1, 9, 0, 0)
         schema = ("conv_id string, turn_idx int, role string, text string, "
@@ -1027,7 +1046,8 @@ class TestStatefulSessions:
                 .parquet(src + "/f=*")
             )
             q = (
-                conversation_sessions(extract_stream(stream), idle_ms=60_000)
+                conversation_sessions(
+                    extract_turns(stream, ordered=False), idle_ms=60_000)
                 .writeStream.format("parquet")
                 .option("path", out)
                 .option("checkpointLocation", ckpt)
@@ -1050,7 +1070,8 @@ class TestStatefulSessions:
                 bdf.write.mode("append").parquet(out)
 
             q = (
-                conversation_sessions(extract_stream(stream), idle_ms=60_000)
+                conversation_sessions(
+                    extract_turns(stream, ordered=False), idle_ms=60_000)
                 .writeStream.foreachBatch(sink)
                 .outputMode("update")
                 .option("checkpointLocation", ckpt)
@@ -1085,11 +1106,12 @@ class TestStatefulSessions:
         assert closed["X"].n_chars == 4 * len("hello world")
 
     def test_corrupt_payload_marks_row_not_batch(self, spark):
-        """One corrupt payload must flag its own row (decode_ok=false,
-        empty features) — never kill the batch (the 100 TB tolerance
-        property)."""
+        """One corrupt or NULL payload must flag its own row
+        (decode_ok=false, empty features) — never kill the batch (the
+        100 TB tolerance property). A NULL video's sampled frames are
+        NULL."""
         from html_parser_spark.spark.multimodal import (
-            MEDIA_SCHEMA, decode_media, png_encode,
+            MEDIA_SCHEMA, decode_media, png_encode, sample_frames,
         )
 
         good = png_encode(4, 3, bytes(range(36)))
@@ -1098,10 +1120,17 @@ class TestStatefulSessions:
             (1, "image", bytearray(b"\x89PNG\r\n\x1a\ntruncated"), None),
             (2, "image", bytearray(b"GIF89a garbage"), None),
             (3, "audio", bytearray(b"RIFFnotawav"), None),
+            (4, "image", None, None),
+            (5, "video", None, ("mp4", 16, 12, 2000, None)),
         ]
         df = spark.createDataFrame(rows, MEDIA_SCHEMA)
         got = {r.media_id: r for r in decode_media(df).collect()}
         assert got[0].decode_ok and len(got[0].features) == 64
-        for mid in (1, 2, 3):
+        for mid in (1, 2, 3, 4, 5):
             assert not got[mid].decode_ok
             assert list(got[mid].features) == []
+        for mid in (4, 5):
+            assert got[mid].n_bytes is None and got[mid].sha is None
+        frames = sample_frames(df, every_ms=1000).collect()
+        assert sorted(r.frame_idx for r in frames) == [0, 1, 2]
+        assert all(r.media_id == 5 and r.payload is None for r in frames)

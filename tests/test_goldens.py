@@ -30,6 +30,14 @@ def _cases(golden_cases, mode):
     return [c for c in golden_cases if c["mode"] == mode]
 
 
+def _serialize(raw):
+    """serialize_demo's path: IRRELEVANT confidence, no encoding."""
+    sr = enc.sniff_and_convert(raw, None)
+    doc, _, _ = build_document(replace_nulls(sr.text), None,
+                               enc.CONF_IRRELEVANT)
+    return serialize_html(doc)
+
+
 def test_document_dumps(refbuild, golden_cases):
     fails = []
     for case in _cases(golden_cases, "document"):
@@ -45,11 +53,7 @@ def test_document_serialization(refbuild, golden_cases):
     for case in _cases(golden_cases, "document"):
         if case["serialized"] is None:
             continue
-        raw = _load(refbuild, case)
-        sr = enc.sniff_and_convert(raw, None)
-        doc, _, _ = build_document(replace_nulls(sr.text), None,
-                                   enc.CONF_IRRELEVANT)
-        if serialize_html(doc) != case["serialized"]:
+        if _serialize(_load(refbuild, case)) != case["serialized"]:
             fails.append(case["case"])
     assert not fails, f"serialize mismatches: {fails}"
 
@@ -87,6 +91,23 @@ def test_fragment_error_texts(refbuild, golden_cases):
         if res.errors != case["errors"]:
             fails.append((case["case"], case["errors"], res.errors))
     assert not fails, f"fragment error-text mismatches: {fails[:3]}"
+
+
+def test_embedded_goldens(golden_cases):
+    """The cases that embed their input bytes need no reference tree:
+    dump, serialization, error count and error texts all match."""
+    cases = [c for c in golden_cases if c.get("input_b64")]
+    assert len(cases) >= 18
+    fails = []
+    for case in cases:
+        raw = _load(None, case)
+        res = parse_document(raw)
+        if (res.dump() != case["dump"]
+                or _serialize(raw) != case["serialized"]
+                or res.error_count != case["error_count"]
+                or res.errors != case["errors"]):
+            fails.append(case["case"])
+    assert not fails, f"embedded golden mismatches: {fails}"
 
 
 @pytest.mark.parametrize("count", [1])

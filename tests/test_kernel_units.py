@@ -288,11 +288,14 @@ def test_extract_batch_matches_parse_turn(mode, boilerplate):
 
 
 def test_dump_batch_matches_parse():
-    from html_parser_spark.spark.udfs import make_dump_map_in_arrow
+    from html_parser_spark.spark.udfs import (
+        DUMP_FIELDS, _map_batches, dump_row,
+    )
 
     batches = _turn_batches()
     keys = ["conv_id", "turn_idx"]
-    fn = make_dump_map_in_arrow(keys, "fragment", "div")
+    fn = _map_batches(["text"], keys, DUMP_FIELDS,
+                      dump_row("fragment", "div"))
     outs = _run_kernel(fn, batches, keys + ["text"])
     for inp, out in zip(batches, outs):
         assert out.num_rows == inp.num_rows
@@ -308,11 +311,14 @@ def test_dump_batch_matches_parse():
 
 def test_links_batch_matches_collect_links():
     from html_parser_spark.kernel.extract import collect_links
-    from html_parser_spark.spark.udfs import make_links_map_in_arrow
+    from html_parser_spark.spark.udfs import (
+        LINK_FIELDS, _map_batches, links_row,
+    )
 
     batches = _turn_batches()
     keys = ["conv_id", "turn_idx"]
-    fn = make_links_map_in_arrow(keys, "fragment", "div")
+    fn = _map_batches(["text"], keys, LINK_FIELDS,
+                      links_row("fragment", "div"))
     outs = _run_kernel(fn, batches, keys + ["text"])
     for inp, out in zip(batches, outs):
         assert out.schema.names == keys + ["link_idx", "href",
@@ -384,9 +390,11 @@ def _kernel_fn(kernel):
                                   udfs.EXTRACT_FIELDS, _parse_raw),
                 keys + ["content", "charset_hint"])
     if kernel == "dump":
-        return udfs.make_dump_map_in_arrow(keys), keys + ["text"]
+        return (udfs._map_batches(["text"], keys, udfs.DUMP_FIELDS,
+                                  udfs.dump_row()), keys + ["text"])
     if kernel == "links":
-        return udfs.make_links_map_in_arrow(keys), keys + ["text"]
+        return (udfs._map_batches(["text"], keys, udfs.LINK_FIELDS,
+                                  udfs.links_row()), keys + ["text"])
     mode, context, boilerplate = {
         "extract_fragment": ("fragment", "div", False),
         "extract_template": ("fragment", "template", False),

@@ -936,21 +936,6 @@ def test_curate_corpus_collapses_dup_clusters(spark):
     assert kept == [1, 4], kept
 
 
-def test_curate_corpus_modes_identical(spark):
-    """materialize=True (persisted single-scan-per-stage) and
-    materialize=False (pure plan) must be output-identical."""
-    from html_parser_spark.spark.ops import curate_corpus
-
-    df = _star_cluster_docs(spark)
-    a = sorted(tuple(r) for r in curate_corpus(
-        df, quality_min=0.0, jaccard_threshold=0.85,
-        materialize=True).collect())
-    b = sorted(tuple(r) for r in curate_corpus(
-        df, quality_min=0.0, jaccard_threshold=0.85,
-        materialize=False).collect())
-    assert a == b and len(a) == 2
-
-
 def test_components_min_label_chain_and_star(spark):
     """Min-label propagation: a 4-node chain and a star both collapse
     to their minimum; an isolated pair keeps its own min."""
@@ -1883,14 +1868,13 @@ def test_partition_pruned_scan(spark):
 
 
 def test_progressive_jpeg_policy_through_spark_pipeline(spark):
-    """Strict/lenient policy for recognized-but-undecodable JPEG
-    variants exercised through decode_media's FULL Spark path (judge
-    r6 item 6), not just the unit decoder: lenient yields
-    decode_ok=false with a deterministic digest feature vector; strict
-    raises the documented integration-point message. The progressive
-    payload is the baseline writer's output with its SOF0 marker
-    relabeled SOF2 — the decoder dispatches on that marker byte, which
-    is exactly how any real progressive file hits the policy."""
+    """Policy for recognized-but-undecodable JPEG variants exercised
+    through decode_media's FULL Spark path (judge r6 item 6), not just
+    the unit decoder: decode_ok=false with a deterministic digest
+    feature vector. The progressive payload is the baseline writer's
+    output with its SOF0 marker relabeled SOF2 — the decoder
+    dispatches on that marker byte, which is exactly how any real
+    progressive file hits the policy."""
     from html_parser_spark.spark.multimodal import (
         MEDIA_SCHEMA, decode_media, jpeg_encode,
     )
@@ -1917,10 +1901,6 @@ def test_progressive_jpeg_policy_through_spark_pipeline(spark):
     # deterministic: same digest features on a second run
     again = {r.media_id: r for r in decode_media(df).collect()}
     assert again[1].features == got[1].features
-
-    with pytest.raises(Exception) as ei:
-        decode_media(df, strict=True).collect()
-    assert "only baseline sequential (SOF0) JPEG" in str(ei.value)
 
 
 def test_lsh_chain_cap_at_1000x_width(spark):
