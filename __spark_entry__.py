@@ -62,7 +62,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Extract text+spans from a 2,000-turn synthetic transcripts table
-    (seeded, includes the reference fixture HTML as golden rows),
+    (seeded, with the 18 embedded golden-case inputs as golden rows),
     fragment mode, window-ordered output."""
     from html_parser_spark.spark.pipeline import extract_turns
     from html_parser_spark.spark.transcripts import transcripts_df

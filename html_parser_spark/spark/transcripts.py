@@ -4,9 +4,10 @@ Schema per BASELINE.json input_hint:
   conv_id string, turn_idx int, role string, text string, tool string,
   ts timestamp
 
-Payload mix: golden rows (verbatim reference fixture HTML), ~70%
-plain-text rows (fast-path coverage, some with charrefs), generated
-HTML rows over the risky constructs, byte-edge rows (\\r, \\r\\n).
+Payload mix: 82 golden rows (the 18 C-minted inputs embedded in
+tests/goldens/goldens.json, cycled), ~70% plain-text rows (fast-path
+coverage, some with charrefs), generated HTML rows over the risky
+constructs, byte-edge rows (\\r, \\r\\n).
 Conversation sizes follow a Zipf-like skew with mega-conversations to
 exercise salting; turn order is written SHUFFLED so the ordering window
 is actually exercised. Seeded — same seed, same table, everywhere.
@@ -15,7 +16,6 @@ is actually exercised. Seeded — same seed, same table, everywhere.
 from __future__ import annotations
 
 import datetime
-import os
 import random
 
 _EPOCH = datetime.datetime(2020, 1, 1, 0, 0, 0)
@@ -61,6 +61,36 @@ _HTML_TEMPLATES = [
     "<b>{w0}<table><tr><td><i>{w1}</i></td></tr></table>{w2}</b>",
 ]
 
+# The inputs of the 18 `synth_*` cases in tests/goldens/goldens.json,
+# in file order; their expected dump, serialization and errors were
+# minted from the C reference and are checked by tests/test_goldens.py.
+_GOLDEN_INPUTS = [
+    "<tbody><template ><thead",
+    "<tbody><template><thead></thead>",
+    "<template><tbody><thead>x",
+    "<tbody><template ><tfoot",
+    "<table><template><colgroup>",
+    "<tr><template><caption>y</caption></template>",
+    "<template><table><td>z",
+    "<td><template><select><option>o",
+    "<template><template><tr><td>n",
+    "<template><form><input><form>",
+    "<table><template>x</template>y</table>",
+    "<tbody><b><thead>t",
+    "<table><tr><template><td>c",
+    "<b><table><td></b><i></table>w",
+    "</html><thead>q",
+    "<template><frameset>",
+    "<template><meta charset='x'><title>t",
+    "<template><script><td></script><td>s",
+]
+
+# Golden-row slots per table. 82 is the number of non-encoding document
+# fixtures the committed oracle fixtures were minted with; a golden row
+# makes no random draw, so the slot count alone fixes the random stream
+# and with it every other row of the table.
+_N_GOLDEN_ROWS = 82
+
 _BYTE_EDGE = [
     "line1\r\nline2\rline3",
     "solo\rcarriage",
@@ -71,34 +101,17 @@ _ROLES = ["user", "assistant", "tool"]
 _TOOLS = ["search", "python", "browser", "calculator"]
 
 
-def _fixture_texts():
-    """Verbatim reference fixture contents (golden rows)."""
-    tests_dir = "/root/reference/tests"
-    out = []
-    if os.path.isdir(tests_dir):
-        for fn in sorted(os.listdir(tests_dir)):
-            if not fn.endswith(".html") or fn.startswith("encoding_"):
-                continue
-            with open(os.path.join(tests_dir, fn), "rb") as f:
-                data = f.read()
-            try:
-                out.append((fn[:-5], data.decode("utf-8")))
-            except UnicodeDecodeError:
-                continue
-    return out
-
-
 def generate_rows(n_turns: int, seed: int = 42, include_fixtures: bool = True):
     """Yield transcript rows as tuples matching TRANSCRIPT_COLS order
     (conv_id, turn_idx, role, text, tool, ts). Deterministic."""
     rng = random.Random(seed)
-    fixtures = _fixture_texts() if include_fixtures else []
+    n_golden = _N_GOLDEN_ROWS if include_fixtures else 0
 
     # conversation size distribution: Zipf-ish with a few mega convs
     rows = []
     conv_i = 0
     produced = 0
-    fixture_queue = list(fixtures)
+    golden_used = 0
     while produced < n_turns:
         conv_id = f"conv{conv_i:06d}"
         r = rng.random()
@@ -113,8 +126,9 @@ def generate_rows(n_turns: int, seed: int = 42, include_fixtures: bool = True):
             role = _ROLES[turn_idx % 3]
             tool = rng.choice(_TOOLS) if role == "tool" else None
             p = rng.random()
-            if fixture_queue and p < 0.05:
-                _, text = fixture_queue.pop()
+            if golden_used < n_golden and p < 0.05:
+                text = _GOLDEN_INPUTS[golden_used % len(_GOLDEN_INPUTS)]
+                golden_used += 1
             elif p < 0.70:
                 k = rng.randint(3, 40)
                 words = [rng.choice(_PLAIN_WORDS) for _ in range(k)]

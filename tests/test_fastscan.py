@@ -83,6 +83,10 @@ def _with_fastscan_disabled(fn):
 # 1. token differential over the fixture corpus
 # ---------------------------------------------------------------------
 
+@pytest.mark.skipif(
+    not glob.glob("/root/reference/tests/*.html"),
+    reason="the reference fixture corpus is not present",
+)
 def test_token_differential_fixtures():
     accepted = 0
     for fp in FIXTURES:

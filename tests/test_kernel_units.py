@@ -644,3 +644,59 @@ class TestTemplateAutocloseInterplay:
             if want.endswith("\n"):
                 want = want[:-1]
             assert parse_document(text).dump() == want, text
+
+
+# ---------------------------------------------------------------------
+# the seeded transcripts generator: same seed, same table, everywhere
+# ---------------------------------------------------------------------
+
+def test_golden_inputs_are_the_embedded_golden_cases():
+    """The generator's golden rows are the inputs of the `synth_*`
+    cases whose expected outputs goldens.json carries from the C
+    reference, so every golden row stays reference-checked."""
+    import base64
+    import json
+    import os
+
+    from html_parser_spark.spark.transcripts import _GOLDEN_INPUTS
+
+    path = os.path.join(os.path.dirname(__file__), "goldens",
+                        "goldens.json")
+    with open(path) as f:
+        cases = json.load(f)["cases"]
+    embedded = [base64.b64decode(c["input_b64"]).decode("utf-8")
+                for c in cases
+                if c["case"].startswith("synth_") and c.get("input_b64")]
+    assert len(embedded) == 18
+    assert _GOLDEN_INPUTS == embedded
+
+
+def _rows_sha256(rows):
+    import hashlib
+
+    h = hashlib.sha256()
+    for row in rows:
+        h.update(repr(row).encode("utf-8"))
+        h.update(b"\n")
+    return h.hexdigest()
+
+
+@pytest.mark.parametrize("n_turns, include_fixtures, digest", [
+    (500, True,
+     "20d35c998e40cea2c25e5960f6f65ff6932e6a900bde74a8e8dc83297f8679ff"),
+    (1000, True,
+     "766252e5ce8813108229acd53f83e61e320e03bd3a93dd4d4f452ec02385d1f4"),
+    (2000, True,
+     "7c82e4b4e755fd6aa22f15ffa78e92a6224c054563b29a9db2753af544b78702"),
+    # the golden-free table perfbench replays
+    (2000, False,
+     "d6be948b027890377e80de62baf11bd6f1dad5e225b73e4605f32a2c26fdd2dc"),
+])
+def test_generate_rows_is_pinned(n_turns, include_fixtures, digest):
+    """turns_2000, links_2000 and the extract_transcripts,
+    extract_boilerplate and dump_serialize snapshots were minted from
+    these tables: a generator change must re-mint them."""
+    from html_parser_spark.spark.transcripts import generate_rows
+
+    rows = generate_rows(n_turns, seed=42, include_fixtures=include_fixtures)
+    assert _rows_sha256(rows) == digest

@@ -19,8 +19,11 @@ re-derive from the base tables:
 
 Determinism: every input is seeded/synthetic or the sf0.01 testdata
 (the driver's oracle SF), and every operator is hash-deterministic,
-so re-minting is byte-stable. Re-run this tool after intentionally
-changing any of these operators.
+so re-minting reproduces each fixture's row contents. It does not
+reproduce the file bytes, and for some queries (minhash_lsh, simhash)
+not the row order either. Re-run this tool after intentionally
+changing any of these operators or the transcripts generator, and
+commit only the fixtures whose rows changed.
 """
 
 from __future__ import annotations
