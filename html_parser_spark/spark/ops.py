@@ -8,7 +8,7 @@ __spark_entry__.py; the seeded-hash operators (minhash/simhash/ann-lsh)
 are gated by property tests plus pinned deterministic-snapshot
 oracles.
 
-Operators:
+Core operators (COVERAGE.md lists all of them with their oracles):
   exact dedup        — md5-groupBy, keep min doc_id            [SQL oracle]
   ngram shingles     — 3-word shingles via transform/sequence  [SQL oracle]
   minhash-LSH        — k minhashes from xxhash64, banded       [snapshot]
@@ -21,6 +21,18 @@ Operators:
   ANN brute force    — cosine top-k via the fold kernel        [SQL oracle]
   ANN LSH            — in-plan seeded hyperplanes, multi-table [snapshot]
   embedding near-dup — LSH-bucketed cosine pairs >= threshold  [SQL oracle]
+
+Word grams have one home. Every gram operator reads `_words`, its
+input spread with split(text, ' ') projected once as `w`, and builds
+grams with `_grams` (n element_at reads per window position). Two
+short-document policies sit over that expression, each mirrored by
+the oracles: `_word_ngrams` yields no gram below n words (repetition,
+passage, source-overlap, diversity and collocation operators), and
+`_shingles` makes the whole text the one shingle (word_shingles,
+shingle_hashes and the MinHash/Jaccard family over it, both
+decontamination operators). Those two share the benchmark carve
+`_bench_carve`; dup_passages and strip_dup_passages share the
+"gram occurs in >= 2 documents" rule `_dup_gram_keys`.
 """
 
 from __future__ import annotations
@@ -116,28 +128,57 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     )
 
 
+def _words(documents: DataFrame, *cols) -> DataFrame:
+    """`_spread(documents)` with `cols` plus the word split
+    `split(text, ' ')` projected once as the column `w` — the base of
+    every word-gram operator.
+
+    The split MUST be a projected column, never an inline expression:
+    the gram builders read `w` n times per position, and referencing a
+    real column from several non-cheap expressions keeps
+    CollapseProject from re-inlining the split into every use. Inlined,
+    split() re-evaluates per ELEMENT inside the interpreted
+    higher-order function (r8: that form measured 1.6x slower than a
+    slice() per position; the projected form is 2.6x faster, 1.13s ->
+    0.44s for shingle_hashes at sf1.0, byte-identical hashes)."""
+    return _spread(documents).select(
+        *cols, F.split(F.col("text"), " ").alias("w"))
+
+
+def _grams(w, n: int, gram=lambda g: g):
+    """`gram(...)` of every n-word window of the projected word array
+    `w`, in position order: transform(sequence(0, size(w) - n), i ->
+    concat_ws(' ', element_at(w, i+1), ..., element_at(w, i+n))) — n
+    element_at reads per position, no slice() array allocation.
+    Defined only for size(w) >= n: both short-document policies below
+    guard it."""
+    return F.transform(
+        F.sequence(F.lit(0), F.size(w) - n),
+        lambda i: gram(F.concat_ws(
+            " ", *[F.element_at(w, i + (k + 1)) for k in range(n)])),
+    )
+
+
+def _word_ngrams(w, n: int):
+    """Non-distinct n-gram list; EMPTY below n words, so repetition,
+    passage, overlap and diversity metrics count no gram there
+    (mirrored in their SQL oracles)."""
+    return F.when(F.size(w) >= n, _grams(w, n)).otherwise(
+        F.array().cast("array<string>"))
+
+
+def _shingles(w, n: int, gram=lambda g: g):
+    """Distinct n-word shingles, each passed through `gram`; below n
+    words the whole text is the one shingle (the oracles' _SH_CTE)."""
+    return F.when(
+        F.size(w) >= n, F.array_distinct(_grams(w, n, gram))
+    ).otherwise(F.array(gram(F.concat_ws(" ", w))))
+
+
 def word_shingles(documents: DataFrame, n: int = 3) -> DataFrame:
     """doc_id + array of n-word shingles (distinct), JVM-side only."""
-    # split() is PROJECTED once as `w` (multiple non-cheap uses keep
-    # CollapseProject from re-inlining it), and each window position
-    # reads n element_at()s instead of allocating a slice() array —
-    # see shingle_hashes for the measured effect
-    base = _spread(documents).select(
-        "doc_id", F.split(F.col("text"), " ").alias("w"))
-    w = F.col("w")
-    shingles = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(0))),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(w, i + (k + 1)) for k in range(n)]),
-        )
-    )
-    return base.select(
-        "doc_id",
-        F.when(F.size(w) >= n, shingles)
-        .otherwise(F.array(F.concat_ws(" ", w)))
-        .alias("shingles"),
-    )
+    return _words(documents, "doc_id").select(
+        "doc_id", _shingles(F.col("w"), n).alias("shingles"))
 
 
 def shingle_hashes(documents: DataFrame, n: int = 3) -> DataFrame:
@@ -147,34 +188,9 @@ def shingle_hashes(documents: DataFrame, n: int = 3) -> DataFrame:
     than exploding shingle strings and hashing after: the Generate node
     then copies 8-byte longs per output row instead of re-buffering
     every shingle's string bytes, and array_distinct compares longs,
-    not strings.
-
-    r8 expression shape (2.6x: 1.13s -> 0.44s at sf1.0, byte-identical
-    hash values — pair-set equality + oracle gate verified):
-      - split() is PROJECTED once as a real column `w`; referencing the
-        alias from several non-cheap expressions keeps CollapseProject
-        from re-inlining the split into every use (an inlined
-        element_at form re-evaluates split() per ELEMENT inside the
-        interpreted HOF and measures 1.6x SLOWER than slice);
-      - each window position reads n element_at() lookups instead of
-        slice(w, i+1, n), dropping the per-position array allocation.
-    """
-    base = _spread(documents).select(
-        "doc_id", F.split(F.col("text"), " ").alias("w"))
-    w = F.col("w")
-    hashed = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(0))),
-            lambda i: F.xxhash64(F.concat_ws(
-                " ", *[F.element_at(w, i + (k + 1)) for k in range(n)])),
-        )
-    )
-    return base.select(
-        "doc_id",
-        F.when(F.size(w) >= n, hashed)
-        .otherwise(F.array(F.xxhash64(F.concat_ws(" ", w))))
-        .alias("sh_hashes"),
-    )
+    not strings."""
+    return _words(documents, "doc_id").select(
+        "doc_id", _shingles(F.col("w"), n, F.xxhash64).alias("sh_hashes"))
 
 
 def shingle_stats(documents: DataFrame, n: int = 3) -> DataFrame:
@@ -342,23 +358,19 @@ def minhash_lsh_candidates(documents: DataFrame, num_hashes: int = 32,
 
 
 def ngram_jaccard_pairs(documents: DataFrame, shingle_n: int = 3,
-                        threshold: float = 0.8,
-                        candidates: DataFrame | None = None) -> DataFrame:
+                        threshold: float = 0.8, *,
+                        candidates: DataFrame) -> DataFrame:
     """Exact jaccard over shingle sets (hashed: intersect/union over
     xxhash64 longs — same values as string sets modulo 64-bit hash
-    collisions, at a fraction of the compare/copy cost). With
-    `candidates` (e.g. from minhash_lsh_candidates) only verifies those
-    pairs — the 100TB path; without, verifies all pairs (test scale
-    only)."""
+    collisions, at a fraction of the compare/copy cost), verified on
+    the `candidates` pairs (doc_a < doc_b, e.g. from
+    minhash_lsh_candidates) only — never all pairs."""
     sh = shingle_hashes(documents, shingle_n)
     a = sh.select(F.col("doc_id").alias("doc_a"),
                   F.col("sh_hashes").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"),
                   F.col("sh_hashes").alias("sh_b"))
-    if candidates is not None:
-        joined = candidates.join(a, "doc_a").join(b, "doc_b")
-    else:
-        joined = a.crossJoin(b).where(F.col("doc_a") < F.col("doc_b"))
+    joined = candidates.join(a, "doc_a").join(b, "doc_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     return (
@@ -528,25 +540,6 @@ def lang_balanced_sample(documents: DataFrame,
     )
 
 
-def _word_ngrams(words, n: int):
-    """Non-distinct n-gram list over a token array (JVM-side only).
-    Empty when the document has fewer than n tokens — repetition
-    metrics are defined as 0 there (mirrored in the SQL oracle).
-
-    `words` MUST be a projected column (not an inline split(...)
-    expression): the per-position element_at reads re-reference it n
-    times per gram — see shingle_hashes' r8 note for why an inlined
-    split would then re-evaluate per ELEMENT."""
-    return F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(words, i + (k + 1)) for k in range(n)]),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def repetition_scores(documents: DataFrame, top_n: int = 2,
                       dup_n: int = 3) -> DataFrame:
     """Gopher-style repetition quality signals (Rae et al. 2021,
@@ -575,10 +568,8 @@ def repetition_scores(documents: DataFrame, top_n: int = 2,
     # expression work on one task (73s at sf1.0 -> ~2s). All metrics
     # are per-row integer ratios rounded at 6dp, so values are
     # partitioning-independent (oracle-verified).
-    base = _spread(documents).select(
-        "doc_id",
-        F.length("text").alias("_chars"),
-        F.split(F.col("text"), " ").alias("w"),
+    base = _words(
+        documents, "doc_id", F.length("text").alias("_chars"),
         F.split(F.col("text"), "\n").alias("lines"),
     ).select(
         "doc_id", "_chars", "w", "lines",
@@ -650,6 +641,18 @@ def repetition_scores(documents: DataFrame, top_n: int = 2,
     )
 
 
+def _bench_carve(documents: DataFrame, n: int, bench_mod: int,
+                 bench_rem: int) -> DataFrame:
+    """(doc_id, _bench, gram): each document's distinct n-word shingles
+    exploded, with `_bench` marking the deterministic benchmark carve
+    doc_id % bench_mod == bench_rem — the input of both
+    decontamination operators."""
+    is_bench = F.pmod(F.col("doc_id"), F.lit(bench_mod)) == bench_rem
+    return _words(documents, "doc_id", is_bench.alias("_bench")).select(
+        "doc_id", "_bench",
+        F.explode(_shingles(F.col("w"), n)).alias("gram"))
+
+
 def decontaminate(documents: DataFrame, n: int = 5, bench_mod: int = 10,
                   bench_rem: int = 7,
                   threshold: float = 0.2) -> DataFrame:
@@ -669,29 +672,7 @@ def decontaminate(documents: DataFrame, n: int = 5, bench_mod: int = 10,
     probe costs no shuffle of the corpus grams beyond the per-doc
     count aggregate. Every corpus document comes back (zero-hit docs
     included) so the output is a total annotation, not a filter."""
-    # split() projected once, element_at per position — see
-    # shingle_hashes' r8 note (the inlined slice form re-derived the
-    # token array inside the generator)
-    w = F.col("w")
-    grams = F.when(
-        F.size(w) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(w) - n),
-                lambda i: F.concat_ws(
-                    " ",
-                    *[F.element_at(w, i + (k + 1)) for k in range(n)]),
-            )
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", w)))
-    is_bench = F.pmod(F.col("doc_id"), F.lit(bench_mod)) == bench_rem
-
-    exploded = (
-        _spread(documents)
-        .select("doc_id", is_bench.alias("_bench"),
-                F.split(F.col("text"), " ").alias("w"))
-        .select("doc_id", "_bench", F.explode(grams).alias("gram"))
-    )
+    exploded = _bench_carve(documents, n, bench_mod, bench_rem)
     bench_grams = (
         exploded.where(F.col("_bench")).select("gram").distinct()
         .withColumn("_hit", F.lit(1))
@@ -735,26 +716,7 @@ def bloom_decontaminate(documents: DataFrame, n: int = 5,
     the bloom position frame (<= m_bits rows) and the exact benchmark
     gram set both broadcast; the k-position probe is a per-gram
     explode bounded by k. All md5 integer arithmetic — engine-exact."""
-    # projected split + element_at grams — see decontaminate
-    w = F.col("w")
-    grams = F.when(
-        F.size(w) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(w) - n),
-                lambda i: F.concat_ws(
-                    " ",
-                    *[F.element_at(w, i + (k + 1)) for k in range(n)]),
-            )
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", w)))
-    is_bench = F.pmod(F.col("doc_id"), F.lit(bench_mod)) == bench_rem
-    exploded = (
-        _spread(documents)
-        .select("doc_id", is_bench.alias("_bench"),
-                F.split(F.col("text"), " ").alias("w"))
-        .select("doc_id", "_bench", F.explode(grams).alias("gram"))
-    )
+    exploded = _bench_carve(documents, n, bench_mod, bench_rem)
 
     def pos(r: int):
         return (
@@ -841,6 +803,16 @@ def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
+def _dup_gram_keys(doc_grams: DataFrame) -> DataFrame:
+    """(gkey, doc_freq) for every gram key that occurs in at least two
+    documents; `doc_grams` holds one row per distinct (gkey, doc_id)."""
+    return (
+        doc_grams.groupBy("gkey")
+        .agg(F.count("*").alias("doc_freq"))
+        .where(F.col("doc_freq") >= 2)
+    )
+
+
 def dup_passages(documents: DataFrame, n: int = 8) -> DataFrame:
     """Exact duplicated-passage annotation (Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better" —
@@ -865,10 +837,8 @@ def dup_passages(documents: DataFrame, n: int = 8) -> DataFrame:
     Output: doc_id, n_positions, n_dup_positions (positions whose gram
     has cross-document frequency >= 2 docs), dup_frac, plus
     n_dup_grams (DISTINCT duplicated grams in the doc)."""
-    # split projected once (see _word_ngrams' r8 contract)
     positions = (
-        _spread(documents)
-        .select("doc_id", F.split(F.col("text"), " ").alias("w"))
+        _words(documents, "doc_id")
         .select("doc_id",
                 F.explode(_word_ngrams(F.col("w"), n)).alias("gram"))
         .select("doc_id", F.md5("gram").alias("gkey"))
@@ -880,13 +850,8 @@ def dup_passages(documents: DataFrame, n: int = 8) -> DataFrame:
         positions.groupBy("gkey", "doc_id")
         .agg(F.count("*").alias("pos_cnt"))
     )
-    gram_df = (
-        per_doc_gram.groupBy("gkey")
-        .agg(F.count("*").alias("doc_freq"))
-        .where(F.col("doc_freq") >= 2)
-    )
     per_doc = (
-        per_doc_gram.join(gram_df, "gkey", "left")
+        per_doc_gram.join(_dup_gram_keys(per_doc_gram), "gkey", "left")
         .groupBy("doc_id")
         .agg(
             F.sum("pos_cnt").cast("int").alias("n_positions"),
@@ -939,14 +904,16 @@ def pmi_collocations(documents: DataFrame, k: int = 50,
     both joins broadcast; the only big shuffles are the two partial
     aggregates. Final top-k is a single ORDER BY over the >=min_count
     survivors (vocabulary-scale, not corpus-scale)."""
-    words = F.split(F.col("text"), " ")
-    toks = _spread(documents).select(
-        F.explode(words).alias("w"))
-    wc = toks.groupBy("w").agg(F.count("*").alias("wcnt"))
+    words = _words(documents)
+    # explode_outer: a plain explode of the column `w` infers a
+    # size(w) > 0 filter below the spread exchange, so the word side
+    # would stop reusing the bigram side's exchange; the one NULL word
+    # it keeps for a NULL text joins no bigram
+    wc = (words.select(F.explode_outer("w").alias("w"))
+          .groupBy("w").agg(F.count("*").alias("wcnt")))
     bigrams = (
-        _spread(documents)
-        .select(F.split(F.col("text"), " ").alias("wa"))
-        .select(F.explode(_word_ngrams(F.col("wa"), 2)).alias("bigram"))
+        words
+        .select(F.explode(_word_ngrams(F.col("w"), 2)).alias("bigram"))
         .groupBy("bigram").agg(F.count("*").alias("cnt"))
         .where(F.col("cnt") >= min_count)
         .withColumn("w1", F.split(F.col("bigram"), " ")[0])
@@ -1337,10 +1304,8 @@ def source_overlap(documents: DataFrame, n: int = 8) -> DataFrame:
     corpus — explode into source pairs. Per-source totals are a
     |sources|-row frame joined back by broadcast. No corpus self-join
     anywhere."""
-    # split projected once (see _word_ngrams' r8 contract)
     gram_source = (
-        _spread(documents)
-        .select("source", F.split(F.col("text"), " ").alias("w"))
+        _words(documents, "source")
         .select(F.col("source"),
                 F.explode(_word_ngrams(F.col("w"), n)).alias("gram"))
         .select("source", F.md5("gram").alias("gkey"))
@@ -2057,8 +2022,8 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.9,
     p > 0.99 (test_embedding_near_dup_finds_planted verifies on
     planted dups).
 
-    exact=True verifies ALL pairs (test/oracle scale only — same
-    caveat as ngram_jaccard_pairs without candidates)."""
+    exact=True verifies ALL pairs (test/oracle scale only: the
+    all-pairs reference the LSH path is tested against)."""
     vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     if exact:
         a = embeddings.select(F.col("vec_id").alias("vec_a"),
@@ -3146,18 +3111,13 @@ def strip_dup_passages(documents: DataFrame, n: int = 8) -> DataFrame:
     collect_list+sort — three corpus-wide shuffles the array form
     never performs (output verified tuple-equal at sf0.1; oracle
     green)."""
-    spine = _spread(documents).select(
-        "doc_id", F.split(F.col("text"), " ").alias("w"))
+    spine = _words(documents, "doc_id")
     starts = spine.select(
         "doc_id",
         F.posexplode(_word_ngrams(F.col("w"), n)).alias("start", "gram"),
     ).select("doc_id", "start", F.md5("gram").alias("gkey"))
-    dup_keys = (
-        starts.select("gkey", "doc_id").distinct()
-        .groupBy("gkey").agg(F.count("*").alias("doc_freq"))
-        .where(F.col("doc_freq") >= 2)
-        .select("gkey")
-    )
+    dup_keys = _dup_gram_keys(
+        starts.select("gkey", "doc_id").distinct()).select("gkey")
     per_doc_cov = (
         starts.join(dup_keys, "gkey")
         .groupBy("doc_id")
@@ -3179,8 +3139,8 @@ def strip_dup_passages(documents: DataFrame, n: int = 8) -> DataFrame:
 
 
 def edit_distance_pairs(documents: DataFrame, shingle_n: int = 3,
-                        threshold: float = 0.5,
-                        candidates: DataFrame | None = None) -> DataFrame:
+                        threshold: float = 0.5, *,
+                        candidates: DataFrame) -> DataFrame:
     """Character-level edit-distance verification of the near-dup pair
     set — the refinement stage AFTER shingle-Jaccard: two documents can
     share most word shingles yet differ char-wise (inline edits,
@@ -3436,10 +3396,7 @@ def ngram_diversity(documents: DataFrame, n: int = 2) -> DataFrame:
     per-lang rollup, so the big shuffle carries one row per DISTINCT
     gram, not per occurrence. No window, no driver participation.
     """
-    # split projected once (see _word_ngrams' r8 contract)
-    grams = _spread(documents).select(
-        "lang", F.split(F.col("text"), " ").alias("w")
-    ).select(
+    grams = _words(documents, "lang").select(
         "lang", F.explode(_word_ngrams(F.col("w"), n)).alias("gram"))
     per_gram = grams.groupBy("lang", "gram").agg(
         F.count("*").alias("c"))

@@ -76,20 +76,6 @@ def conversation_stats(extracted: DataFrame, salt_buckets: int = 16) -> DataFram
     )
 
 
-def partition_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition extraction metrics (north rule: turns parsed,
-    parse-error counts, bytes) for the checkpoint manifest."""
-    return (
-        extracted.withColumn("part_id", F.spark_partition_id())
-        .groupBy("part_id")
-        .agg(
-            F.count("*").alias("turns"),
-            F.sum("parse_errors").alias("parse_errors"),
-            F.sum(F.length("extracted_text")).alias("extracted_chars"),
-        )
-    )
-
-
 def sft_pairs(extracted: DataFrame, context_turns: int = 3,
               response_role: str = "assistant") -> DataFrame:
     """(context, response) supervised-fine-tuning pairs from extracted

@@ -30,15 +30,14 @@ from html_parser_spark.kernel.tokenizer import (
     TOKEN_EOF, Tokenizer, replace_nulls,
 )
 from html_parser_spark.kernel.tree import dump_ascii, serialize_html
+from html_parser_spark.spark.transcripts import _GOLDEN_INPUTS
 
 pytestmark = pytest.mark.skipif(
     fastscan._load() is None,
     reason="fast-scan extension unavailable (no C toolchain)",
 )
 
-FIXTURES = sorted(glob.glob("/root/reference/tests/*.html")) + sorted(
-    glob.glob("tests/fixtures/*.html")
-)
+FIXTURES = sorted(glob.glob("/root/reference/tests/*.html"))
 
 
 def _drain(feed_like):
@@ -114,13 +113,18 @@ def test_token_differential_fixtures():
 # ---------------------------------------------------------------------
 
 def test_tree_differential_fixtures():
-    for fp in FIXTURES:
-        raw = open(fp, "rb").read()
+    # the reference fixture files where present, and everywhere the 18
+    # C-minted golden inputs that ship in the repository
+    docs = [(fp, open(fp, "rb").read()) for fp in FIXTURES] + [
+        (f"golden input {i}", text.encode("utf-8"))
+        for i, text in enumerate(_GOLDEN_INPUTS)]
+    for name, raw in docs:
         for frag in (False, True):
             on = _tree_snapshot(raw, frag)
             off = _with_fastscan_disabled(
                 lambda: _tree_snapshot(raw, frag))
-            assert on == off, (fp, frag)
+            assert on == off, (name, frag)
+    assert len(docs) >= 18
 
 
 def _gen_wellformed(rng: random.Random) -> str:

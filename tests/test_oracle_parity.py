@@ -10,9 +10,11 @@ sum/avg/count-bearing oracle that forgets the bigint/decimal cast
 rule (__spark_entry__.py `oracle_sql` docstring) fails HERE before it
 reaches the driver.
 
-The ANN rows (embedding_norms, ann_bruteforce and the snapshot-pinned
-ann_lsh/ann_ivf/ann_ivfpq) carry no aggregate, so they run separately
-at sf0.01, the scale their snapshots were minted at.
+The oracles that carry no aggregate — the ANN rows (embedding_norms,
+ann_bruteforce and the snapshot-pinned ann_lsh/ann_ivf/ann_ivfpq) and
+the word-gram near-dup rows (shingle_stats, the snapshot-pinned
+minhash_lsh, ngram_jaccard, edit_distance_verify, conv_near_dup) —
+run separately at sf0.01, the scale their snapshots were minted at.
 """
 
 import os
@@ -63,26 +65,33 @@ def test_aggregate_oracle_driver_typing(spark, duck, name):
     assert nrows >= 0
 
 
-ANN_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+SF001_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
 
 
 @pytest.mark.parametrize("name", [
     "embedding_norms", "ann_bruteforce", "ann_lsh", "ann_ivf", "ann_ivfpq",
+    "shingle_stats", "minhash_lsh", "ngram_jaccard", "edit_distance_verify",
+    "conv_near_dup",
 ])
-def test_ann_oracle_rows(spark, name):
+def test_sf001_oracle_rows(spark, name):
     import __spark_entry__ as se
     from check_oracles import compare_one, duck_connect
 
     # a missing input is a failure, not a skip: a skipped oracle row
     # does not count as a pass
-    assert os.path.isdir(ANN_SF_DIR), (
-        f"ANN oracle inputs missing: {ANN_SF_DIR}")
-    con = duck_connect(ANN_SF_DIR)
+    assert os.path.isdir(SF001_DIR), (
+        f"sf0.01 oracle inputs missing: {SF001_DIR}")
+    con = duck_connect(SF001_DIR)
     try:
         ok, nrows, msg = compare_one(
             spark, con, se.queries()[name], se.oracle_sql()[name],
-            ANN_SF_DIR)
+            SF001_DIR)
     finally:
         con.close()
     assert ok, f"{name}: {msg}"
-    assert nrows > 0
+    if name == "conv_near_dup":
+        # no synthetic conversation pair reaches the 0.5 jaccard
+        # threshold; the planted-pair gate is test_conv_near_dup_planted
+        assert nrows == 0
+    else:
+        assert nrows > 0

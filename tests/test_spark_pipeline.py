@@ -2554,7 +2554,9 @@ def test_edit_distance_pairs_hand_built(spark):
     an ASCII pair, NULL + ascii_only=false on a CJK pair (where Spark
     codepoint edits and DuckDB byte edits legitimately diverge), and
     no rows for docs without a near-dup partner."""
-    from html_parser_spark.spark.ops import edit_distance_pairs
+    from html_parser_spark.spark.ops import (
+        edit_distance_pairs, minhash_lsh_candidates,
+    )
 
     docs = spark.createDataFrame(
         [(0, "a b c d e f g h i j"),
@@ -2564,7 +2566,10 @@ def test_edit_distance_pairs_hand_built(spark):
          (4, "totally unrelated words here")],
         "doc_id long, text string")
     rows = {(r.doc_a, r.doc_b): r
-            for r in edit_distance_pairs(docs, threshold=0.5).collect()}
+            for r in edit_distance_pairs(
+                docs, threshold=0.5,
+                candidates=minhash_lsh_candidates(
+                    docs, num_hashes=32, bands=16)).collect()}
     assert set(rows) == {(0, 1), (2, 3)}
     ascii_pair = rows[(0, 1)]
     assert ascii_pair.ascii_only is True
@@ -3855,6 +3860,82 @@ def test_winnowing_short_documents(spark):
         return len(set(wins)), min(wins)
 
     assert got == {n: expected(base[:n]) for n in lengths}
+
+
+def test_word_gram_policies_degenerate_input(spark):
+    """Both short-document policies over degenerate texts (empty, one
+    word, n-1, n and n+1 words, a double space, NULL, a duplicated
+    doc_id) equal a plain-Python reference: below n words the whole
+    text is the one shingle, and `_word_ngrams` yields no gram (here
+    through dup_passages, whose duplicated-gram rule counts documents,
+    not rows). Every word-gram operator runs over the same frame
+    without raising."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from html_parser_spark.spark import ops
+
+    n = 3
+    rows = [
+        (0, ""), (1, "alpha"), (2, "alpha beta"), (3, "alpha beta gamma"),
+        (4, "alpha beta gamma delta"), (5, "alpha  beta gamma"),
+        (6, None), (7, "psi chi phi"), (7, "psi chi phi beta"),
+    ]
+    docs = spark.createDataFrame(
+        [(d, t, "en", f"s{d % 2}") for d, t in rows],
+        "doc_id long, text string, lang string, source string")
+
+    def grams(text):  # NULL text reads as empty text
+        w = (text or "").split(" ")
+        return [" ".join(w[i:i + n]) for i in range(len(w) - n + 1)]
+
+    def shingles(text):
+        if len((text or "").split(" ")) < n:
+            return [text or ""]
+        return list(dict.fromkeys(grams(text)))
+
+    got = sorted((r.doc_id, r.shingles)
+                 for r in ops.word_shingles(docs, n).collect())
+    assert got == sorted((d, shingles(t)) for d, t in rows)
+
+    every = sorted({g for _, t in rows for g in shingles(t)})
+    xxh = {r.s: r.h for r in spark.createDataFrame(
+        [(g,) for g in every], "s string").select(
+            "s", F.xxhash64("s").alias("h")).collect()}
+    got = sorted((r.doc_id, r.sh_hashes)
+                 for r in ops.shingle_hashes(docs, n).collect())
+    assert got == sorted(
+        (d, [xxh[g] for g in shingles(t)]) for d, t in rows)
+
+    by_doc: dict = {}
+    for d, t in rows:
+        by_doc.setdefault(d, []).extend(grams(t))
+    doc_freq = Counter(g for gs in by_doc.values() for g in set(gs))
+
+    def passages(d):
+        gs = by_doc[d]
+        dup = [g for g in gs if doc_freq[g] >= 2]
+        frac = round(len(dup) / len(gs), 6) if gs else 0.0
+        return (d, len(gs), len(dup), len(set(dup)), frac)
+
+    got = sorted(
+        (r.doc_id, r.n_positions, r.n_dup_positions, r.n_dup_grams,
+         r.dup_frac) for r in ops.dup_passages(docs, n).collect())
+    assert got == sorted(passages(d) for d, _ in rows)
+
+    cand = ops.minhash_lsh_candidates(docs, num_hashes=32, bands=16)
+    for df in (
+        ops.shingle_stats(docs, n), ops.minhash_signatures(docs), cand,
+        ops.ngram_jaccard_pairs(docs, n, 0.5, candidates=cand),
+        ops.edit_distance_pairs(docs, n, 0.5, candidates=cand),
+        ops.decontaminate(docs, n, bench_mod=2, bench_rem=1),
+        ops.bloom_decontaminate(docs, n, bench_mod=2, bench_rem=1),
+        ops.repetition_scores(docs), ops.strip_dup_passages(docs, n),
+        ops.source_overlap(docs, n), ops.ngram_diversity(docs, n),
+        ops.pmi_collocations(docs, min_count=1),
+    ):
+        df.collect()
 
 
 _EXTRACT_DDL = (
