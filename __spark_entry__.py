@@ -314,10 +314,17 @@ def _q_events_pruned_window(spark, sf_dir):
     # are skipped at PLAN time — at 100 TB this is the difference
     # between scanning 3 days and scanning the whole log. Results are
     # oracle-identical to the same window computed over the flat table
-    # (min/max aggregates only: order-independent, hash-stable).
+    # (min/max aggregates only: order-independent, hash-stable). The
+    # copy is read with the events schema plus event_date, because an
+    # empty events table writes no event_date= directory to infer from.
+    from pyspark.sql import types as T
+
     from html_parser_spark.spark.storage import partitioned_events_path
 
-    ev = spark.read.parquet(partitioned_events_path(spark, sf_dir))
+    schema = T.StructType([*_t(spark, sf_dir, "events").schema.fields,
+                           T.StructField("event_date", T.DateType())])
+    ev = spark.read.schema(schema).parquet(
+        partitioned_events_path(spark, sf_dir))
     return (
         ev.filter(F.col("event_date").between("2024-01-10", "2024-01-12"))
         .groupBy("event_date", "event_type")
@@ -1141,8 +1148,8 @@ def _q_knn_label_purity(spark, sf_dir):
 
 
 def _q_event_sessions(spark, sf_dir):
-    # batch gap-based sessionization (the SQL-oracled face of the
-    # streaming conversation_sessions operator)
+    # batch gap-based sessionization: lag flags session starts, a
+    # running sum numbers them
     from html_parser_spark.spark.ops import event_sessions
 
     return event_sessions(_t(spark, sf_dir, "events"), gap_minutes=30)

@@ -1406,7 +1406,9 @@ def dataset_card(documents: DataFrame) -> DataFrame:
 
     Scale shape: two corpus passes (one plain aggregate; one over the
     md5-keyed exact-dedup frame) plus the gopher keep aggregate —
-    every number a partial aggregation, output exactly ONE row."""
+    every number a partial aggregation, output exactly ONE row. Over
+    empty documents the three rates are NULL (try_divide), as in the
+    DuckDB oracle."""
     base = documents.agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum(F.size(F.split(F.col("text"), " "))).cast("bigint")
@@ -1424,9 +1426,10 @@ def dataset_card(documents: DataFrame) -> DataFrame:
     # final double division — order-independent, engine-exact
     q = quality_score(documents).agg(
         F.round(
-            F.sum(F.col("quality").cast("decimal(18,6)"))
-             .cast("double")
-            / F.count("*"), 6).alias("mean_quality"))
+            F.try_divide(
+                F.sum(F.col("quality").cast("decimal(18,6)"))
+                 .cast("double"),
+                F.count("*")), 6).alias("mean_quality"))
     g = gopher_filter(documents).agg(
         F.sum(F.col("keep").cast("bigint")).cast("bigint")
          .alias("n_gopher_keep"))
@@ -1435,12 +1438,14 @@ def dataset_card(documents: DataFrame) -> DataFrame:
         .select(
             "n_docs", "n_tokens", "n_chars", "n_langs", "n_sources",
             "n_unique_texts",
-            F.round((F.col("n_docs") - F.col("n_unique_texts"))
-                    .cast("double") / F.col("n_docs"), 6)
+            F.round(F.try_divide(
+                (F.col("n_docs") - F.col("n_unique_texts"))
+                .cast("double"), F.col("n_docs")), 6)
              .alias("exact_dup_rate"),
             "mean_quality", "n_gopher_keep",
-            F.round(F.col("n_gopher_keep").cast("double")
-                    / F.col("n_docs"), 6).alias("gopher_keep_rate"),
+            F.round(F.try_divide(F.col("n_gopher_keep").cast("double"),
+                                 F.col("n_docs")), 6)
+             .alias("gopher_keep_rate"),
         )
     )
 
@@ -1579,20 +1584,13 @@ def redact_pii(documents: DataFrame) -> DataFrame:
     )
 
 
-def normalized_text(col):
-    """THE dedup normalization (lowercase, whitespace-collapse, trim)
-    — shared by the batch fingerprint operator and the streaming dedup
-    so batch and stream can never disagree on what counts as a
-    duplicate (test_stream_dedup_matches_batch pins the property)."""
-    return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
-
-
 def fingerprint(documents: DataFrame) -> DataFrame:
     """Document fingerprint: md5 over lowercased, whitespace-collapsed
     text (SQL-oracled; the stable-normalization dedup key)."""
     # regex normalize + md5 per row: _spread (see redact_pii)
+    normalized = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
     return _spread(documents).select(
-        "doc_id", F.md5(normalized_text(F.col("text"))).alias("fingerprint")
+        "doc_id", F.md5(normalized).alias("fingerprint")
     )
 
 
@@ -2130,7 +2128,8 @@ def _ivf_seed_anchors(embeddings: DataFrame, n_cells: int,
     """Deterministic k-means init: vectors hash into `n_cells` buckets
     by xxhash64(vec_id, seed) and the min-rank vector of each bucket
     seeds that cell (a hash-stratified sample — spread, not argmin'd,
-    which is all an init needs)."""
+    which is all an init needs). Raises ValueError on an empty
+    training set."""
     rows = (
         embeddings
         .withColumn(
@@ -2143,6 +2142,9 @@ def _ivf_seed_anchors(embeddings: DataFrame, n_cells: int,
         .agg(F.min_by("embedding", "r").alias("anchor"))
         .collect()
     )
+    if not rows:
+        raise ValueError(
+            "k-means fit: no non-NULL embedding is left to train on")
     by_cell = {r.cell: [float(x) for x in r.anchor] for r in rows}
     return [by_cell[c] for c in sorted(by_cell)]
 
@@ -2162,9 +2164,11 @@ def ivf_fit(embeddings: DataFrame, n_cells: int = 16, seed: int = 7,
     result) are bit-deterministic. Centroids are L2-normalized
     (spherical k-means, matching the cosine assignment); cells that
     lose all points keep their previous centroid. NULL embeddings are
-    not trained on. `train_fraction` hash-samples the training set (at
-    100 TB you fit the coarse quantizer on a sample; assignment
-    quality needs cluster SHAPE, not every row). Returns the centroids
+    not trained on; raises ValueError when no non-NULL embedding is
+    left to train on (empty input, all NULL, or an empty sample).
+    `train_fraction` hash-samples the training set (at 100 TB you fit
+    the coarse quantizer on a sample; assignment quality needs cluster
+    SHAPE, not every row). Returns the centroids
     as a plain list — a tiny model artifact that search ships to the
     kernel in its closure, exactly how production IVF ships its
     centroids."""
@@ -2268,10 +2272,11 @@ def pq_fit(embeddings: DataFrame, n_subspaces: int = 8,
     DECIMAL — exact, order-independent, bit-deterministic (the ivf_fit
     technique). Init is the hash-stratified sample of _ivf_seed_anchors
     sliced per subspace; codes that lose all members keep their
-    previous centroid. NULL embeddings are not trained on. Vectors are
-    L2-normalized first: on the unit sphere ||a-b||^2 == 2 - 2cos(a,b),
-    so PQ's L2 ADC ranking equals the cosine ranking the other ANN
-    operators use."""
+    previous centroid. NULL embeddings are not trained on; raises
+    ValueError when no non-NULL embedding is left to train on. Vectors
+    are L2-normalized first: on the unit sphere
+    ||a-b||^2 == 2 - 2cos(a,b), so PQ's L2 ADC ranking equals the cosine
+    ranking the other ANN operators use."""
     train = embeddings.where(F.col("embedding").isNotNull())
     anchors = _ivf_seed_anchors(train, n_codes, seed)
     dim = len(anchors[0])
@@ -2532,8 +2537,7 @@ def event_sessions(events: DataFrame,
     starts, cumulative sum to number sessions — then one aggregate.
     All outputs are integers/timestamps (no double sums), so results
     are partitioning-deterministic. The windows partition by user_id:
-    the per-user event list is the unit of state, exactly how the
-    streaming variant (conversation_sessions) shards its state store."""
+    the per-user event list is the unit of state."""
     from pyspark.sql import Window
 
     w_user = Window.partitionBy("user_id").orderBy("ts", "event_id")

@@ -1,36 +1,24 @@
-"""Bucketed-table storage helpers: co-located joins without a shuffle.
+"""Table layout helpers: small-file compaction and the two read-path
+layouts that let a scan skip data.
 
-At 100 TB the dominant cost of repeated joins/aggregations on the same
-key is the exchange. Writing both sides bucketed (and sorted) by the
-join key lets every subsequent sort-merge join and groupBy on that key
-run with ZERO Exchange nodes — the bucketing IS the shuffle, paid once
-at write time (the same reasoning as the checkpoint module's
-bucket(conv_id) partitioning; on an Iceberg catalog this is the
-`bucket(N, key)` partition transform).
+- `compact_parquet` rewrites a many-small-files table into files of
+  about `target_file_mb` (`jobs/curate_job.py`).
+- `partitioned_events_path` lays the events table out in
+  `event_date=YYYY-MM-DD/` directories, so a date-bounded query prunes
+  whole directories at plan time (the `events_pruned_window` query;
+  `test_partition_pruned_scan`).
+- `zorder_layout`/`write_zordered` cluster files by a Morton key over
+  two dimensions, so footer min/max stats skip files for 2-D box
+  predicates (the `zorder_events` query;
+  `test_zorder_layout_skips_files_for_box_queries`).
 
-test_bucketed_join_has_no_exchange asserts the plan property.
+The extraction job's checkpointed, part_key-partitioned write lives in
+checkpoint.py; every other job writes with a plain `df.write`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def write_bucketed(df: DataFrame, table: str, key: str,
-                   buckets: int = 16) -> None:
-    """Persist as a bucketed+sorted managed table keyed for co-located
-    joins (Spark's native bucketing; Iceberg: bucket(N, key))."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def read_table(spark, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 def compact_parquet(spark, input_path: str, output_path: str,
@@ -62,520 +50,10 @@ def compact_parquet(spark, input_path: str, output_path: str,
     return n_files
 
 
-def _strip_nullability(dt):
-    """Recursively normalize nullability flags (ArrayType.containsNull,
-    MapType.valueContainsNull, StructField.nullable) so schema-drift
-    detection compares VALUE types, not the in-memory-vs-parquet
-    nullability accidents that union coercion handles anyway."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_strip_nullability(dt.elementType), True)
-    if isinstance(dt, T.MapType):
-        return T.MapType(_strip_nullability(dt.keyType),
-                         _strip_nullability(dt.valueType), True)
-    if isinstance(dt, T.StructType):
-        return T.StructType([
-            T.StructField(f.name, _strip_nullability(f.dataType), True)
-            for f in dt.fields])
-    return dt
-
-
-def _merged_frame(existing: DataFrame, updates: DataFrame, key: str,
-                  label: str) -> DataFrame:
-    """MERGE plan over two frames: rows whose `key` appears in
-    `updates` are replaced wholesale, new keys inserted, untouched
-    rows preserved. Surfaces schema drift instead of silently dropping
-    extra update columns (or failing deep inside the select/union on
-    missing or retyped ones): MERGE is defined over one schema. Types
-    are compared MODULO nullability: an in-memory updates frame
-    routinely carries containsNull/valueContainsNull/nullable flags
-    differing from the parquet-read schema, and those unions fine —
-    only a genuine retype is drift."""
-    ex_types = {f.name: f.dataType for f in existing.schema.fields}
-    up_types = {f.name: f.dataType for f in updates.schema.fields}
-    extra = set(up_types) - set(ex_types)
-    missing = set(ex_types) - set(up_types)
-    retyped = sorted(
-        f"{c} ({ex_types[c].simpleString()} -> "
-        f"{up_types[c].simpleString()})"
-        for c in set(ex_types) & set(up_types)
-        if (_strip_nullability(ex_types[c])
-            != _strip_nullability(up_types[c]))
-    )
-    if extra or missing or retyped:
-        raise ValueError(
-            f"upsert: updates schema drifts from {label}: "
-            f"extra columns {sorted(extra)}, missing columns "
-            f"{sorted(missing)}, retyped columns {retyped}")
-    keys = updates.select(key).distinct()
-    return existing.join(keys, key, "left_anti").unionByName(
-        updates.select(*existing.columns))
-
-
-def upsert_parquet(spark, target_path: str, updates: DataFrame,
-                   key: str) -> int:
-    """MERGE-INTO semantics for a plain-parquet target: rows whose
-    `key` appears in `updates` are replaced, new keys are inserted,
-    untouched rows are preserved (matched-update + not-matched-insert,
-    updates win wholesale per key). Realized as existing-rows
-    anti-join + union, staged to a temp dir and swapped via Hadoop FS
-    rename — the read and the overwrite can't target the same path in
-    one job.
-
-    Honesty note on atomicity: a real table format (Iceberg/Delta
-    MERGE INTO) commits this as one metadata swap; the parquet-level
-    swap here has a small non-atomic window between delete and rename
-    (documented trade, same as every bare-parquet pipeline). Returns
-    the merged row count."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    target = Path(target_path)
-    fs = target.getFileSystem(conf)
-
-    if fs.exists(target):
-        existing = spark.read.parquet(target_path)
-        merged = _merged_frame(existing, updates, key, target_path)
-    else:
-        merged = updates
-    tmp = Path(target_path + "._upsert_tmp")
-    merged.write.mode("overwrite").parquet(str(tmp))
-    n = spark.read.parquet(str(tmp)).count()
-    _swap_into_place(fs, tmp, target, "upsert")
-    return n
-
-
-def _swap_into_place(fs, staging, target, verb: str) -> None:
-    """Shared stage-and-swap: delete the live target (if any), rename
-    the staging path in. Hadoop FS delete/rename report failure by
-    RETURNING false, not raising — ignoring them would silently lose
-    the live table (delete succeeded, rename failed -> data stranded
-    in staging)."""
-    if fs.exists(target) and not fs.delete(target, True):
-        raise IOError(f"{verb}: could not delete {target}")
-    if not fs.rename(staging, target):
-        raise IOError(
-            f"{verb}: rename {staging} -> {target} failed; the new "
-            f"data is intact in the staging path")
-
-
-class TableFormat:
-    """Minimal table-format seam: the four maintenance/mutation verbs a
-    curation pipeline needs from its storage layer, abstracted so the
-    parquet-directory emulation below can be swapped for a real
-    transactional format (Iceberg/Delta) without touching callers.
-
-    What a real catalog-backed implementation replaces (see COVERAGE.md
-    "Storage" for the full accounting):
-      - append/overwrite become ATOMIC snapshot commits (no
-        delete+rename window, readers never see a partial table)
-      - merge becomes the engine's MERGE INTO (one metadata swap,
-        row-level conflict detection)
-      - compact becomes rewrite_data_files / OPTIMIZE, committed as a
-        snapshot that concurrent readers ignore until publish
-      - partitioning becomes hidden partition transforms
-        (bucket(N, key), days(ts)) instead of physical directory layout
-    """
-
-    def append(self, df: DataFrame, table_path: str) -> None:
-        raise NotImplementedError
-
-    def overwrite(self, df: DataFrame, table_path: str,
-                  partition_by: list | None = None) -> None:
-        """partition_by emulates Iceberg's hidden partition transforms
-        with explicit directory keys (days(ts) == partitionBy on a
-        to_date-derived column): the caller derives the transform
-        column, the format lays out one directory per value, and every
-        reader filtering on it gets PARTITION pruning — whole
-        directories skipped at plan time, the read-path half of the
-        100 TB story (see partitioned_events_path)."""
-        raise NotImplementedError
-
-    def compact(self, spark, table_path: str,
-                target_file_mb: int = 128) -> int:
-        raise NotImplementedError
-
-    def merge(self, spark, table_path: str, updates: DataFrame,
-              key: str) -> int:
-        raise NotImplementedError
-
-
-class ParquetDirFormat(TableFormat):
-    """Plain-parquet-directory emulation — the only implementation
-    available in this sandbox (no Iceberg/Delta jars). Append relies on
-    parquet's append mode; overwrite/merge stage-and-swap via Hadoop FS
-    rename with the documented non-atomic window; compact rewrites in
-    place-adjacent output the caller swaps in."""
-
-    def append(self, df: DataFrame, table_path: str) -> None:
-        df.write.mode("append").parquet(table_path)
-
-    def overwrite(self, df: DataFrame, table_path: str,
-                  partition_by: list | None = None) -> None:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(table_path)
-
-    def compact(self, spark, table_path: str,
-                target_file_mb: int = 128) -> int:
-        out = table_path + "._compacted"
-        n = compact_parquet(spark, table_path, out, target_file_mb)
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        Path = jvm.org.apache.hadoop.fs.Path
-        fs = Path(table_path).getFileSystem(conf)
-        _swap_into_place(fs, Path(out), Path(table_path), "compact")
-        return n
-
-    def merge(self, spark, table_path: str, updates: DataFrame,
-              key: str) -> int:
-        return upsert_parquet(spark, table_path, updates, key)
-
-
-class VersionedParquetFormat(TableFormat):
-    """Snapshot-committing parquet table: the Iceberg/Delta commit
-    protocol realized over a plain directory, closing the TableFormat
-    seam's biggest documented gap ("append/overwrite become ATOMIC
-    snapshot commits — no delete+rename window").
-
-    Layout:
-      <table>/data/c<version>-<nonce>/part-*.parquet   immutable commits
-      <table>/_manifests/v<N>.json                     snapshot N
-
-    A manifest lists the exact data FILES of its snapshot (plus the
-    schema, so an empty table round-trips). Committing = write the
-    manifest to a temp name, then a create-exclusive RENAME to
-    v<N+1>.json — Hadoop FS rename refuses an existing destination, so
-    two racing committers serialize: the loser re-reads the new current
-    snapshot, rebases (append re-unions its files onto the winner's
-    list; overwrite/merge/compact recompute base) and retries with
-    N+2. Readers list _manifests, pin the max N (or any historical N —
-    time travel), and plan a scan over exactly that file list; since
-    data files are immutable and never deleted by a commit, a reader
-    holding snapshot N is undisturbed by any number of later commits
-    (`vacuum` is the separate, explicitly destructive retention verb).
-
-    What a real Iceberg catalog still adds beyond this: a metastore
-    swap instead of a rename (works on S3 where rename is copy),
-    column-level stats in manifests for file skipping, and hidden
-    partition transforms. The COMMIT SEMANTICS — optimistic,
-    conflict-detecting, snapshot-isolated — are the ones here.
-    """
-
-    _MANIFESTS = "_manifests"
-    _MAX_RETRIES = 10
-
-    # -- small Hadoop-FS helpers (object-store safe: no os.* walks) --
-
-    @staticmethod
-    def _fs(spark, path: str):
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-    def _write_text(self, spark, fs, jvm, path: str, text: str) -> None:
-        out = fs.create(jvm.org.apache.hadoop.fs.Path(path), True)
-        try:
-            out.write(bytearray(text.encode("utf-8")))
-        finally:
-            out.close()
-
-    def _read_text(self, spark, fs, jvm, path: str) -> str:
-        stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
-        try:
-            ba = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            return bytes(ba).decode("utf-8")
-        finally:
-            stream.close()
-
-    # -- manifest bookkeeping --
-
-    def list_versions(self, spark, table_path: str) -> list[int]:
-        fs, jvm = self._fs(spark, table_path)
-        mdir = jvm.org.apache.hadoop.fs.Path(
-            table_path + "/" + self._MANIFESTS)
-        if not fs.exists(mdir):
-            return []
-        out = []
-        for st in fs.listStatus(mdir):
-            name = st.getPath().getName()
-            if name.startswith("v") and name.endswith(".json"):
-                try:
-                    out.append(int(name[1:-5]))
-                except ValueError:
-                    continue
-        return sorted(out)
-
-    def current_version(self, spark, table_path: str):
-        vs = self.list_versions(spark, table_path)
-        return vs[-1] if vs else None
-
-    def _manifest(self, spark, table_path: str, version: int) -> dict:
-        import json
-
-        fs, jvm = self._fs(spark, table_path)
-        return json.loads(self._read_text(
-            spark, fs, jvm,
-            f"{table_path}/{self._MANIFESTS}/v{version}.json"))
-
-    def _write_data(self, spark, table_path: str, df: DataFrame,
-                    nonce: str) -> list:
-        """Write one immutable commit directory; return its file list."""
-        cdir = f"{table_path}/data/{nonce}"
-        df.write.mode("error").parquet(cdir)
-        fs, jvm = self._fs(spark, table_path)
-        files = []
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(cdir)):
-            name = st.getPath().getName()
-            if name.startswith("part-"):
-                files.append(f"data/{nonce}/{name}")
-        return sorted(files)
-
-    def _try_commit(self, spark, table_path: str, version: int,
-                    manifest: dict) -> bool:
-        """Create-exclusive publish of snapshot `version`; False means
-        a concurrent committer won that version number."""
-        import json
-
-        fs, jvm = self._fs(spark, table_path)
-        Path = jvm.org.apache.hadoop.fs.Path
-        mdir = table_path + "/" + self._MANIFESTS
-        fs.mkdirs(Path(mdir))
-        final = Path(f"{mdir}/v{version}.json")
-        if fs.exists(final):
-            return False
-        import uuid
-
-        tmp = Path(f"{mdir}/.v{version}.{uuid.uuid4().hex[:8]}.tmp")
-        self._write_text(spark, fs, jvm, str(tmp), json.dumps(manifest))
-        if fs.rename(tmp, final):
-            return True
-        fs.delete(tmp, False)
-        return False
-
-    def _commit_loop(self, spark, table_path: str, verb: str,
-                     files_fn) -> int:
-        """Optimistic-concurrency commit: files_fn(base_version) ->
-        (files, schema_json) computes the snapshot content against the
-        CURRENT base; on a lost race we recompute against the winner's
-        snapshot and try the next version number."""
-        for _ in range(self._MAX_RETRIES):
-            base = self.current_version(spark, table_path)
-            files, schema_json = files_fn(base)
-            version = (base or 0) + 1
-            ok = self._try_commit(spark, table_path, version, {
-                "version": version, "base": base, "verb": verb,
-                "files": files, "schema": schema_json,
-            })
-            if ok:
-                return version
-        raise RuntimeError(
-            f"{verb}: lost {self._MAX_RETRIES} commit races on "
-            f"{table_path}; giving up")
-
-    # -- read path --
-
-    def read(self, spark, table_path: str, version: int | None = None
-             ) -> DataFrame:
-        """Snapshot read. version=None pins the CURRENT snapshot at
-        plan time (later commits don't move it); an explicit version
-        is time travel."""
-        import json
-
-        from pyspark.sql import types as T
-
-        if version is None:
-            version = self.current_version(spark, table_path)
-            if version is None:
-                raise FileNotFoundError(
-                    f"no snapshots at {table_path}")
-        man = self._manifest(spark, table_path, version)
-        schema = T.StructType.fromJson(json.loads(man["schema"]))
-        files = [f"{table_path}/{f}" for f in man["files"]]
-        if not files:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(*files)
-
-    # -- the four TableFormat verbs, as snapshot commits --
-
-    def _nonce(self) -> str:
-        import uuid
-
-        return uuid.uuid4().hex[:12]
-
-    def append(self, df: DataFrame, table_path: str) -> None:
-        spark = df.sparkSession
-        new_files = None
-
-        def files_fn(base):
-            nonlocal new_files
-            if base is not None:
-                # drift guard (review finding): recording only the
-                # appender's schema would silently reinterpret every
-                # prior snapshot file under it — a retyped or dropped
-                # column must refuse, exactly like merge does. Compared
-                # modulo nullability, same as _merged_frame.
-                import json as _json
-
-                from pyspark.sql import types as T
-
-                prev_schema = T.StructType.fromJson(_json.loads(
-                    self._manifest(spark, table_path, base)["schema"]))
-                if (_strip_nullability(prev_schema)
-                        != _strip_nullability(df.schema)):
-                    raise ValueError(
-                        f"append: schema drifts from {table_path} "
-                        f"snapshot v{base}: "
-                        f"{prev_schema.simpleString()} vs "
-                        f"{df.schema.simpleString()}")
-            if new_files is None:  # data written once, rebased freely
-                new_files = self._write_data(
-                    spark, table_path, df, f"c{self._nonce()}")
-            prev = (self._manifest(spark, table_path, base)["files"]
-                    if base is not None else [])
-            return prev + new_files, df.schema.json()
-
-        self._commit_loop(spark, table_path, "append", files_fn)
-
-    def overwrite(self, df: DataFrame, table_path: str,
-                  partition_by: list | None = None) -> None:
-        if partition_by:
-            # manifests here list flat files; partition-aware manifests
-            # (path-derived columns + basePath reads) are part of the
-            # documented Iceberg upgrade, not emulated
-            raise NotImplementedError(
-                "VersionedParquetFormat: partitioned snapshots need "
-                "hidden partition transforms (Iceberg); use "
-                "ParquetDirFormat.overwrite(partition_by=...)")
-        spark = df.sparkSession
-        new_files = self._write_data(
-            spark, table_path, df, f"c{self._nonce()}")
-        self._commit_loop(
-            spark, table_path, "overwrite",
-            lambda base: (new_files, df.schema.json()))
-
-    def merge(self, spark, table_path: str, updates: DataFrame,
-              key: str) -> int:
-        # snapshot-isolated MERGE: plan against the pinned current
-        # snapshot, write the merged result as a full new snapshot. A
-        # lost commit race recomputes against the winner (files_fn
-        # rebase) — row-level conflict detection is the documented
-        # Iceberg upgrade, base-recompute is the honest emulation.
-        # base=None (empty table) is handled INSIDE the loop: an
-        # empty-check-then-overwrite fast path would be a TOCTOU race
-        # that wholesale-replaces a first committer landing v1 in
-        # between (review finding).
-        def files_fn(base):
-            if base is None:
-                merged = updates
-            else:
-                existing = self.read(spark, table_path, base)
-                merged = _merged_frame(existing, updates, key,
-                                       table_path)
-            files = self._write_data(
-                spark, table_path, merged, f"c{self._nonce()}")
-            return files, merged.schema.json()
-
-        self._commit_loop(spark, table_path, "merge", files_fn)
-        return self.read(spark, table_path).count()
-
-    def compact(self, spark, table_path: str,
-                target_file_mb: int = 128) -> int:
-        import math
-
-        def files_fn(base):
-            df = self.read(spark, table_path, base)
-            man = self._manifest(spark, table_path, base)
-            fs, jvm = self._fs(spark, table_path)
-            total = 0
-            for f in man["files"]:
-                total += fs.getFileStatus(
-                    jvm.org.apache.hadoop.fs.Path(
-                        f"{table_path}/{f}")).getLen()
-            n = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-            files = self._write_data(
-                spark, table_path, df.repartition(n),
-                f"c{self._nonce()}")
-            return files, df.schema.json()
-
-        v = self._commit_loop(spark, table_path, "compact", files_fn)
-        return len(self._manifest(spark, table_path, v)["files"])
-
-    def cluster(self, spark, table_path: str, x: str, y: str,
-                n_files: int = 16, bits: int = 16) -> int:
-        """OPTIMIZE ZORDER BY emulation on the snapshot protocol:
-        rewrite the current snapshot as `n_files` z-clustered files
-        (Morton key over the two pre-bucketed integer columns,
-        range-partitioned + sorted within files, key dropped from the
-        data) committed as a new snapshot — concurrent readers pinned
-        to older snapshots are undisturbed, exactly like compact.
-        Data is bit-identical across the rewrite; only the file
-        layout (and hence footer min/max skipping behavior, see
-        test_zorder_layout_skips_files_for_box_queries) changes."""
-        def files_fn(base):
-            df = self.read(spark, table_path, base)
-            out = (
-                zorder_layout(df, x, y, bits)
-                .repartitionByRange(n_files, "zkey")
-                .sortWithinPartitions("zkey")
-                .select(*df.columns)
-            )
-            files = self._write_data(
-                spark, table_path, out, f"c{self._nonce()}")
-            return files, df.schema.json()
-
-        v = self._commit_loop(spark, table_path, "cluster", files_fn)
-        return len(self._manifest(spark, table_path, v)["files"])
-
-    # -- retention --
-
-    def vacuum(self, spark, table_path: str, retain_last: int = 2
-               ) -> int:
-        """Destructive retention: drop manifests older than the last
-        `retain_last` snapshots and delete data files no retained
-        snapshot references. The ONLY operation that invalidates a
-        historical reader — commits never do. Returns the number of
-        data files deleted."""
-        versions = self.list_versions(spark, table_path)
-        if len(versions) <= retain_last:
-            return 0
-        keep_v = versions[-retain_last:]
-        drop_v = versions[:-retain_last]
-        keep_files = set()
-        for v in keep_v:
-            keep_files.update(self._manifest(spark, table_path, v)["files"])
-        fs, jvm = self._fs(spark, table_path)
-        Path = jvm.org.apache.hadoop.fs.Path
-        deleted = 0
-        for v in drop_v:
-            for f in self._manifest(spark, table_path, v)["files"]:
-                if f not in keep_files:
-                    if fs.delete(Path(f"{table_path}/{f}"), False):
-                        deleted += 1
-        for v in drop_v:
-            fs.delete(
-                Path(f"{table_path}/{self._MANIFESTS}/v{v}.json"), False)
-        # drop now-empty commit dirs (best-effort tidiness). ONLY dirs
-        # whose children are exactly job-success markers: a blanket
-        # "all children start with '_'" would also match a CONCURRENT
-        # committer's in-flight write staging (_temporary/) and destroy
-        # its job mid-flight (review finding)
-        ddir = Path(f"{table_path}/data")
-        if fs.exists(ddir):
-            for st in fs.listStatus(ddir):
-                kids = fs.listStatus(st.getPath())
-                if kids and all(k.getPath().getName() == "_SUCCESS"
-                                for k in kids):
-                    fs.delete(st.getPath(), True)
-        return deleted
-
-
 def partitioned_events_path(spark, sf_dir: str) -> str:
     """Materialize (once per sf_dir) the events table laid out with
     days(ts)-style directory partitioning — `event_date=YYYY-MM-DD/`
-    keys via the TableFormat seam — and return its path.
+    keys — and return its path.
 
     This is the 100 TB read-path layout: an event log is written
     time-partitioned so that every date-bounded query plans a scan
@@ -586,7 +64,9 @@ def partitioned_events_path(spark, sf_dir: str) -> str:
     to_date(date_trunc('day', ts)) matches the events_daily query's
     oracle-verified day bucketing). PLANS.md asserts the
     PartitionFilters; test_partition_pruned_scan asserts the scanned
-    file set at runtime via input_file_name()."""
+    file set at runtime via input_file_name(). An empty events table
+    writes no event_date= directory, so a reader that must accept one
+    passes the schema (as the events_pruned_window query does)."""
     import hashlib
     import os
 
@@ -602,11 +82,12 @@ def partitioned_events_path(spark, sf_dir: str) -> str:
     path = f"/tmp/spark_graft_part/events_{tag}"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ParquetDirFormat().overwrite(
-            ev.withColumn(
-                "event_date",
-                F.to_date(F.date_trunc("day", F.col("ts")))),
-            path, partition_by=["event_date"])
+        (
+            ev.withColumn("event_date",
+                          F.to_date(F.date_trunc("day", F.col("ts"))))
+            .write.mode("overwrite").partitionBy("event_date")
+            .parquet(path)
+        )
     return path
 
 
@@ -636,7 +117,7 @@ def zorder_layout(df: DataFrame, x: str, y: str,
     can exclude files for 2-D box predicates — a sort by either
     single column only bounds that column. Pure per-row integer
     expression: no shuffle, no Python, scan-bound at 100 TB (this is
-    OPTIMIZE ZORDER BY's kernel on the TableFormat seam)."""
+    OPTIMIZE ZORDER BY's kernel)."""
     from pyspark.sql import functions as F
     return df.withColumn("zkey", F.expr(zorder_key_sql(x, y, bits)))
 

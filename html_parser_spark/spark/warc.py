@@ -278,13 +278,9 @@ def gzip_member(record: bytes) -> bytes:
 # Spark surface
 # ---------------------------------------------------------------------
 
-_BINARYFILE_SCHEMA = ("path string, modificationTime timestamp, "
-                      "length long, content binary")
-
-
 def _records_row(errors: str):
-    """content -> one RECORD_FIELDS tuple per WARC record (shared by
-    the batch and streaming readers)."""
+    """content -> one RECORD_FIELDS tuple per WARC record (the row
+    kernel of read_warc_records)."""
 
     def _row(content):
         return [(h.get("warc-record-id"), h.get("warc-type"),
@@ -312,22 +308,6 @@ def read_warc_records(spark, path, errors: str = "strict"):
     if errors not in ("strict", "skip"):
         raise ValueError("errors must be 'strict' or 'skip'")
     files = spark.read.format("binaryFile").load(path)
-    return map_rows(files, ["content"], ["path"], RECORD_FIELDS,
-                    _records_row(errors))
-
-
-def read_warc_records_stream(spark, path, errors: str = "strict"):
-    """Structured-streaming WARC ingest: the file source discovers
-    newly-landed archives (a live crawl drops finished WARCs into the
-    segment directory) and the checkpointed file index gives
-    exactly-once PER FILE — the unit of work the format is designed
-    around.  Downstream is the identical record parser; compose with
-    warc_http_responses + the raw-documents kernel exactly like batch.
-    Use trigger(availableNow=True) for catch-up runs."""
-    if errors not in ("strict", "skip"):
-        raise ValueError("errors must be 'strict' or 'skip'")
-    files = spark.readStream.format("binaryFile") \
-        .schema(_BINARYFILE_SCHEMA).load(path)
     return map_rows(files, ["content"], ["path"], RECORD_FIELDS,
                     _records_row(errors))
 

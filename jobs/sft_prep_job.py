@@ -55,8 +55,8 @@ def main(argv=None) -> int:
     )
     # shard by a conv-stable hash so re-runs land rows in the same
     # shard (repartition(n, col) is hash partitioning, deterministic);
-    # jsonl = the newline-delimited training-shard interchange format
-    # (html_parser_spark.spark.jsonl), parquet = the warehouse form
+    # jsonl = the newline-delimited training-shard interchange format,
+    # parquet = the warehouse form
     sharded = corpus.repartition(args.shards, "conv_id").write.mode(
         "overwrite")
     if args.format == "jsonl":

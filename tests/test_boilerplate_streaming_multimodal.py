@@ -1,5 +1,5 @@
-"""Tests for the graft extensions: boilerplate strip, streaming
-extraction, multimodal plumbing."""
+"""Tests for the boilerplate strip, watermarked late-data semantics
+and the multimodal plumbing."""
 
 import pytest
 
@@ -74,50 +74,11 @@ class TestBoilerplate:
 
 
 class TestStreaming:
-    def test_stream_extraction_matches_batch(self, spark, tmp_path):
-        from html_parser_spark.spark.pipeline import extract_turns
-        from html_parser_spark.spark.streaming import run_stream_to_parquet
-        from html_parser_spark.spark.transcripts import transcripts_df
-
-        src = str(tmp_path / "in")
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        df = transcripts_df(spark, 150, seed=11, partitions=3)
-        df.write.parquet(src)
-
-        run_stream_to_parquet(spark, src, out, ckpt)
-        stream_rows = {
-            (r.conv_id, r.turn_idx): (r.extracted_text, r.parse_errors)
-            for r in spark.read.parquet(out).collect()
-        }
-        batch_rows = {
-            (r.conv_id, r.turn_idx): (r.extracted_text, r.parse_errors)
-            for r in extract_turns(
-                spark.read.parquet(src), ordered=False
-            ).collect()
-        }
-        assert stream_rows == batch_rows
-
-    def test_watermarked_rolling_stats_plan(self, spark, tmp_path):
-        from html_parser_spark.spark.pipeline import extract_turns
-        from html_parser_spark.spark.streaming import (
-            conversation_rolling_stats, read_transcripts_stream,
-        )
-        from html_parser_spark.spark.transcripts import transcripts_df
-
-        src_dir = str(tmp_path / "wm_in")
-        transcripts_df(spark, 30, seed=5, partitions=1).write.parquet(src_dir)
-        src = read_transcripts_stream(spark, src_dir)
-        agg = conversation_rolling_stats(extract_turns(src, ordered=False))
-        assert agg.isStreaming
-        assert "window" in agg.columns
-
     def test_watermark_drops_late_data(self, spark, tmp_path):
-        """Behavioral late-data semantics (the plan test above only
-        checks shape): a windowed watermarked aggregate emits a closed
-        window, then an event arriving AFTER the watermark passed that
-        window must not resurrect or re-emit it — the late row is
-        dropped, the standard streaming trade the operator documents."""
+        """Behavioral late-data semantics: a windowed watermarked
+        aggregate emits a closed window, then an event arriving AFTER
+        the watermark passed that window must not resurrect or re-emit
+        it — the late row is dropped, the standard streaming trade."""
         import datetime
 
         from pyspark.sql import functions as F
@@ -179,105 +140,6 @@ class TestStreaming:
         # the 12:30 window eventually emitted with only its own row
         mid = [r for r in rows if r.w_start == t0 + dt(minutes=30)]
         assert len(mid) == 1 and mid[0].n_rows == 1
-
-    def test_stream_dedup_matches_batch(self, spark, tmp_path):
-        """Streaming exact dedup (bounded-state, watermarked) keeps
-        exactly one row per normalized-text fingerprint — same
-        surviving set as batch dropDuplicates on the same key, with
-        dups planted across micro-batch files."""
-        import datetime
-
-        from pyspark.sql import functions as F
-
-        from html_parser_spark.spark.streaming import stream_dedup
-
-        src = str(tmp_path / "dd_in")
-        out = str(tmp_path / "dd_out")
-        ckpt = str(tmp_path / "dd_ckpt")
-        t0 = datetime.datetime(2024, 1, 1, 12, 0, 0)
-        rows = [
-            (i, text, t0 + datetime.timedelta(seconds=i))
-            for i, text in enumerate(
-                ["alpha beta", "ALPHA   beta", "gamma", "delta",
-                 "gamma", "  alpha beta ", "epsilon", "delta"]
-            )
-        ]
-        schema = "doc_id long, text string, ts timestamp"
-        # two files -> two-ish micro-batches; dups straddle them
-        spark.createDataFrame(rows[:4], schema).coalesce(1).write.parquet(
-            src)
-        spark.createDataFrame(rows[4:], schema).coalesce(1).write.mode(
-            "append").parquet(src)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        q = (
-            stream_dedup(stream, watermark="1 hour")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = spark.read.parquet(out).collect()
-        fps = [r.fingerprint for r in got]
-        assert len(fps) == len(set(fps)) == 4  # alpha-beta/gamma/delta/epsilon
-        batch = (
-            spark.read.parquet(src)
-            .withColumn("fingerprint", F.md5(
-                F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))))
-            .dropDuplicates(["fingerprint"])
-        )
-        assert sorted(fps) == sorted(
-            r.fingerprint for r in batch.collect())
-
-    def test_stream_dedup_survives_restart(self, spark, tmp_path):
-        """Dedup state is durable: after the query stops, new files
-        containing duplicates of ALREADY-EMITTED rows arrive, and a
-        RESTART from the same checkpoint must drop them (the state
-        store, not the micro-batch, carries the seen set)."""
-        import datetime
-
-        from html_parser_spark.spark.streaming import stream_dedup
-
-        src = str(tmp_path / "rs_in")
-        out = str(tmp_path / "rs_out")
-        ckpt = str(tmp_path / "rs_ckpt")
-        t0 = datetime.datetime(2024, 1, 1, 12, 0, 0)
-        schema = "doc_id long, text string, ts timestamp"
-
-        def run_once():
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1).parquet(src)
-            )
-            q = (
-                stream_dedup(stream, watermark="1 hour")
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        spark.createDataFrame(
-            [(0, "alpha", t0), (1, "beta", t0)], schema
-        ).coalesce(1).write.parquet(src)
-        run_once()
-        # second life: a dup of 'alpha' plus one genuinely new row
-        spark.createDataFrame(
-            [(2, "alpha", t0 + datetime.timedelta(seconds=30)),
-             (3, "gamma", t0 + datetime.timedelta(seconds=40))], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-        run_once()
-        got = sorted(r.text for r in spark.read.parquet(out).collect())
-        assert got == ["alpha", "beta", "gamma"]
 
 
 class TestMultimodal:
@@ -899,212 +761,6 @@ class TestMultimodal:
 
 
 class TestStatefulSessions:
-    def test_conversation_sessions_idle_close(self, spark, tmp_path):
-        """applyInPandasWithState sessionization: running summaries
-        emit closed=false; once the watermark passes last_ts + idle
-        the state times out and the final closed=true summary emits."""
-        import datetime
-
-        from html_parser_spark.spark.streaming import (
-            SESSION_SCHEMA, conversation_sessions,
-        )
-
-        t0 = datetime.datetime(2020, 1, 1, 10, 0, 0)
-
-        def rows(conv, n, base, text="hello world"):
-            return [
-                (conv, i, "user", text, None,
-                 base + datetime.timedelta(seconds=i))
-                for i in range(n)
-            ]
-
-        schema = ("conv_id string, turn_idx int, role string, text string, "
-                  "tool string, ts timestamp")
-        src = str(tmp_path / "sess_in")
-        # three files -> three micro-batches (maxFilesPerTrigger=1):
-        # A,B at 10:00; C at 10:30 (advances watermark past A+B idle);
-        # D at 11:00 (batch 3 fires A+B timeouts against wm=10:30)
-        spark.createDataFrame(
-            rows("A", 3, t0) + rows("B", 2, t0), schema
-        ).coalesce(1).write.parquet(src + "/f=1")
-        spark.createDataFrame(
-            rows("C", 1, t0 + datetime.timedelta(minutes=30)), schema
-        ).coalesce(1).write.parquet(src + "/f=2")
-        spark.createDataFrame(
-            rows("D", 1, t0 + datetime.timedelta(minutes=60)), schema
-        ).coalesce(1).write.parquet(src + "/f=3")
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/f=*")
-        )
-        from html_parser_spark.spark.pipeline import extract_turns
-
-        sessions = conversation_sessions(
-            extract_turns(stream, ordered=False), idle_ms=60_000
-        )
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName("sess_out").outputMode("update")
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        got = spark.sql("select * from sess_out").collect()
-        closed = {r.conv_id: r for r in got if r.closed}
-        live = {r.conv_id for r in got if not r.closed}
-        assert {"A", "B"} <= set(closed)
-        assert closed["A"].n_turns == 3
-        assert closed["A"].n_chars == 3 * len("hello world")
-        assert closed["B"].n_turns == 2
-        assert {"A", "B", "C", "D"} <= live  # running summaries emitted
-
-    def test_conversation_sessions_non_utc_session_tz(self, spark,
-                                                      tmp_path):
-        """Regression: the idle-timeout epoch must be computed against
-        the SESSION timezone. With a non-UTC session tz, naive batch
-        timestamps render in that tz while state-restored datetimes
-        would .timestamp() in the process-local tz — the old code mixed
-        the two, skewing timeouts by the UTC offset, so sessions either
-        closed hours early or never closed. Same scenario as
-        test_conversation_sessions_idle_close, under Asia/Tokyo."""
-        import datetime
-
-        from html_parser_spark.spark.pipeline import extract_turns
-        from html_parser_spark.spark.streaming import conversation_sessions
-
-        old_tz = spark.conf.get("spark.sql.session.timeZone")
-        spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-        try:
-            t0 = datetime.datetime(2020, 1, 1, 10, 0, 0)
-
-            def rows(conv, n, base):
-                return [
-                    (conv, i, "user", "hello world", None,
-                     base + datetime.timedelta(seconds=i))
-                    for i in range(n)
-                ]
-
-            schema = ("conv_id string, turn_idx int, role string, "
-                      "text string, tool string, ts timestamp")
-            src = str(tmp_path / "sess_tz_in")
-            spark.createDataFrame(
-                rows("A", 3, t0), schema
-            ).coalesce(1).write.parquet(src + "/f=1")
-            spark.createDataFrame(
-                rows("C", 1, t0 + datetime.timedelta(minutes=30)), schema
-            ).coalesce(1).write.parquet(src + "/f=2")
-            spark.createDataFrame(
-                rows("D", 1, t0 + datetime.timedelta(minutes=60)), schema
-            ).coalesce(1).write.parquet(src + "/f=3")
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src + "/f=*")
-            )
-            sessions = conversation_sessions(
-                extract_turns(stream, ordered=False), idle_ms=60_000)
-            q = (
-                sessions.writeStream.format("memory")
-                .queryName("sess_tz_out").outputMode("update")
-                .trigger(availableNow=True).start()
-            )
-            q.awaitTermination()
-            got = spark.sql("select * from sess_tz_out").collect()
-            closed = {r.conv_id: r for r in got if r.closed}
-            assert "A" in closed  # would never close with skewed epoch
-            assert closed["A"].n_turns == 3
-        finally:
-            spark.conf.set("spark.sql.session.timeZone", old_tz)
-
-    def test_conversation_sessions_survive_restart(self, spark, tmp_path):
-        """Stateful session state must survive a query restart from the
-        same checkpoint (the streaming face of the north rule's
-        idempotent resume): batch 1 accumulates state, the query stops,
-        a NEW query from the same checkpoint processes batch 2 and the
-        closed-session totals include batch-1 turns."""
-        import datetime
-
-        from html_parser_spark.spark.pipeline import extract_turns
-        from html_parser_spark.spark.streaming import conversation_sessions
-
-        t0 = datetime.datetime(2021, 6, 1, 9, 0, 0)
-        schema = ("conv_id string, turn_idx int, role string, text string, "
-                  "tool string, ts timestamp")
-        src = str(tmp_path / "rs_in")
-        ckpt = str(tmp_path / "rs_ckpt")
-        out = str(tmp_path / "rs_out")
-
-        def write_file(tag, rows):
-            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-                src + f"/f={tag}")
-
-        def run_once():
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src + "/f=*")
-            )
-            q = (
-                conversation_sessions(
-                    extract_turns(stream, ordered=False), idle_ms=60_000)
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        # foreachBatch sink: supports checkpoint recovery (memory sink
-        # does not) and gives update-mode emissions a durable home
-        def run_fb(tag):
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src + "/f=*")
-            )
-
-            def sink(bdf, _bid):
-                bdf.write.mode("append").parquet(out)
-
-            q = (
-                conversation_sessions(
-                    extract_turns(stream, ordered=False), idle_ms=60_000)
-                .writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            try:
-                return spark.read.parquet(out).collect()
-            except Exception:
-                return []
-
-        write_file(1, [
-            ("X", i, "user", "hello world", None,
-             t0 + datetime.timedelta(seconds=i)) for i in range(4)
-        ])
-        got1 = run_fb(1)
-        assert {r.conv_id for r in got1} == {"X"}
-        assert all(not r.closed for r in got1)
-
-        # second run, SAME checkpoint: later events advance the
-        # watermark past X's idle timeout
-        write_file(2, [("Y", 0, "user", "later", None,
-                        t0 + datetime.timedelta(minutes=30))])
-        write_file(3, [("Z", 0, "user", "much later", None,
-                        t0 + datetime.timedelta(minutes=60))])
-        got2 = run_fb(2)
-        closed = {r.conv_id: r for r in got2 if r.closed}
-        assert "X" in closed
-        # the batch-1 state survived the restart: all 4 turns counted
-        assert closed["X"].n_turns == 4
-        assert closed["X"].n_chars == 4 * len("hello world")
-
     def test_corrupt_payload_marks_row_not_batch(self, spark):
         """One corrupt or NULL payload must flag its own row
         (decode_ok=false, empty features) — never kill the batch (the

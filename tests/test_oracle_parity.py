@@ -15,6 +15,8 @@ ann_bruteforce and the snapshot-pinned ann_lsh/ann_ivf/ann_ivfpq) and
 the word-gram near-dup rows (shingle_stats, the snapshot-pinned
 minhash_lsh, ngram_jaccard, edit_distance_verify, conv_near_dup) —
 run separately at sf0.01, the scale their snapshots were minted at.
+Queries that must survive empty tables run over zero-row copies of the
+sf0.01 tables.
 """
 
 import os
@@ -95,3 +97,45 @@ def test_sf001_oracle_rows(spark, name):
         assert nrows == 0
     else:
         assert nrows > 0
+
+
+@pytest.fixture(scope="module")
+def empty_sf(tmp_path_factory):
+    """Zero-row copies of the sf0.01 tables, schemas kept."""
+    import pyarrow.parquet as pq
+    from check_oracles import TABLES
+
+    assert os.path.isdir(SF001_DIR), (
+        f"sf0.01 oracle inputs missing: {SF001_DIR}")
+    sf_dir = tmp_path_factory.mktemp("sf_empty")
+    for t in TABLES:
+        schema = pq.read_schema(os.path.join(SF001_DIR, f"{t}.parquet"))
+        pq.write_table(schema.empty_table(), sf_dir / f"{t}.parquet")
+    return str(sf_dir)
+
+
+@pytest.mark.parametrize("name, n_rows", [
+    ("dataset_card", 1), ("events_pruned_window", 0),
+])
+def test_empty_table_oracle_rows(spark, empty_sf, name, n_rows):
+    """dataset_card gives its one row with NULL rates (no
+    DIVIDE_BY_ZERO); events_pruned_window reads back a partitioned copy
+    that has no event_date= directory. Both equal their oracle."""
+    import __spark_entry__ as se
+    from check_oracles import compare_one, duck_connect
+
+    con = duck_connect(empty_sf)
+    try:
+        ok, nrows, msg = compare_one(
+            spark, con, se.queries()[name], se.oracle_sql()[name],
+            empty_sf)
+    finally:
+        con.close()
+    assert ok, f"{name}: {msg}"
+    assert nrows == n_rows
+    if name == "dataset_card":
+        (card,) = se.queries()[name](spark, empty_sf).collect()
+        assert card.n_docs == 0
+        assert card.mean_quality is None
+        assert card.exact_dup_rate is None
+        assert card.gopher_keep_rate is None

@@ -842,34 +842,6 @@ def test_ops_invariant_under_repartitioning(spark):
     assert run(docs.repartition(1)) == run(docs.repartition(13))
 
 
-def test_bucketed_join_has_no_exchange(spark):
-    """Both sides written bucketed+sorted on the join key: the
-    sort-merge join must plan with ZERO Exchange nodes — the shuffle
-    was paid once at write time (the co-location story for repeated
-    100 TB joins)."""
-    from html_parser_spark.spark.storage import read_table, write_bucketed
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    write_bucketed(docs.select("doc_id", "lang"), "b_left", "doc_id", 4)
-    write_bucketed(docs.select("doc_id", "n_chars"), "b_right", "doc_id", 4)
-    try:
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = read_table(spark, "b_left").join(
-                read_table(spark, "b_right"), "doc_id"
-            )
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan, plan
-            assert j.count() == docs.count()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_left")
-        spark.sql("DROP TABLE IF EXISTS b_right")
-
-
 def test_lang_id_detects_unsegmented_chinese(spark):
     """zh has no spaces, so stopword-token matching can never fire on
     real Chinese text (round-2/3 finding) — the CJK codepoint-count
@@ -1244,130 +1216,6 @@ def test_components_distributed_at_bench_scale(spark):
                for j in range(chain_len + 1))
 
 
-def test_upsert_parquet_merge_semantics(spark, tmp_path):
-    """MERGE semantics on plain parquet: updated keys replaced,
-    new keys inserted, untouched rows preserved; initial upsert into
-    a missing target just writes."""
-    from html_parser_spark.spark.storage import upsert_parquet
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)],
-        "id long, name string, v long")
-    assert upsert_parquet(spark, path, base, "id") == 3
-    updates = spark.createDataFrame(
-        [(2, "B", 200), (4, "d", 40)], "id long, name string, v long")
-    assert upsert_parquet(spark, path, updates, "id") == 4
-    got = {r.id: (r.name, r.v)
-           for r in spark.read.parquet(path).collect()}
-    assert got == {1: ("a", 10), 2: ("B", 200), 3: ("c", 30),
-                   4: ("d", 40)}
-
-    # schema drift surfaces as a clear error, not a silent column
-    # drop (extra) or a deep select failure (missing)
-    import pytest as _pytest
-
-    drifted = spark.createDataFrame(
-        [(5, "e", 50, "extra")],
-        "id long, name string, v long, extra_col string")
-    with _pytest.raises(ValueError, match="drifts"):
-        upsert_parquet(spark, path, drifted, "id")
-    narrow = spark.createDataFrame([(5, "e")], "id long, name string")
-    with _pytest.raises(ValueError, match="drifts"):
-        upsert_parquet(spark, path, narrow, "id")
-    # same names but a retyped column is drift too (unionByName would
-    # otherwise fail deep inside analysis or silently coerce)
-    retyped = spark.createDataFrame(
-        [(5, "e", "50")], "id long, name string, v string")
-    with _pytest.raises(ValueError, match="retyped"):
-        upsert_parquet(spark, path, retyped, "id")
-    # and the target is untouched after the refused merges
-    assert spark.read.parquet(path).count() == 4
-
-
-def test_upsert_tolerates_nullability_only_differences(spark, tmp_path):
-    """An in-memory updates frame routinely differs from the
-    parquet-read schema ONLY in nullability flags (containsNull /
-    struct-field nullable); that must upsert cleanly, not be refused
-    as 'retyped' (ADVICE r5)."""
-    from pyspark.sql import types as T
-
-    from html_parser_spark.spark.storage import upsert_parquet
-
-    path = str(tmp_path / "tbl_null")
-    base_schema = T.StructType([
-        T.StructField("id", T.LongType(), False),
-        T.StructField("tags", T.ArrayType(T.StringType(), False), False),
-        T.StructField("meta", T.StructType([
-            T.StructField("a", T.IntegerType(), False)]), False),
-    ])
-    base = spark.createDataFrame(
-        [(1, ["x"], (10,)), (2, ["y"], (20,))], base_schema)
-    assert upsert_parquet(spark, path, base, "id") == 2
-
-    # same value types, every nullability flag flipped to True
-    up_schema = T.StructType([
-        T.StructField("id", T.LongType(), True),
-        T.StructField("tags", T.ArrayType(T.StringType(), True), True),
-        T.StructField("meta", T.StructType([
-            T.StructField("a", T.IntegerType(), True)]), True),
-    ])
-    ups = spark.createDataFrame([(2, ["Y"], (200,))], up_schema)
-    assert upsert_parquet(spark, path, ups, "id") == 2
-    got = {r.id: (r.tags, r.meta.a)
-           for r in spark.read.parquet(path).collect()}
-    assert got == {1: (["x"], 10), 2: (["Y"], 200)}
-
-    # a genuine nested retype is still refused
-    import pytest as _pytest
-
-    bad_schema = T.StructType([
-        T.StructField("id", T.LongType(), True),
-        T.StructField("tags", T.ArrayType(T.LongType(), True), True),
-        T.StructField("meta", T.StructType([
-            T.StructField("a", T.IntegerType(), True)]), True),
-    ])
-    bad = spark.createDataFrame([(3, [1], (30,))], bad_schema)
-    with _pytest.raises(ValueError, match="retyped"):
-        upsert_parquet(spark, path, bad, "id")
-
-
-def test_table_format_seam_parquet_impl(spark, tmp_path):
-    """The TableFormat seam drives append / overwrite / compact /
-    merge through one interface with the parquet emulation behind it
-    (an Iceberg catalog would swap in atomically-committing impls —
-    see the class docstring and COVERAGE.md)."""
-    from html_parser_spark.spark.storage import ParquetDirFormat
-
-    fmt = ParquetDirFormat()
-    path = str(tmp_path / "fmt_tbl")
-    a = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    fmt.overwrite(a, path)
-    fmt.append(spark.createDataFrame([(3, "c")], "id long, v string"),
-               path)
-    assert spark.read.parquet(path).count() == 3
-
-    # merge through the seam: replace + insert
-    n = fmt.merge(spark,
-                  path,
-                  spark.createDataFrame([(3, "C"), (4, "d")],
-                                        "id long, v string"),
-                  "id")
-    assert n == 4
-    got = {r.id: r.v for r in spark.read.parquet(path).collect()}
-    assert got == {1: "a", 2: "b", 3: "C", 4: "d"}
-
-    # compact through the seam: in-place swap, content preserved
-    many = spark.createDataFrame(
-        [(i, "x" * 100) for i in range(2000)], "id long, v string")
-    fmt.overwrite(many.repartition(64), path)
-    n_files = fmt.compact(spark, path, target_file_mb=128)
-    assert n_files == 1
-    assert spark.read.parquet(path).count() == 2000
-    import glob as _glob
-    assert len(_glob.glob(path + "/part-*.parquet")) == 1
-
-
 def test_asof_join_matches_reference_on_random_inputs(spark):
     """Property: asof_join equals an O(n^2) per-row Python reference
     (latest right at-or-before, ties impossible by construction) on a
@@ -1694,136 +1542,22 @@ def test_ann_null_embedding_never_a_candidate(spark):
     assert all(r.dup_of != 1000 for r in dedup.values())
 
 
-def test_versioned_format_snapshot_commits(spark, tmp_path):
-    """VersionedParquetFormat: all four seam verbs become atomic
-    snapshot commits; readers pin versions; time travel reads any
-    historical snapshot unchanged (judge r6 item 4)."""
-    from html_parser_spark.spark.storage import VersionedParquetFormat
+def test_ann_fit_without_training_rows_raises(spark):
+    """ivf_fit and pq_fit over an empty frame, or one whose every
+    embedding is NULL, have nothing to train on: a ValueError that
+    says so, not an IndexError from the empty init."""
+    from html_parser_spark.spark.ops import ivf_fit, pq_fit
 
-    fmt = VersionedParquetFormat()
-    path = str(tmp_path / "vtbl")
-    a = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    fmt.overwrite(a, path)                             # v1
-    fmt.append(spark.createDataFrame([(3, "c")], "id long, v string"),
-               path)                                   # v2
-    assert fmt.list_versions(spark, path) == [1, 2]
-    assert fmt.read(spark, path).count() == 3
-
-    # merge = snapshot v3 (replace id=3, insert id=4)
-    n = fmt.merge(spark, path,
-                  spark.createDataFrame([(3, "C"), (4, "d")],
-                                        "id long, v string"), "id")
-    assert n == 4
-    got = {r.id: r.v for r in fmt.read(spark, path).collect()}
-    assert got == {1: "a", 2: "b", 3: "C", 4: "d"}
-
-    # time travel: v1 and v2 still read EXACTLY as committed
-    assert {r.id for r in fmt.read(spark, path, version=1).collect()} \
-        == {1, 2}
-    assert {r.id for r in fmt.read(spark, path, version=2).collect()} \
-        == {1, 2, 3}
-
-    # compact = snapshot v4; row content preserved, files reduced
-    fmt.overwrite(a.unionByName(a).repartition(16), path)      # v4
-    before = len(fmt._manifest(spark, path,
-                               fmt.current_version(spark, path))["files"])
-    fmt.compact(spark, path, target_file_mb=128)               # v5
-    after = len(fmt._manifest(spark, path,
-                              fmt.current_version(spark, path))["files"])
-    assert after == 1 and before > after
-    assert fmt.read(spark, path).count() == 4
-
-
-def test_versioned_format_concurrent_reader_isolation(spark, tmp_path):
-    """A reader holding snapshot N is undisturbed by later commits:
-    the pinned DataFrame (planned over N's file list) collects the SAME
-    rows after an overwrite publishes N+1, because commits never
-    delete data files — only vacuum does."""
-    from html_parser_spark.spark.storage import VersionedParquetFormat
-
-    fmt = VersionedParquetFormat()
-    path = str(tmp_path / "vtbl_iso")
-    fmt.overwrite(spark.createDataFrame(
-        [(i, "old") for i in range(100)], "id long, v string"), path)
-    pinned = fmt.read(spark, path)          # plans over v1's files
-    assert pinned.count() == 100
-
-    fmt.overwrite(spark.createDataFrame(
-        [(0, "new")], "id long, v string"), path)      # v2 commits
-    # pinned reader: still v1's content, byte-for-byte
-    vals = {r.v for r in pinned.collect()}
-    assert vals == {"old"} and pinned.count() == 100
-    # a NEW reader sees v2
-    assert fmt.read(spark, path).count() == 1
-
-
-def test_versioned_format_commit_race_rebase(spark, tmp_path):
-    """Optimistic concurrency: if another committer takes version N+1
-    first (simulated by pre-publishing a manifest at that version), the
-    losing append re-reads the winner's snapshot, REBASES its file list
-    on top, and lands at N+2 — no lost update."""
-    import json
-
-    from html_parser_spark.spark.storage import VersionedParquetFormat
-
-    fmt = VersionedParquetFormat()
-    path = str(tmp_path / "vtbl_race")
-    fmt.overwrite(spark.createDataFrame(
-        [(1, "a")], "id long, v string"), path)        # v1
-
-    # interpose: the first _try_commit attempt is beaten to its version
-    orig = fmt._try_commit
-    beaten = {"done": False}
-
-    def racing(spark_, tpath, version, manifest):
-        if not beaten["done"]:
-            beaten["done"] = True
-            rival = spark.createDataFrame([(99, "rival")],
-                                          "id long, v string")
-            rival_files = fmt._write_data(spark, tpath, rival,
-                                          f"c{fmt._nonce()}")
-            assert orig(spark_, tpath, version, {
-                "version": version, "base": version - 1,
-                "verb": "append", "files":
-                    fmt._manifest(spark, tpath, version - 1)["files"]
-                    + rival_files,
-                "schema": rival.schema.json(),
-            })
-        return orig(spark_, tpath, version, manifest)
-
-    fmt._try_commit = racing
-    try:
-        fmt.append(spark.createDataFrame(
-            [(2, "b")], "id long, v string"), path)
-    finally:
-        fmt._try_commit = orig
-    # winner (v2) AND the rebased append (v3) both present
-    assert fmt.list_versions(spark, path) == [1, 2, 3]
-    got = {r.id: r.v for r in fmt.read(spark, path).collect()}
-    assert got == {1: "a", 99: "rival", 2: "b"}
-
-
-def test_versioned_format_vacuum_and_empty(spark, tmp_path):
-    """vacuum drops only unreferenced files/manifests; an empty
-    snapshot round-trips through the stored schema."""
-    from html_parser_spark.spark.storage import VersionedParquetFormat
-
-    fmt = VersionedParquetFormat()
-    path = str(tmp_path / "vtbl_vac")
-    sch = "id long, v string"
-    fmt.overwrite(spark.createDataFrame([(1, "a")], sch), path)   # v1
-    fmt.overwrite(spark.createDataFrame([(2, "b")], sch), path)   # v2
-    fmt.overwrite(spark.createDataFrame([], sch), path)           # v3
-    assert fmt.read(spark, path).count() == 0          # empty snapshot
-    assert [f.name for f in fmt.read(spark, path).schema.fields] \
-        == ["id", "v"]
-
-    deleted = fmt.vacuum(spark, path, retain_last=2)
-    assert deleted >= 1                                # v1's file gone
-    assert fmt.list_versions(spark, path) == [2, 3]
-    assert fmt.read(spark, path, version=2).count() == 1
-    with pytest.raises(Exception):
-        fmt.read(spark, path, version=1)
+    schema = "vec_id long, embedding array<double>"
+    frames = {
+        "empty": spark.createDataFrame([], schema),
+        "all NULL": spark.createDataFrame([(1, None), (2, None)], schema),
+    }
+    for label, emb in frames.items():
+        with pytest.raises(ValueError, match="no non-NULL embedding"):
+            ivf_fit(emb, n_cells=4, seed=7, n_iters=2)
+        with pytest.raises(ValueError, match="no non-NULL embedding"):
+            pq_fit(emb, n_subspaces=4, n_codes=8, seed=7, n_iters=2)
 
 
 def test_partition_pruned_scan(spark):
@@ -1937,28 +1671,6 @@ def test_lsh_chain_cap_at_1000x_width(spark):
     rows = comp.collect()
     assert len(rows) == width                 # every doc clustered
     assert {r.cluster_root for r in rows} == {0}
-
-
-def test_versioned_format_append_refuses_schema_drift(spark, tmp_path):
-    """append must refuse drift instead of silently reinterpreting all
-    prior snapshot files under the appender's schema (review finding):
-    a retyped or dropped column raises; a nullability-only difference
-    does not."""
-    from html_parser_spark.spark.storage import VersionedParquetFormat
-
-    fmt = VersionedParquetFormat()
-    path = str(tmp_path / "vtbl_drift")
-    fmt.overwrite(spark.createDataFrame(
-        [(1, "a")], "id long, v string"), path)
-    with pytest.raises(ValueError, match="drift"):
-        fmt.append(spark.createDataFrame([(2,)], "id long"), path)
-    with pytest.raises(ValueError, match="drift"):
-        fmt.append(spark.createDataFrame(
-            [(2, 3)], "id long, v long"), path)
-    # same value types, different nullability flags: fine
-    fmt.append(spark.createDataFrame([(2, "b")], "id long, v string")
-               .selectExpr("id", "coalesce(v, 'x') as v"), path)
-    assert fmt.read(spark, path).count() == 2
 
 
 def test_repetition_scores_planted(spark):
@@ -3324,61 +3036,6 @@ def test_bloom_decontaminate_one_sided_and_exact(spark):
     assert got[2].n_exact_hits == 0
 
 
-def test_versioned_cluster_zorder_snapshot(spark, tmp_path):
-    """OPTIMIZE ZORDER through the snapshot protocol: the rewrite is
-    bit-identical data in a new snapshot (pinned readers of the old
-    snapshot undisturbed), the layout key never leaks into the
-    schema, and the new snapshot's parquet footers show z-tile bounds
-    (a y-slice no longer touches every file)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from html_parser_spark.spark.storage import VersionedParquetFormat
-
-    fmt = VersionedParquetFormat()
-    path = str(tmp_path / "t")
-    df = spark.range(64 * 64).selectExpr(
-        "id", "cast(id % 64 as int) as x", "cast(id div 64 as int) as y")
-    # v1: x-sorted layout (worst case for y-slices)
-    fmt.overwrite(
-        df.repartitionByRange(16, "x").sortWithinPartitions("x"), path)
-    v1 = fmt.current_version(spark, path)
-    n_files = fmt.cluster(spark, path, "x", "y", n_files=16, bits=6)
-    assert n_files == 16
-    v2 = fmt.current_version(spark, path)
-    assert v2 == v1 + 1
-
-    new = fmt.read(spark, path)
-    assert new.columns == ["id", "x", "y"]  # zkey dropped
-    assert new.count() == 64 * 64
-    assert (new.selectExpr("sum(id) s").collect()[0].s
-            == sum(range(64 * 64)))
-    # pinned reader of v1 still sees the old snapshot
-    assert fmt.read(spark, path, v1).count() == 64 * 64
-
-    man = fmt._manifest(spark, path, v2)
-    def bounds(files):
-        out = []
-        for f in files:
-            md = pq.ParquetFile(f"{path}/{f}").metadata
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                row = md.row_group(rg)
-                cols = {row.column(c).path_in_schema: row.column(c)
-                        for c in range(row.num_columns)}
-                s = cols["y"].statistics
-                lo = s.min if lo is None else min(lo, s.min)
-                hi = s.max if hi is None else max(hi, s.max)
-            out.append((lo, hi))
-        return out
-    yb = bounds(man["files"])
-    # y-slice [20,27]: the z-layout bounds y per file, so at most half
-    # the files can intersect (the x-sorted v1 would intersect ALL)
-    hits = sum(1 for lo, hi in yb if not (hi < 20 or lo > 27))
-    assert hits <= 8
-
-
 def test_rag_retrieval_hand_built(spark):
     """Inverted-index BM25 join: the prompt's rare term pulls the
     document containing it to rank 1 ahead of a common-term match;
@@ -3539,53 +3196,6 @@ def test_dedup_representatives_quality_argmax(spark):
     assert (r.cluster_root, r.n_members, r.rep_doc_id, r.n_dropped) \
         == (10, 3, 12, 2)
     assert abs(r.rep_quality - q[12]) < 1e-12
-
-
-def test_jsonl_source_quarantine_and_roundtrip(spark, tmp_path):
-    """JSONL boundary: clean lines come back schema-identical to the
-    parquet source (same extraction results), malformed JSON and
-    keyless records land in the quarantine frame verbatim-ish, and
-    the ChatML JSONL sink round-trips through Spark's JSON reader."""
-    import json
-
-    from html_parser_spark.spark.jsonl import (
-        read_transcripts_jsonl, write_chatml_jsonl,
-    )
-    from html_parser_spark.spark.pipeline import (
-        extract_turns, render_chatml,
-    )
-
-    p = tmp_path / "in.jsonl"
-    lines = [
-        json.dumps({"conv_id": "a", "turn_idx": 0, "role": "user",
-                    "text": "<p>hi</p>", "tool": None,
-                    "ts": "2020-01-01T00:00:00"}),
-        json.dumps({"conv_id": "a", "turn_idx": 1, "role": "assistant",
-                    "text": "plain", "tool": None,
-                    "ts": "2020-01-01T00:01:00"}),
-        '{"this is not json',                       # malformed
-        json.dumps({"role": "user", "text": "no keys"}),  # keyless
-    ]
-    p.write_text("\n".join(lines) + "\n")
-    good, quarantined = read_transcripts_jsonl(spark, str(p))
-    assert good.count() == 2
-    assert good.columns == ["conv_id", "turn_idx", "role", "text",
-                            "tool", "ts"]
-    q = [r.raw_line for r in quarantined.collect()]
-    assert len(q) == 2
-    assert any("this is not json" in x for x in q)
-    # the JSONL-sourced frame drives the SAME pipeline
-    ext = extract_turns(good, ordered=False)
-    got = {(r.conv_id, r.turn_idx): r.extracted_text
-           for r in ext.collect()}
-    assert got[("a", 0)] == "hi" and got[("a", 1)] == "plain"
-
-    out = tmp_path / "out"
-    write_chatml_jsonl(render_chatml(ext), str(out), shards=2)
-    back = spark.read.json(str(out))
-    rows = {r.conv_id: r for r in back.collect()}
-    assert rows["a"].n_turns == 2
-    assert rows["a"].chatml.startswith("<|im_start|>user\nhi<|im_end|>")
 
 
 def test_random_corpus_cross_engine_parity(spark):

@@ -241,70 +241,6 @@ def test_warc_to_curated_corpus(spark, tmp_path):
     assert len(kept) == 1
 
 
-def test_streaming_warc_ingest(spark, tmp_path):
-    """File-source streaming over a crawl directory: the first
-    availableNow pass ingests the existing archives; an archive
-    landing later is picked up by the next pass WITHOUT reprocessing
-    the old ones (checkpointed file index = exactly-once per file);
-    the streamed record set equals the batch read."""
-    from pyspark.sql import functions as F
-
-    from html_parser_spark.spark.warc import (
-        read_warc_records, read_warc_records_stream,
-        write_warc_records,
-    )
-
-    crawl = tmp_path / "crawl"
-    ckpt = str(tmp_path / "ckpt")
-
-    def _drop(n0, n1, sub):
-        rows = [(f"https://e.org/doc/{i}", f"<urn:s:{i}>",
-                 b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                 b"\r\n<p>d%d</p>" % i)
-                for i in range(n0, n1)]
-        df = spark.createDataFrame(
-            rows, "target_uri string, record_id string, payload binary")
-        write_warc_records(df.coalesce(1), str(crawl / sub))
-        import shutil
-        for f in (crawl / sub).glob("*.warc.gz"):
-            shutil.move(str(f), str(crawl / f"{sub}.warc.gz"))
-        shutil.rmtree(crawl / sub)
-
-    crawl.mkdir()
-    _drop(0, 3, "seg0")
-    _drop(3, 5, "seg1")
-
-    stream = read_warc_records_stream(spark, str(crawl)) \
-        .select("record_id", "target_uri", F.length("payload")
-                .alias("n"))
-
-    out = str(tmp_path / "ingested")
-
-    def _run():
-        q = stream.writeStream.format("parquet") \
-            .option("path", out).option("checkpointLocation", ckpt) \
-            .outputMode("append").trigger(availableNow=True).start()
-        q.awaitTermination(120)
-
-    _run()
-    first = spark.read.parquet(out).collect()
-    assert sorted(r.record_id for r in first) == \
-        [f"<urn:s:{i}>" for i in range(5)]
-
-    _drop(5, 7, "seg2")                   # late-landing archive
-    _run()
-    second = spark.read.parquet(out) \
-        .groupBy("record_id").count().collect()
-    # old files NOT reprocessed (count stays 1), new ones ingested
-    assert sorted((r.record_id, r["count"]) for r in second) == \
-        [(f"<urn:s:{i}>", 1) for i in range(7)]
-
-    batch = read_warc_records(spark, str(crawl) + "/*.warc.gz") \
-        .select("record_id").collect()
-    assert sorted(r.record_id for r in batch) == \
-        [f"<urn:s:{i}>" for i in range(7)]
-
-
 def test_spark_roundtrip_and_kernel_ingest(spark, tmp_path):
     """End-to-end: documents -> distributed .warc.gz sink -> record
     read -> HTTP split -> raw-documents kernel parse, with the
