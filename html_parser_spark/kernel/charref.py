@@ -41,7 +41,6 @@ def _build_tables():
         if not key.endswith(";"):
             legacy.add(name)
         values.setdefault(name, val)
-    lengths = sorted({len(n) for n in values}, reverse=True)
     # candidate lengths bucketed by the entity's first character: for a
     # given '&X...' only lengths of names starting with X need probing
     by_first: dict = {}
@@ -50,12 +49,10 @@ def _build_tables():
     lengths_by_first = {
         c: tuple(sorted(ls, reverse=True)) for c, ls in by_first.items()
     }
-    return values, legacy, tuple(lengths), lengths_by_first
+    return values, legacy, lengths_by_first
 
 
-(ENTITY_VALUES, ENTITY_LEGACY, _ENTITY_LENGTHS,
- _LENGTHS_BY_FIRST) = _build_tables()
-_MAX_ENTITY_LEN = _ENTITY_LENGTHS[0]
+ENTITY_VALUES, ENTITY_LEGACY, _LENGTHS_BY_FIRST = _build_tables()
 _EMPTY: tuple = ()
 
 _ALNUM = frozenset(

@@ -46,9 +46,6 @@ PLAINTEXT = 6
 
 _WS = frozenset(" \n\t\f\r")
 _ALPHA = frozenset("ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz")
-_ATTR_NAME_OK = frozenset(
-    "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz-_:"
-)
 
 _RCDATA_TAGS = frozenset(("title", "textarea"))
 _RAWTEXT_TAGS = frozenset(("style", "xmp", "iframe", "noembed", "noframes"))

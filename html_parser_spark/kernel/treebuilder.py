@@ -172,7 +172,6 @@ _IN_BODY_SPECIAL = frozenset((
     "applet", "marquee", "object", "template", "form",
 )) | _HEADINGS
 _SELECT_CHILDREN = frozenset(("option", "optgroup"))
-_WS_ONLY = frozenset(" \n\t\r\f")
 _WS_STR = " \n\t\r\f"
 
 # quirks-mode public-id prefixes (determine_doc_mode, 1349-1448)

@@ -7,11 +7,18 @@ idempotently after failure."
 Local realization (no Iceberg catalog in this sandbox, same mechanics):
   - work is keyed by a PARTITION KEY column (e.g. bucket of conv_id);
   - each completed partition writes a manifest row
-    (part_key, turns, parse_errors, extracted_chars, status=done);
+    (part_key, turns, parse_errors, extracted_chars, conversations,
+    status=done), computed from a read-back of the written files. That
+    read-back lists its at most `buckets` part_key directories
+    serially on the driver (no Spark listing job), and `conversations`
+    counts the rows with turn_rank = 1 and a non-NULL conv_id (the
+    window already ranked each conversation), so the manifest
+    aggregate has one Exchange and no distinct count;
   - resume = a driver-side done-key filter: the manifest holds at most
     `buckets` keys, so they are read into a Python list and pending
     rows are kept with `NOT part_key IN (done)` ahead of the kernel —
-    no join, no shuffle of the raw input;
+    no join, no shuffle of the raw input; a missing manifest (a fresh
+    run) is found by a filesystem `exists` check, not a failed read;
   - the job's ONE exchange is aligned with the partition key: rows are
     hash-partitioned by part_key, and the turn_rank window runs over
     (part_key, conv_id) on that partitioning, so its sort also serves
@@ -49,7 +56,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -70,17 +76,17 @@ def manifest_path(checkpoint_dir: str) -> str:
 
 def done_keys(spark, checkpoint_dir: str) -> list[int]:
     """The part_keys the manifest marks done, sorted. A missing
-    manifest means nothing is done yet; any other read failure (a
-    corrupt or unreadable manifest) raises rather than silently
+    manifest means nothing is done yet: that is a filesystem `exists`
+    check, not a failed read. Any read failure of an existing manifest
+    (a corrupt or unreadable one) raises rather than silently
     re-running and re-marking every partition."""
-    try:
-        m = spark.read.schema("part_key int, status string").parquet(
-            manifest_path(checkpoint_dir))
-    except AnalysisException as e:
-        if e.getCondition() == "PATH_NOT_FOUND":
-            return []
-        raise
-    rows = (m.where(F.col("status") == "done")
+    path = manifest_path(checkpoint_dir)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if not jpath.getFileSystem(hadoop_conf).exists(jpath):
+        return []
+    rows = (spark.read.schema("part_key int, status string").parquet(path)
+            .where(F.col("status") == "done")
             .select("part_key").distinct().collect())
     return sorted(r.part_key for r in rows)
 
@@ -89,14 +95,18 @@ def write_manifest(extracted_with_key: DataFrame, spark,
                    checkpoint_dir: str) -> None:
     """Append per-partition metrics + done markers (lineage record).
     Reads the precomputed `n_chars` column so the metric scan never
-    has to materialize the (wide) extracted_text column."""
+    has to materialize the (wide) extracted_text column, and counts
+    conversations as rank-1 rows (`turn_rank` = 1 with a non-NULL
+    conv_id, what `countDistinct("conv_id")` would count) so the
+    aggregate needs one Exchange, not two."""
     metrics = (
         extracted_with_key.groupBy("part_key")
         .agg(
             F.count("*").alias("turns"),
             F.sum("parse_errors").alias("parse_errors"),
             F.sum("n_chars").alias("extracted_chars"),
-            F.countDistinct("conv_id").alias("conversations"),
+            F.count(F.when(F.col("turn_rank") == 1, F.col("conv_id")))
+            .alias("conversations"),
         )
         .withColumn("status", F.lit("done"))
     )
@@ -143,9 +153,18 @@ def run_with_checkpoint(spark, transcripts: DataFrame, out_dir: str,
     # at write time so extracted_text is never re-read). Never a full
     # scan of the cumulative output, and no second run of the kernel.
     # The schema is given, so a run that wrote nothing reads no rows.
-    written = spark.read.schema(
-        "conv_id string, parse_errors int, n_chars bigint, part_key int"
-    ).parquet(out_path)
+    # The read lists at most `buckets` part_key directories: the
+    # driver lists them serially rather than launching a listing job
+    # (only for this read; the session keeps its own threshold).
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, str(max(int(threshold), buckets)))
+    try:
+        written = spark.read.schema(
+            "conv_id string, turn_rank int, parse_errors int, "
+            "n_chars bigint, part_key int").parquet(out_path)
+    finally:
+        spark.conf.set(key, threshold)
     if done:
         written = written.where(~F.col("part_key").isin(done))
     write_manifest(written, spark, checkpoint_dir)

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from .udfs import EXTRACT_FIELDS, LINK_FIELDS, extract_row, links_row, map_rows
 
-TRANSCRIPT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 PASSTHROUGH = ["conv_id", "turn_idx", "role", "tool", "ts"]
 
 

@@ -21,8 +21,9 @@ from pyspark.sql import SparkSession
 
 # one SQL execution: its description (the action's call site, e.g.
 # "collect at ..."), the operator names of its final physical plan
-# (adaptive re-planning applied) and that plan as formatted text
-Execution = namedtuple("Execution", "description nodes plan")
+# (adaptive re-planning applied), that plan as formatted text and the
+# ids of the Spark jobs it ran
+Execution = namedtuple("Execution", "description nodes plan jobs")
 
 
 def get_spark(app_name: str = "html_parser_spark",
@@ -74,5 +75,9 @@ def recorded_executions(spark: SparkSession):
         names = []
         while nodes.hasNext():
             names.append(nodes.next().name().strip())
+        jobs = e.jobs().keys().iterator()
+        job_ids = set()
+        while jobs.hasNext():
+            job_ids.add(jobs.next())
         out.append(Execution(e.description(), names,
-                             e.physicalPlanDescription()))
+                             e.physicalPlanDescription(), job_ids))

@@ -102,8 +102,8 @@ _TOOLS = ["search", "python", "browser", "calculator"]
 
 
 def generate_rows(n_turns: int, seed: int = 42, include_fixtures: bool = True):
-    """Yield transcript rows as tuples matching TRANSCRIPT_COLS order
-    (conv_id, turn_idx, role, text, tool, ts). Deterministic."""
+    """Yield transcript rows as (conv_id, turn_idx, role, text, tool,
+    ts) tuples, the transcripts table's column order. Deterministic."""
     rng = random.Random(seed)
     n_golden = _N_GOLDEN_ROWS if include_fixtures else 0
 

@@ -295,6 +295,56 @@ def test_checkpoint_write_plan_one_shuffle(spark, tmp_path):
     assert "hashpartitioning(part_key" in writes[0].plan
 
 
+def test_checkpoint_manifest_counts_null_conv_ids_as_countdistinct(
+        spark, tmp_path):
+    """Turns with a NULL conv_id share one part_key and one rank
+    sequence; the manifest's rank-1 conversation count must still
+    equal countDistinct over the output, which counts them as 0."""
+    from html_parser_spark.spark.checkpoint import run_with_checkpoint
+
+    df = _checkpoint_input(spark, tmp_path)
+    nulls = df.limit(12).withColumn("conv_id", F.lit(None).cast("string"))
+    inp = str(tmp_path / "with_nulls")
+    df.unionByName(nulls).write.parquet(inp)
+    ckpt = str(tmp_path / "ckpt")
+    path = run_with_checkpoint(spark, spark.read.parquet(inp),
+                               str(tmp_path / "out"), ckpt, buckets=8)
+    out = spark.read.parquet(path)
+    assert out.where(F.col("conv_id").isNull()).count() == 12
+    assert _manifest(spark, ckpt) == _metrics_of(out)
+
+
+def test_checkpoint_fresh_run_two_executions_no_listing_job(
+        spark, tmp_path):
+    """At buckets=64 the read-back covers more part_key directories
+    than Spark's parallel-listing threshold (32): the run still starts
+    no job outside its two SQL executions (the window write and the
+    manifest aggregate), the manifest aggregate shuffles once, and the
+    session's threshold is unchanged afterwards."""
+    from html_parser_spark.spark.checkpoint import run_with_checkpoint
+    from html_parser_spark.spark.session import recorded_executions
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    threshold = spark.conf.get(key)
+    # one conversation per turn, so that 200 turns fill most buckets
+    df = _checkpoint_input(spark, tmp_path).withColumn(
+        "conv_id", F.concat_ws("/", "conv_id", "turn_idx"))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    with recorded_executions(spark) as execs:
+        path = run_with_checkpoint(spark, df, str(tmp_path / "out"),
+                                   str(tmp_path / "ckpt"), buckets=64)
+    started = set(tracker.getJobIdsForGroup()) - before
+    assert len(_part_files(path)) > int(threshold)
+    assert len(execs) == 2, [e.nodes for e in execs]
+    assert started == execs[0].jobs | execs[1].jobs
+    assert "Window" in execs[0].nodes
+    manifest = execs[1].nodes
+    assert "HashAggregate" in manifest and "Window" not in manifest
+    assert manifest.count("Exchange") == 1, manifest
+    assert spark.conf.get(key) == threshold
+
+
 def test_exact_dedup_groups(spark):
     from html_parser_spark.spark.ops import exact_dedup
 
@@ -2878,6 +2928,43 @@ def test_sft_prep_job_body_end_to_end(spark, tmp_path):
     part = lambda f: f.split("-")[1]
     assert {k: part(v[0]) for k, v in a.items()} == {
         k: part(v[0]) for k, v in b.items()}
+
+
+def test_sft_prep_job_main_jsonl(spark, tmp_path, monkeypatch, capsys):
+    """jobs/sft_prep_job.py main() with --format jsonl, the only JSONL
+    writer: one JSON object per line, every conversation in exactly
+    one shard, rows equal to sft_corpus over the same input."""
+    import glob
+    import json
+
+    from html_parser_spark.spark.pipeline import extract_turns, sft_corpus
+    from html_parser_spark.spark.transcripts import (
+        write_transcripts_parquet,
+    )
+    from jobs import sft_prep_job
+
+    inp = str(tmp_path / "in")
+    write_transcripts_parquet(spark, inp, 300, seed=42, partitions=4)
+    out = str(tmp_path / "out")
+    # the job stops the session it gets, which here is the shared one
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    assert sft_prep_job.main(["--input", inp, "--output", out,
+                              "--shards", "4", "--format", "jsonl"]) == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    shards = sorted(glob.glob(os.path.join(out, "part-*.json")))
+    assert 0 < len(shards) <= 4
+    got = {}
+    for shard in shards:
+        with open(shard, encoding="utf-8") as f:
+            for line in f:
+                row = json.loads(line)
+                assert row["conv_id"] not in got
+                got[row["conv_id"]] = row
+    want = {r.conv_id: r.asDict() for r in sft_corpus(
+        extract_turns(spark.read.parquet(inp), ordered=False)).collect()}
+    assert got == want and len(got) > 0
+    assert report["conversations"] == len(got)
 
 
 def test_hll_registers_merge_associatively(spark):

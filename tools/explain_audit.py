@@ -8,8 +8,9 @@ queries and assert the plan properties that matter at 100 TB:
   - extraction is one scan and one Arrow kernel (with its internal
     '<'-free fast path): exactly one MapInArrow, no Union
   - the checkpointed write shuffles once, by part_key, with no join
-    and no sort above its window, and collects nothing to the driver
-    (checked on the executed plan of a real run)
+    and no sort above its window, collects nothing to the driver, and
+    its manifest aggregate shuffles once (checked on the executed
+    plans of a real run)
   - the ANN searches run one ArrowEvalPython per fold-kernel call
     site and fold over no literal centroid/codebook arrays
 Writes PLANS.md with the annotated plans.
@@ -99,6 +100,8 @@ def main():
         shutil.rmtree(ckpt_dir, ignore_errors=True)
     writes = [e for e in execs if "Window" in e.nodes]
     nodes = writes[0].nodes if len(writes) == 1 else []
+    manifests = [e for e in execs
+                 if "HashAggregate" in e.nodes and "Window" not in e.nodes]
     audit("run_with_checkpoint (part_key-aligned write)",
           writes[0].plan if writes else "", [
         ("one write execution runs the window",
@@ -112,6 +115,9 @@ def main():
         ("no collect job in the run",
          lambda p: not any(e.description.startswith("collect")
                            for e in execs)),
+        ("manifest aggregate shuffles once (no distinct-count Exchange)",
+         lambda p: len(manifests) == 1
+         and manifests[0].nodes.count("Exchange") == 1),
     ])
 
     qs = se.queries()

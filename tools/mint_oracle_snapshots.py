@@ -24,10 +24,18 @@ reproduce the file bytes, and for some queries (minhash_lsh, simhash)
 not the row order either. Re-run this tool after intentionally
 changing any of these operators or the transcripts generator, and
 commit only the fixtures whose rows changed.
+
+Usage:
+  python3 tools/mint_oracle_snapshots.py             # all 13 fixtures
+  python3 tools/mint_oracle_snapshots.py turns_2000 snapshot_simhash
+
+Named fixtures (file names without `.parquet`) are the only ones
+rewritten, so a re-base can mint just those whose rows it changes.
 """
 
 from __future__ import annotations
 
+import argparse
 import glob
 import os
 import shutil
@@ -67,38 +75,49 @@ def write_single_parquet(df, dest: str) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def main() -> int:
+FIXTURE_NAMES = ["turns_2000", "links_2000"] + [
+    f"snapshot_{name}" for name in SNAPSHOT_QUERIES]
+
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("fixtures", nargs="*", metavar="fixture",
+                    help="fixtures to mint (default: all); one of "
+                         + ", ".join(FIXTURE_NAMES))
+    args = ap.parse_args(argv)
+    unknown = sorted(set(args.fixtures) - set(FIXTURE_NAMES))
+    if unknown:
+        ap.error(f"unknown fixture(s): {', '.join(unknown)}")
+
     import __spark_entry__ as se
-    from html_parser_spark.spark.pipeline import extract_turns
+    from html_parser_spark.spark.pipeline import extract_links, extract_turns
     from html_parser_spark.spark.session import get_spark
     from html_parser_spark.spark.transcripts import transcripts_df
 
     spark = get_spark("mint-snapshots")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # 1. the turns table conversation_stats aggregates over
-    turns = extract_turns(
-        transcripts_df(spark, 2000, seed=42, partitions=8), ordered=False
-    ).select("conv_id", "turn_idx", "role", "tool", "extracted_text", "parse_errors")
-    dest = os.path.join(FIXTURES, "turns_2000.parquet")
-    write_single_parquet(turns, dest)
-    print(f"minted {dest}")
-
-    # 1b. the links table link_stats aggregates over (same pattern:
-    # extraction is golden-gated, the rollup SQL re-derives)
-    from html_parser_spark.spark.pipeline import extract_links
-    links = extract_links(
-        transcripts_df(spark, 2000, seed=42, partitions=8))
-    dest = os.path.join(FIXTURES, "links_2000.parquet")
-    write_single_parquet(links, dest)
-    print(f"minted {dest}")
-
+    # 1. the turns table conversation_stats aggregates over, and the
+    # links table link_stats aggregates over (extraction is
+    # golden-gated, the rollup SQL re-derives)
+    frames = {
+        "turns_2000": lambda: extract_turns(
+            transcripts_df(spark, 2000, seed=42, partitions=8),
+            ordered=False,
+        ).select("conv_id", "turn_idx", "role", "tool", "extracted_text",
+                 "parse_errors"),
+        "links_2000": lambda: extract_links(
+            transcripts_df(spark, 2000, seed=42, partitions=8)),
+    }
     # 2. full-output regression pins
     qs = se.queries()
     for name in SNAPSHOT_QUERIES:
-        df = qs[name](spark, SF_DIR)
-        dest = os.path.join(FIXTURES, f"snapshot_{name}.parquet")
-        write_single_parquet(df, dest)
+        frames[f"snapshot_{name}"] = (
+            lambda q=qs[name]: q(spark, SF_DIR))
+
+    for name in args.fixtures or FIXTURE_NAMES:
+        dest = os.path.join(FIXTURES, f"{name}.parquet")
+        write_single_parquet(frames[name](), dest)
         n = spark.read.parquet(dest).count()
         print(f"minted {dest} ({n} rows)")
     spark.stop()
