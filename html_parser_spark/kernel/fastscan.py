@@ -8,22 +8,22 @@ None and the caller uses the pure-Python tokenizer.  See the C file's
 header comment for the exact subset contract.
 
 Build strategy (no Cython/mypyc in this environment; plain cc + the
-CPython headers suffice): compile on first use into a content-hashed
-cache under /tmp, loaded via importlib from the explicit path.  The
-build is atomic (compile to a unique temp name, os.replace), so
-concurrent Spark workers race safely: first one in wins, the rest see
-the finished .so.  Any failure (no compiler, bad flags) degrades to
-None and the pure-Python path runs — behavior is identical either way,
-only speed differs.
+CPython headers suffice): compile on first use into the package's
+content-hashed build cache (html_parser_spark/buildcache.py), loaded
+via importlib from the explicit path.  Concurrent Spark workers race
+safely on the atomic build.  Any failure (no compiler, bad flags)
+degrades to None and the pure-Python path runs — behavior is identical
+either way, only speed differs.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import subprocess
 import sys
 import sysconfig
+
+from ..buildcache import cached_build
 
 _mod = None
 _tried = False
@@ -34,61 +34,24 @@ def _source_path() -> str:
                         "_fastscan.c")
 
 
-def _cache_dir() -> str | None:
-    """Per-user 0700 cache dir. A predictable world-writable /tmp path
-    would let any local user pre-plant a .so that we'd dlopen (review
-    finding) — so the cache lives in a directory OWNED by us with mode
-    0700, verified by lstat after creation; anything off disables the
-    accelerator rather than loading from it."""
-    import stat
-    import tempfile
-
-    d = os.path.join(tempfile.gettempdir(),
-                     f"hp_fastscan_u{os.getuid()}")
-    try:
-        os.makedirs(d, mode=0o700, exist_ok=True)
-        st = os.lstat(d)
-        if (not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid()
-                or (st.st_mode & 0o077)):
-            return None
-    except OSError:
-        return None
-    return d
-
-
 def _build(src: str) -> str | None:
-    """Compile the extension into the user cache keyed by source hash;
-    atomic."""
+    """Compile the extension into the build cache, keyed by the source
+    bytes."""
     try:
         with open(src, "rb") as f:
-            digest = hashlib.sha256(f.read()).hexdigest()[:16]
+            key = f.read()
     except OSError:
         return None
-    cache = _cache_dir()
-    if cache is None:
-        return None
-    tag = f"hp_fastscan_{sys.version_info.major}{sys.version_info.minor}"
-    out = os.path.join(cache, f"{tag}_{digest}.so")
-    if os.path.exists(out):
-        return out
     include = sysconfig.get_paths()["include"]
-    tmp_out = f"{out}.build.{os.getpid()}"
-    cmd = ["cc", "-O2", "-fPIC", "-shared", "-std=c11",
-           f"-I{include}", src, "-o", tmp_out]
-    try:
-        proc = subprocess.run(cmd, capture_output=True, timeout=120)
-        if proc.returncode != 0:
-            return None
-        os.replace(tmp_out, out)  # atomic: racing builders converge
-        return out
-    except Exception:
-        return None
-    finally:
-        try:
-            if os.path.exists(tmp_out):
-                os.unlink(tmp_out)
-        except OSError:
-            pass
+
+    def compile_to(tmp_out: str) -> bool:
+        cmd = ["cc", "-O2", "-fPIC", "-shared", "-std=c11",
+               f"-I{include}", src, "-o", tmp_out]
+        return subprocess.run(cmd, capture_output=True,
+                              timeout=120).returncode == 0
+
+    tag = f"hp_fastscan_{sys.version_info.major}{sys.version_info.minor}"
+    return cached_build(tag, ".so", key, compile_to)
 
 
 def _load():

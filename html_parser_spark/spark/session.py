@@ -9,21 +9,71 @@ Settings rationale (SURVEY.md §4.2, pyspark_guide):
     ~2k rows bounds Python-side memory for mega-documents.
   - shuffle.partitions default sized for local[32]; at cluster scale
     AQE coalesces, and callers override via env.
+  - file:// writes chmod inside the JVM: without libhadoop, Hadoop's
+    local file system forks a `chmod` for every file, `.crc` file and
+    directory it creates (about 200 per checkpointed chat job run).
+    InProcessChmodLocalFileSystem.java sets the same bits through
+    java.nio and keeps the checksums. Only when this call launches the
+    JVM with a local[...] master and `javac` can build the jar: on a
+    cluster the tables live on the cluster's file system and the
+    executors would not have the class.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 from collections import namedtuple
 from contextlib import contextmanager
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from ..buildcache import cached_build
 
 # one SQL execution: its description (the action's call site, e.g.
 # "collect at ..."), the operator names of its final physical plan
 # (adaptive re-planning applied), that plan as formatted text and the
 # ids of the Spark jobs it ran
 Execution = namedtuple("Execution", "description nodes plan jobs")
+
+
+LOCAL_FS_CLASS = "html_parser_spark.spark.InProcessChmodLocalFileSystem"
+_LOCAL_FS_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                "InProcessChmodLocalFileSystem.java")
+
+
+def local_fs_jar() -> str | None:
+    """The jar of LOCAL_FS_CLASS, compiled with `javac` against the
+    Hadoop client API that Spark ships and cached by the hash of the
+    source and that jar's name; None without `javac` or that jar."""
+    javac = shutil.which("javac")
+    hadoop = sorted(glob.glob(os.path.join(
+        _find_spark_home(), "jars", "hadoop-client-api-*.jar")))
+    if javac is None or not hadoop:
+        return None
+    with open(_LOCAL_FS_SOURCE, "rb") as f:
+        key = f.read() + b"\0" + os.path.basename(hadoop[-1]).encode()
+
+    def compile_to(tmp_jar: str) -> bool:
+        with tempfile.TemporaryDirectory() as classes:
+            if subprocess.run(
+                    [javac, "--release", "17", "-cp", hadoop[-1],
+                     "-d", classes, _LOCAL_FS_SOURCE],
+                    capture_output=True, timeout=120).returncode != 0:
+                return False
+            with zipfile.ZipFile(tmp_jar, "w") as jar:
+                for path in sorted(glob.glob(os.path.join(
+                        classes, "**", "*.class"), recursive=True)):
+                    jar.write(path, os.path.relpath(path, classes))
+        return True
+
+    return cached_build("hp_localfs", ".jar", key, compile_to)
 
 
 def get_spark(app_name: str = "html_parser_spark",
@@ -50,6 +100,14 @@ def get_spark(app_name: str = "html_parser_spark",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
+    # the class path is fixed when the JVM starts: only a session that
+    # launches it can add the jar
+    if SparkContext._gateway is None and master.split("[")[0] == "local":
+        jar = local_fs_jar()
+        if jar is not None:
+            builder = (builder
+                       .config("spark.driver.extraClassPath", jar)
+                       .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS))
     return builder.getOrCreate()
 
 

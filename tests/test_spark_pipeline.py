@@ -345,6 +345,116 @@ def test_checkpoint_fresh_run_two_executions_no_listing_job(
     assert spark.conf.get(key) == threshold
 
 
+def _local_fs(spark):
+    jvm = spark._jvm
+    return jvm.org.apache.hadoop.fs.FileSystem.get(
+        jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration())
+
+
+def test_session_local_fs_chmods_in_jvm(spark):
+    """The local-master session resolves file:// to the in-JVM chmod
+    file system over its own raw layer. `javac` is present wherever
+    these tests run, so a jar that fails to build fails here rather
+    than falling back to Hadoop's forking one."""
+    from html_parser_spark.spark.session import LOCAL_FS_CLASS
+
+    fs = _local_fs(spark)
+    assert fs.getClass().getName() == LOCAL_FS_CLASS
+    assert fs.getRaw().getClass().getName() == LOCAL_FS_CLASS + "$Raw"
+
+
+def test_checkpoint_write_modes_and_checksums(spark, tmp_path):
+    """Every file and directory the checkpointed job creates gets
+    Hadoop's default mode under the configured umask, and every file
+    has its `.crc` checksum sibling."""
+    import stat
+
+    from html_parser_spark.spark.checkpoint import run_with_checkpoint
+
+    perm = spark._jvm.org.apache.hadoop.fs.permission.FsPermission
+    umask = perm.getUMask(spark._jsc.hadoopConfiguration())
+    file_mode = perm.getFileDefault().applyUMask(umask).toShort()
+    dir_mode = perm.getDirDefault().applyUMask(umask).toShort()
+    run_with_checkpoint(spark, _checkpoint_input(spark, tmp_path),
+                        str(tmp_path / "out"), str(tmp_path / "ckpt"),
+                        buckets=8)
+    n_data = 0
+    for top in ("out", "ckpt"):
+        for root, dirs, files in os.walk(tmp_path / top):
+            assert stat.S_IMODE(os.stat(root).st_mode) == dir_mode, root
+            for name in files:
+                path = os.path.join(root, name)
+                assert stat.S_IMODE(os.stat(path).st_mode) == file_mode, path
+                if not name.startswith("."):
+                    assert f".{name}.crc" in files, path
+                    n_data += name.endswith(".parquet")
+    assert n_data >= 9  # 8 part_key files and the manifest
+
+
+def test_local_fs_set_permission(spark, tmp_path):
+    """Direct setPermission calls: rwx modes are set in the JVM, a
+    sticky-bit mode through Hadoop's own path; os.stat sees each."""
+    import stat
+
+    jvm = spark._jvm
+    fs = _local_fs(spark)
+    for mode in (0o600, 0o750, 0o000):
+        path = tmp_path / f"f{mode:o}"
+        path.write_bytes(b"x")
+        fs.setPermission(jvm.org.apache.hadoop.fs.Path(str(path)),
+                         jvm.org.apache.hadoop.fs.permission.FsPermission(
+                             f"{mode:03o}"))
+        assert stat.S_IMODE(os.stat(path).st_mode) == mode, oct(mode)
+    sticky = tmp_path / "sticky"
+    sticky.mkdir()
+    fs.setPermission(jvm.org.apache.hadoop.fs.Path(str(sticky)),
+                     jvm.org.apache.hadoop.fs.permission.FsPermission("1777"))
+    assert stat.S_IMODE(os.stat(sticky).st_mode) == 0o1777
+
+
+def test_local_fs_needs_javac_and_local_master(monkeypatch, tmp_path):
+    """Spark-free: without `javac` no jar is built and get_spark sets
+    neither config; with a jar, only a local master gets them."""
+    from types import SimpleNamespace
+
+    from html_parser_spark.spark import session
+
+    class Builder:
+        def __init__(self):
+            self.confs = {}
+
+        def appName(self, _name):
+            return self
+
+        def master(self, master):
+            return self.config("master", master)
+
+        def config(self, key, value):
+            self.confs[key] = value
+            return self
+
+        def getOrCreate(self):
+            return self.confs
+
+    def confs(master):
+        monkeypatch.setattr(session, "SparkSession",
+                            SimpleNamespace(builder=Builder()))
+        return session.get_spark(master=master)
+
+    keys = {"spark.driver.extraClassPath", "spark.hadoop.fs.file.impl"}
+    monkeypatch.setattr(session, "SparkContext",
+                        SimpleNamespace(_gateway=None))
+    monkeypatch.setenv("PATH", str(tmp_path))
+    assert session.local_fs_jar() is None
+    assert not keys & set(confs("local[2]"))
+    monkeypatch.setattr(session, "local_fs_jar", lambda: "/x.jar")
+    got = confs("local[2]")
+    assert got["spark.driver.extraClassPath"] == "/x.jar"
+    assert got["spark.hadoop.fs.file.impl"] == session.LOCAL_FS_CLASS
+    assert not keys & set(confs("spark://host:7077"))
+    assert not keys & set(confs("local-cluster[2,1,1024]"))
+
+
 def test_exact_dedup_groups(spark):
     from html_parser_spark.spark.ops import exact_dedup
 

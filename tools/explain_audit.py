@@ -49,6 +49,16 @@ def plan_of(df) -> str:
 
 
 def main():
+    # the audit's own tables live in a directory this run creates and
+    # deletes, so no earlier run (or other user) can supply them
+    work = tempfile.mkdtemp(prefix="explain_audit_")
+    try:
+        return _audit(work)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _audit(work: str):
     import __spark_entry__ as se
     from html_parser_spark.spark.checkpoint import run_with_checkpoint
     from html_parser_spark.spark.pipeline import extract_turns
@@ -71,9 +81,8 @@ def main():
 
     # 1. extraction pipeline
     tdf = transcripts_df(spark, 500, seed=42, partitions=4)
-    tpath = "/tmp/spark_graft_bench/audit_transcripts"
-    if not os.path.exists(os.path.join(tpath, "_SUCCESS")):
-        tdf.write.mode("overwrite").parquet(tpath)
+    tpath = os.path.join(work, "transcripts")
+    tdf.write.parquet(tpath)
     tp = spark.read.parquet(tpath)
     ext = extract_turns(tp, ordered=True)
     audit("extract_turns (single-scan default)", ext, [
@@ -91,13 +100,9 @@ def main():
 
     # executed, not explained: the writer's sort requirement and the
     # adaptive re-planning only show in the plan of a real run
-    ckpt_dir = tempfile.mkdtemp(prefix="explain_audit_ckpt")
-    try:
-        with recorded_executions(spark) as execs:
-            run_with_checkpoint(spark, tp, os.path.join(ckpt_dir, "out"),
-                                os.path.join(ckpt_dir, "ckpt"), buckets=8)
-    finally:
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
+    with recorded_executions(spark) as execs:
+        run_with_checkpoint(spark, tp, os.path.join(work, "out"),
+                            os.path.join(work, "ckpt"), buckets=8)
     writes = [e for e in execs if "Window" in e.nodes]
     nodes = writes[0].nodes if len(writes) == 1 else []
     manifests = [e for e in execs
