@@ -443,10 +443,10 @@ def _q_warc_roundtrip(spark, sf_dir):
         )
         write_warc_records(src, out_dir)
         open(marker, "w").close()
-    # the directory with a file-name filter, not a glob: zero documents
-    # write no archive, and a glob that matches nothing fails the read
-    responses = warc_http_responses(
-        read_warc_records(spark, out_dir, path_glob="*.warc.gz"))
+    # the directory, not a glob: zero documents write no archive, and a
+    # glob that matches nothing fails the read (the `_BUILT_` marker is
+    # skipped as a hidden file)
+    responses = warc_http_responses(read_warc_records(spark, out_dir))
     return responses.select(
         F.regexp_extract("target_uri", r"/doc/(\d+)$", 1)
         .cast("bigint").alias("doc_id"),

@@ -101,8 +101,11 @@ def get_spark(app_name: str = "html_parser_spark",
         .config("spark.ui.enabled", "false")
     )
     # the class path is fixed when the JVM starts: only a session that
-    # launches it can add the jar
-    if SparkContext._gateway is None and master.split("[")[0] == "local":
+    # launches it can add the jar. Under spark-submit the JVM is already
+    # up (PYSPARK_GATEWAY_PORT names it) before any gateway is set here
+    launches_jvm = (SparkContext._gateway is None
+                    and "PYSPARK_GATEWAY_PORT" not in os.environ)
+    if launches_jvm and master.split("[")[0] == "local":
         jar = local_fs_jar()
         if jar is not None:
             builder = (builder

@@ -292,8 +292,7 @@ def _records_row(errors: str):
     return _row
 
 
-def read_warc_records(spark, path, errors: str = "strict",
-                      path_glob: str | None = None):
+def read_warc_records(spark, path, errors: str = "strict"):
     """WARC files -> one row per record.  binaryFile gives one task
     per file (Common Crawl parallelism is file-count, tens of
     thousands); record parsing runs in executors in one Arrow row
@@ -305,17 +304,10 @@ def read_warc_records(spark, path, errors: str = "strict",
     errors="skip" keeps a damaged archive from failing the job: the
     file's records before the damage are kept, the rest abandoned
     (compare per-path record counts against the crawl manifest to
-    quarantine).
-
-    path_glob keeps the files whose names match it (Spark's
-    `pathGlobFilter`): a directory read that way with no matching file
-    gives zero records, where a path glob that matches nothing fails."""
+    quarantine)."""
     if errors not in ("strict", "skip"):
         raise ValueError("errors must be 'strict' or 'skip'")
-    reader = spark.read.format("binaryFile")
-    if path_glob is not None:
-        reader = reader.option("pathGlobFilter", path_glob)
-    files = reader.load(path)
+    files = spark.read.format("binaryFile").load(path)
     return map_rows(files, ["content"], ["path"], RECORD_FIELDS,
                     _records_row(errors))
 

@@ -444,6 +444,7 @@ def test_local_fs_needs_javac_and_local_master(monkeypatch, tmp_path):
     keys = {"spark.driver.extraClassPath", "spark.hadoop.fs.file.impl"}
     monkeypatch.setattr(session, "SparkContext",
                         SimpleNamespace(_gateway=None))
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
     monkeypatch.setenv("PATH", str(tmp_path))
     assert session.local_fs_jar() is None
     assert not keys & set(confs("local[2]"))
@@ -453,6 +454,9 @@ def test_local_fs_needs_javac_and_local_master(monkeypatch, tmp_path):
     assert got["spark.hadoop.fs.file.impl"] == session.LOCAL_FS_CLASS
     assert not keys & set(confs("spark://host:7077"))
     assert not keys & set(confs("local-cluster[2,1,1024]"))
+    # a driver under spark-submit: the JVM, and its class path, exist
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "12345")
+    assert not keys & set(confs("local[2]"))
 
 
 def test_exact_dedup_groups(spark):
