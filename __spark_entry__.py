@@ -15,9 +15,12 @@ oracle_sql()   — a DuckDB oracle for EVERY query: real ANSI-SQL
                  equal); a materialized-turns GROUP BY for the
                  conversation rollup; pinned deterministic snapshots
                  (tools/mint_oracle_snapshots.py) for the seeded-hash
-                 and kernel-surface queries, whose byte-level gates
-                 are tests/ (3,883 golden cases + differential fuzz
-                 vs the reference binaries, incl. parse-error TEXTS).
+                 and kernel-surface queries, whose byte-level gate
+                 is tests/test_goldens.py: 3,883 golden cases minted
+                 from the reference binaries, incl. parse-error
+                 TEXTS; the 18 that embed their input run from the
+                 repository, the rest skip without the reference
+                 tree.
 """
 
 from __future__ import annotations
@@ -2038,8 +2041,9 @@ def oracle_sql() -> dict[str, str]:
         # construction; generated for the same (width=256, depth=4,
         # salt='cms7') the operator defaults to
         "cms_top_terms": _CMS_ORACLE,
-        # generated for the operator's (m_bits, k_hashes, salt) — the
-        # same md5 position arithmetic in both engines
+        # generated for the operator's 65,536 bits, 3 hash rows and
+        # salt 'bloom7' — the same md5 position arithmetic in both
+        # engines
         "bloom_decontaminate": _BLOOM_ORACLE,
         # arithmetic mirrored operation-for-operation: int add ->
         # double cast -> divide -> ln -> divide -> round(6)
@@ -3408,8 +3412,9 @@ def oracle_sql() -> dict[str, str]:
         #   ann_lsh/ann_ivf: recall + exact-cosine agreement vs
         #     ann_bruteforce on planted clusters; full-probe IVF must
         #     EQUAL bruteforce rank-for-rank
-        #   extract_/dump_/raw_encoding: byte-gated against the
-        #     reference binaries (goldens + differential fuzzing)
+        #   extract_/dump_/raw_encoding: byte-gated by the goldens
+        #     minted from the reference binaries (18 embedded cases
+        #     run here; the rest need the reference tree)
         #   media_features: codec roundtrip property tests (hypothesis)
         "extract_transcripts": _snap(
             "extract_transcripts",

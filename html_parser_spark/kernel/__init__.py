@@ -3,7 +3,7 @@
 High-level API (mirrors the reference's three public build entry
 points, include/tree_builder.h:7-14):
   parse_document(raw_bytes_or_text, charset_hint=None) -> ParseResult
-  parse_fragment(text, context_tag, encoding=..., confidence=...) -> ParseResult
+  parse_fragment(raw_bytes_or_text, context_tag) -> ParseResult
   build_document_from_tokens(tokens) -> (doc, errors)   # pre-tokenized
   tokenize_all(text) -> list[Token]                     # its input side
 """

@@ -18,14 +18,13 @@ from .tree import dump_ascii, serialize_html
 
 
 class ParseResult:
-    __slots__ = ("doc", "encoding", "confidence", "errors", "input_text")
+    __slots__ = ("doc", "encoding", "confidence", "errors")
 
-    def __init__(self, doc, encoding_name, confidence, errors, input_text):
+    def __init__(self, doc, encoding_name, confidence, errors):
         self.doc = doc
         self.encoding = encoding_name
         self.confidence = confidence
         self.errors = errors
-        self.input_text = input_text
 
     def dump(self, title=None):
         return dump_ascii(self.doc, title)
@@ -91,24 +90,22 @@ def parse_document(raw, charset_hint=None) -> ParseResult:
             errors=errors,
             want_change_encoding=False,
         )
-        return ParseResult(doc, result2.encoding, enc.CONF_CERTAIN, errors,
-                           input_text)
+        return ParseResult(doc, result2.encoding, enc.CONF_CERTAIN, errors)
 
-    return ParseResult(doc, result.encoding, result.confidence, errors,
-                       input_text)
+    return ParseResult(doc, result.encoding, result.confidence, errors)
 
 
-def parse_fragment(raw, context_tag, charset_hint=None) -> ParseResult:
-    """Fragment (innerHTML) parse — the natural mode for transcript turns."""
+def parse_fragment(raw, context_tag) -> ParseResult:
+    """Fragment (innerHTML) parse in `context_tag` — the natural mode
+    for transcript turns. Bytes are sniffed with no transport hint,
+    as the reference fragment driver takes none; str is UTF-8 text."""
     if isinstance(raw, str):
         result = enc.EncodingResult(raw, "UTF-8", enc.CONF_TENTATIVE)
     else:
-        result = enc.sniff_and_convert(raw, charset_hint)
+        result = enc.sniff_and_convert(raw)
     errors: list = []
-    input_text = replace_nulls(result.text, errors)
     doc, _ = build_fragment(
-        input_text, context_tag, result.encoding, result.confidence,
-        errors=errors,
+        replace_nulls(result.text, errors), context_tag, result.encoding,
+        result.confidence, errors=errors,
     )
-    return ParseResult(doc, result.encoding, result.confidence, errors,
-                       input_text)
+    return ParseResult(doc, result.encoding, result.confidence, errors)

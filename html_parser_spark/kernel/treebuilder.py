@@ -2577,13 +2577,13 @@ class _TokenFeed:
         return t
 
 
-def tokenize_all(input_text, errors=None):
+def tokenize_all(input_text):
     """Standalone tokenization to a flat token list (the input side of
     build_tree_from_tokens; mirrors driving tokenizer_next in a loop
     with no tree builder attached — allow_cdata stays 0, but the
     tokenizer's own raw-state self-switching at tag-emit still
     applies). Includes the trailing EOF token like the C array form."""
-    tz = Tokenizer(input_text, errors=errors)
+    tz = Tokenizer(input_text)
     out = []
     while True:
         t = tz.next()
@@ -2592,7 +2592,7 @@ def tokenize_all(input_text, errors=None):
             return out
 
 
-def build_document_from_tokens(tokens, errors=None):
+def build_document_from_tokens(tokens):
     """build_tree_from_tokens (include/tree_builder.h:8, impl
     src/tree_builder.c:1978-2925): build a DOCUMENT from a pre-made
     token array. No encoding is stamped on the document and no
@@ -2602,7 +2602,7 @@ def build_document_from_tokens(tokens, errors=None):
     the full parser holds exactly when those paths don't trigger,
     the same caveat the reference's API carries. Returns
     (doc, errors)."""
-    tb = TreeBuilder(None, 2, errors)
+    tb = TreeBuilder()
     tb.want_change_encoding = False
     tb.from_tokens = True
     tb.tz = _TokenFeed(list(tokens), tb.errors)

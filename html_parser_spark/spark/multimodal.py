@@ -26,7 +26,7 @@ forbidden, so everything here is PURE STDLIB):
     PCM).
   - video/mp4 : container demux is REAL — box parsing (`mp4_probe`:
     mvhd duration, tkhd dims, v0/v1/largesize) AND the per-trak
-    sample table (`mp4_samples`: stts/stsc/stsz/stco -> absolute
+    sample table (`mp4_video_stream`: stts/stsc/stsz/stco -> absolute
     per-sample byte ranges + timestamps), so `sample_frames` emits
     the ACTUAL sample bytes nearest each grid point. PIXEL decode is
     REAL for the 'raw ' codec (uncompressed RGB24/gray8 samples,
@@ -384,7 +384,7 @@ def _noise(seed_key: str, n: int) -> bytes:
     return bytes(out[:n])
 
 
-def synth_media_df(spark, n: int = 64, seed: int = 42) -> DataFrame:
+def synth_media_df(spark, n: int = 64) -> DataFrame:
     """Deterministic synthetic media table with REAL encoded payloads
     for image (PNG) and audio (WAV); video stays an opaque seeded blob
     behind the documented codec stub."""
@@ -397,21 +397,21 @@ def synth_media_df(spark, n: int = 64, seed: int = 42) -> DataFrame:
             h = 12 + (i % 4) * 6
             if i % 12 == 0:
                 # every 4th image is a real GIF (16-color palette)
-                pal = _noise(f"{seed}:pal:{i}", 48)
-                idx = bytes(b % 16 for b in _noise(f"{seed}:gif:{i}",
+                pal = _noise(f"42:pal:{i}", 48)
+                idx = bytes(b % 16 for b in _noise(f"42:gif:{i}",
                                                    w * h))
                 payload = gif_encode(w, h, idx, pal)
                 fmt = "gif"
             else:
                 payload = png_encode(
-                    w, h, _noise(f"{seed}:img:{i}", w * h * 3))
+                    w, h, _noise(f"42:img:{i}", w * h * 3))
                 fmt = "png"
             meta = {"format": fmt, "width": w, "height": h,
                     "duration_ms": None, "sample_rate": None}
         elif kind == "audio":
             ns = 400 + (i % 5) * 100
             pcm = struct.unpack(
-                f"<{ns}h", _noise(f"{seed}:pcm:{i}", ns * 2))
+                f"<{ns}h", _noise(f"42:pcm:{i}", ns * 2))
             payload = wav_encode(list(pcm), 16000)
             meta = {"format": "wav", "width": None, "height": None,
                     "duration_ms": int(ns * 1000 / 16000),
@@ -425,7 +425,7 @@ def synth_media_df(spark, n: int = 64, seed: int = 42) -> DataFrame:
             nf = 1 + i % 30
             vw, vh = 16, 12
             frames = [
-                _noise(f"{seed}:vid:{i}:f{k}", vw * vh * 3)
+                _noise(f"42:vid:{i}:f{k}", vw * vh * 3)
                 for k in range(nf)
             ]
             payload = mp4_encode_stub(dur, vw, vh, b"", frames=frames)
@@ -1159,7 +1159,7 @@ def sample_frames(df: DataFrame, every_ms: int = 1000,
                   max_frames: int = 8) -> DataFrame:
     """Frame sampling for video: JVM-side explode of the sample GRID
     (timestamps from metadata — no payload touched), then one batched
-    kernel that demuxes the REAL ISO-BMFF sample table (mp4_samples:
+    kernel that demuxes the REAL ISO-BMFF sample table (mp4_video_stream:
     stts/stsc/stsz/stco) and emits the actual sample bytes nearest
     each grid timestamp; payloads without a sample table fall back to
     proportional byte slicing, and a NULL payload gives NULL frames.
@@ -1191,7 +1191,7 @@ def sample_frames(df: DataFrame, every_ms: int = 1000,
         key = hashlib.blake2b(b, digest_size=16).digest()
         if memo[0] != key:
             try:
-                memo[1] = mp4_samples(b)
+                memo[1] = mp4_video_stream(b)[1]
             except ValueError:
                 memo[1] = []
             memo[0] = key
@@ -1387,14 +1387,23 @@ def _collect_traks(data: bytes) -> list:
     return traks
 
 
-def _select_trak(data: bytes):
-    """THE trak-selection rule, shared by mp4_samples and
-    mp4_video_stream so every demux API agrees on which trak a
-    multi-trak file means: the first trak with BOTH a well-formed
-    visual entry and a complete, parseable, non-empty sample table
-    (the video stream), else the first trak with just a usable table
-    (audio-only files still demux; entry is None there). Returns
-    (entry_or_None, samples) — always from ONE trak — or (None, [])."""
+def mp4_video_stream(data: bytes):
+    """REAL sample-table demux: (sample_entry, samples), both from ONE
+    trak. samples is [(offset, size, time_ms)] per sample, from
+    walking moov/trak/mdia/minf/stbl and combining stts (durations),
+    stsz (sizes), stsc (sample->chunk) and stco/co64 (chunk offsets);
+    offsets are absolute file offsets, so callers can slice actual
+    sample bytes out of the payload. Box collection is scoped PER TRAK
+    (never mixes sample-table boxes across tracks).
+
+    The trak is the first with BOTH a well-formed visual entry and a
+    complete, parseable, non-empty sample table (so an audio trak
+    listed before the video trak never shadows it), else the first
+    with just a usable table: audio-only files still demux, with
+    entry None — those samples are NOT pixel-decodable and are never
+    paired with another trak's codec declaration. (None, []) when no
+    trak carries a usable table. Raises ValueError on non-BMFF
+    input."""
     fallback = None
     for boxes in _collect_traks(data):
         if not (b"stts" in boxes and b"stsz" in boxes
@@ -1416,20 +1425,6 @@ def _select_trak(data: bytes):
     return None, fallback or []
 
 
-def mp4_samples(data: bytes) -> list:
-    """REAL sample-table demux: returns [(offset, size, time_ms)] per
-    sample by walking moov/trak/mdia/minf/stbl and combining stts
-    (durations), stsz (sizes), stsc (sample->chunk), stco/co64 (chunk
-    offsets). Box collection is scoped PER TRAK (never mixes
-    sample-table boxes across tracks) and the trak choice is shared
-    with mp4_video_stream (_select_trak: visual trak preferred, any
-    complete table as fallback). Offsets are absolute file offsets,
-    so callers can slice actual sample bytes out of the payload.
-    Raises ValueError on non-BMFF; returns [] when no trak carries a
-    usable sample table."""
-    return _select_trak(data)[1]
-
-
 def _parse_visual_entry(sd):
     """First VisualSampleEntry of one stsd body -> (fourcc, width,
     height, depth), or None when malformed/absent."""
@@ -1448,19 +1443,8 @@ def _parse_visual_entry(sd):
     return fourcc, width, height, depth
 
 
-def mp4_video_stream(data: bytes):
-    """(sample_entry, samples) taken from the SAME trak via
-    _select_trak: the first trak with BOTH a visual entry and a
-    usable table wins (so an audio trak listed before the video trak
-    never shadows it), with any-complete-table as the audio-only
-    fallback (entry None there — those samples are NOT
-    pixel-decodable and are never paired with another trak's codec
-    declaration). Raises ValueError on non-BMFF input."""
-    return _select_trak(data)
-
-
 def _parse_sample_table(boxes: dict, file_len: int) -> list:
-    """The trusting part of mp4_samples, isolated so the caller can
+    """The trusting part of mp4_video_stream, isolated so the caller can
     catch struct/index errors from truncated boxes. Every count field
     is corruption-controlled 32-bit data: bound it by what the BOX
     BODY can actually hold before materializing any list (a crafted

@@ -540,8 +540,7 @@ def lang_balanced_sample(documents: DataFrame,
     )
 
 
-def repetition_scores(documents: DataFrame, top_n: int = 2,
-                      dup_n: int = 3) -> DataFrame:
+def repetition_scores(documents: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals (Rae et al. 2021,
     "Scaling Language Models: ... Gopher", appendix A1.1 — public
     paper; also used by RefinedWeb/Dolma): repeated-token mass,
@@ -573,7 +572,7 @@ def repetition_scores(documents: DataFrame, top_n: int = 2,
         F.split(F.col("text"), "\n").alias("lines"),
     ).select(
         "doc_id", "_chars", "w", "lines",
-        _word_ngrams(F.col("w"), dup_n).alias("ng"),
+        _word_ngrams(F.col("w"), 3).alias("ng"),
     )
     w_col = F.col("w")
     lines = F.col("lines")
@@ -612,7 +611,7 @@ def repetition_scores(documents: DataFrame, top_n: int = 2,
     grams = (
         base
         .select("doc_id",
-                F.explode(_word_ngrams(F.col("w"), top_n)).alias("gram"))
+                F.explode(_word_ngrams(F.col("w"), 2)).alias("gram"))
         .groupBy("doc_id", "gram")
         .agg(F.count("*").alias("cnt"))
     )
@@ -654,8 +653,7 @@ def _bench_carve(documents: DataFrame, n: int, bench_mod: int,
 
 
 def decontaminate(documents: DataFrame, n: int = 5, bench_mod: int = 10,
-                  bench_rem: int = 7,
-                  threshold: float = 0.2) -> DataFrame:
+                  bench_rem: int = 7) -> DataFrame:
     """Benchmark decontamination: per-document fraction of distinct
     word n-grams that also appear in a held-out benchmark set — the
     GPT-3/PaLM-style n-gram-collision check that keeps eval data out
@@ -692,20 +690,19 @@ def decontaminate(documents: DataFrame, n: int = 5, bench_mod: int = 10,
                 / F.col("n_grams").cast("double"), 6)
             .alias("contamination_frac"),
             (F.col("n_hits") / F.col("n_grams").cast("double")
-             >= threshold).alias("is_contaminated"),
+             >= 0.2).alias("is_contaminated"),
         )
     )
 
 
 def bloom_decontaminate(documents: DataFrame, n: int = 5,
-                        bench_mod: int = 10, bench_rem: int = 7,
-                        m_bits: int = 65536, k_hashes: int = 3,
-                        salt: str = "bloom7") -> DataFrame:
+                        bench_mod: int = 10,
+                        bench_rem: int = 7) -> DataFrame:
     """Bloom-filter pre-screen for benchmark decontamination, audited
     against the exact n-gram check: the benchmark grams compress into
-    an m-bit Bloom set (md5 positions, k hash rows) and corpus grams
+    a 65,536-bit Bloom set (md5 positions, 3 hash rows) and corpus grams
     probe it — a gram 'hits' iff ALL k of its positions are set. The
-    classic pushdown at 100 TB: you broadcast `m_bits` BITS instead
+    classic pushdown at 100 TB: you broadcast 65,536 BITS instead
     of the full benchmark gram set, drop the (vast) clean majority
     cheaply, and run the exact check only on flagged survivors. Bloom
     error is ONE-SIDED (no false negatives) — proven per document by
@@ -713,21 +710,21 @@ def bloom_decontaminate(documents: DataFrame, n: int = 5,
     n_false_positives = bloom - exact always >= 0.
 
     Scale shape: same carve + distinct-gram explode as decontaminate;
-    the bloom position frame (<= m_bits rows) and the exact benchmark
+    the bloom position frame (<= 65,536 rows) and the exact benchmark
     gram set both broadcast; the k-position probe is a per-gram
-    explode bounded by k. All md5 integer arithmetic — engine-exact."""
+    explode of 3. All md5 integer arithmetic — engine-exact."""
     exploded = _bench_carve(documents, n, bench_mod, bench_rem)
 
     def pos(r: int):
         return (
             F.conv(F.substring(F.md5(F.concat_ws(
-                "|", F.col("gram"), F.lit(f"{salt}{r}"))), 1, 8),
-                16, 10).cast("bigint") % m_bits
+                "|", F.col("gram"), F.lit(f"bloom7{r}"))), 1, 8),
+                16, 10).cast("bigint") % 65536
         )
 
     bench = exploded.where(F.col("_bench"))
     bloom_bits = None
-    for r in range(k_hashes):
+    for r in range(3):
         b = bench.select(pos(r).alias("bit"))
         bloom_bits = b if bloom_bits is None else bloom_bits.unionByName(b)
     bloom_bits = bloom_bits.distinct().withColumn("_set", F.lit(1))
@@ -739,7 +736,7 @@ def bloom_decontaminate(documents: DataFrame, n: int = 5,
         corpus
         .select("doc_id", "gram",
                 F.explode(F.array(
-                    *[pos(r) for r in range(k_hashes)])).alias("bit"))
+                    *[pos(r) for r in range(3)])).alias("bit"))
         .join(F.broadcast(bloom_bits), "bit", "left")
         .groupBy("doc_id", "gram")
         .agg(F.min(F.coalesce(F.col("_set"), F.lit(0))).alias("_all"))
@@ -1050,8 +1047,7 @@ def chunk_documents(documents: DataFrame, chunk_tokens: int = 48,
     )
 
 
-def temperature_sample(documents: DataFrame, pct: int = 50,
-                       salt: str = "temp7") -> DataFrame:
+def temperature_sample(documents: DataFrame, pct: int = 50) -> DataFrame:
     """Per-language temperature sampling (the mT5/XLM-R balancing
     move) at temperature alpha = 0.5: language l with n_l docs keeps
     each doc with probability min(1, (pct/100) * sqrt(n_max / n_l)),
@@ -1082,7 +1078,7 @@ def temperature_sample(documents: DataFrame, pct: int = 50,
         F.conv(
             F.substring(
                 F.md5(F.concat_ws(
-                    "|", F.col("doc_id").cast("string"), F.lit(salt))),
+                    "|", F.col("doc_id").cast("string"), F.lit("temp7"))),
                 1, 8),
             16, 10)
         .cast("bigint") % 10000
@@ -1110,8 +1106,7 @@ def temperature_sample(documents: DataFrame, pct: int = 50,
 
 
 def cms_top_terms(documents: DataFrame, width: int = 256,
-                  depth: int = 4, k: int = 20,
-                  salt: str = "cms7") -> DataFrame:
+                  depth: int = 4, k: int = 20) -> DataFrame:
     """Count-Min frequency sketch (Cormode & Muthukrishnan 2005,
     public paper) over corpus tokens, audited against exact counts:
     `depth` md5 hash rows x `width` counters, token estimate = MIN
@@ -1132,7 +1127,7 @@ def cms_top_terms(documents: DataFrame, width: int = 256,
     def bucket(row: int):
         return (
             F.conv(F.substring(F.md5(F.concat_ws(
-                "|", F.col("token"), F.lit(f"{salt}{row}"))), 1, 8),
+                "|", F.col("token"), F.lit(f"cms7{row}"))), 1, 8),
                 16, 10).cast("bigint") % width
         ).alias(f"b{row}")
 
@@ -1240,17 +1235,16 @@ def quality_score(documents: DataFrame) -> DataFrame:
 _CJK_CLASS = "[^一-鿿]"
 
 
-def gopher_filter(documents: DataFrame, min_words: int = 20,
-                  max_words: int = 90, min_mwl: float = 1.0,
-                  max_mwl: float = 10.0,
-                  max_symbol_ratio: float = 0.1) -> DataFrame:
+def gopher_filter(documents: DataFrame) -> DataFrame:
     """Gopher-style composite quality gate (Rae et al. 2021 §A1.1,
     public paper; thresholds scaled to the synthetic corpus): word
     count bounds, mean word length bounds, '#' and '...'-to-word
     symbol ratios, and the English stopword-presence rule (applied
-    only to lang='en'). Total op — every document emitted with its
-    metrics, `keep`, and a deterministic comma-joined `reasons` list
-    naming every failed rule — so the drop set is auditable and the
+    only to lang='en'): 20-90 words, mean word length 1-10, and at
+    most 0.1 '#' and '...' per word. Total op — every document emitted
+    with its metrics, `keep`, and a deterministic comma-joined
+    `reasons` list naming every failed rule — so the drop set is
+    auditable and the
     rules re-tunable from the same frame.
 
     Scale shape: pure per-row expressions (one scan, zero shuffles,
@@ -1267,10 +1261,10 @@ def gopher_filter(documents: DataFrame, min_words: int = 20,
     ell_ratio = ell_cnt.cast("double") / n_words
     stops = _word_hits(F.col("text"), ["the", "a", "of", "and", "to"])
     fails = [
-        ((n_words < min_words) | (n_words > max_words), "word_count"),
-        ((mwl < min_mwl) | (mwl > max_mwl), "mean_word_length"),
-        (hash_ratio > max_symbol_ratio, "hash_ratio"),
-        (ell_ratio > max_symbol_ratio, "ellipsis_ratio"),
+        ((n_words < 20) | (n_words > 90), "word_count"),
+        ((mwl < 1.0) | (mwl > 10.0), "mean_word_length"),
+        (hash_ratio > 0.1, "hash_ratio"),
+        (ell_ratio > 0.1, "ellipsis_ratio"),
         ((F.col("lang") == "en") & (stops == 0), "no_stopwords"),
     ]
     reasons = F.array_join(
@@ -1620,11 +1614,10 @@ _HLL_EST_FMT = (
 )
 
 
-def hll_distinct(events: DataFrame, p: int = 8,
-                 salt: str = "hll7") -> DataFrame:
+def hll_distinct(events: DataFrame) -> DataFrame:
     """HyperLogLog distinct-count sketch, engine-exact: per event_type,
     estimate the number of distinct users ('user' sketch) and distinct
-    user-days ('user_day' sketch) from m = 2^p registers, next to the
+    user-days ('user_day' sketch) from m = 256 registers, next to the
     EXACT distinct count so the sketch error is auditable in the same
     row. This is the op that replaces count(distinct) at 100 TB: the
     register table is bounded by groups x m ROWS NO MATTER THE CORPUS
@@ -1633,7 +1626,7 @@ def hll_distinct(events: DataFrame, p: int = 8,
     column is the verification luxury of test scale — a production run
     drops it and keeps the O(m) sketch.
 
-    Determinism: bucket and register come from md5(key|salt) substrings
+    Determinism: bucket and register come from md5(key|'hll7') substrings
     (the split_assign technique); rho is 49 - length(bin(w)) over the
     next 48 hash bits — integer-only. The estimate is ONE double
     division over an exact bigint register sum, with the literal
@@ -1641,7 +1634,7 @@ def hll_distinct(events: DataFrame, p: int = 8,
     _HLL_EST_FMT) so both engines execute identical IEEE ops. Both
     HLL branches (raw harmonic-mean and small-range linear counting)
     are live at test scale via the two sketch keys."""
-    m = 1 << p
+    m = 256
 
     def _sketch(key, tag: str) -> DataFrame:
         h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint")
@@ -1673,10 +1666,10 @@ def hll_distinct(events: DataFrame, p: int = 8,
         )
 
     user_key = F.concat_ws(
-        "|", F.col("user_id").cast("string"), F.lit(salt))
+        "|", F.col("user_id").cast("string"), F.lit("hll7"))
     user_day_key = F.concat_ws(
         "|", F.col("user_id").cast("string"),
-        F.to_date("ts").cast("string"), F.lit(salt))
+        F.to_date("ts").cast("string"), F.lit("hll7"))
     both = _sketch(user_key, "user").unionByName(
         _sketch(user_day_key, "user_day"))
     raw = _HLL_RAW_FMT.format(m=m)
@@ -1916,14 +1909,13 @@ def ann_bruteforce(embeddings: DataFrame, query_ids: list[int],
     return _top_k(scored, k, F.desc("cosine"))
 
 
-def lsh_bucketed(embeddings: DataFrame, n_planes: int = 8,
-                 n_tables: int = 4, seed: int = 7) -> DataFrame:
+def lsh_bucketed(embeddings: DataFrame) -> DataFrame:
     """(vec_id, vec, bucket) with one row per (vector, hash table):
-    random-hyperplane sign-pattern buckets, OR-amplified over
-    `n_tables` independent tables.
+    random-hyperplane sign-pattern buckets of 8 planes, OR-amplified
+    over 4 independent tables.
 
     Hyperplanes are derived IN-PLAN: plane component (table t, plane p,
-    dim i) = xxhash64(seed, t, p, i) scaled to [-1, 1] — a symmetric
+    dim i) = xxhash64(7, t, p, i) scaled to [-1, 1] — a symmetric
     zero-mean projection, dimension-agnostic, so building this query
     triggers ZERO Spark jobs (no `.first()` dim probe; asserted by
     test_ann_lsh_build_runs_no_job)."""
@@ -1932,7 +1924,7 @@ def lsh_bucketed(embeddings: DataFrame, n_planes: int = 8,
     def _comp(t, p, i):
         # deterministic pseudo-random plane component in [-1, 1]
         return (
-            F.xxhash64(F.lit(seed), F.lit(t), F.lit(p), i).cast("double")
+            F.xxhash64(F.lit(7), F.lit(t), F.lit(p), i).cast("double")
             * inv_2_63
         )
 
@@ -1953,11 +1945,11 @@ def lsh_bucketed(embeddings: DataFrame, n_planes: int = 8,
                 ) >= 0,
                 F.lit("1"),
             ).otherwise(F.lit("0"))
-            for p in range(n_planes)
+            for p in range(8)
         ]
         return F.concat(F.lit(f"{t}:"), *bits)
 
-    # explode_outer: the table array has constant size n_tables >= 1,
+    # explode_outer: the table array has constant size 4,
     # and plain explode would infer a size()>0 filter that re-runs all
     # plane projections below the spread exchange (same pathology as
     # minhash_signatures)
@@ -1970,20 +1962,19 @@ def lsh_bucketed(embeddings: DataFrame, n_planes: int = 8,
         "bucket",
         F.explode_outer(
             F.array(*[
-                table_bucket(F.col("vec"), t) for t in range(n_tables)
+                table_bucket(F.col("vec"), t) for t in range(4)
             ])
         ),
     )
 
 
-def ann_lsh(embeddings: DataFrame, query_ids: list[int], k: int = 5,
-            n_planes: int = 8, n_tables: int = 4,
-            seed: int = 7) -> DataFrame:
+def ann_lsh(embeddings: DataFrame, query_ids: list[int],
+            k: int = 5) -> DataFrame:
     """Random-hyperplane LSH ANN: bucket by sign pattern (lsh_bucketed,
     OR-amplified across tables, pair-deduped), exact cosine within
     bucket. The scale path — the candidate join is keyed by bucket,
     not a cross join."""
-    base = lsh_bucketed(embeddings, n_planes, n_tables, seed)
+    base = lsh_bucketed(embeddings)
     corpus = base.select(
         F.col("vec_id").alias("corpus_id"), F.col("vec").alias("cvec"),
         "bucket",
@@ -2005,8 +1996,6 @@ def ann_lsh(embeddings: DataFrame, query_ids: list[int], k: int = 5,
 
 
 def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.9,
-                       n_planes: int = 8, n_tables: int = 4,
-                       seed: int = 7,
                        exact: bool = False) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (vec_a, vec_b) with
     cosine >= threshold.
@@ -2014,7 +2003,7 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.9,
     Scale path (default): LSH-bucketed candidate generation — the self
     join is keyed by (table, bucket), never all-pairs — then exact
     cosine verification of candidates only. OR-amplification across
-    `n_tables` hash tables sets the recall floor; at sign-hash
+    4 hash tables sets the recall floor; at sign-hash
     collision probability (1 - theta/pi) per plane, near-identical
     vectors (cosine ~0.99+) collide in >=1 of 4 8-plane tables with
     p > 0.99 (test_embedding_near_dup_finds_planted verifies on
@@ -2032,7 +2021,7 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.9,
                               ).withColumn("nb", _norm(F.col("vb")))
         cand = a.crossJoin(b).where(F.col("vec_a") < F.col("vec_b"))
     else:
-        base = lsh_bucketed(embeddings, n_planes, n_tables, seed)
+        base = lsh_bucketed(embeddings)
         left = base.select(F.col("vec_id").alias("vec_a"),
                            F.col("vec").alias("va"), "bucket"
                            ).withColumn("na", _norm(F.col("va")))
@@ -2150,7 +2139,7 @@ def _ivf_seed_anchors(embeddings: DataFrame, n_cells: int,
 
 
 def ivf_fit(embeddings: DataFrame, n_cells: int = 16, seed: int = 7,
-            n_iters: int = 5, train_fraction: float = 1.0) -> list:
+            n_iters: int = 5) -> list:
     """IVF coarse-quantizer TRAINING action: REAL spherical k-means
     (Lloyd's), the analogue of KMeans.fit — the deliberate driver-side
     jobs in the IVF path; search itself stays pure plan construction.
@@ -2165,24 +2154,16 @@ def ivf_fit(embeddings: DataFrame, n_cells: int = 16, seed: int = 7,
     (spherical k-means, matching the cosine assignment); cells that
     lose all points keep their previous centroid. NULL embeddings are
     not trained on; raises ValueError when no non-NULL embedding is
-    left to train on (empty input, all NULL, or an empty sample).
-    `train_fraction` hash-samples the training set (at 100 TB you fit
-    the coarse quantizer on a sample; assignment quality needs cluster
-    SHAPE, not every row). Returns the centroids
+    left to train on (empty input or all NULL). Returns the centroids
     as a plain list — a tiny model artifact that search ships to the
     kernel in its closure, exactly how production IVF ships its
     centroids."""
     train = embeddings.where(F.col("embedding").isNotNull())
-    if train_fraction < 1.0:
-        train = train.where(
-            F.pmod(F.xxhash64("vec_id", F.lit(seed + 2)), F.lit(10_000))
-            < int(train_fraction * 10_000)
-        )
     centroids = _ivf_seed_anchors(train, n_cells, seed)
     dim = len(centroids[0])
     vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     # persist: every Lloyd iteration is a separate job over the same
-    # training vectors — without this the scan + sample filter +
+    # training vectors — without this the scan + NULL filter +
     # spread shuffle + cast re-execute n_iters times
     base = _spread(train).select(vec_d.alias("vec")).persist()
     try:
@@ -2724,27 +2705,24 @@ def _components_min_label(edges: DataFrame,
     return labels
 
 
-def asof_join(left: DataFrame, right: DataFrame, on: str = "user_id",
-              ts: str = "ts", right_cols: list | None = None,
-              prefix: str = "asof_") -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame,
+              right_cols: list | None = None) -> DataFrame:
     """AS-OF (temporal) join — for each left row, the latest right row
-    of the same key with right.ts <= left.ts (LEFT semantics: no prior
+    of the same user_id with right.ts <= left.ts (LEFT semantics: no prior
     right row -> nulls). Spark has no native ASOF operator; the
     scale-correct realization here is the union trick: tag the sides,
     union, and take a running `last(right_payload, ignorenulls)` over
-    one (key, ts)-ordered window — the whole operator is ONE Exchange
+    one (user_id, ts)-ordered window — the whole operator is ONE Exchange
     + Window, no join node, no per-key driver work, so it survives
     100 TB exactly like any other keyed window. Right rows sort before
     left rows at equal ts (side 0 < 1), giving the standard inclusive
     `<=` match; among equal-ts right DUPLICATES the greatest payload
     struct wins deterministically (callers wanting oracle parity with
-    DuckDB's ASOF JOIN should hold (key, ts) unique on the right, as
-    ASOF leaves that tie unspecified).
+    DuckDB's ASOF JOIN should hold (user_id, ts) unique on the right,
+    as ASOF leaves that tie unspecified).
 
-    Returns every left row + `prefix`-named columns (ts + right_cols)
+    Returns every left row + `asof_`-prefixed columns (ts + right_cols)
     of the matched right row."""
-    from pyspark.sql import Window
-
     reserved = {"_side", "_r", "_match"}
     clash = reserved & set(left.columns)
     if clash:
@@ -2753,17 +2731,15 @@ def asof_join(left: DataFrame, right: DataFrame, on: str = "user_id",
             f"asof_join reserves column names {sorted(reserved)}; "
             f"rename {sorted(clash)} on the left side first")
     if right_cols is None:  # explicit [] means "matched ts only"
-        right_cols = [c for c in right.columns if c not in (on, ts)]
-    rcols = right_cols
+        right_cols = [c for c in right.columns if c not in ("user_id", "ts")]
     r = right.select(
-        F.col(on), F.col(ts),
-        F.struct(F.col(ts).alias(ts),
-                 *[F.col(c).alias(c) for c in rcols]).alias("_r"),
+        "user_id", "ts",
+        F.struct("ts", *right_cols).alias("_r"),
         F.lit(0).alias("_side"),
     )
     l = left.withColumn("_side", F.lit(1))
     u = l.unionByName(r, allowMissingColumns=True)
-    return _asof_resolve(u, on, ts, rcols, prefix)
+    return _asof_resolve(u, "user_id", "ts", right_cols, "asof_")
 
 
 def _asof_resolve(u: DataFrame, on: str, ts: str, rcols: list,
@@ -2885,8 +2861,7 @@ def dedup_representatives(documents: DataFrame,
 
 def curate_corpus(documents: DataFrame, quality_min: float = 0.55,
                   jaccard_threshold: float = 0.8,
-                  return_clusters: bool = False,
-                  max_bucket: int | None = 1024):
+                  return_clusters: bool = False):
     """END-TO-END training-data curation — the composition a 100 TB
     corpus actually runs:
 
@@ -2923,8 +2898,7 @@ def curate_corpus(documents: DataFrame, quality_min: float = 0.55,
     canon = exact_dedup(base).select(
         F.col("canonical_doc_id").alias("doc_id"))
     exact_kept = base.join(canon, "doc_id").persist()
-    cand = minhash_lsh_candidates(exact_kept, num_hashes=32, bands=16,
-                                  max_bucket=max_bucket)
+    cand = minhash_lsh_candidates(exact_kept, num_hashes=32, bands=16)
     dup_pairs = ngram_jaccard_pairs(
         exact_kept, threshold=jaccard_threshold, candidates=cand)
     comp = _components_min_label(dup_pairs.select("doc_a", "doc_b"))
@@ -3005,9 +2979,7 @@ def cluster_assign(embeddings: DataFrame, n_clusters: int = 4) -> DataFrame:
         "cluster_id", "n_members", "majority_label", "majority_n")
 
 
-def pagerank(edges: DataFrame, n_iter: int = 5,
-             scale: int = 10 ** 12,
-             checkpoint_every: int = 4) -> DataFrame:
+def pagerank(edges: DataFrame, n_iter: int = 5) -> DataFrame:
     """Integer-arithmetic PageRank over an edge list (src, dst) — the
     link-graph quality score of a web curation pipeline.  All
     arithmetic is bigint (rank/out_degree and the damping factor via
@@ -3015,9 +2987,9 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
     the result is engine-exact — no float summation drift — which is
     what makes a SQL oracle possible for an iterative algorithm:
 
-        rank_0(v)   = scale // N
+        rank_0(v)   = 10^12 // N
         contrib_i(v)= sum over edges (u -> v) of rank_i(u) // outdeg(u)
-        rank_{i+1}(v) = (15 * (scale // N)) // 100
+        rank_{i+1}(v) = (15 * (10^12 // N)) // 100
                         + (85 * contrib_i(v)) // 100
 
     Dangling-node mass is dropped (not redistributed) — documented
@@ -3026,7 +2998,7 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
     Scale shape: per iteration ONE src-keyed join (rank × out-degree
     ride together), one dst-keyed partial aggregation, one left join
     back to the static node set; lineage is truncated with
-    localCheckpoint every `checkpoint_every` iterations (same pattern
+    localCheckpoint every 4 iterations (same pattern
     as the distributed connected-components loop), so the plan stays
     constant-size at any iteration count.  The only driver action is
     the node count (a scalar)."""
@@ -3038,7 +3010,7 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0).cast("bigint"))
-    r0 = scale // n
+    r0 = 10 ** 12 // n
     base = (15 * r0) // 100
     ranks = nodes.withColumn("rank", F.lit(r0).cast("bigint"))
     for it in range(n_iter):
@@ -3056,20 +3028,19 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
              + F.expr("85 * coalesce(contrib, 0L) div 100"))
             .cast("bigint").alias("rank"),
         )
-        if (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
+        if (it + 1) % 4 == 0 and it + 1 < n_iter:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
 
-def interval_join(events: DataFrame, windows: DataFrame,
-                  bin_seconds: int = 86400) -> DataFrame:
+def interval_join(events: DataFrame, windows: DataFrame) -> DataFrame:
     """Range/interval join without the nested-loop trap: match events
     (ts) into windows [w_start, w_end] by exploding each window into
-    the time BINS it overlaps, equi-joining on the bin, and applying
+    the one-day time BINS it overlaps, equi-joining on the bin, and applying
     the exact BETWEEN predicate after.  A naive ts-BETWEEN join plans
     BroadcastNestedLoop/Cartesian (every event against every window);
     the bin key turns it into an ordinary hash/sort-merge equi-join
-    whose fan-out is bounded by window_length/bin_seconds + 1 — the
+    whose fan-out is bounded by window_length/86400 s + 1 — the
     standard scale shape for interval joins (plan-audited: no BNLJ).
 
     windows: (window_id string, w_start timestamp, w_end timestamp),
@@ -3077,15 +3048,13 @@ def interval_join(events: DataFrame, windows: DataFrame,
     w = windows.withColumn(
         "bin",
         F.explode(F.sequence(
-            F.floor(F.unix_timestamp("w_start") / bin_seconds)
-             .cast("bigint"),
-            F.floor(F.unix_timestamp("w_end") / bin_seconds)
-             .cast("bigint"),
+            F.floor(F.unix_timestamp("w_start") / 86400).cast("bigint"),
+            F.floor(F.unix_timestamp("w_end") / 86400).cast("bigint"),
         )),
     )
     e = events.withColumn(
         "bin",
-        F.floor(F.unix_timestamp("ts") / bin_seconds).cast("bigint"),
+        F.floor(F.unix_timestamp("ts") / 86400).cast("bigint"),
     )
     return (
         e.join(w, "bin")
@@ -3192,9 +3161,16 @@ def edit_distance_pairs(documents: DataFrame, shingle_n: int = 3,
     )
 
 
+# BM25 term-frequency saturation and length normalization, shared by
+# bm25_search and rag_retrieval (their DuckDB oracles write the same
+# literals)
+_BM25_K1 = 1.2
+_BM25_B = 0.75
+
+
 def bm25_search(documents: DataFrame,
                 terms: tuple = ("spark", "window", "merge"),
-                k: int = 10, k1: float = 1.2, b: float = 0.75) -> DataFrame:
+                k: int = 10) -> DataFrame:
     """BM25 keyword retrieval (Robertson/Sparck Jones Okapi family)
     over the corpus for a FIXED literal term list, returning the top-k
     documents. One deliberate, documented deviation from textbook
@@ -3232,8 +3208,9 @@ def bm25_search(documents: DataFrame,
             (F.col("n_docs") - F.col(f"df_{i}") + F.lit(0.5))
             / (F.col(f"df_{i}") + F.lit(0.5))
         )
-        denom = tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * dl) / avgdl)
-        si = idf * ((tf * F.lit(k1 + 1.0)) / denom)
+        denom = tf + F.lit(_BM25_K1) * (
+            F.lit(1.0 - _BM25_B) + (F.lit(_BM25_B) * dl) / avgdl)
+        si = idf * ((tf * F.lit(_BM25_K1 + 1.0)) / denom)
         score = si if score is None else score + si
     top = (
         documents.crossJoin(F.broadcast(stats))
@@ -3250,8 +3227,8 @@ def bm25_search(documents: DataFrame,
     )
 
 
-def rag_retrieval(turns: DataFrame, documents: DataFrame, k: int = 3,
-                  k1: float = 1.2, b: float = 0.75) -> DataFrame:
+def rag_retrieval(turns: DataFrame, documents: DataFrame,
+                  k: int = 3) -> DataFrame:
     """RAG training-prep retrieval JOIN: for every first user turn
     (the prompt), the BM25 top-k documents from the corpus — the step
     that pairs transcripts with retrieved context before SFT. Unlike
@@ -3302,9 +3279,9 @@ def rag_retrieval(turns: DataFrame, documents: DataFrame, k: int = 3,
     avgdl = F.col("sum_dl") / F.col("n_docs")
     idf = ((F.col("n_docs") - F.col("df") + F.lit(0.5))
            / (F.col("df") + F.lit(0.5)))
-    denom = (F.col("tf") + F.lit(k1)
-             * (F.lit(1.0 - b) + (F.lit(b) * F.col("dl")) / avgdl))
-    si = idf * ((F.col("tf") * F.lit(k1 + 1.0)) / denom)
+    denom = (F.col("tf") + F.lit(_BM25_K1)
+             * (F.lit(1.0 - _BM25_B) + (F.lit(_BM25_B) * F.col("dl")) / avgdl))
+    si = idf * ((F.col("tf") * F.lit(_BM25_K1 + 1.0)) / denom)
     scored = (
         prompts.join(dfreq, "token")
         .join(post, "token")

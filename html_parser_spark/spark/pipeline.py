@@ -22,6 +22,10 @@ from .udfs import EXTRACT_FIELDS, LINK_FIELDS, extract_row, links_row, map_rows
 
 PASSTHROUGH = ["conv_id", "turn_idx", "role", "tool", "ts"]
 
+# ChatML turn markers (render_chatml, sft_corpus)
+IM_START = "<|im_start|>"
+IM_END = "<|im_end|>"
+
 
 def extract_turns(df: DataFrame, mode: str = "fragment",
                   context: str = "div", ordered: bool = True,
@@ -54,12 +58,12 @@ def with_turn_rank(df: DataFrame, *within: str) -> DataFrame:
     return df.withColumn("turn_rank", F.row_number().over(w))
 
 
-def conversation_stats(extracted: DataFrame, salt_buckets: int = 16) -> DataFrame:
+def conversation_stats(extracted: DataFrame) -> DataFrame:
     """Per-conversation rollup with SALTED two-stage aggregation:
     stage 1 aggregates (conv_id, salt) partials, stage 2 merges — a
-    mega-conversation spreads over `salt_buckets` reducers first."""
+    mega-conversation spreads over 16 reducers first."""
     salted = extracted.withColumn(
-        "salt", (F.crc32(F.col("turn_idx").cast("string")) % salt_buckets)
+        "salt", (F.crc32(F.col("turn_idx").cast("string")) % 16)
     )
     partial = salted.groupBy("conv_id", "salt").agg(
         F.count("*").alias("c"),
@@ -75,10 +79,9 @@ def conversation_stats(extracted: DataFrame, salt_buckets: int = 16) -> DataFram
     )
 
 
-def sft_pairs(extracted: DataFrame, context_turns: int = 3,
-              response_role: str = "assistant") -> DataFrame:
+def sft_pairs(extracted: DataFrame, context_turns: int = 3) -> DataFrame:
     """(context, response) supervised-fine-tuning pairs from extracted
-    turns: one output row per `response_role` turn, whose context is
+    turns: one output row per assistant turn, whose context is
     the previous up-to-`context_turns` turns rendered "role: text" and
     joined with newlines in stable (conv_id, turn_idx) order.
 
@@ -102,7 +105,7 @@ def sft_pairs(extracted: DataFrame, context_turns: int = 3,
         extracted
         .select("conv_id", "turn_idx", "role", "extracted_text",
                 ctx.alias("_ctx"))
-        .where(F.col("role") == response_role)
+        .where(F.col("role") == "assistant")
         .select(
             "conv_id", "turn_idx",
             F.size("_ctx").cast("int").alias("n_context_turns"),
@@ -114,14 +117,13 @@ def sft_pairs(extracted: DataFrame, context_turns: int = 3,
     )
 
 
-def loss_mask_spans(extracted: DataFrame, sep_tokens: int = 1,
-                    trainable_role: str = "assistant") -> DataFrame:
+def loss_mask_spans(extracted: DataFrame, sep_tokens: int = 1) -> DataFrame:
     """Per-turn token spans in the per-conversation packed token
     stream: [tok_start, tok_end) are cumulative whitespace-token
     offsets when a conversation's turns are concatenated in turn
     order with `sep_tokens` separator tokens after each turn, and
-    `trainable` marks the spans that contribute to the loss (the
-    standard SFT loss-masking layout). Token counting is the same
+    `trainable` marks the assistant spans, which contribute to the
+    loss (the standard SFT loss-masking layout). Token counting is the same
     split-on-space formula as token_stats, so the arithmetic is
     exact-integer and SQL-oracled end to end.
 
@@ -137,7 +139,7 @@ def loss_mask_spans(extracted: DataFrame, sep_tokens: int = 1,
         n_tok.alias("n_tokens"),
         start.cast("bigint").alias("tok_start"),
         (start + n_tok).cast("bigint").alias("tok_end"),
-        (F.col("role") == trainable_role).alias("trainable"),
+        (F.col("role") == "assistant").alias("trainable"),
     )
 
 
@@ -260,9 +262,21 @@ def preference_pairs(extracted: DataFrame) -> DataFrame:
     )
 
 
-def render_chatml(extracted: DataFrame,
-                  im_start: str = "<|im_start|>",
-                  im_end: str = "<|im_end|>") -> DataFrame:
+def _chatml_doc():
+    """Aggregate expression: the group's ChatML document (see
+    render_chatml)."""
+    piece = F.concat(
+        F.lit(IM_START), F.col("role"), F.lit("\n"),
+        F.coalesce(F.col("extracted_text"), F.lit("")), F.lit(IM_END),
+    )
+    ordered = F.array_sort(
+        F.collect_list(F.struct(F.col("turn_idx"), piece.alias("piece")))
+    )
+    return F.array_join(
+        F.transform(ordered, lambda s: s.getField("piece")), "\n")
+
+
+def render_chatml(extracted: DataFrame) -> DataFrame:
     """Training-serialization render: each conversation becomes ONE
     ChatML-style document — every turn wrapped as
     `<|im_start|>role\\ntext<|im_end|>`, turns joined by newlines in
@@ -277,19 +291,10 @@ def render_chatml(extracted: DataFrame,
     must fit in one row by definition of the op (same bound any
     document-assembly step has); mega-conversations are bounded by the
     context window upstream (context_window_trim), not here."""
-    piece = F.concat(
-        F.lit(im_start), F.col("role"), F.lit("\n"),
-        F.coalesce(F.col("extracted_text"), F.lit("")), F.lit(im_end),
-    )
-    ordered = F.array_sort(
-        F.collect_list(F.struct(F.col("turn_idx"), piece.alias("piece")))
-    )
-    doc = F.array_join(
-        F.transform(ordered, lambda s: s.getField("piece")), "\n")
     return (
         extracted.groupBy("conv_id")
         .agg(F.count("*").cast("bigint").alias("n_turns"),
-             doc.alias("chatml"))
+             _chatml_doc().alias("chatml"))
         .select("conv_id", "n_turns",
                 F.length("chatml").cast("bigint").alias("n_chars"),
                 "chatml")
@@ -338,9 +343,7 @@ def conv_branches(extracted: DataFrame, prefix_turns: int = 1) -> DataFrame:
     )
 
 
-def conv_near_dup(extracted: DataFrame, threshold: float = 0.5,
-                  num_hashes: int = 32, bands: int = 16,
-                  shingle_n: int = 3) -> DataFrame:
+def conv_near_dup(extracted: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Conversation-LEVEL near-duplicate pairs: each conversation's
     turns assemble (stable turn order) into one document, then the
     standard MinHash-LSH candidate generation + exact-Jaccard verify
@@ -348,7 +351,7 @@ def conv_near_dup(extracted: DataFrame, threshold: float = 0.5,
     corpus needs when whole dialogues recur with small edits
     (re-imports, A/B forks, template sessions) that exact per-turn
     dedup misses and turn-prefix grouping (conv_branches) only
-    catches at the opening.
+    catches at the opening. Word 3-shingles, 32 hashes in 16 bands.
 
     Scale shape: one conv_id-keyed assembly aggregation, then exactly
     the minhash_lsh_candidates single (band, band-hash)-keyed shuffle
@@ -372,8 +375,8 @@ def conv_near_dup(extracted: DataFrame, threshold: float = 0.5,
         )
     )
     docs = ids.select("doc_id", "text")
-    cands = minhash_lsh_candidates(docs, num_hashes, bands, shingle_n)
-    pairs = ngram_jaccard_pairs(docs, shingle_n, threshold,
+    cands = minhash_lsh_candidates(docs, bands=16)
+    pairs = ngram_jaccard_pairs(docs, threshold=threshold,
                                 candidates=cands)
     a = ids.select(F.col("doc_id").alias("doc_a"),
                    F.col("conv_id").alias("ca"))
@@ -426,40 +429,29 @@ def sft_corpus(extracted: DataFrame, budget_tokens: int = 128,
         .withColumn("_tail_cum", F.sum(n_tok).over(w))
         .where(F.col("_tail_cum") <= budget_tokens)
     )
-    piece = F.concat(
-        F.lit("<|im_start|>"), F.col("role"), F.lit("\n"),
-        F.coalesce(F.col("extracted_text"), F.lit("")),
-        F.lit("<|im_end|>"),
-    )
-    ordered = F.array_sort(
-        F.collect_list(F.struct(F.col("turn_idx"), piece.alias("piece")))
-    )
-    doc = F.array_join(
-        F.transform(ordered, lambda s: s.getField("piece")), "\n")
     return (
         kept.groupBy("conv_id")
         .agg(
             F.count("*").cast("bigint").alias("n_turns_kept"),
             F.sum(n_tok).cast("bigint").alias("n_tokens"),
-            doc.alias("chatml"),
+            _chatml_doc().alias("chatml"),
         )
     )
 
 
-def extract_links(df: DataFrame, mode: str = "fragment",
-                  context: str = "div") -> DataFrame:
+def extract_links(df: DataFrame) -> DataFrame:
     """Anchor/link extraction over the transcripts frame: one row per
-    <a href> in each turn — (conv_id, turn_idx, link_idx, href,
-    anchor_text), link_idx in document order.  The raw material of a
-    link graph (host-level quality signals, PageRank-style scoring,
-    crawl frontier mining).
+    <a href> in each turn, parsed as a fragment in a <div> — (conv_id,
+    turn_idx, link_idx, href, anchor_text), link_idx in document
+    order.  The raw material of a link graph (host-level quality
+    signals, PageRank-style scoring, crawl frontier mining).
 
     Scale shape: one narrow Arrow stage over the same single scan the
     extraction kernel uses (variable fan-out inside the batch, no
     explode/join), keys ride through the kernel — nothing re-reads the
     source."""
     return map_rows(df, ["text"], ["conv_id", "turn_idx"], LINK_FIELDS,
-                    links_row(mode, context))
+                    links_row())
 
 
 def link_stats(links: DataFrame) -> DataFrame:

@@ -172,8 +172,7 @@ def transcripts_df(spark, n_turns: int, seed: int = 42,
 
 
 def write_transcripts_parquet(spark, path: str, n_turns: int, seed: int = 42,
-                              include_fixtures: bool = True,
                               partitions: int = 32):
-    df = transcripts_df(spark, n_turns, seed, include_fixtures, partitions)
+    df = transcripts_df(spark, n_turns, seed, partitions=partitions)
     df.write.mode("overwrite").parquet(path)
     return path

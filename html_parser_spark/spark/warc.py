@@ -22,7 +22,7 @@ Spark integration (100 TB shape):
     into status / headers / body and surfaces the transport charset
     hint — the exact input the raw-documents kernel pipeline
     (raw_documents.py) takes for full sniff+parse.
-  - `write_warc_records(df, out_dir, ...)` is the distributed sink:
+  - `write_warc_records(df, out_dir)` is the distributed sink:
     each task writes one `.warc.gz` with one gzip member per record
     (mtime pinned to 0 -> byte-deterministic output for a
     deterministic row order).
@@ -249,13 +249,13 @@ def _hval(name: str, value: str) -> bytes:
 
 def build_warc_record(warc_type: str, record_id: str, payload: bytes,
                       target_uri: str | None = None,
-                      warc_date: str = "2024-01-01T00:00:00Z",
                       content_type: str = "application/http; msgtype=response") -> bytes:
-    """Serialize one WARC/1.0 record (uncompressed)."""
+    """Serialize one WARC/1.0 record (uncompressed), dated
+    2024-01-01T00:00:00Z."""
     lines = [b"WARC/1.0",
              b"WARC-Type: " + _hval("WARC-Type", warc_type),
              b"WARC-Record-ID: " + _hval("WARC-Record-ID", record_id),
-             b"WARC-Date: " + _hval("WARC-Date", warc_date)]
+             b"WARC-Date: 2024-01-01T00:00:00Z"]
     if target_uri is not None:
         lines.append(b"WARC-Target-URI: "
                      + _hval("WARC-Target-URI", target_uri))
@@ -332,14 +332,13 @@ def warc_http_responses(records):
                     RESPONSE_FIELDS, _http_row)
 
 
-def write_warc_records(df, out_dir, *,
-                       uri_col="target_uri", id_col="record_id",
-                       payload_col="payload",
-                       date_col=None):
+def write_warc_records(df, out_dir):
     """Distributed WARC sink: each task writes ONE `.warc.gz` (one
-    gzip member per record, mtime=0).  Output bytes are deterministic
-    given a deterministic row order per partition — callers that need
-    byte-stable files repartition+sortWithinPartitions first.  Returns
+    gzip member per record, mtime=0) of response records built from
+    the `record_id`, `target_uri` and `payload` columns.  Output bytes
+    are deterministic given a deterministic row order per partition —
+    callers that need byte-stable files repartition+
+    sortWithinPartitions first.  Returns
     the per-file manifest collected AFTER all tasks finish (the write
     is the job's side effect; manifest rows are its only output).
 
@@ -368,18 +367,13 @@ def write_warc_records(df, out_dir, *,
         f = None
         try:
             for pdf in batches:
-                dates = (pdf[date_col] if date_col
-                         else [None] * len(pdf))
-                for rid, uri, payload, date in zip(
-                        pdf[id_col], pdf[uri_col], pdf[payload_col],
-                        dates):
+                for rid, uri, payload in zip(
+                        pdf["record_id"], pdf["target_uri"], pdf["payload"]):
                     if f is None:
                         f = open(tmp, "wb")
                     f.write(gzip_member(build_warc_record(
                         "response", str(rid), bytes(payload),
-                        target_uri=(None if uri is None else str(uri)),
-                        warc_date=(str(date) if date is not None
-                                   else "2024-01-01T00:00:00Z"))))
+                        target_uri=(None if uri is None else str(uri)))))
                     n += 1
             if f is None:
                 return  # empty partition: no file

@@ -474,7 +474,7 @@ class TestMultimodal:
         import struct
 
         from html_parser_spark.spark.multimodal import (
-            mp4_encode_stub, mp4_samples, mp4_video_stream,
+            mp4_encode_stub, mp4_video_stream,
         )
 
         frames = [bytes([40 + k]) * 48 for k in range(3)]
@@ -490,27 +490,26 @@ class TestMultimodal:
         size0 = (plain[:moov_at] + plain[moov_at + moov_len:]
                  + struct.pack(">I", 0) + b"moov" + moov_body)
         for data in (large, size0):
-            assert mp4_samples(data) == want[1]
             assert mp4_video_stream(data) == want
 
     def test_mp4_sample_table_roundtrip(self):
         """Writer and demux are inverse: stts/stsc/stsz/stco written by
         mp4_encode_stub parse back to the exact frame byte ranges."""
         from html_parser_spark.spark.multimodal import (
-            mp4_encode_stub, mp4_probe, mp4_samples,
+            mp4_encode_stub, mp4_probe, mp4_video_stream,
         )
 
         frames = [bytes([65 + k]) * (80 + 13 * k) for k in range(6)]
         data = mp4_encode_stub(6000, 64, 48, b"", frames=frames)
         assert mp4_probe(data)[:3] == (6000, 64, 48)
-        samples = mp4_samples(data)
+        samples = mp4_video_stream(data)[1]
         assert len(samples) == 6
         for (off, size, t), f, k in zip(samples, frames, range(6)):
             assert data[off:off + size] == f
             assert t == k * 1000
         # payload without a sample table -> [] (byte-slice fallback)
         legacy = mp4_encode_stub(3000, 64, 48, b"x" * 500)
-        assert mp4_samples(legacy) == []
+        assert mp4_video_stream(legacy)[1] == []
 
     def test_mp4_sample_table_corruption_bounded(self):
         """Corruption-controlled count fields must neither escape as
@@ -518,7 +517,7 @@ class TestMultimodal:
         offsets) parses like stco."""
         import struct
 
-        from html_parser_spark.spark.multimodal import _box, mp4_samples
+        from html_parser_spark.spark.multimodal import _box, mp4_video_stream
 
         def bmff(*stbl_boxes):
             stbl = b"".join(stbl_boxes)
@@ -531,7 +530,7 @@ class TestMultimodal:
         bad = bmff(_box(b"stsz", b"\x00" * 6),
                    _box(b"stts", z4 + struct.pack(">I", 0)),
                    _box(b"stco", z4 + struct.pack(">I", 0)))
-        assert mp4_samples(bad) == []
+        assert mp4_video_stream(bad)[1] == []
         # 0xFFFFFFFF counts: bounded by what the file can hold
         crafted = bmff(
             _box(b"stsz", z4 + struct.pack(">II", 7, 0xFFFFFFFF)),
@@ -540,7 +539,7 @@ class TestMultimodal:
             _box(b"stco", z4 + struct.pack(">I", 1)
                  + struct.pack(">I", 0)),
         )
-        assert len(mp4_samples(crafted)) < 100
+        assert len(mp4_video_stream(crafted)[1]) < 100
         # co64
         good = bmff(
             _box(b"stsz", z4 + struct.pack(">II", 0, 2)
@@ -550,14 +549,14 @@ class TestMultimodal:
             _box(b"co64", z4 + struct.pack(">I", 1)
                  + struct.pack(">Q", 100)),
         )
-        assert mp4_samples(good) == [(100, 10, 0), (110, 20, 500)]
+        assert mp4_video_stream(good)[1] == [(100, 10, 0), (110, 20, 500)]
 
     def test_sample_frames_returns_real_sample_bytes(self, spark):
         """The Spark operator must emit the ACTUAL demuxed sample bytes
         (nearest the grid timestamp), not byte slices, for payloads
         carrying a sample table."""
         from html_parser_spark.spark.multimodal import (
-            sample_frames, synth_media_df, mp4_samples,
+            mp4_video_stream, sample_frames, synth_media_df,
         )
 
         df = synth_media_df(spark, 9)
@@ -566,7 +565,7 @@ class TestMultimodal:
         rows = sample_frames(df, every_ms=1000, max_frames=4).collect()
         assert rows
         for r in rows:
-            samples = mp4_samples(vids[r.media_id])
+            samples = mp4_video_stream(vids[r.media_id])[1]
             assert samples, "synthetic videos must carry sample tables"
             off, size, _t = min(
                 samples, key=lambda sm: abs(sm[2] - r.frame_ms))
@@ -596,7 +595,7 @@ class TestMultimodal:
 
         from html_parser_spark.spark.multimodal import (
             _decode_raw_frame, _video_features, mp4_encode_stub,
-            mp4_samples, mp4_video_stream,
+            mp4_video_stream,
         )
 
         w, h = 8, 6
@@ -604,8 +603,9 @@ class TestMultimodal:
         frames = [rng.integers(0, 256, w * h * 3, dtype=np.uint8)
                   .tobytes() for _ in range(3)]
         data = mp4_encode_stub(3000, w, h, b"", frames=frames)
-        assert mp4_video_stream(data)[0] == ("raw ", w, h, 24)
-        for (off, size, _t), f in zip(mp4_samples(data), frames):
+        entry, samples = mp4_video_stream(data)
+        assert entry == ("raw ", w, h, 24)
+        for (off, size, _t), f in zip(samples, frames):
             arr = _decode_raw_frame(data[off:off + size], w, h, 24)
             assert arr.shape == (h, w, 3)
             assert arr.tobytes() == f
@@ -635,7 +635,7 @@ class TestMultimodal:
         first trak's ranges."""
         import struct
 
-        from html_parser_spark.spark.multimodal import _box, mp4_samples
+        from html_parser_spark.spark.multimodal import _box, mp4_video_stream
 
         z4 = b"\x00" * 4
 
@@ -660,7 +660,7 @@ class TestMultimodal:
                     trak(stbl([10, 20], 500, 100))
                     + trak(stbl([7, 7, 7], 250, 400)))
         data = _box(b"ftyp", b"isom\x00\x00\x02\x00") + moov
-        assert mp4_samples(data) == [(100, 10, 0), (110, 20, 500)]
+        assert mp4_video_stream(data)[1] == [(100, 10, 0), (110, 20, 500)]
         # first trak's table incomplete (no stco) -> falls through to
         # the SECOND trak's complete table, never a cross-trak mix
         incomplete = (
@@ -672,7 +672,7 @@ class TestMultimodal:
         moov2 = _box(b"moov",
                      trak(incomplete) + trak(stbl([7, 7, 7], 250, 400)))
         data2 = _box(b"ftyp", b"isom\x00\x00\x02\x00") + moov2
-        assert mp4_samples(data2) == [
+        assert mp4_video_stream(data2)[1] == [
             (400, 7, 0), (407, 7, 250), (414, 7, 500)]
 
     def test_video_stream_entry_and_samples_same_trak(self):

@@ -12,9 +12,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.join(os.path.dirname(__file__), "..")
 
@@ -25,11 +27,10 @@ from pyspark.sql import functions as F
 from html_parser_spark.spark.session import get_spark
 from html_parser_spark.spark.pipeline import extract_turns
 cpus = int(sys.argv[1]); n_turns = int(sys.argv[2]); runs = int(sys.argv[3])
-replicate = int(sys.argv[4])
+replicate = int(sys.argv[4]); path = sys.argv[5]
 spark = get_spark("scaling", master=f"local[{cpus}]",
                   shuffle_partitions=max(cpus, 8))
 spark.sparkContext.setLogLevel("ERROR")
-path = f"/tmp/spark_graft_bench/transcripts_{n_turns}_s42"
 if not os.path.exists(os.path.join(path, "_SUCCESS")):
     from html_parser_spark.spark.transcripts import write_transcripts_parquet
     write_transcripts_parquet(spark, path, n_turns, seed=42, partitions=64)
@@ -54,11 +55,14 @@ spark.stop()
 """
 
 
-def run_size(cpus: int, n_turns: int, runs: int = 5, replicate: int = 1):
+def run_size(cpus: int, n_turns: int, path: str, runs: int = 5,
+             replicate: int = 1):
+    """One size in a fresh subprocess; the first size to run writes the
+    transcripts table at `path` and the second reads it."""
     code = _RUNNER % {"repo": os.path.abspath(REPO)}
     p = subprocess.run(
         [sys.executable, "-c", code, str(cpus), str(n_turns), str(runs),
-         str(replicate)],
+         str(replicate), path],
         capture_output=True, text=True, cwd=REPO,
     )
     lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
@@ -75,8 +79,15 @@ def main():
     n_small = int(os.environ.get("SCALING_N", "2"))
     n_big = n_small * 4
     n_turns = base_turns * replicate
-    r8 = run_size(n_small, base_turns, replicate=replicate)
-    r32 = run_size(n_big, base_turns, replicate=replicate)
+    # the input table lives in a directory this run creates and
+    # deletes, so no earlier run (or older generator) can supply it
+    work = tempfile.mkdtemp(prefix="bench_scaling_")
+    try:
+        path = os.path.join(work, "transcripts")
+        r8 = run_size(n_small, base_turns, path, replicate=replicate)
+        r32 = run_size(n_big, base_turns, path, replicate=replicate)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
     med8 = statistics.median(r8["times"])
     med32 = statistics.median(r32["times"])
     # the sandbox is a shared host with heavy run-to-run interference

@@ -947,7 +947,7 @@ def _audit(work: str):
          lambda p: p.count("HashAggregate") >= 4),
         ("no Python node",
          lambda p: "Python" not in p),
-    ], note="The broadcast side is m_bits BITS (64Ki positions), not "
+    ], note="The broadcast side is 65,536 BITS (64Ki positions), not "
             "the benchmark gram set — the pushdown that lets a 100 TB "
             "corpus drop its clean majority before any exact check; "
             "FP rate 0.19% at sf0.01 (one-sided, proven per doc).")
